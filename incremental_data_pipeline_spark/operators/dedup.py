@@ -127,49 +127,27 @@ def ngram_jaccard_pairs(
     DISCRIMINATIVE shingle sets: shingles appearing in more than ``max_df``
     documents are dropped before anything else.
 
-    The cap is the scale defense: the candidate self-join fans out
-    quadratically WITHIN each shingle's posting list, so one stopword-heavy
-    3-gram ("of the and") shared by millions of documents would create a
-    mega-bucket straggler at 100 TB. With the cap, every posting list is
-    <= max_df rows and candidate volume is bounded by sum(df_i^2) over
-    rare shingles — never corpus². A shingle in >10k documents carries no
+    The cap is the scale defense: a candidate join fans out quadratically
+    WITHIN each shingle's posting list, so one stopword-heavy 3-gram ("of
+    the and") shared by millions of documents would create a mega-bucket
+    straggler at 100 TB. With the cap, every posting list is <= max_df rows
+    — never corpus². A shingle in >10k documents carries no
     near-dup signal anyway (it can't distinguish its holders), so Jaccard
     over the capped sets is the standard web-dedup semantics. Pass
-    ``max_df=None`` for textbook full-set Jaccard (small corpora only);
-    the MinHash-LSH variant remains the preferred 100 TB path.
+    ``max_df=None`` for textbook full-set Jaccard (then identical to
+    `prefix_filter_jaccard_pairs`); the MinHash-LSH variant remains the
+    preferred 100 TB path.
 
-    Shingles are identified by their 60-bit md5 prefix from the explode
-    onward (see `_prefix_containment_candidates` — every shuffle moves
-    8-byte ints, not strings; the string-side oracle doubles as a
-    collision-freeness certificate)."""
-    # One explode, checkpointed: df counts, the semi-join probe, sizes,
-    # and both self-join sides all reuse the materialized shingle set
-    # instead of re-running the explode per consumer.
-    s = doc_shingles(df, id_col, text_col, n).select(
-        id_col, _shingle60("shingle").alias("shingle")
-    ).localCheckpoint(eager=True)
-    if max_df is not None:
-        rare = (
-            s.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        s = s.join(rare, "shingle", "left_semi").localCheckpoint(eager=True)
-    sizes = s.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = s.alias("a")
-    b = s.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed(id_col, "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    Shape: the capped sets come from `_ranked_shingles` (window-count df
+    and sizes, the cap a filter on the df column, one checkpoint) and the
+    pairs from `_prefix_jaccard` — the lossless PPJoin prefix filter of
+    `prefix_filter_jaccard_pairs`, run ON the capped sets. Prefix filtering
+    never drops a qualifying pair, so the result is the all-pairs capped
+    Jaccard, with candidate volume bounded by prefix postings rather than
+    by sum(df_i^2). Shingles are 60-bit md5 prefixes from the explode
+    onward (`_shingle60`)."""
+    return _prefix_jaccard(
+        _ranked_shingles(df, id_col, text_col, n, max_df), id_col, threshold
     )
 
 
@@ -295,20 +273,7 @@ def lsh_candidate_pairs(
     shuffle), and the bucket join is an equi-join on (band, band_sig) —
     candidate volume is bounded by bucket sizes, never by corpus², which is
     what makes this the 100 TB near-dup path."""
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, n)
-    n_bands = num_hashes // rows_per_band
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band"),
-            F.concat_ws(
-                "|", *[F.col(f"mh{j * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("band_sig"),
-        )
-        for j in range(n_bands)
-    ]
-    bands = sig.select(
-        id_col, F.explode(F.array(*band_structs)).alias("bs")
-    ).select(id_col, "bs.band", "bs.band_sig")
+    bands = band_signatures(df, id_col, text_col, num_hashes, rows_per_band, n)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -345,20 +310,7 @@ def incremental_lsh_pairs(
     so each increment costs one signature pass over the new documents plus
     the bucket join."""
     both = corpus.select(id_col, text_col).unionByName(batch.select(id_col, text_col))
-    sig = minhash_signatures(both, id_col, text_col, num_hashes, n)
-    n_bands = num_hashes // rows_per_band
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band"),
-            F.concat_ws(
-                "|", *[F.col(f"mh{j * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("band_sig"),
-        )
-        for j in range(n_bands)
-    ]
-    bands = sig.select(
-        id_col, F.explode(F.array(*band_structs)).alias("bs")
-    ).select(id_col, "bs.band", "bs.band_sig")
+    bands = band_signatures(both, id_col, text_col, num_hashes, rows_per_band, n)
     new_ids = batch.select(id_col)
     new_bands = bands.join(new_ids, id_col, "left_semi")
     a = bands.alias("a")
@@ -784,13 +736,21 @@ def prefix_filter_jaccard_pairs(
     never corpus². The rarity ranking itself is two shuffles (shingle-df
     agg, per-doc row_number).
     """
-    # The ranked shingle relation feeds four consumers (prefix postings ×2
-    # and both verification sides); `_ranked_shingles` materializes it once
-    # with window-count df/sz (r11 — see its docstring for the join-back
-    # shape this replaces). Shingles become 60-bit ints at the explode
-    # (`_shingle60`): every downstream shuffle moves 8-byte keys; the
-    # string-side oracle certifies collision-freeness.
-    s = _ranked_shingles(df, id_col, text_col, n)
+    return _prefix_jaccard(_ranked_shingles(df, id_col, text_col, n), id_col, threshold)
+
+
+def _prefix_jaccard(s: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Candidate generation and exact verification of the Jaccard prefix
+    filter over a `_ranked_shingles` relation ``s`` — shared by
+    `prefix_filter_jaccard_pairs` (full sets) and `ngram_jaccard_pairs`
+    (``max_df``-capped sets; the filter is lossless on any set family).
+    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b."""
+    # ``s`` feeds four consumers (prefix postings ×2 and both verification
+    # sides); `_ranked_shingles` materializes it once with window-count
+    # df/sz (r11 — see its docstring for the join-back shape this
+    # replaces). Shingles are 60-bit ints from the explode (`_shingle60`):
+    # every downstream shuffle moves 8-byte keys; the string-side oracle
+    # certifies collision-freeness.
     # prefix length |x| - ceil(t·|x|) + 1; a float-rounding overshoot in
     # ceil only LENGTHENS the prefix (safe direction).
     prefix = s.filter(

@@ -1,19 +1,33 @@
-"""Similarity search over embedding columns.
+"""Similarity search and embedding-space dedup over embedding columns.
 
-Two strategies (north-star extension):
+Top-k search strategies (north-star extension), one per candidate source:
 
-- ``brute_force_topk``: exact top-k by cosine — broadcast the (small) query
-  set against the corpus, score every pair, keep k per query via a
-  partitioned window (WindowGroupLimit: only k rows per query survive each
-  shuffle stage). The baseline, and the verifier for the ANN path.
-
+- ``brute_force_topk``: exact — broadcast the (small) query set against the
+  corpus and score every pair. The baseline, and the verifier for the ANN
+  paths. ``hard_negatives`` is the same scan with a label filter.
 - ``lsh_topk``: random-hyperplane LSH — each vector gets a B-bit bucket
   (sign of its dot product with B fixed pseudo-random ±1 planes); search
-  touches only the query's bucket. The 100 TB path: bucketing is a single
-  narrow projection, and the candidate join is an equi-join on the bucket
-  string, so cost scales with bucket occupancy instead of corpus size.
-  Planes are derived deterministically from md5 so the DuckDB oracle can
-  reproduce bucket assignment exactly.
+  touches only the query's bucket, an equi-join on the bucket string, so
+  cost scales with bucket occupancy instead of corpus size. Planes are
+  derived deterministically from md5 so the DuckDB oracle can reproduce
+  bucket assignment exactly.
+- ``ivf_topk`` / ``ivf2_topk``: IVF-flat over a fixed flat or two-level
+  centroid codebook; queries probe their ``nprobe`` best cells.
+- ``pq_topk``: product-quantization ADC over per-subspace codes.
+- ``ivf_index_build`` / ``ivf_index_upsert`` / ``ivf_index_probe``: the
+  IVF cells persisted as a cell-partitioned parquet index.
+
+Near-dup strategies: ``embedding_near_dup`` (LSH buckets, pairs), and the
+SemDeDup keep-masks ``semantic_dedup`` (codebook cells) and
+``semantic_dedup_lsh`` (hyperplane buckets).
+
+Cell ranking and top-k are each defined in ONE place, which every strategy
+above shares: ``_codebook`` / ``_cell_scores`` / ``_best_cell`` /
+``_top_cells`` rank a vector against a codebook (so the persisted index's
+build-time assignment and its probe-time ranking cannot disagree), and
+``_topk`` / ``_cosine_topk`` run the candidate join → self-match filter →
+per-query window → rank tail (WindowGroupLimit: only k rows per query
+survive each shuffle stage).
 
 Implementation note: scoring stays in JVM higher-order functions
 (zip_with/aggregate) rather than a Pandas UDF — measured at sf0.1, an
@@ -26,12 +40,21 @@ plane expressions, not execution.
 from __future__ import annotations
 
 import hashlib
+import json
+import math
+import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from incremental_data_pipeline_spark.functions.util import fan_out, lit_array
-from incremental_data_pipeline_spark.functions.vector import cosine_q, dot_q, quantize
+from incremental_data_pipeline_spark.functions.vector import (
+    cosine_q,
+    dot_q,
+    norm_q,
+    quantize,
+)
 
 
 MAX_AUTO_PLANES = 24  # 2^24 buckets — occupancy ~60 rows even at 1e9 vectors
@@ -117,17 +140,151 @@ def _bucket(qcol: Column, planes: list[list[int]]) -> Column:
     previously dominated these queries' one-shot plan-compile time; same
     fix as the IVF codebook literal)."""
     m = lit_array(planes, "array<array<int>>")
-    sums = F.transform(
-        m,
-        lambda row: F.aggregate(
-            F.zip_with(row, qcol, lambda p, x: p * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
+    sums = F.transform(m, lambda row: dot_q(row, qcol))
     return F.array_join(
         F.transform(sums, lambda s: F.when(s > 0, F.lit("1")).otherwise(F.lit("0"))), ""
     )
+
+
+# ---------------------------------------------------------------------------
+# the shared cell ranker and top-k tail
+# ---------------------------------------------------------------------------
+
+
+def _norm(vec: list[int]) -> float:
+    """|vec| of a quantized vector: exact int radicand, then IEEE sqrt —
+    the same double Spark and DuckDB compute."""
+    return math.sqrt(sum(x * x for x in vec))
+
+
+def _codebook(
+    centroids: list[tuple[int, list[int]]], scaled: bool = False
+) -> tuple[Column, Column, Column | None]:
+    """``(matrix, ids, norms)`` literals for a (centroid_id, quantized
+    vector) codebook. Each enters the plan as ONE nested-array literal (not
+    nlist×dim scalar Literal nodes), so per-plan analysis/codegen stays O(1)
+    in codebook size. ``norms`` (per-centroid |c|) is built only when
+    ``scaled``, else None."""
+    matrix = lit_array([vec for _, vec in centroids], "array<array<bigint>>")
+    ids = lit_array([cid for cid, _ in centroids], "array<int>")
+    norms = None
+    if scaled:
+        norms = lit_array([_norm(vec) for _, vec in centroids], "array<double>")
+    return matrix, ids, norms
+
+
+def _cell_scores(
+    matrix: Column, ids: Column, v: Column, norms: Column | None = None
+) -> Column:
+    """array<struct<cos double, neg_id int>>: one entry per centroid, so
+    struct order (score desc, then neg_id desc) ranks cells best first with
+    ties to the lowest centroid id. The score is full cosine, or with
+    ``norms`` the scaled dot ``dot(v,c)/|c|`` — argmax-equivalent to cosine
+    (|v| is constant within a row) at ONE integer dot per centroid instead
+    of three. Callers with an oracle mirror whichever doubles they pick."""
+
+    def score(c: Column, i: Column) -> Column:
+        if norms is None:
+            return cosine_q(v, c)
+        return dot_q(v, c).cast("double") / F.element_at(norms, i + F.lit(1))
+
+    return F.transform(
+        matrix,
+        lambda c, i: F.struct(
+            score(c, i).alias("cos"),
+            (-F.element_at(ids, i + F.lit(1))).alias("neg_id"),
+        ),
+    )
+
+
+def _best_cell(scores: Column) -> Column:
+    """Argmax cell id: a single ``array_max`` over the score structs."""
+    return -F.array_max(scores)["neg_id"]
+
+
+def _top_cells(scores: Column, n: int) -> Column:
+    """The ``n`` best cell ids, best first. n == 1 takes the ``array_max``
+    argmax, which skips the full sort; both pick the same first cell."""
+    if n == 1:
+        return F.array(_best_cell(scores))
+    return F.transform(
+        F.slice(F.reverse(F.array_sort(scores)), 1, n), lambda s: -s["neg_id"]
+    )
+
+
+def _topk(scored: DataFrame, k: int, order: Column, cols) -> DataFrame:
+    """Keep the k best candidates per ``query_id`` by ``order`` (ties to
+    the lower ``neighbor_id``), numbered from 1 in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
+
+
+def _cosine_topk(
+    c: DataFrame, q: DataFrame, k: int, on: str | None = None
+) -> DataFrame:
+    """Exact-cosine top-k over candidates: corpus rows ``c`` (neighbor_id,
+    cv[, on]) join the broadcast queries ``q`` (query_id, qv[, on]) — a
+    cross join when ``on`` is None, else an equi-join on that cell/bucket
+    key — self-matches are dropped, and the window tail keeps k per query."""
+    q = F.broadcast(q)
+    pairs = c.crossJoin(q) if on is None else c.join(q, on)
+    scored = pairs.filter(F.col("neighbor_id") != F.col("query_id")).withColumn(
+        "cosine", cosine_q(F.col("qv"), F.col("cv"))
+    )
+    return _topk(
+        scored, k, F.col("cosine").desc(), ("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def _drop_within_cell(cells: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """The SemDeDup scan over ``cells`` (id_col, ``__v`` quantized vector,
+    ``cell``): within each cell, every vector with a LOWER-id neighbor at
+    cosine >= ``threshold`` is dropped. Returns (id_col, cell, kept)."""
+    # Per-row norm computed ONCE before the barrier: the pair scan then
+    # costs one integer dot per candidate pair (dot/(na*nb), identical
+    # doubles to the full cosine) instead of three.
+    cells = cells.withColumn("__n", norm_q(F.col("__v")))
+    # The cell relation feeds BOTH self-join sides and the final join-back;
+    # without a barrier the per-row cell function (the dominant narrow-map
+    # cost) re-executes three times. Materialize once — same pattern as the
+    # connected-components edge checkpoint.
+    cells = cells.localCheckpoint(eager=False)
+    a = cells.select(
+        F.col(id_col).alias("__ida"), F.col("__v").alias("__va"),
+        F.col("__n").alias("__na"), "cell",
+    )
+    b = cells.select(
+        F.col(id_col).alias("__idb"), F.col("__v").alias("__vb"),
+        F.col("__n").alias("__nb"), "cell",
+    )
+    dropped = (
+        a.join(b, "cell")
+        .filter(F.col("__ida") < F.col("__idb"))
+        .filter(
+            (
+                dot_q(F.col("__va"), F.col("__vb")).cast("double")
+                / (F.col("__na") * F.col("__nb"))
+            )
+            >= F.lit(threshold)
+        )
+        .select(F.col("__idb").alias(id_col))
+        .distinct()
+        .withColumn("__dropped", F.lit(True))
+    )
+    return cells.join(dropped, id_col, "left").select(
+        id_col,
+        "cell",
+        F.coalesce(~F.col("__dropped"), F.lit(True)).alias("kept"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# top-k search
+# ---------------------------------------------------------------------------
 
 
 def brute_force_topk(
@@ -142,19 +299,7 @@ def brute_force_topk(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv")
     )
     c = fan_out(corpus).select(F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_q(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_topk(c, q, k)
 
 
 def lsh_topk(
@@ -186,19 +331,7 @@ def lsh_topk(
         quantize(vec_col).alias("cv"),
         let(quantize(vec_col), lambda v: _bucket(v, planes)).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_q(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_topk(c, q, k, on="bucket")
 
 
 def embedding_near_dup(
@@ -310,7 +443,10 @@ def ivf_topk(
     nprobe: int = 2,
     scaled_dot_assign: bool = False,
 ) -> DataFrame:
-    """IVF-flat approximate top-k with a fixed centroid codebook.
+    """IVF-flat approximate top-k with a fixed centroid codebook. Cells
+    are ranked by ``_cell_scores`` and picked by ``_best_cell`` (corpus
+    side) / ``_top_cells`` (query side) — the same ranker the persisted
+    index uses — and candidates go through ``_cosine_topk``.
 
     ``scaled_dot_assign=True`` ranks cells by ``dot(v,c)/|c|`` against
     per-centroid norm literals — argmax-equivalent to cosine (|v| is
@@ -338,88 +474,26 @@ def ivf_topk(
     corpus per strategy (fresh attribute ids), which is the natural shape
     anyway — every registered query loads its own inputs.
     """
+    matrix, ids, norms = _codebook(centroids, scaled_dot_assign)
 
-    # The codebook enters the plan as ONE nested-array literal (not nlist×dim
-    # scalar Literal nodes): per-plan analysis/codegen stays O(1) in codebook
-    # size, which is what keeps re-planning cheap as nlist grows.
-    matrix = lit_array([vec for _, vec in centroids], "array<array<bigint>>")
-    ids_arr = lit_array([cid for cid, _ in centroids], "array<int>")
-    if scaled_dot_assign:
-        import math
-
-        norms = F.lit(
-            [math.sqrt(sum(x * x for x in vec)) for _, vec in centroids]
-        ).cast("array<double>")
-
-        def cell_score(vcol: Column, c: Column, i: Column) -> Column:
-            return dot_q(vcol, c).cast("double") / F.element_at(
-                norms, i + F.lit(1)
-            )
-
-    else:
-
-        def cell_score(vcol: Column, c: Column, i: Column) -> Column:
-            return cosine_q(vcol, c)
-
-    def cell_scores(vcol: Column) -> Column:
-        # array<struct<score double, neg_id int>>, sorted desc by struct
-        # comparison => best cell first, ties to the lowest centroid id.
-        return F.reverse(
-            F.array_sort(
-                F.transform(
-                    matrix,
-                    lambda c, i: F.struct(
-                        cell_score(vcol, c, i).alias("cos"),
-                        (-F.element_at(ids_arr, i + F.lit(1))).alias("neg_id"),
-                    ),
-                )
-            )
-        )
-
-    def top_cells(vcol: Column, n: int) -> Column:
-        if n == 1:
-            # argmax via a single array_max over (score, neg_id) structs —
-            # skips the full sort+reverse+slice on the (large) corpus side.
-            return F.array(
-                -F.array_max(
-                    F.transform(
-                        matrix,
-                        lambda c, i: F.struct(
-                            cell_score(vcol, c, i).alias("cos"),
-                            (-F.element_at(ids_arr, i + F.lit(1))).alias("neg_id"),
-                        ),
-                    )
-                )["neg_id"]
-            )
-        return F.transform(F.slice(cell_scores(vcol), 1, n), lambda s: -s["neg_id"])
+    def scores(v: Column) -> Column:
+        return _cell_scores(matrix, ids, v, norms)
 
     # let-bind the quantized vector: CollapseProject would otherwise inline
-    # the quantize into every per-centroid reference inside top_cells.
+    # the quantize into every per-centroid reference inside the ranker.
     c = fan_out(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         quantize(vec_col).alias("cv"),
-        let(quantize(vec_col), lambda v: top_cells(v, 1).getItem(0)).alias("cell"),
+        let(quantize(vec_col), lambda v: _best_cell(scores(v))).alias("cell"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         quantize(vec_col).alias("qv"),
         F.explode(
-            let(quantize(vec_col), lambda v: top_cells(v, nprobe))
+            let(quantize(vec_col), lambda v: _top_cells(scores(v), nprobe))
         ).alias("cell"),
     )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_q(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_topk(c, q, k, on="cell")
 
 
 def hierarchical_codebook(
@@ -442,8 +516,6 @@ def hierarchical_codebook(
     it either (same tie-break), so every reachable super has >= 1 fine
     member and two-level assignment never drops a row.
     """
-    import math
-
     n = len(centroids)
     s = max(1, math.ceil(math.sqrt(n)))
     supers = centroids[:s]
@@ -452,8 +524,7 @@ def hierarchical_codebook(
         # scaled dot: dot(a,b)/|b| — argmax-equivalent to cosine for a
         # fixed a, and the SAME double expression Spark and DuckDB
         # evaluate, so the mapping is identical in all three places.
-        d = sum(x * y for x, y in zip(a, b))
-        return d / math.sqrt(sum(y * y for y in b))
+        return sum(x * y for x, y in zip(a, b)) / _norm(b)
 
     fine_by_super: dict[int, list[tuple[int, list[int]]]] = {
         sid: [] for sid, _ in supers
@@ -493,52 +564,18 @@ def ivf2_topk(
     doubles. The candidate equi-join on fine cell id is unchanged from
     ``ivf_topk``.
     """
-    import math
-
     supers, fine = hierarchical_codebook(centroids)
+    smatrix, sids, snorms = _codebook(supers, scaled=True)
+    skeys = lit_array([sid for sid, _ in supers], "array<int>")
 
-    def _norm(vec: list[int]) -> float:
-        return math.sqrt(sum(x * x for x in vec))  # exact int, then IEEE sqrt
+    def by_super(per_fine, sql_type: str) -> Column:
+        # super id -> that super's fine-centroid literal
+        values = [[per_fine(cid, v) for cid, v in fine[sid]] for sid, _ in supers]
+        return F.map_from_arrays(skeys, lit_array(values, sql_type))
 
-    skeys = [sid for sid, _ in supers]
-    smatrix = lit_array([v for _, v in supers], "array<array<bigint>>")
-    sids = lit_array(skeys, "array<int>")
-    snorms = lit_array([_norm(v) for _, v in supers], "array<double>")
-    map_vecs = F.map_from_arrays(
-        lit_array(skeys, "array<int>"),
-        lit_array(
-            [[v for _, v in fine[sid]] for sid in skeys],
-            "array<array<array<bigint>>>",
-        ),
-    )
-    map_ids = F.map_from_arrays(
-        lit_array(skeys, "array<int>"),
-        lit_array(
-            [[cid for cid, _ in fine[sid]] for sid in skeys],
-            "array<array<int>>",
-        ),
-    )
-    map_norms = F.map_from_arrays(
-        lit_array(skeys, "array<int>"),
-        lit_array(
-            [[_norm(v) for _, v in fine[sid]] for sid in skeys],
-            "array<array<double>>",
-        ),
-    )
-
-    def best_super(vcol: Column) -> Column:
-        return -F.array_max(
-            F.transform(
-                smatrix,
-                lambda c, i: F.struct(
-                    (
-                        dot_q(vcol, c).cast("double")
-                        / F.element_at(snorms, i + F.lit(1))
-                    ).alias("score"),
-                    (-F.element_at(sids, i + F.lit(1))).alias("neg_id"),
-                ),
-            )
-        )["neg_id"]
+    map_vecs = by_super(lambda cid, v: v, "array<array<array<bigint>>>")
+    map_ids = by_super(lambda cid, v: cid, "array<array<int>>")
+    map_norms = by_super(lambda cid, v: _norm(v), "array<array<double>>")
 
     def fine_cells(vraw: Column, n: int) -> Column:
         # HOF "let" bindings: a named column computed with withColumn gets
@@ -554,31 +591,12 @@ def ivf2_topk(
                     F.element_at(map_ids, scol).alias("fi"),
                     F.element_at(map_norms, scol).alias("fn"),
                 )
+                return let(
+                    fine_t,
+                    lambda t: _top_cells(_cell_scores(t["fv"], t["fi"], qv, t["fn"]), n),
+                )
 
-                def rank_fine(t: Column) -> Column:
-                    scored = F.reverse(
-                        F.array_sort(
-                            F.transform(
-                                t["fv"],
-                                lambda c, i: F.struct(
-                                    (
-                                        dot_q(qv, c).cast("double")
-                                        / F.element_at(t["fn"], i + F.lit(1))
-                                    ).alias("score"),
-                                    (-F.element_at(t["fi"], i + F.lit(1))).alias(
-                                        "neg_id"
-                                    ),
-                                ),
-                            )
-                        )
-                    )
-                    return F.transform(
-                        F.slice(scored, 1, n), lambda st: -st["neg_id"]
-                    )
-
-                return let(fine_t, rank_fine)
-
-            return let(best_super(qv), with_super)
+            return let(_best_cell(_cell_scores(smatrix, sids, qv, snorms)), with_super)
 
         return let(quantize(vraw), with_q)
 
@@ -592,19 +610,7 @@ def ivf2_topk(
         quantize(vec_col).alias("qv"),
         F.explode(fine_cells(F.col(vec_col), nprobe)).alias("cell"),
     )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_q(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_topk(c, q, k, on="cell")
 
 
 def centroid_codebook(
@@ -677,78 +683,19 @@ def semantic_dedup(
     self-equi-join on cell id, quadratic only in CELL occupancy — sizing
     nlist ~ N/target_cell_size keeps every cell's pair count bounded, the
     whole point of clustering before comparing. No global all-pairs step.
+    Assignment ranks by the scaled dot (``_cell_scores`` with norms): one
+    integer dot per (row, centroid) instead of three.
     """
-    import math
-
-    matrix = lit_array([vec for _, vec in centroids], "array<array<bigint>>")
-    ids_arr = lit_array([cid for cid, _ in centroids], "array<int>")
-    # Per-centroid norms as literals: assignment ranks by dot(v,c)/|c|
-    # (argmax-equivalent to cosine — |v| is constant within a row), one
-    # integer dot per (row, centroid) instead of three.
-    norms = F.lit(
-        [math.sqrt(sum(x * x for x in vec)) for _, vec in centroids]
-    ).cast("array<double>")
-
-    def best_cell(vcol: Column) -> Column:
-        return -F.array_max(
-            F.transform(
-                matrix,
-                lambda c, i: F.struct(
-                    (
-                        dot_q(vcol, c).cast("double")
-                        / F.element_at(norms, i + F.lit(1))
-                    ).alias("score"),
-                    (-F.element_at(ids_arr, i + F.lit(1))).alias("neg_id"),
-                ),
-            )
-        )["neg_id"]
-
+    matrix, ids, norms = _codebook(centroids, scaled=True)
     cells = fan_out(corpus).select(
         F.col(id_col),
         quantize(vec_col).alias("__v"),
-        let(quantize(vec_col), best_cell).alias("cell"),
+        let(
+            quantize(vec_col),
+            lambda v: _best_cell(_cell_scores(matrix, ids, v, norms)),
+        ).alias("cell"),
     )
-    # Per-row norm computed ONCE before the barrier: the pair scan then
-    # costs one integer dot per candidate pair (dot/(na*nb), identical
-    # doubles to the full cosine) instead of three.
-    from incremental_data_pipeline_spark.functions.vector import norm_q
-
-    cells = cells.withColumn("__n", norm_q(F.col("__v")))
-    # The cell relation feeds BOTH self-join sides and the final join-back;
-    # without a barrier the per-row argmax over the codebook (the dominant
-    # narrow-map cost) re-executes three times. Materialize once — same
-    # pattern as the connected-components edge checkpoint.
-    cells = cells.localCheckpoint(eager=False)
-    a = cells.select(
-        F.col(id_col).alias("__ida"), F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"), "cell",
-    )
-    b = cells.select(
-        F.col(id_col).alias("__idb"), F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"), "cell",
-    )
-    dropped = (
-        a.join(b, "cell")
-        .filter(F.col("__ida") < F.col("__idb"))
-        .filter(
-            (
-                dot_q(F.col("__va"), F.col("__vb")).cast("double")
-                / (F.col("__na") * F.col("__nb"))
-            )
-            >= F.lit(threshold)
-        )
-        .select(F.col("__idb").alias(id_col))
-        .distinct()
-        .withColumn("__dropped", F.lit(True))
-    )
-    return (
-        cells.join(dropped, id_col, "left")
-        .select(
-            id_col,
-            "cell",
-            F.coalesce(~F.col("__dropped"), F.lit(True)).alias("kept"),
-        )
-    )
+    return _drop_within_cell(cells, id_col, threshold)
 
 
 def semantic_dedup_lsh(
@@ -778,8 +725,6 @@ def semantic_dedup_lsh(
     variants remain for persisted-index workflows where assignment cost
     amortizes across runs.
     """
-    from incremental_data_pipeline_spark.functions.vector import norm_q
-
     if num_planes is None:
         num_planes = auto_planes(
             corpus.count(), target_occupancy=target_occupancy
@@ -790,39 +735,7 @@ def semantic_dedup_lsh(
         quantize(vec_col).alias("__v"),
         let(quantize(vec_col), lambda v: _bucket(v, planes)).alias("cell"),
     )
-    cells = cells.withColumn("__n", norm_q(F.col("__v")))
-    # one barrier: the bucket projection feeds both join sides + join-back
-    cells = cells.localCheckpoint(eager=False)
-    a = cells.select(
-        F.col(id_col).alias("__ida"), F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"), "cell",
-    )
-    b = cells.select(
-        F.col(id_col).alias("__idb"), F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"), "cell",
-    )
-    dropped = (
-        a.join(b, "cell")
-        .filter(F.col("__ida") < F.col("__idb"))
-        .filter(
-            (
-                dot_q(F.col("__va"), F.col("__vb")).cast("double")
-                / (F.col("__na") * F.col("__nb"))
-            )
-            >= F.lit(threshold)
-        )
-        .select(F.col("__idb").alias(id_col))
-        .distinct()
-        .withColumn("__dropped", F.lit(True))
-    )
-    return (
-        cells.join(dropped, id_col, "left")
-        .select(
-            id_col,
-            "cell",
-            F.coalesce(~F.col("__dropped"), F.lit(True)).alias("kept"),
-        )
-    )
+    return _drop_within_cell(cells, id_col, threshold)
 
 
 def hard_negatives(
@@ -860,13 +773,9 @@ def hard_negatives(
         .filter(F.col("neg_label") != F.col("query_label"))
         .withColumn("cosine", cosine_q(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "neg_label", "cosine", "rank")
+    return _topk(
+        scored, k, F.col("cosine").desc(),
+        ("query_id", "neighbor_id", "neg_label", "cosine", "rank"),
     )
 
 
@@ -903,20 +812,12 @@ def pq_topk(
     IVF cell gating (`ivf_topk`) so the scan touches only probed cells.
     """
     dsub = dim // m
-    ksub = len(centroids)
     cb = [[vec[s * dsub : (s + 1) * dsub] for _, vec in centroids] for s in range(m)]
     # The m x ksub x dsub codebook is the largest literal in the repo;
     # element-by-element F.lit was ~m*ksub*dsub py4j round-trips of pure
     # driver declaration time per call (the r10 lit_array pathology, guide
     # §4 driver boundary). One rendered SQL literal, identical value.
     cbl = lit_array(cb, "array<array<array<bigint>>>")
-
-    def sqdist(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
 
     def subv(v: Column, s: Column) -> Column:
         return F.slice(v, s * dsub + 1, dsub)
@@ -929,7 +830,7 @@ def pq_topk(
                 F.transform(
                     F.element_at(cbl, s + 1),
                     lambda c, j: F.struct(
-                        sqdist(subv(v, s), c).alias("d"), j.alias("j")
+                        sq_dist_q(subv(v, s), c).alias("d"), j.alias("j")
                     ),
                 )
             )["j"],
@@ -939,7 +840,7 @@ def pq_topk(
         # [m][ksub] asymmetric distance table for one query
         return F.transform(
             cbl,
-            lambda sub_cb, s: F.transform(sub_cb, lambda c: sqdist(subv(v, s), c)),
+            lambda sub_cb, s: F.transform(sub_cb, lambda c: sq_dist_q(subv(v, s), c)),
         )
 
     c = fan_out(corpus).select(
@@ -964,13 +865,9 @@ def pq_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("approx_dist", adist)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_dist", "rank")
+    return _topk(
+        scored, k, F.col("approx_dist").asc(),
+        ("query_id", "neighbor_id", "approx_dist", "rank"),
     )
 
 
@@ -979,21 +876,52 @@ def pq_topk(
 # ---------------------------------------------------------------------------
 
 
+class IvfIndexSchemaError(ValueError):
+    """The persisted IVF index's data columns differ from an upsert batch's."""
+
+
 def _cell_of(centroids: list[tuple[int, list[int]]], vcol: Column) -> Column:
-    """Best cell id for a quantized vector: argmax cosine over the codebook
-    (ties to the lowest centroid id) — the same single array_max over
-    (cosine, -id) structs `ivf_topk` uses for its corpus side."""
-    matrix = lit_array([vec for _, vec in centroids], "array<array<bigint>>")
-    ids_arr = lit_array([cid for cid, _ in centroids], "array<int>")
-    return -F.array_max(
-        F.transform(
-            matrix,
-            lambda c, i: F.struct(
-                cosine_q(vcol, c).alias("cos"),
-                (-F.element_at(ids_arr, i + F.lit(1))).alias("neg_id"),
-            ),
+    """Best cell id for a quantized vector: ``_best_cell`` over the cosine
+    ``_cell_scores`` (ties to the lowest centroid id) — the ranker
+    ``ivf_index_probe`` and ``ivf_topk`` use, so a probe's best cell is
+    the cell its vector is stored under."""
+    matrix, ids, _ = _codebook(centroids)
+    return _best_cell(_cell_scores(matrix, ids, vcol))
+
+
+def _check_index_schema(path: str, schema) -> None:
+    """Raise ``IvfIndexSchemaError`` unless the index at ``path`` stores
+    exactly ``schema``'s data columns (the ``cell`` partition column
+    aside; nullability ignored). The stored schema is Spark's own JSON in
+    ONE part file's parquet footer, read on the driver — no Spark job, as
+    schema inference would launch."""
+    import pyarrow.parquet as pq
+
+    part = next(
+        (
+            os.path.join(root, f)
+            for root, _, files in os.walk(path)
+            for f in sorted(files)
+            if f.startswith("part-") and f.endswith(".parquet")
+        ),
+        None,
+    )
+    if part is None:
+        return  # no data files: nothing stored that a read could corrupt
+    meta = pq.read_schema(part).metadata or {}
+    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        raise IvfIndexSchemaError(f"{part}: no Spark schema in parquet footer")
+
+    def cols(st: StructType) -> dict:
+        return {f.name: f.dataType.simpleString() for f in st if f.name != "cell"}
+
+    stored, want = cols(StructType.fromJson(json.loads(raw))), cols(schema)
+    if stored != want:
+        raise IvfIndexSchemaError(
+            f"IVF index at {path} stores columns {stored}, upsert batch has "
+            f"{want}; rebuild the index or fix the batch"
         )
-    )["neg_id"]
 
 
 def ivf_index_build(
@@ -1064,8 +992,6 @@ def ivf_index_upsert(
     upserts leave one file per cell at fixture scale). This is
     deliberate: an append-based upsert would need the compaction cadence
     `sources/maintenance.compact_table` gives plain tables."""
-    import os
-
     batch = fan_out(new_rows).select(
         F.col(id_col),
         quantize("embedding").alias("cv"),
@@ -1091,10 +1017,13 @@ def _ivf_upsert_merge(
     batch_cells = {r["cell"] for r in batch.select("cell").distinct().collect()}
     touched = set(batch_cells)
     emptied: set = set()
-    # The index schema is exactly the batch's (same assignment projection
-    # wrote it); passing it explicitly skips a parquet footer-inference
-    # pass per read — an upsert stream otherwise re-infers the same schema
-    # every micro-batch (r11, guide §6 driver overhead).
+    # The index schema must be exactly the batch's (same assignment
+    # projection wrote it): reading with a drifted schema would null-fill
+    # missing columns and the overwrite would write those nulls back, so
+    # check it first. Passing it explicitly then skips a parquet
+    # footer-inference job per read — an upsert stream otherwise re-infers
+    # the same schema every micro-batch (r11 driver overhead).
+    _check_index_schema(path, batch.schema)
     read_idx = lambda: spark.read.schema(batch.schema).parquet(path)  # noqa: E731
     if allow_moves:
         # cells holding a stale copy of an updated id (id+partition cols
@@ -1156,47 +1085,23 @@ def ivf_index_probe(
     parquet source resolves as partition pruning (only those cell
     directories are listed/read — the scan cost is probe-local at any
     corpus size). The probed-cell collect is bounded by nlist — codebook
-    -sized control plane, independent of corpus and query-batch size."""
-    matrix = lit_array([vec for _, vec in centroids], "array<array<bigint>>")
-    ids_arr = lit_array([cid for cid, _ in centroids], "array<int>")
-
-    def top_cells(vcol: Column, n: int) -> Column:
-        scores = F.reverse(
-            F.array_sort(
-                F.transform(
-                    matrix,
-                    lambda c, i: F.struct(
-                        cosine_q(vcol, c).alias("cos"),
-                        (-F.element_at(ids_arr, i + F.lit(1))).alias("neg_id"),
-                    ),
-                )
-            )
-        )
-        return F.transform(F.slice(scores, 1, n), lambda s: -s["neg_id"])
-
+    -sized control plane, independent of corpus and query-batch size.
+    Cells are ranked by the same ``_cell_scores`` the build assigns with."""
+    matrix, ids, _ = _codebook(centroids)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         quantize(vec_col).alias("qv"),
-        F.explode(let(quantize(vec_col), lambda v: top_cells(v, nprobe))).alias(
-            "cell"
-        ),
+        F.explode(
+            let(
+                quantize(vec_col),
+                lambda v: _top_cells(_cell_scores(matrix, ids, v), nprobe),
+            )
+        ).alias("cell"),
     )
     probed = [r["cell"] for r in q.select("cell").distinct().collect()]
     idx = spark.read.parquet(path).filter(F.col("cell").isin(probed))
-    scored = (
-        idx.select(F.col(id_col).alias("neighbor_id"), "cv", "cell")
-        .join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_q(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    c = idx.select(F.col(id_col).alias("neighbor_id"), "cv", "cell")
+    return _cosine_topk(c, q, k, on="cell")
 
 
 def jl_project_q(qcol: Column, signs: list[list[int]]) -> Column:
@@ -1207,14 +1112,7 @@ def jl_project_q(qcol: Column, signs: list[list[int]]) -> Column:
     projected coordinates. The sign matrix enters the plan as one nested
     literal."""
     m = lit_array(signs, "array<array<bigint>>")
-    return F.transform(
-        m,
-        lambda row: F.aggregate(
-            F.zip_with(row, qcol, lambda s, x: s * x),
-            F.lit(0).cast("bigint"),
-            lambda acc, t: acc + t,
-        ),
-    )
+    return F.transform(m, lambda row: dot_q(row, qcol))
 
 
 def sq_dist_q(a: Column, b: Column) -> Column:
@@ -1247,8 +1145,6 @@ def jl_distortion_pairs(
     Scale shape: one narrow projection per row (k×dim multiply-adds,
     no shuffle), one equi-join on the probe ids; pairs ~= corpus /
     probe_mod × |offsets|."""
-    from incremental_data_pipeline_spark.functions.vector import quantize
-
     signs = hyperplanes(k, 64)
     vecs = df.select(F.col(id_col).alias("vid"), quantize(vec_col).alias("v"))
     probes = (

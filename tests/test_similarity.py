@@ -449,6 +449,15 @@ def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters")[1][:200]
     assert out.count() > 0
+    # build/probe agreement: with nprobe=1 a corpus member probes exactly
+    # the cell the index stores it under, so every neighbor shares it
+    stored = {
+        r["vec_id"]: r["cell"]
+        for r in spark.read.parquet(path).select("vec_id", "cell").collect()
+    }
+    one = sim.ivf_index_probe(spark, path, queries, codebook, k=3, nprobe=1).collect()
+    assert one
+    assert all(stored[r["neighbor_id"]] == stored[r["query_id"]] for r in one)
     # upsert overwrite: re-upserting the same batch is idempotent
     sim.ivf_index_upsert(
         spark, emb.filter(F.col("vec_id") % 5 == 4), codebook, path
@@ -544,6 +553,51 @@ def test_ivf_index_upsert_allow_moves_drops_emptied_cell(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, f"cell={lone_cell}"))
     assert idx.count() == corpus.count()
     assert idx.select("vec_id").distinct().count() == corpus.count()
+
+
+def test_ivf_index_upsert_rejects_schema_drift(spark, tmp_path):
+    """An index whose stored columns drifted from the upsert batch's must
+    fail the upsert loudly and stay untouched: reading it under the batch
+    schema would null-fill the missing column, and the partition overwrite
+    would write those nulls back."""
+    import pytest
+
+    from incremental_data_pipeline_spark.operators import similarity as sim
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    codebook = sim.centroid_codebook(emb, nlist=8)
+    good = str(tmp_path / "idx")
+    sim.ivf_index_build(emb.filter(F.col("vec_id") % 5 != 4), codebook, good)
+    drifted = str(tmp_path / "drifted")
+    spark.read.parquet(good).withColumnRenamed("cv", "cv_old").write.partitionBy(
+        "cell"
+    ).parquet(drifted)
+
+    def snapshot():
+        return sorted(
+            map(tuple, spark.read.parquet(drifted).select("vec_id", "cell", "cv_old").collect())
+        )
+
+    before = snapshot()
+    batch = emb.filter(F.col("vec_id") % 5 == 4)
+    with pytest.raises(sim.IvfIndexSchemaError, match="cv_old"):
+        sim.ivf_index_upsert(spark, batch, codebook, drifted, allow_moves=True)
+    assert snapshot() == before
+    # the undrifted index still upserts
+    sim.ivf_index_upsert(spark, batch, codebook, good, allow_moves=True)
+    assert spark.read.parquet(good).count() == emb.count()
+
+
+def test_operator_families_defined_once():
+    """The codebook argmax, the per-query top-k window and the LSH band
+    builder each live in one helper; a second copy is a fork that can
+    drift (e.g. index build vs probe cell ranking)."""
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parents[1] / "incremental_data_pipeline_spark" / "operators"
+    src = "".join((ops / f).read_text() for f in ("similarity.py", "dedup.py"))
+    for needle in ('Window.partitionBy("query_id")', "F.array_max(", "band_structs = "):
+        assert src.count(needle) == 1, needle
 
 
 def test_jl_projection_exact_and_distortion_concentrates(spark):
