@@ -115,17 +115,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Runtime-settable; required even on sessions not built by
         # session.get_spark (e.g. the verify driver's bare SparkSession).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    df = _normalize_ntz(df)
+    df = _normalize_ntz(spark.read.parquet(path), nanos_cols)
     if key is not None:
         cache[("table", *key)] = df
     return df
 
 
-def _normalize_ntz(df: DataFrame) -> DataFrame:
-    """Cast TIMESTAMP_NTZ columns to session-UTC TimestampType.
+def _normalize_ntz(df: DataFrame, nanos_cols: list[str]) -> DataFrame:
+    """The one timestamp rule for every scan of a table, batch or stream:
+    truncate the raw-int64 ``nanos_cols`` (``_nanos_ts_columns``) to
+    microsecond TimestampType (matching DuckDB's own ns→µs truncation),
+    then cast TIMESTAMP_NTZ columns to session-UTC TimestampType.
 
     Parquet timestamps written with isAdjustedToUTC=false surface as
     TIMESTAMP_NTZ in Spark 4, which rejects epoch casts (``cast(ts as
@@ -134,6 +134,8 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     pure re-tag (identical wall-clock/epoch values, matching DuckDB's
     naive-UTC reading), so every downstream operator sees one timestamp
     type regardless of how the fixture was written."""
+    for c in nanos_cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     for field in df.schema:
         if field.dataType.typeName() == "timestamp_ntz":
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
@@ -182,8 +184,7 @@ def load_table_range(
             (F.col(ts_col) > F.lit(_micros(lo) * 1000))
             & (F.col(ts_col) < F.lit((_micros(hi) + 1) * 1000))
         )
-        for c in nanos_cols:
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+        df = _normalize_ntz(df, nanos_cols)
     else:
         df = load_table(spark, sf_dir, name)
     # Exact window on the public (converted) column.

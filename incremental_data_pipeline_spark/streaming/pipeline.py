@@ -17,19 +17,28 @@ Design notes (100 TB posture):
 - The memory sink used by the test/oracle harness collects to the driver and
   is test-only; production callers hand ``start_*`` a parquet/Kafka sink or
   use ``foreach_batch_scd1`` which reuses the batch SCD1 upsert unchanged.
+- ``_drain`` is the one query lifecycle (shuffle-partition override, start,
+  drain, stop, await). The memory sink (``run_to_memory*``) and both
+  foreachBatch drains call it; nothing else starts a query.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from incremental_data_pipeline_spark.sources.readers import load_table
+from incremental_data_pipeline_spark.sources.readers import (
+    _nanos_ts_columns,
+    _normalize_ntz,
+    _scan_cache,
+    _stat_key,
+    load_table,
+)
 
 # Stateful-query partition sizing (r10 optimization): every shuffle
 # partition of a stateful streaming operator IS a state store, and each
@@ -79,25 +88,19 @@ def adaptive_state_partitions(sf_dir: str, *tables: str) -> int:
     )
 
 
-def read_stream(spark: SparkSession, sf_dir: str, name: str, ts_col: str = "ts") -> DataFrame:
+def read_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source readStream over one fixture table.
 
     Streaming sources need an explicit schema; we take it from a batch scan
-    of the same path (self-describing parquet). Nanosecond timestamps arrive
-    as raw int64 (nanosAsLong, set by load_table) and are converted to
-    microsecond TimestampType exactly as the batch reader does, so batch and
-    stream plans see one schema.
+    of the same path (self-describing parquet). The columns then go through
+    the batch reader's own timestamp rule (``readers._normalize_ntz``), so
+    the stream shows exactly the schema ``load_table`` returns.
     """
-    batch = load_table(spark, sf_dir, name)  # also sets nanosAsLong conf
+    load_table(spark, sf_dir, name)  # sets the nanosAsLong conf when needed
     path = os.path.join(sf_dir, f"{name}.parquet")
     # Pre-conversion schema, cached with the same session-scoped
     # metadata cache load_table uses (schema inference is ~100 ms of
     # driver-side footer reading per call — see readers._scan_cache).
-    from incremental_data_pipeline_spark.sources.readers import (
-        _scan_cache,
-        _stat_key,
-    )
-
     cache, key = _scan_cache(spark), _stat_key(path)
     if key is not None and ("raw_schema", *key) in cache:
         raw_schema = cache[("raw_schema", *key)]
@@ -111,24 +114,17 @@ def read_stream(spark: SparkSession, sf_dir: str, name: str, ts_col: str = "ts")
     # leaves basePath at the parent directory.
     stream_path = path if os.path.isdir(path) else f"{os.path.dirname(path)}/{{{os.path.basename(path)}}}"
     stream = spark.readStream.schema(raw_schema).parquet(stream_path)
-    for field in raw_schema:
-        if field.name == ts_col and field.dataType.typeName() == "long":
-            stream = stream.withColumn(ts_col, F.timestamp_micros(F.expr(f"`{ts_col}` div 1000")))
-        elif field.dataType.typeName() == "timestamp_ntz":
-            # Same NTZ->LTZ re-tag as readers._normalize_ntz: batch and
-            # stream must present one timestamp type (UTC session).
-            stream = stream.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return stream.select(*[f.name for f in batch.schema])
+    return _normalize_ntz(stream, _nanos_ts_columns(path))
 
 
-def run_to_memory(
-    stream_df: DataFrame, output_mode: str, state_partitions: int | None = None
-) -> DataFrame:
-    """Drain a bounded stream into a memory sink and return the result.
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int | None = None
+) -> StreamingQuery:
+    """The one stream-query lifecycle: start ``writer``, drain every
+    available input, stop, and return the stopped query.
 
-    Synchronous: processAllAvailable() blocks until every available input
-    file is consumed and all resulting state transitions have been emitted.
-    Test-only sink — see module docstring.
+    Synchronous: the drain blocks until every available input file is
+    consumed and all resulting state transitions have been emitted.
 
     ``state_partitions`` (usually ``adaptive_state_partitions(...)``)
     overrides ``spark.sql.shuffle.partitions`` for THIS stream only: the
@@ -143,20 +139,18 @@ def run_to_memory(
     inherits it. Fine for the sequential harness/bench; concurrent
     callers must scope the override via a dedicated session (or accept
     the session default by passing ``state_partitions=None``).
+
+    A failed micro-batch surfaces as ``StreamingQueryException``:
+    ``processAllAvailable`` alone raises a raw ``Py4JJavaError``, and
+    ``awaitTermination()`` in the ``finally`` replaces it with the typed
+    error, so keep that call.
     """
-    spark = stream_df.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:12]}"
     prev_parts: str | None = None
     if state_partitions is not None:
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
+        q = writer.start()
         try:
             q.processAllAvailable()
         finally:
@@ -165,16 +159,27 @@ def run_to_memory(
     finally:
         if prev_parts is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return q
+
+
+def run_to_memory(
+    stream_df: DataFrame, output_mode: str, state_partitions: int | None = None
+) -> DataFrame:
+    """Drain a bounded stream into a memory sink and return the result
+    (test-only sink — see module docstring; ``state_partitions``: see
+    ``_drain``)."""
+    return run_to_memory_with_state_metrics(stream_df, output_mode, state_partitions)[0]
 
 
 def run_to_memory_with_state_metrics(
     stream_df: DataFrame, output_mode: str, state_partitions: int | None = None
 ) -> tuple[DataFrame, list[dict]]:
-    """`run_to_memory`, additionally returning the FINAL micro-batch's
-    state-operator metrics (`StreamingQueryProgress.stateOperators`): one
-    dict per stateful operator with `numRowsTotal` (rows held in the state
-    store after the batch), `numRowsUpdated`, `numRowsRemoved`, etc.
+    """Drain a bounded stream into a memory sink, returning the result and
+    the FINAL stateful micro-batch's state-operator metrics
+    (`StreamingQueryProgress.stateOperators`): one dict per stateful
+    operator with `numRowsTotal` (rows held in the state store after the
+    batch), `numRowsUpdated`, `numRowsRemoved`, etc. The stopped query
+    still holds its `recentProgress`, so reading it costs no Spark job.
 
     This is the observable the 100×-posture tests pin: a stateful query is
     cluster-safe only if its state rows track the BOUND the operator
@@ -183,38 +188,13 @@ def run_to_memory_with_state_metrics(
     ever seen" is the failure mode, and these metrics are exactly what a
     production monitor alarms on.
 
-    ``state_partitions``: see ``run_to_memory``."""
+    ``state_partitions``: see ``_drain``."""
     spark = stream_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    prev_parts: str | None = None
-    if state_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            state_ops: list[dict] = []
-            for progress in reversed(q.recentProgress):
-                ops = progress.get("stateOperators") if isinstance(progress, dict) else progress.stateOperators
-                if ops:
-                    state_ops = [
-                        op if isinstance(op, dict) else json.loads(op.json)
-                        for op in ops
-                    ]
-                    break
-        finally:
-            q.stop()
-            q.awaitTermination()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name), state_ops
+    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    q = _drain(spark, writer, state_partitions)
+    ops = [p["stateOperators"] for p in q.recentProgress if p["stateOperators"]]
+    return spark.table(name), ops[-1] if ops else []
 
 
 def tumbling_window_agg(
@@ -368,22 +348,21 @@ def foreach_batch_scd1(
     apply_batch: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
 ) -> None:
-    """Drive the batch SCD1/upsert path from a stream: each micro-batch is a
+    """The generic at-least-once foreachBatch drain, which
+    ``foreach_batch_exactly_once`` wraps with its ledger.
+
+    Drives the batch SCD1/upsert path from a stream: each micro-batch is a
     normal DataFrame handed to the same ``build_dim``/upsert code the batch
     pipeline uses (one implementation, two execution modes). The checkpoint
     makes delivery at-least-once; the idempotent upsert makes the composed
-    system effectively-once."""
-    q = (
+    system effectively-once. A failing ``apply_batch`` raises
+    ``StreamingQueryException`` (see ``_drain``)."""
+    writer = (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    _drain(stream.sparkSession, writer)
 
 
 def foreach_batch_exactly_once(
@@ -418,17 +397,7 @@ def foreach_batch_exactly_once(
         with open(marker, "x") as f:
             f.write("applied\n")
 
-    q = (
-        stream.writeStream.foreachBatch(wrapper)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    foreach_batch_scd1(stream, wrapper, checkpoint_dir)
 
 
 def running_user_stats(stream: DataFrame, ts_col: str = "ts") -> DataFrame:

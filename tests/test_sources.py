@@ -221,3 +221,39 @@ def test_int96_timestamps_not_misread_as_nanos(spark, tmp_path):
     got = load_table(spark, str(tmp_path), "t96")
     assert got.schema["ts"].dataType.typeName() == "timestamp"
     assert got.count() == 1
+
+
+def test_stream_and_range_reads_share_the_batch_schema(spark, tmp_path):
+    """Batch, range and stream reads of one table show one schema: every
+    INT64-nanos column becomes a timestamp (not just the one named ``ts``)
+    and naive microsecond timestamps are re-tagged on every path."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incremental_data_pipeline_spark.sources.readers import (
+        load_table,
+        load_table_range,
+    )
+    from incremental_data_pipeline_spark.streaming.pipeline import read_stream
+
+    t0 = datetime.datetime(2024, 1, 1)
+    times = [t0, t0 + datetime.timedelta(hours=1)]
+    pq.write_table(
+        pa.table(
+            {
+                "id": [1, 2],
+                "ts": pa.array(times, pa.timestamp("ns")),
+                "ts2": pa.array(times, pa.timestamp("ns")),
+                "ts3": pa.array(times, pa.timestamp("us")),
+            }
+        ),
+        str(tmp_path / "two_ns.parquet"),
+    )
+    batch = load_table(spark, str(tmp_path), "two_ns")
+    assert {f.dataType.typeName() for f in batch.schema[1:]} == {"timestamp"}
+    assert read_stream(spark, str(tmp_path), "two_ns").schema == batch.schema
+    window = load_table_range(spark, str(tmp_path), "two_ns", "ts", t0, times[1])
+    assert window.schema == batch.schema
+    assert window.count() == 1

@@ -10,6 +10,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR, assert_query_matches_oracle
@@ -44,6 +45,25 @@ def _copy_split(src: str, dest_dir: str, df, ts_col: str, cut) -> tuple[str, str
         shutil.rmtree(tmp)
         out.append(final)
     return tuple(out)
+
+
+def _chunked_source(spark, base: str, df, ts_col: str, k: int = 3) -> str:
+    """Write df as k time-ordered single-file chunks under base/src so
+    maxFilesPerTrigger=1 yields k ordered micro-batches."""
+    import glob as _glob
+
+    from pyspark.sql import Window
+
+    src = os.path.join(base, "src")
+    os.makedirs(src)
+    chunked = df.withColumn("__chunk", F.ntile(k).over(Window.orderBy(ts_col)))
+    for i in range(1, k + 1):
+        tmp = os.path.join(base, f"__c{i}__")
+        chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(1).write.parquet(tmp)
+        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        os.rename(part, os.path.join(src, f"chunk{i}.parquet"))
+        shutil.rmtree(tmp)
+    return src
 
 
 def test_multi_batch_scd1_keys_stable(spark):
@@ -257,26 +277,14 @@ def test_running_user_stats_invariant_to_batch_split(spark):
     split the source into 3 files, force one file per trigger, and the
     per-user (n_events, max_value) still equals the batch groupBy — the
     monotone-running-state property the oracle relies on."""
-    import glob as _glob
-
-    from pyspark.sql import Window
-
     from incremental_data_pipeline_spark.sources.readers import load_table
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_state_split_")
     try:
         events = load_table(spark, SF_DIR, "events").select("user_id", "value", "ts")
-        src = os.path.join(base, "src")
-        os.makedirs(src)
         # 3 time-ordered chunks -> 3 micro-batches (ntile over ts)
-        chunked = events.withColumn("__chunk", F.ntile(3).over(Window.orderBy("ts")))
-        for i in (1, 2, 3):
-            tmp = os.path.join(base, f"__c{i}__")
-            chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(1).write.parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            os.rename(part, os.path.join(src, f"chunk{i}.parquet"))
-            shutil.rmtree(tmp)
+        src = _chunked_source(spark, base, events, "ts", 3)
 
         stream = (
             spark.readStream.schema(events.schema)
@@ -339,8 +347,6 @@ def test_stream_incremental_gold_invariant_to_batch_split(spark):
     """The streaming gold rollup (foreachBatch + merge_partial_aggs) must
     equal the from-scratch full aggregate when the source arrives as 3
     micro-batches — the merge invariant under real incremental delivery."""
-    from pyspark.sql import Window
-
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
     from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
@@ -351,15 +357,7 @@ def test_stream_incremental_gold_invariant_to_batch_split(spark):
         events = load_table(spark, SF_DIR, "events").select(
             "user_id", "event_type", "value", "ts"
         )
-        src = os.path.join(base, "src")
-        os.makedirs(src)
-        chunked = events.withColumn("__chunk", F.ntile(3).over(Window.orderBy("ts")))
-        for i in (1, 2, 3):
-            tmp = os.path.join(base, f"tmp{i}")
-            chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(1).write.parquet(tmp)
-            part = [p for p in os.listdir(tmp) if p.endswith(".parquet")][0]
-            os.rename(os.path.join(tmp, part), os.path.join(src, f"chunk{i}.parquet"))
-            shutil.rmtree(tmp)
+        src = _chunked_source(spark, base, events, "ts", 3)
 
         gold_path = os.path.join(base, "gold")
         keys = ["user_id", "event_type"]
@@ -853,25 +851,6 @@ def test_stream_cusum_correct_with_tiny_arrow_chunks(spark):
 # ---------------------------------------------------------------------------
 
 
-def _chunked_source(spark, base: str, df, ts_col: str, k: int = 3) -> str:
-    """Write df as k time-ordered single-file chunks under base/src so
-    maxFilesPerTrigger=1 yields k ordered micro-batches."""
-    import glob as _glob
-
-    from pyspark.sql import Window
-
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    chunked = df.withColumn("__chunk", F.ntile(k).over(Window.orderBy(ts_col)))
-    for i in range(1, k + 1):
-        tmp = os.path.join(base, f"__c{i}__")
-        chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(1).write.parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        os.rename(part, os.path.join(src, f"chunk{i}.parquet"))
-        shutil.rmtree(tmp)
-    return src
-
-
 def test_streaming_dedup_state_evicted_at_watermark(spark):
     """dropDuplicatesWithinWatermark state must hold only the keys inside
     the watermark window, not every key ever seen: after 3 ordered
@@ -1063,11 +1042,10 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
     sidecar must skip it (a second merge would double-count) and the
     drained result must hash-match an uninterrupted run of the same
     source."""
-    from pyspark.sql import Window
-
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
     from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_kill_restart_")
 
@@ -1078,19 +1056,7 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
         events = load_table(spark, SF_DIR, "events").select(
             "user_id", "event_type", "value", "ts"
         )
-        src = os.path.join(base, "src")
-        os.makedirs(src)
-        chunked = events.withColumn(
-            "__chunk", F.ntile(4).over(Window.orderBy("ts"))
-        )
-        for i in (1, 2, 3, 4):
-            tmp = os.path.join(base, f"tmp{i}")
-            chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(
-                1
-            ).write.parquet(tmp)
-            part = [p for p in os.listdir(tmp) if p.endswith(".parquet")][0]
-            os.rename(os.path.join(tmp, part), os.path.join(src, f"chunk{i}.parquet"))
-            shutil.rmtree(tmp)
+        src = _chunked_source(spark, base, events, "ts", 4)
 
         keys = ["user_id", "event_type"]
         sums = {
@@ -1131,27 +1097,14 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src)
             )
-            q = (
-                stream.writeStream.foreachBatch(
-                    make_apply(gold_path, kill_after_epoch)
-                )
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .start()
-            )
             try:
-                q.processAllAvailable()
-            except Exception:
-                # the deliberate kill surfaces as a StreamingQueryException
-                # whose message truncates the Python traceback — the
-                # post-kill state asserts below prove WHERE it died
+                sp.foreach_batch_scd1(
+                    stream, make_apply(gold_path, kill_after_epoch), ckpt
+                )
+            except StreamingQueryException:
+                # the exception's message truncates the Python traceback —
+                # the post-kill state asserts below prove WHERE it died
                 return False
-            finally:
-                q.stop()
-                try:
-                    q.awaitTermination()
-                except Exception:
-                    pass
             return True
 
         gold_a = os.path.join(base, "gold_killed")
@@ -1193,8 +1146,11 @@ def test_kill_and_restart_ledger_applies_each_epoch_once(spark):
     START of epoch 2 (epochs 0-1 fully committed — side effects, ledger
     markers, offsets). A restart on the same checkpoint + ledger must
     apply epochs 2-3 exactly once each, never re-running 0-1, and the
-    non-idempotent applied-log must end with one entry per epoch."""
+    non-idempotent applied-log must end with one entry per epoch. Drives
+    the shipping ``foreach_batch_exactly_once``: a ledger that marked an
+    epoch before its apply would lose epoch 2 here."""
     from incremental_data_pipeline_spark.sources.readers import load_table
+    from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_kill_ledger_")
 
@@ -1203,31 +1159,15 @@ def test_kill_and_restart_ledger_applies_each_epoch_once(spark):
 
     try:
         events = load_table(spark, SF_DIR, "events").select("user_id", "ts")
-        src = os.path.join(base, "src")
-        os.makedirs(src)
-        for i in range(4):
-            tmp = os.path.join(base, f"tmp{i}")
-            events.filter(F.pmod(F.col("user_id"), F.lit(4)) == i).coalesce(
-                1
-            ).write.parquet(tmp)
-            part = [p for p in os.listdir(tmp) if p.endswith(".parquet")][0]
-            os.rename(os.path.join(tmp, part), os.path.join(src, f"chunk{i}.parquet"))
-            shutil.rmtree(tmp)
-
+        src = _chunked_source(spark, base, events, "ts", 4)
         ledger = os.path.join(base, "ledger")
-        os.makedirs(ledger)
         applied = []  # (epoch, rows): NOT idempotent by construction
         kill_armed = [True]
 
-        def wrapper(batch, epoch):
+        def apply_batch(batch, epoch):
             if kill_armed[0] and epoch == 2:
-                raise DeliberateKill("kill at trigger start of epoch 2")
-            marker = os.path.join(ledger, f"epoch={epoch}")
-            if os.path.exists(marker):
-                return
+                raise DeliberateKill("kill at the start of epoch 2's apply")
             applied.append((epoch, batch.count()))
-            with open(marker, "x") as f:
-                f.write("applied\n")
 
         def run(ckpt):
             stream = (
@@ -1235,25 +1175,10 @@ def test_kill_and_restart_ledger_applies_each_epoch_once(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src)
             )
-            q = (
-                stream.writeStream.foreachBatch(wrapper)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .start()
-            )
             try:
-                q.processAllAvailable()
-            except Exception:
-                # the deliberate kill surfaces as a StreamingQueryException
-                # whose message truncates the Python traceback — the
-                # post-kill state asserts below prove WHERE it died
+                sp.foreach_batch_exactly_once(stream, apply_batch, ckpt, ledger)
+            except StreamingQueryException:
                 return False
-            finally:
-                q.stop()
-                try:
-                    q.awaitTermination()
-                except Exception:
-                    pass
             return True
 
         ckpt = os.path.join(base, "ckpt")
@@ -1276,11 +1201,10 @@ def test_hll_fold_survives_replay_with_no_epoch_guard(spark):
     store a second time. The replayed merge must be a no-op (per-bucket
     max cannot move), and the final registers must equal the one-shot
     batch sketch bit-for-bit."""
-    from pyspark.sql import Window
-
     from incremental_data_pipeline_spark.operators import sketches as sk
     from incremental_data_pipeline_spark.sources.readers import load_table
     from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_hll_kill_")
 
@@ -1289,21 +1213,7 @@ def test_hll_fold_survives_replay_with_no_epoch_guard(spark):
 
     try:
         events = load_table(spark, SF_DIR, "events").select("user_id", "ts")
-        src = os.path.join(base, "src")
-        os.makedirs(src)
-        chunked = events.withColumn(
-            "__chunk", F.ntile(4).over(Window.orderBy("ts"))
-        )
-        for i in (1, 2, 3, 4):
-            tmp = os.path.join(base, f"tmp{i}")
-            chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(
-                1
-            ).write.parquet(tmp)
-            part = [p for p in os.listdir(tmp) if p.endswith(".parquet")][0]
-            os.rename(
-                os.path.join(tmp, part), os.path.join(src, f"chunk{i}.parquet")
-            )
-            shutil.rmtree(tmp)
+        src = _chunked_source(spark, base, events, "ts", 4)
 
         store = os.path.join(base, "registers")
         applied_epochs = []
@@ -1325,24 +1235,14 @@ def test_hll_fold_survives_replay_with_no_epoch_guard(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src)
             )
-            q = (
-                stream.writeStream.foreachBatch(
-                    lambda b, e: apply_batch(b, e, kill_after)
-                )
-                .option("checkpointLocation", os.path.join(base, "ckpt"))
-                .outputMode("update")
-                .start()
-            )
             try:
-                q.processAllAvailable()
-            except Exception:
+                sp.foreach_batch_scd1(
+                    stream,
+                    lambda b, e: apply_batch(b, e, kill_after),
+                    os.path.join(base, "ckpt"),
+                )
+            except StreamingQueryException:
                 return False
-            finally:
-                q.stop()
-                try:
-                    q.awaitTermination()
-                except Exception:
-                    pass
             return True
 
         assert not run(kill_after=2), "the kill never fired"
@@ -1359,3 +1259,22 @@ def test_hll_fold_survives_replay_with_no_epoch_guard(spark):
         assert got == want and len(got) > 0
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_lifecycle_defined_once():
+    """The stream-query lifecycle lives in ``pipeline._drain`` and the
+    timestamp rule in ``readers._normalize_ntz``; a second copy is a fork
+    that can drift (a hand-rolled drain in a test exercises no shipping
+    code, and ``read_stream`` once kept a narrower timestamp rule)."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "incremental_data_pipeline_spark"
+    drain = "processAllAvailable" "("  # split so this file holds no copy
+    assert (pkg / "streaming" / "pipeline.py").read_text().count(drain) == 1
+    assert sum(p.read_text().count(drain) for p in pkg.rglob("*.py")) == 1
+    assert drain not in Path(__file__).read_text()
+    src = "".join(
+        (pkg / f).read_text() for f in ("sources/readers.py", "streaming/pipeline.py")
+    )
+    assert src.count("timestamp_micros(") == 1
