@@ -40,13 +40,11 @@ plane expressions, not execution.
 from __future__ import annotations
 
 import hashlib
-import json
 import math
 import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from incremental_data_pipeline_spark.functions.util import fan_out, lit_array
 from incremental_data_pipeline_spark.functions.vector import (
@@ -55,6 +53,7 @@ from incremental_data_pipeline_spark.functions.vector import (
     norm_q,
     quantize,
 )
+from incremental_data_pipeline_spark.sources.sinks import StoredSchemaError, merge_partitions
 
 
 MAX_AUTO_PLANES = 24  # 2^24 buckets — occupancy ~60 rows even at 1e9 vectors
@@ -876,8 +875,7 @@ def pq_topk(
 # ---------------------------------------------------------------------------
 
 
-class IvfIndexSchemaError(ValueError):
-    """The persisted IVF index's data columns differ from an upsert batch's."""
+IvfIndexSchemaError = StoredSchemaError  # the index is a merge_partitions table
 
 
 def _cell_of(centroids: list[tuple[int, list[int]]], vcol: Column) -> Column:
@@ -887,41 +885,6 @@ def _cell_of(centroids: list[tuple[int, list[int]]], vcol: Column) -> Column:
     the cell its vector is stored under."""
     matrix, ids, _ = _codebook(centroids)
     return _best_cell(_cell_scores(matrix, ids, vcol))
-
-
-def _check_index_schema(path: str, schema) -> None:
-    """Raise ``IvfIndexSchemaError`` unless the index at ``path`` stores
-    exactly ``schema``'s data columns (the ``cell`` partition column
-    aside; nullability ignored). The stored schema is Spark's own JSON in
-    ONE part file's parquet footer, read on the driver — no Spark job, as
-    schema inference would launch."""
-    import pyarrow.parquet as pq
-
-    part = next(
-        (
-            os.path.join(root, f)
-            for root, _, files in os.walk(path)
-            for f in sorted(files)
-            if f.startswith("part-") and f.endswith(".parquet")
-        ),
-        None,
-    )
-    if part is None:
-        return  # no data files: nothing stored that a read could corrupt
-    meta = pq.read_schema(part).metadata or {}
-    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
-    if raw is None:
-        raise IvfIndexSchemaError(f"{part}: no Spark schema in parquet footer")
-
-    def cols(st: StructType) -> dict:
-        return {f.name: f.dataType.simpleString() for f in st if f.name != "cell"}
-
-    stored, want = cols(StructType.fromJson(json.loads(raw))), cols(schema)
-    if stored != want:
-        raise IvfIndexSchemaError(
-            f"IVF index at {path} stores columns {stored}, upsert batch has "
-            f"{want}; rebuild the index or fix the batch"
-        )
 
 
 def ivf_index_build(
@@ -969,9 +932,11 @@ def ivf_index_upsert(
     """Incrementally add vectors to a persisted IVF index WITHOUT a
     rebuild: assign the batch to cells, then dynamically overwrite exactly
     the touched cell partitions with (existing ∪ batch), deduped on id
-    with the batch winning — the same replay-safe partition-merge
-    discipline as `sinks.idempotent_overwrite_day_partitions`, keyed by
-    cell instead of day. Untouched cells are never read or written.
+    with the batch winning — ``sinks.merge_partitions``, the same merge the
+    day-partitioned bronze sink runs, keyed by cell instead of day. A
+    stored schema that drifted from the batch's raises
+    ``IvfIndexSchemaError`` before anything is written. Untouched cells are
+    never read or written.
 
     Dedup scope: with the default ``allow_moves=False`` the id-dedup is
     APPEND/REPLAY-safe only — re-delivery of an identical row is absorbed,
@@ -1017,18 +982,12 @@ def _ivf_upsert_merge(
     batch_cells = {r["cell"] for r in batch.select("cell").distinct().collect()}
     touched = set(batch_cells)
     emptied: set = set()
-    # The index schema must be exactly the batch's (same assignment
-    # projection wrote it): reading with a drifted schema would null-fill
-    # missing columns and the overwrite would write those nulls back, so
-    # check it first. Passing it explicitly then skips a parquet
-    # footer-inference job per read — an upsert stream otherwise re-infers
-    # the same schema every micro-batch (r11 driver overhead).
-    _check_index_schema(path, batch.schema)
-    read_idx = lambda: spark.read.schema(batch.schema).parquet(path)  # noqa: E731
     if allow_moves:
         # cells holding a stale copy of an updated id (id+partition cols
-        # only — parquet reads no vector bytes for this)
-        idx_cols = read_idx().select(id_col, "cell")
+        # only — parquet reads no vector bytes for this; the explicit
+        # schema skips a footer-inference job, and merge_partitions checks
+        # it against the stored one before anything is written)
+        idx_cols = spark.read.schema(batch.schema).parquet(path).select(id_col, "cell")
         stale_cells = {
             r["cell"]
             for r in idx_cols.join(batch.select(id_col), id_col, "semi")
@@ -1051,16 +1010,8 @@ def _ivf_upsert_merge(
             .collect()
         }
         emptied = stale_cells - surviving_cells - batch_cells
-    touched = sorted(touched)
-    existing = read_idx().filter(F.col("cell").isin(touched))
-    survivors = existing.join(batch.select(id_col), id_col, "left_anti")
-    merged = survivors.unionByName(batch)
-    (
-        merged.hint("rebalance", "cell")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(path)
+    merge_partitions(
+        spark, batch, path, [id_col], "cell", F.col("cell").isin(sorted(touched))
     )
     if emptied:
         jvm = spark._jvm

@@ -27,6 +27,7 @@ from incremental_data_pipeline_spark.sources.sinks import (
     atomic_overwrite,
     idempotent_append,
     idempotent_overwrite_day_partitions,
+    recover_interrupted_swap,
 )
 from incremental_data_pipeline_spark.sources.watermark import WatermarkStore, run_incremental_batch
 
@@ -42,8 +43,12 @@ class MedallionPipeline:
         return os.path.join(self.base, layer, table)
 
     def exists(self, layer: str, table: str) -> bool:
-        """Reference: spark.catalog.tableExists gate (gold_dim_branch.py:51)."""
-        return os.path.exists(self.path(layer, table))
+        """Reference: spark.catalog.tableExists gate (gold_dim_branch.py:51).
+        A swap that crashed between its renames is repaired first, so the
+        table reads as its last version, never as missing."""
+        path = self.path(layer, table)
+        recover_interrupted_swap(path)
+        return os.path.exists(path)
 
     def read(self, layer: str, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(layer, table))

@@ -26,13 +26,16 @@ Design notes (scale):
 
 from __future__ import annotations
 
+import glob
 import math
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+from incremental_data_pipeline_spark.sources import sinks
+from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite, overwrite_partitions
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -162,8 +165,6 @@ def compact_table(
     elif not partition_cols:
         atomic_overwrite(df.repartition(n), path)
     else:
-        from incremental_data_pipeline_spark.sources.sinks import overwrite_partitions
-
         bytes_per_row = total_bytes / total_rows
         sizes = (
             df.groupBy(*partition_cols)
@@ -206,25 +207,14 @@ def expire_versions(path: str, keep_last_n: int) -> list[int]:
     bookkeeping only — no Spark job, exactly like Delta's log cleanup.
     Single-writer contract, as documented by the swap-based sinks.
     """
-    import shutil as _shutil
-
-    from incremental_data_pipeline_spark.sources.sinks import (
-        _current_version,
-        list_versions,
-    )
-
     if keep_last_n < 0:
         raise ValueError(f"keep_last_n must be >= 0, got {keep_last_n}")
-    versions = list_versions(path)
+    versions = sinks.list_versions(path)
     protected = set(versions[len(versions) - keep_last_n :] if keep_last_n else [])
-    protected.add(_current_version(path))
+    protected.add(sinks._current_version(path))
     expired = [v for v in versions if v not in protected]
     for v in expired:
-        _shutil.rmtree(f"{path}/v{v:08d}", ignore_errors=True)
-        try:
-            os.remove(f"{path}/v{v:08d}.commit")
-        except FileNotFoundError:
-            pass
+        sinks.drop_version(path, v)
     return expired
 
 
@@ -238,26 +228,22 @@ def vacuum_swap_debris(path: str) -> list[str]:
     that ``recover_interrupted_swap`` needs, so it is left alone.
     Returns the removed paths.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
     removed = []
-    for tmp in _glob.glob(f"{_glob.escape(path)}.__tmp__*"):
-        _shutil.rmtree(tmp, ignore_errors=True)
+    for tmp in glob.glob(f"{glob.escape(path)}{sinks._TMP}*"):
+        shutil.rmtree(tmp, ignore_errors=True)
         removed.append(tmp)
-    old = f"{path}.__old__"
-    if _os.path.exists(path) and _os.path.exists(old):
-        _shutil.rmtree(old, ignore_errors=True)
+    old = f"{path}{sinks._OLD}"
+    if os.path.exists(path) and os.path.exists(old):
+        shutil.rmtree(old, ignore_errors=True)
         removed.append(old)
     # Orphaned per-writer stage dirs a crashed ``versioned_overwrite``
     # strands INSIDE a versioned table dir (".vN.stage-<uuid>"). Same
     # no-write-in-flight contract as above.
-    if _os.path.isdir(path):
-        for name in sorted(_os.listdir(path)):
-            if name.startswith(".v") and ".stage" in name:
-                stale = _os.path.join(path, name)
-                _shutil.rmtree(stale, ignore_errors=True)
+    if os.path.isdir(path):
+        for name in sorted(os.listdir(path)):
+            if name.startswith(".v") and sinks._STAGE in name:
+                stale = os.path.join(path, name)
+                shutil.rmtree(stale, ignore_errors=True)
                 removed.append(stale)
     return removed
 
@@ -271,14 +257,11 @@ def expire_partitions(path: str, partition_col: str, keep_last_n: int) -> list[s
     like ``expire_versions``; the next scan simply lists fewer
     directories, and partition pruning on survivors is unaffected.
     Single-writer contract as documented by the swap-based sinks."""
-    import os as _os
-    import shutil as _shutil
-
     if keep_last_n < 1:
         raise ValueError(f"keep_last_n must be >= 1, got {keep_last_n}")
     prefix = f"{partition_col}="
-    parts = sorted(d for d in _os.listdir(path) if d.startswith(prefix))
+    parts = sorted(d for d in os.listdir(path) if d.startswith(prefix))
     expired = parts[:-keep_last_n]
     for d in expired:
-        _shutil.rmtree(_os.path.join(path, d), ignore_errors=True)
+        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
     return [d[len(prefix):] for d in expired]

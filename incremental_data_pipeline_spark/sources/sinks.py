@@ -1,52 +1,88 @@
-"""Sinks: atomic overwrite, idempotent append, layered table paths.
+"""Sinks: one commit protocol per storage shape, plus layered table paths.
 
 The reference's sinks are Delta MERGE / overwrite + saveAsTable
 (gold_dim_branch.py:188-191) and a raw parquet append for silver
 (silver_notebook.py:59-62 — re-run ⇒ duplicates, SURVEY §2.9 #7). Without
-delta-spark, mutation is emulated as write-new-version + atomic swap:
+delta-spark, mutation is emulated as write-new-version + swap, defined
+once per storage shape:
 
-- ``atomic_overwrite`` materializes the new table version to a temp dir
-  FIRST, then swaps directories. This both (a) makes the overwrite atomic
-  w.r.t. failures mid-write, and (b) breaks the read-overwrite cycle —
-  a plan that reads the current version is fully executed before the
-  target is touched (the classic Spark self-overwrite trap; SURVEY §7
+- **Directory swap** (``swap_in``): fill a temp dir, then rename it into
+  place with rollback — ``atomic_overwrite`` and ``WatermarkStore.advance``.
+  Writing first also breaks the Spark self-overwrite trap (SURVEY §7
   "what's hard" (a)).
-- ``idempotent_append`` dedups on a key against rows already in the sink,
-  so replaying a batch (at-least-once upstream) cannot duplicate the layer
-  — the fix for the reference's append-mode silver.
+- **Keyed partition merge** (``merge_partitions``): batch-wins merge into
+  the touched partitions — day-partitioned bronze and the IVF index.
+- **Version directory** (``version_dir``, ``versioned_overwrite``,
+  ``drop_version``): immutable ``vN`` dirs, a ``.commit`` marker and a
+  ``_CURRENT`` pointer — time travel and ``sources.transactions``.
+
+``idempotent_append`` dedups on a key against rows already in the sink,
+so replaying a batch (at-least-once upstream) cannot duplicate the layer
+— the fix for the reference's append-mode silver.
 """
 
 from __future__ import annotations
 
+import contextlib
+import errno
+import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# Swap and stage debris names, shared with maintenance.vacuum_swap_debris.
+_TMP = ".__tmp__"
+_OLD = ".__old__"  # stable name => interrupted swaps are detectable
+_STAGE = ".stage-"
 
 
 def recover_interrupted_swap(path: str) -> bool:
     """Repair a swap that crashed between its two renames: if ``path`` is
     missing but the stable backup exists, restore the backup. Returns True
-    if a recovery happened. Call at startup on any atomically-swapped path."""
-    old = f"{path}.__old__"
+    if a recovery happened. ``swap_in``, ``WatermarkStore.read`` and
+    ``MedallionPipeline.exists`` call it before they look at ``path``, so
+    a crashed swap is never read as "no table"."""
+    old = f"{path}{_OLD}"
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
         return True
     return False
 
 
+def swap_in(path: str, fill: Callable[[str], None]) -> None:
+    """Replace the directory ``path`` with what ``fill(tmp)`` writes into
+    a fresh temp dir. ``path`` is untouched until ``fill`` returns, and the
+    previous version is deleted only after the forward rename lands; a
+    crash between the two renames leaves it under the stable
+    ``path.__old__``, which the rollback or the next
+    ``recover_interrupted_swap`` restores. A stranded backup is restored
+    before it is cleared, so the only copy is never deleted.
+    Single-writer contract."""
+    tmp = f"{path}{_TMP}{uuid.uuid4().hex[:8]}"
+    old = f"{path}{_OLD}"
+    try:
+        fill(tmp)
+        recover_interrupted_swap(path)
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+    except BaseException:
+        recover_interrupted_swap(path)  # roll back: restore the previous version
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def atomic_overwrite(
     df: DataFrame, path: str, extra_files: dict[str, str] | None = None
 ) -> None:
-    """Write ``df`` as the new content of ``path`` via temp-dir + swap.
-
-    Failure-safe ordering: the previous version is only deleted AFTER the
-    forward rename lands; a failure between the two renames leaves the old
-    version under the stable ``path.__old__`` name, which
-    ``recover_interrupted_swap`` (or the rollback below) restores — no
-    window where both versions are gone.
+    """Write ``df`` as the new content of ``path`` via ``swap_in``.
 
     ``extra_files`` maps filename -> text content written into the temp
     dir BEFORE the swap, so they commit atomically with the data — the
@@ -55,26 +91,14 @@ def atomic_overwrite(
     (``_applied_epoch``): Spark's file index hides them from readers, the
     same convention as ``_SUCCESS``.
     """
-    tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
-    old = f"{path}.__old__"  # stable name => interrupted swaps are detectable
-    df.write.mode("overwrite").parquet(tmp)  # fully materialized before swap
-    for name, content in (extra_files or {}).items():
-        with open(os.path.join(tmp, name), "w") as f:
-            f.write(content)
-    shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
-    moved = False
-    try:
-        if os.path.exists(path):
-            os.rename(path, old)
-            moved = True
-        os.rename(tmp, path)
-    except BaseException:
-        if moved and not os.path.exists(path):
-            os.rename(old, path)  # roll back: restore the previous version
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
+
+    def fill(tmp: str) -> None:
+        df.write.mode("overwrite").parquet(tmp)  # fully materialized before swap
+        for name, content in (extra_files or {}).items():
+            with open(os.path.join(tmp, name), "w") as f:
+                f.write(content)
+
+    swap_in(path, fill)
 
 
 def idempotent_append(spark: SparkSession, df: DataFrame, path: str, keys: list[str]) -> None:
@@ -114,12 +138,9 @@ def idempotent_overwrite_day_partitions(
     by key, and exactly those day partitions are dynamically overwritten.
     Correct for windows that split a day (the partial day's existing rows
     ride along in the pruned read) and for replays (rewriting the same
-    partitions from the same union is idempotent). On a key conflict the
-    BATCH row wins deterministically (existing rows are anti-joined against
-    the batch's keys before the union) — a replay carrying corrected
-    payloads converges on the corrected values. One shuffle on the day
-    column keeps one writer task per day — bounded file counts at any
-    scale.
+    partitions from the same union is idempotent). The merge itself —
+    batch wins on a key conflict, stored schema checked, one REBALANCE on
+    the day column — is ``merge_partitions``.
 
     Guarantee is WEAKER than ``idempotent_append``'s whole-sink anti-join:
     dedup only sees the [lo, hi]-pruned partitions, so a key re-delivered
@@ -139,23 +160,78 @@ def idempotent_overwrite_day_partitions(
     ]
     if lo is not None and granularity == "month":
         lo = lo.replace(day=1)  # floor to the partition value, or pruning over-prunes
+    touched = F.lit(True)
+    if lo is not None:
+        touched &= F.col(day_col) >= F.lit(lo)
+    if hi is not None:
+        touched &= F.col(day_col) <= F.lit(hi)
     batch = df.withColumn(day_col, trunc).dropDuplicates(keys)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        if lo is not None:
-            existing = existing.filter(F.col(day_col) >= F.lit(lo))
-        if hi is not None:
-            existing = existing.filter(F.col(day_col) <= F.lit(hi))
-        # Batch-wins survivor choice: drop existing rows whose key the batch
-        # re-delivers, then union — deterministic, unlike dropDuplicates on
-        # the union (arbitrary survivor when payloads differ).
-        survivors = existing.select(*batch.columns).join(
-            batch.select(*keys), keys, "left_anti"
+    merge_partitions(spark, batch, path, keys, day_col, touched)
+
+
+class StoredSchemaError(ValueError):
+    """A stored table's data columns differ from a batch merged into it."""
+
+
+def _check_stored_schema(path: str, schema: StructType, part_col: str) -> None:
+    """Raise ``StoredSchemaError`` unless the table at ``path`` stores
+    exactly ``schema``'s data columns (``part_col`` aside; nullability
+    ignored). The stored schema is Spark's own JSON in ONE part file's
+    parquet footer, read on the driver — no Spark job, as schema inference
+    would launch."""
+    import pyarrow.parquet as pq
+
+    part = next(
+        (
+            os.path.join(root, f)
+            for root, _, files in os.walk(path)
+            for f in sorted(files)
+            if f.startswith("part-") and f.endswith(".parquet")
+        ),
+        None,
+    )
+    if part is None:
+        return  # no data files: nothing stored that a read could corrupt
+    meta = pq.read_schema(part).metadata or {}
+    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        raise StoredSchemaError(f"{part}: no Spark schema in parquet footer")
+
+    def cols(st: StructType) -> dict:
+        return {f.name: f.dataType.simpleString() for f in st if f.name != part_col}
+
+    stored, want = cols(StructType.fromJson(json.loads(raw))), cols(schema)
+    if stored != want:
+        raise StoredSchemaError(
+            f"table at {path} stores columns {stored}, the batch has {want}; "
+            f"rebuild the table or fix the batch"
         )
-        merged = survivors.unionByName(batch)
-    else:
-        merged = batch
-    overwrite_partitions(merged.repartition(F.col(day_col)), path, [day_col])
+
+
+def merge_partitions(
+    spark: SparkSession,
+    batch: DataFrame,
+    path: str,
+    keys: list[str],
+    part_col: str,
+    touched: Column,
+) -> None:
+    """Merge ``batch`` into the ``part_col``-partitioned table at ``path``:
+    stored rows selected by ``touched`` (partition pruning), minus those
+    whose ``keys`` the batch re-delivers, plus the batch, dynamically
+    overwrite exactly the partitions that receive rows. The batch wins
+    deterministically (dropDuplicates on the union would keep an arbitrary
+    payload), so replays converge. The stored schema must equal
+    the batch's (else ``StoredSchemaError``): a drifted read would null-fill
+    a column and write the nulls back. Reading with the batch schema skips
+    the inference job. One REBALANCE on ``part_col`` keeps ~one writer per
+    partition."""
+    merged = batch
+    if os.path.exists(path):
+        _check_stored_schema(path, batch.schema, part_col)
+        existing = spark.read.schema(batch.schema).parquet(path).filter(touched)
+        merged = existing.join(batch.select(*keys), keys, "left_anti").unionByName(batch)
+    overwrite_partitions(merged.hint("rebalance", part_col), path, [part_col])
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -170,6 +246,27 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
 
 
 _VERSION_PTR = "_CURRENT"
+_COMMIT = ".commit"
+
+
+def version_dir(path: str, version: int, stage: bool = False) -> str:
+    """``path/vNNNNNNNN``, the directory holding ``version`` of a versioned
+    table (its commit marker is that name plus ``.commit``). ``stage=True``
+    names a fresh private staging dir for it instead,
+    ``.vNNNNNNNN.stage-<uuid>`` — two racing writers never share one."""
+    name = f"v{version:08d}"
+    if stage:
+        name = f".{name}{_STAGE}{uuid.uuid4().hex[:8]}"
+    return os.path.join(path, name)
+
+
+def drop_version(path: str, version: int) -> str:
+    """Delete ``version``'s dir and commit marker; returns the dir."""
+    vdir = version_dir(path, version)
+    shutil.rmtree(vdir, ignore_errors=True)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(vdir + _COMMIT)
+    return vdir
 
 
 def _current_version(path: str) -> int:
@@ -178,6 +275,14 @@ def _current_version(path: str) -> int:
         return 0
     with open(ptr) as f:
         return int(f.read().strip())
+
+
+def _write_pointer(path: str, version: int) -> None:
+    """Point ``_CURRENT`` at ``version``: temp file + atomic replace."""
+    tmp = os.path.join(path, f".{_VERSION_PTR}.tmp.{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, os.path.join(path, _VERSION_PTR))
 
 
 def list_versions(path: str) -> list[int]:
@@ -211,10 +316,7 @@ def reconcile_versions(path: str) -> int:
     committed = list_versions(path)
     newest = committed[-1] if committed else 0
     if newest > cur:
-        tmp = os.path.join(path, f".{_VERSION_PTR}.heal.{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(str(newest))
-        os.replace(tmp, os.path.join(path, _VERSION_PTR))
+        _write_pointer(path, newest)
         cur = newest
     have = set(committed)
     try:
@@ -222,12 +324,11 @@ def reconcile_versions(path: str) -> int:
     except FileNotFoundError:
         names = []
     for name in names:
-        if name.startswith("v") and name.endswith(".commit") and name[1:-7].isdigit():
-            if int(name[1:-7]) not in have and int(name[1:-7]) > cur:
-                try:
+        v = name[1 : -len(_COMMIT)]
+        if name.startswith("v") and name.endswith(_COMMIT) and v.isdigit():
+            if int(v) not in have and int(v) > cur:
+                with contextlib.suppress(FileNotFoundError):
                     os.remove(os.path.join(path, name))  # abandoned claim
-                except FileNotFoundError:
-                    pass
     return cur
 
 
@@ -250,9 +351,7 @@ def commit_staged_version(
     exists") are treated as a conflict, any other OSError (EACCES, EXDEV,
     I/O failure) re-raises unchanged with the staged data left intact so
     a non-retryable fault is not misreported as a retryable conflict."""
-    import errno
-
-    vdir = os.path.join(path, f"v{version:08d}")
+    vdir = version_dir(path, version)
     try:
         os.rename(stage, vdir)
     except OSError as e:
@@ -267,27 +366,16 @@ def commit_staged_version(
         raise VersionConflictError(
             f"{path}: version {version} was committed by a concurrent writer"
         ) from None
-    marker = os.path.join(path, f"v{version:08d}.commit")
-    with open(marker, "w"):
+    with open(vdir + _COMMIT, "w"):
         pass  # bookkeeping only; the rename above already committed
-    ptr = os.path.join(path, _VERSION_PTR)
-    tmp = os.path.join(path, f".{_VERSION_PTR}.tmp.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        f.write(str(version))
     # Never flip the pointer backwards: a slow writer finishing version N
     # after a faster one already published N+1 must not roll visibility
     # back. (Can't happen for the same-number race — the rename arbiter
     # rejects it — but can for distinct numbers under reconcile healing.)
     if _current_version(path) <= version:
-        os.replace(tmp, ptr)  # atomic pointer flip
-    else:
-        os.remove(tmp)
+        _write_pointer(path, version)
     for v in list_versions(path)[:-keep] if keep > 0 else []:
-        shutil.rmtree(os.path.join(path, f"v{v:08d}"), ignore_errors=True)
-        try:
-            os.remove(os.path.join(path, f"v{v:08d}.commit"))
-        except FileNotFoundError:
-            pass
+        drop_version(path, v)
     return version
 
 
@@ -322,17 +410,16 @@ def versioned_overwrite(
         raise VersionConflictError(
             f"{path}: expected base version {expected_base}, found {cur}"
         )
-    nxt = cur + 1
-    stage = os.path.join(path, f".v{nxt:08d}.stage-{uuid.uuid4().hex[:8]}")
+    stage = version_dir(path, cur + 1, stage=True)
     df.write.mode("overwrite").parquet(stage)
-    return commit_staged_version(path, stage, nxt, keep=keep)
+    return commit_staged_version(path, stage, cur + 1, keep=keep)
 
 
 def read_version(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
     """Time-travel read: ``version=None`` reads the current pointer,
     otherwise the requested retained version (Delta's ``versionAsOf``)."""
     v = _current_version(path) if version is None else version
-    vdir = os.path.join(path, f"v{v:08d}")
+    vdir = version_dir(path, v)
     if v == 0 or not os.path.isdir(vdir):
         raise FileNotFoundError(f"version {v} not retained at {path}")
     return spark.read.parquet(vdir)

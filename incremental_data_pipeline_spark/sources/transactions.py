@@ -15,7 +15,7 @@ Layout (one transaction ROOT spans N tables):
 Protocol (same discipline as Delta's ``_delta_log``):
 
 - Writers stage every table's new version dir privately and publish each
-  via :func:`sinks.commit_staged_version` (atomic rename arbiter). The
+  via :func:`sinks.versioned_overwrite` (atomic rename arbiter). The
   per-table version is NOT what readers see — visibility is governed
   solely by the transaction manifest.
 - The COMMIT POINT of the whole transaction is the put-if-absent creation
@@ -88,20 +88,7 @@ def _scan_log(root: str) -> tuple[list[int], list[int]]:
 def read_txn_state(root: str) -> tuple[int, dict[str, int]]:
     """(current txn id, {table: version}) — newest checkpoint folded with
     the manifest tail. txn 0 = empty log."""
-    manifests, checkpoints = _scan_log(root)
-    state: dict[str, int] = {}
-    txn = 0
-    if checkpoints:
-        txn = checkpoints[-1]
-        with open(_checkpoint_path(root, txn)) as f:
-            state = json.load(f)["tables"]
-    for m in manifests:
-        if m <= txn:
-            continue
-        with open(_manifest_path(root, m)) as f:
-            state.update(json.load(f)["tables"])
-        txn = m
-    return txn, state
+    return _read_state_at(root, None)
 
 
 def _link_put_if_absent(final: str, content: str) -> bool:
@@ -146,21 +133,14 @@ def multi_table_transaction(
         )
     committed: dict[str, int] = {}
     for name, df in sorted(tables.items()):
-        tdir = os.path.join(root, name)
-        os.makedirs(tdir, exist_ok=True)
-        # Publish the table version; on a per-table rename race, re-read the
-        # version counter and retry — table-version publication is only
-        # staging from the transaction's point of view (invisible until the
-        # manifest lands), so racing here is benign.
+        # Publish the table version; on a per-table rename race, retry
+        # (versioned_overwrite re-reads the version counter) — table-version
+        # publication is only staging from the transaction's point of view
+        # (invisible until the manifest lands), so racing here is benign.
         for _ in range(max_retries_per_table):
-            base = sinks.reconcile_versions(tdir)
-            stage = os.path.join(
-                tdir, f".v{base + 1:08d}.stage-{uuid.uuid4().hex[:8]}"
-            )
-            df.write.mode("overwrite").parquet(stage)
             try:
-                committed[name] = sinks.commit_staged_version(
-                    tdir, stage, base + 1, keep=0
+                committed[name] = sinks.versioned_overwrite(
+                    df, os.path.join(root, name), keep=0
                 )
                 break
             except sinks.VersionConflictError:
@@ -190,14 +170,15 @@ def read_txn_table(
     cur, state = _read_state_at(root, txn)
     if table not in state:
         raise FileNotFoundError(f"{root}: table {table!r} not in txn {cur}")
-    vdir = os.path.join(root, table, f"v{state[table]:08d}")
-    return spark.read.parquet(vdir)
+    return spark.read.parquet(sinks.version_dir(os.path.join(root, table), state[table]))
 
 
 def _read_state_at(root: str, txn: int | None) -> tuple[int, dict[str, int]]:
-    if txn is None:
-        return read_txn_state(root)
+    """Fold the newest checkpoint at or before ``txn`` (default: the
+    newest txn in the log) with the manifests after it, up to ``txn``."""
     manifests, checkpoints = _scan_log(root)
+    if txn is None:
+        txn = max(manifests[-1:] + checkpoints[-1:], default=0)
     state: dict[str, int] = {}
     base = 0
     usable = [c for c in checkpoints if c <= txn]
@@ -285,7 +266,6 @@ def vacuum_unreferenced(root: str, grace_seconds: float = 3600.0) -> list[str]:
       sweep and anything referenced by then is dropped from the kill
       list, so a manifest that lands mid-vacuum keeps its versions.
     """
-    import shutil
     import time
 
     referenced = _log_referenced(root)
@@ -303,9 +283,9 @@ def vacuum_unreferenced(root: str, grace_seconds: float = 3600.0) -> list[str]:
         for v in sinks.list_versions(tdir):
             if v in referenced.get(t, set()):
                 continue
-            vdir = os.path.join(tdir, f"v{v:08d}")
+            vdir = sinks.version_dir(tdir, v)
             try:
-                mtime = os.path.getmtime(f"{vdir}.commit")
+                mtime = os.path.getmtime(vdir + sinks._COMMIT)
             except OSError:
                 try:
                     mtime = os.path.getmtime(vdir)
@@ -319,13 +299,6 @@ def vacuum_unreferenced(root: str, grace_seconds: float = 3600.0) -> list[str]:
     if candidates:
         referenced = _log_referenced(root)
     for t, v in candidates:
-        if v in referenced.get(t, set()):
-            continue
-        vdir = os.path.join(root, t, f"v{v:08d}")
-        shutil.rmtree(vdir, ignore_errors=True)
-        try:
-            os.remove(f"{vdir}.commit")
-        except FileNotFoundError:
-            pass
-        removed.append(vdir)
+        if v not in referenced.get(t, set()):
+            removed.append(sinks.drop_version(os.path.join(root, t), v))
     return removed

@@ -10,7 +10,7 @@ a batch runner:
   (write-after-commit ordering ⇒ at-least-once; pair with an idempotent
   sink for effectively-exactly-once). The reference's sproc had
   BEGIN TRANSACTION without COMMIT (SURVEY §2.9 #6) — here the advance is
-  an atomic swap.
+  the sinks directory swap.
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.functions.util import observation_result
 from incremental_data_pipeline_spark.operators.cdc import watermark_range
+from incremental_data_pipeline_spark.sources.sinks import recover_interrupted_swap, swap_in
 
 
 class WatermarkStore:
@@ -42,46 +43,31 @@ class WatermarkStore:
         self.initial = initial
 
     def read(self) -> Any:
-        """Reference: ADF Lookup of last_load (watermark_table.sql:1-4)."""
+        """Reference: ADF Lookup of last_load (watermark_table.sql:1-4).
+        A swap that crashed between its renames is repaired first, so it
+        reads as the last advanced value, never as ``initial``."""
+        recover_interrupted_swap(self.path)
         if not os.path.exists(self.path):
             return self.initial
         import pyarrow.parquet as pq
 
-        value = pq.read_table(self.path).column("last_load")[0].as_py()
-        return value
+        return pq.read_table(self.path).column("last_load")[0].as_py()
 
     def advance(self, value: Any) -> None:
         """Reference: UpdateWatermarkTable sproc (stored_procedure.sql:1-12),
-        minus its missing-COMMIT bug — the swap is atomic (write a fresh
-        directory, rename over the old one)."""
-        import shutil
-        import uuid
-
+        minus its missing-COMMIT bug — the new value is written by pyarrow
+        (no Spark job) into a fresh directory that ``sinks.swap_in`` renames
+        over the old one."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tmp = f"{self.path}.__tmp__{uuid.uuid4().hex[:8]}"
-        old = f"{self.path}.__old__"  # stable name: interrupted swaps recoverable
-        os.makedirs(tmp)
-        pq.write_table(
-            pa.table({"last_load": [value]}), os.path.join(tmp, "part-0.parquet")
-        )
-        # Delete the previous state only AFTER the forward rename lands; on a
-        # mid-swap failure the old state is restored, never destroyed.
-        shutil.rmtree(old, ignore_errors=True)
-        moved = False
-        try:
-            if os.path.exists(self.path):
-                os.rename(self.path, old)
-                moved = True
-            os.rename(tmp, self.path)
-        except BaseException:
-            if moved and not os.path.exists(self.path):
-                os.rename(old, self.path)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+        def fill(tmp: str) -> None:
+            os.makedirs(tmp)
+            pq.write_table(
+                pa.table({"last_load": [value]}), os.path.join(tmp, "part-0.parquet")
+            )
+
+        swap_in(self.path, fill)
 
 
 def run_incremental_batch(

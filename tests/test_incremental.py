@@ -4,10 +4,14 @@ These encode the reference-shaped correctness scenarios from SURVEY §5."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.plans.medallion import MedallionPipeline
 from incremental_data_pipeline_spark.sources.readers import load_table
+from incremental_data_pipeline_spark.sources.watermark import WatermarkStore
 from tests.conftest import SF_DIR
 
 
@@ -171,6 +175,70 @@ def test_partitioned_bronze_converges_with_midday_cuts(spark, tmp_path):
     )
     assert n > 0  # the window re-delivers rows...
     assert pipe.read("bronze", "events").count() == events.count()  # ...but no dupes
+
+
+@pytest.mark.parametrize("target", ["watermark", "gold_dim"])
+def test_crash_between_swap_renames_reruns_like_uninterrupted(spark, tmp_path, target):
+    """A crash between a swap's two renames leaves only ``path.__old__``.
+    The next run must see that last version: not the initial watermark
+    (re-ingesting all history), and not a missing dim rebuilt from the
+    batch alone (which would then delete the only backup)."""
+    initial = _ts("2020-01-01 00:00:00")
+
+    def run(base, crash):
+        pipe = MedallionPipeline(spark, str(base))
+        if target == "watermark":
+            path = pipe.path("state", "events_watermark")
+            WatermarkStore(spark, path, initial).advance(_ts("2024-05-01 00:00:00"))
+        else:
+            path = pipe.path("gold", "dim")
+            first = spark.createDataFrame([(1, "b"), (2, "c"), (3, "a")], "k long, attr string")
+            pipe.build_gold_dim("dim", first, ["k"], ["attr"], "sk")
+        if crash:
+            os.rename(path, path + ".__old__")
+        if target == "watermark":
+            return WatermarkStore(spark, path, initial).read()
+        second = spark.createDataFrame([(3, "z")], "k long, attr string")
+        return sorted(map(tuple, pipe.build_gold_dim("dim", second, ["k"], ["attr"], "sk").collect()))
+
+    assert run(tmp_path / "crash", True) == run(tmp_path / "clean", False)
+
+
+@pytest.mark.parametrize("partition_daily", [False, True])
+def test_batch_killed_before_watermark_advance_reruns_clean(
+    spark, tmp_path, monkeypatch, partition_daily
+):
+    """Kill point between the sink commit and the watermark write: the
+    batch's rows are in bronze but the watermark still names the previous
+    batch. Re-running the batch must give the uninterrupted bronze rows
+    and watermark (the replay-safe sink absorbs the re-delivery)."""
+    events = load_table(spark, SF_DIR, "events")
+    initial = _ts("2023-01-01 00:00:00")
+    advance = WatermarkStore.advance
+
+    def killed(self, value):
+        monkeypatch.setattr(WatermarkStore, "advance", advance)  # raise once
+        raise RuntimeError("killed before the watermark write")
+
+    def run(base, kill):
+        pipe = MedallionPipeline(spark, str(base))
+
+        def ingest(cut):
+            pipe.ingest_bronze(
+                events, "events", "ts", ["event_id"], initial, cut,
+                partition_daily=partition_daily,
+            )
+
+        ingest(_ts("2024-01-08 13:30:00"))
+        if kill:
+            monkeypatch.setattr(WatermarkStore, "advance", killed)
+            with pytest.raises(RuntimeError, match="killed"):
+                ingest(None)
+        ingest(None)
+        store = WatermarkStore(spark, pipe.path("state", "events_watermark"), initial)
+        return sorted(map(tuple, pipe.read("bronze", "events").collect())), store.read()
+
+    assert run(tmp_path / "killed", True) == run(tmp_path / "clean", False)
 
 
 def test_merge_partial_aggs_equals_full_rebuild_any_split(spark):

@@ -690,3 +690,34 @@ def test_multi_table_txn_multiprocess_consistent_snapshots(tmp_path):
             with open(tx._manifest_path(root, txn)) as f:
                 referenced.add(_json.load(f)["tables"][t])
         assert live == referenced
+
+
+def test_day_partition_merge_rejects_schema_drift(spark, tmp_path):
+    """A bronze batch that lost a stored column must fail loudly and leave
+    the table untouched: merged under the batch's schema, the touched day's
+    stored rows would be rewritten with that column NULL."""
+    import datetime
+
+    path = str(tmp_path / "bronze")
+    ts = datetime.datetime(2024, 1, 1, 8)
+    stored = spark.createDataFrame([(1, ts, "y")], "id long, ts timestamp, note string")
+    sinks.idempotent_overwrite_day_partitions(spark, stored, path, ["id"], "ts")
+    drifted = spark.createDataFrame([(2, ts)], "id long, ts timestamp")
+    with pytest.raises(sinks.StoredSchemaError, match="note"):
+        sinks.idempotent_overwrite_day_partitions(spark, drifted, path, ["id"], "ts")
+    rows = spark.read.parquet(path).select("id", "note").collect()
+    assert [tuple(r) for r in rows] == [(1, "y")]
+
+
+def test_storage_protocols_defined_once():
+    """The directory swap, the dynamic partition overwrite and the version
+    directory name each live in one place (``sources/sinks.py``); a second
+    copy is a fork that can drift, as the watermark swap (no crash
+    recovery) and the bronze merge (no schema check) once did."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "incremental_data_pipeline_spark"
+    files = [*pkg.glob("sources/*.py"), *pkg.glob("operators/*.py"), *pkg.glob("streaming/*.py")]
+    src = "".join(f.read_text() for f in [*files, pkg / "plans" / "medallion.py"])
+    for needle in ("os.rename(tmp, ", '"partitionOverwriteMode"', ":08d}"):
+        assert src.count(needle) == 1, needle
