@@ -52,16 +52,17 @@ def watermark_range(df: DataFrame, ts_col: str, last_load, current_load) -> Data
 
 
 def merge_partial_aggs(
-    gold: DataFrame, batch: DataFrame, keys: list[str], sum_cols: dict[str, Column]
+    gold: DataFrame | None, batch: DataFrame, keys: list[str], sum_cols: dict[str, Column]
 ) -> DataFrame:
     """Incremental AGGREGATE maintenance: fold a new batch into a stored
     per-key rollup WITHOUT rescanning history — the step that turns the
     medallion's gold layer from recompute-the-world into O(batch) work.
 
     ``sum_cols`` maps output column -> aggregation over the RAW batch
-    columns; the same names must already exist in ``gold``. Works for any
-    associative-commutative aggregate expressed as sums/counts (avg =
-    sum/count at read time, the standard decomposition).
+    columns; the same names must already exist in ``gold``. A None
+    ``gold`` (no rollup stored yet) returns the batch's partials. Works
+    for any associative-commutative aggregate expressed as sums/counts
+    (avg = sum/count at read time, the standard decomposition).
 
     Scale shape: the batch collapses to per-key partials first (map-side
     combine over only the batch), then one unionByName + re-aggregate with
@@ -72,6 +73,8 @@ def merge_partial_aggs(
     partial = batch.groupBy(*keys).agg(
         *[c.alias(name) for name, c in sum_cols.items()]
     )
+    if gold is None:
+        return partial
     merged = gold.unionByName(partial)
     return merged.groupBy(*keys).agg(
         *[F.sum(name).alias(name) for name in sum_cols]

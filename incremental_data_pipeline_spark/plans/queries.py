@@ -1700,17 +1700,15 @@ def stream_scd1_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from incremental_data_pipeline_spark.operators.scd import build_dim
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_scd1_")
     dim_path = os.path.join(base, "dim_user")
 
     def apply_batch(batch: DataFrame, _epoch: int) -> None:
-        existing = (
-            spark.read.parquet(dim_path) if os.path.exists(dim_path) else None
+        fold_into(
+            spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "dim_user_key", d)
         )
-        dim = build_dim(batch, ["user_id"], [], "dim_user_key", existing)
-        atomic_overwrite(dim, dim_path)
 
     stream = _stream.read_stream(spark, sf_dir, "events").select("user_id", "ts")
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
@@ -1825,10 +1823,14 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimately depends on micro-batch boundaries."""
 
     from incremental_data_pipeline_spark.operators.scd import upsert_scd2_ordered
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_scd2_")
     dim_path = os.path.join(base, "dim_user_hist")
+    empty = (
+        "user_id long, last_event_type string, "
+        "valid_from timestamp, valid_to timestamp, is_current boolean"
+    )
 
     def apply_batch(batch: DataFrame, _epoch: int) -> None:
         src = (
@@ -1840,18 +1842,17 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("m.event_type").alias("last_event_type"),
             )
         )
-        if os.path.exists(dim_path):
-            target = spark.read.parquet(dim_path)
-        else:
-            target = spark.createDataFrame(
-                [],
-                "user_id long, last_event_type string, "
-                "valid_from timestamp, valid_to timestamp, is_current boolean",
-            )
-        dim = upsert_scd2_ordered(
-            target, src, ["user_id"], ["last_event_type"], "eff_ts"
+        fold_into(
+            spark,
+            dim_path,
+            lambda dim: upsert_scd2_ordered(
+                spark.createDataFrame([], empty) if dim is None else dim,
+                src,
+                ["user_id"],
+                ["last_event_type"],
+                "eff_ts",
+            ),
         )
-        atomic_overwrite(dim, dim_path)
 
     stream = _stream.read_stream(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
@@ -4625,10 +4626,13 @@ def hybrid_backfill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, folding micro-batches into the same gold via the same
     merge_partial_aggs. One merge implementation, one result — the oracle
     is the from-scratch full aggregate, so any seam at the handoff
-    boundary (row lost, row double-counted) breaks the hash."""
+    boundary (row lost, row double-counted) breaks the hash. The sum fold
+    is not idempotent, so each micro-batch commits its epoch with the gold
+    swap and a replayed batch is skipped; the backfill-primed gold carries
+    no epoch, so epoch 0 applies."""
     import datetime
 
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite, fold_into
 
     w = datetime.datetime(2024, 1, 20)
     keys = ["user_id", "event_type"]
@@ -4651,11 +4655,10 @@ def hybrid_backfill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic_overwrite(backfill, gold_path)
 
     # the stream owns everything after the watermark
-    def apply_batch(batch: DataFrame, _epoch: int) -> None:
-        merged = cdc.merge_partial_aggs(
-            spark.read.parquet(gold_path), batch, keys, sums
+    def apply_batch(batch: DataFrame, epoch: int) -> None:
+        fold_into(
+            spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
         )
-        atomic_overwrite(merged, gold_path)
 
     stream = (
         _stream.read_stream(spark, sf_dir, "events")
@@ -4718,13 +4721,13 @@ def stream_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation across both execution modes. The oracle is the
     from-scratch full-table aggregate. Delivery is at-least-once
     (checkpointed offsets), and the merge is NOT idempotent — so the
-    applied epoch id is committed atomically WITH the gold swap (an
-    ``_applied_epoch`` sidecar inside the same rename); a replayed batch
+    applied epoch id is committed atomically WITH the gold swap (the
+    ``sinks.fold_into`` epoch, inside the same rename); a replayed batch
     sees its own epoch already recorded in the current gold and skips,
     making the composed system exactly-once with no window between data
     commit and epoch commit."""
 
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_gold_")
     gold_path = os.path.join(base, "gold_user_type")
@@ -4737,19 +4740,9 @@ def stream_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def apply_batch(batch: DataFrame, epoch: int) -> None:
-        if os.path.exists(gold_path):
-            marker = os.path.join(gold_path, "_applied_epoch")
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    if epoch <= int(f.read().strip()):
-                        return  # replay of a batch whose merge already committed
-            gold = spark.read.parquet(gold_path)
-            merged = cdc.merge_partial_aggs(gold, batch, keys, sums)
-        else:
-            merged = batch.groupBy(*keys).agg(
-                *[c.alias(nm) for nm, c in sums.items()]
-            )
-        atomic_overwrite(merged, gold_path, extra_files={"_applied_epoch": str(epoch)})
+        fold_into(
+            spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
+        )
 
     stream = _stream.read_stream(spark, sf_dir, "events").select(
         "user_id", "event_type", "value", "ts"
@@ -7925,7 +7918,7 @@ def stream_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-batch signed partials collapse map-side; the gold
     table shuffles only its |keys| rows per epoch."""
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_retract_")
     gold_path = os.path.join(base, "gold_retract")
@@ -7938,20 +7931,8 @@ def stream_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def apply_batch(batch: DataFrame, epoch: int) -> None:
-        if os.path.exists(gold_path):
-            marker = os.path.join(gold_path, "_applied_epoch")
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    if epoch <= int(f.read().strip()):
-                        return
-            gold = spark.read.parquet(gold_path)
-            merged = cdc.merge_partial_aggs(gold, batch, keys, sums)
-        else:
-            merged = batch.groupBy(*keys).agg(
-                *[c.alias(nm) for nm, c in sums.items()]
-            )
-        atomic_overwrite(
-            merged, gold_path, extra_files={"_applied_epoch": str(epoch)}
+        fold_into(
+            spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
         )
 
     stream = _stream.read_stream(spark, sf_dir, "events").select(
@@ -8942,7 +8923,7 @@ def stream_cdc_tombstone_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def apply_batch(batch: DataFrame, _epoch: int) -> None:
-        from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+        from incremental_data_pipeline_spark.sources.sinks import fold_into
 
         b = latest(
             batch.select(
@@ -8953,11 +8934,7 @@ def stream_cdc_tombstone_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("value") * 100).cast("bigint").alias("cents"),
             )
         )
-        if os.path.exists(store):
-            merged = latest(spark.read.parquet(store).unionByName(b))
-        else:
-            merged = b
-        atomic_overwrite(merged, store)
+        fold_into(spark, store, lambda d: b if d is None else latest(d.unionByName(b)))
 
     stream = _stream.read_stream(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
@@ -13374,21 +13351,16 @@ def stream_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the one-shot batch sketch (`rank_sketch_dyadic`'s), so
     merged-across-batches must land bit-identically on
     built-in-one-pass, for the counters AND the rank estimates derived
-    from them. Replays (at-least-once file source) are skipped via an
-    epoch marker committed atomically with the counter swap, since
-    summing is not idempotent.
+    from them. Replays (at-least-once file source) are skipped via the
+    ``sinks.fold_into`` epoch committed atomically with the counter swap,
+    since summing is not idempotent.
 
     Scale shape: per micro-batch, one map-side-combined groupBy over the
     batch only plus a ≤ depth×width counter merge; history is never
     rescanned — the always-on analytics-store pattern for streaming
-    percentile dashboards. NOTE: the epoch marker and counter store here
-    use driver-local os.path/open semantics (as does atomic_overwrite) —
-    correct for this single-driver harness, but a deployment whose store
-    lives on HDFS/S3 must route the marker read/write through that
-    filesystem's atomic-rename primitives (e.g. Hadoop FileSystem API)
-    rather than POSIX open()."""
+    percentile dashboards."""
     from incremental_data_pipeline_spark.operators import sketches as _sk
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_ranksk_")
     src_dir = os.path.join(base, "events_split")
@@ -13409,24 +13381,19 @@ def stream_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def apply_batch(batch: DataFrame, epoch: int) -> None:
-        bc = _sk.dyadic_cms_counters(
-            clamped(batch), "v", _RANK_LEVELS, _RANK_WIDTH, _RANK_DEPTH
-        )
-        if os.path.exists(store):
-            marker = os.path.join(store, "_applied_epoch")
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    if epoch <= int(f.read().strip()):
-                        return  # replayed batch already folded in
-            merged = (
-                spark.read.parquet(store)
-                .unionByName(bc)
+        def step(counters: DataFrame | None) -> DataFrame:
+            bc = _sk.dyadic_cms_counters(
+                clamped(batch), "v", _RANK_LEVELS, _RANK_WIDTH, _RANK_DEPTH
+            )
+            if counters is None:
+                return bc
+            return (
+                counters.unionByName(bc)
                 .groupBy("d", "cell")
                 .agg(F.sum("n").cast("long").alias("n"))
             )
-        else:
-            merged = bc
-        atomic_overwrite(merged, store, extra_files={"_applied_epoch": str(epoch)})
+
+        fold_into(spark, store, step, epoch)
 
     raw_schema = spark.read.parquet(src_dir).schema
     stream = (
@@ -13613,7 +13580,7 @@ def stream_hll_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy over the batch only plus a ≤1024-row register merge; history
     is never rescanned."""
     from incremental_data_pipeline_spark.operators import sketches as _sk
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_hll_")
     src_dir = os.path.join(base, "events_split")
@@ -13622,13 +13589,9 @@ def stream_hll_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(4, "user_id").write.mode("overwrite").parquet(src_dir)
 
-    def apply_batch(batch: DataFrame, epoch: int) -> None:
+    def apply_batch(batch: DataFrame, _epoch: int) -> None:
         br = _sk.hll_registers(batch, ["user_id"], p=10)
-        if os.path.exists(store):
-            merged = _sk.hll_merge(spark.read.parquet(store), br)
-        else:
-            merged = br
-        atomic_overwrite(merged, store)
+        fold_into(spark, store, lambda r: br if r is None else _sk.hll_merge(r, br))
 
     raw_schema = spark.read.parquet(src_dir).schema
     stream = (

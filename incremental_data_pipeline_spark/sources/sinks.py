@@ -15,6 +15,11 @@ once per storage shape:
 - **Version directory** (``version_dir``, ``versioned_overwrite``,
   ``drop_version``): immutable ``vN`` dirs, a ``.commit`` marker and a
   ``_CURRENT`` pointer — time travel and ``sources.transactions``.
+- **Table fold** (``fold_into``, ``applied_epoch``): read the current
+  version, compute the next from it and swap it in, optionally committing
+  an epoch with it so a replayed batch is skipped — the apply step of
+  every streaming state table (the change-query apply: old version plus
+  change set gives the new version).
 
 ``idempotent_append`` dedups on a key against rows already in the sink,
 so replaying a batch (at-least-once upstream) cannot duplicate the layer
@@ -44,9 +49,10 @@ _STAGE = ".stage-"
 def recover_interrupted_swap(path: str) -> bool:
     """Repair a swap that crashed between its two renames: if ``path`` is
     missing but the stable backup exists, restore the backup. Returns True
-    if a recovery happened. ``swap_in``, ``WatermarkStore.read`` and
-    ``MedallionPipeline.exists`` call it before they look at ``path``, so
-    a crashed swap is never read as "no table"."""
+    if a recovery happened. ``swap_in``, ``fold_into``,
+    ``WatermarkStore.read`` and ``MedallionPipeline.exists`` call it
+    before they look at ``path``, so a crashed swap is never read as "no
+    table"."""
     old = f"{path}{_OLD}"
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
@@ -85,11 +91,11 @@ def atomic_overwrite(
     """Write ``df`` as the new content of ``path`` via ``swap_in``.
 
     ``extra_files`` maps filename -> text content written into the temp
-    dir BEFORE the swap, so they commit atomically with the data — the
-    hook exactly-once consumers use to persist an applied-epoch marker in
-    the same rename as the rows it covers. Use underscore-prefixed names
-    (``_applied_epoch``): Spark's file index hides them from readers, the
-    same convention as ``_SUCCESS``.
+    dir BEFORE the swap, so they commit atomically with the data.
+    ``fold_into`` is the one caller that passes them: it commits a batch's
+    epoch in the same rename as the rows it covers. Use underscore-prefixed
+    names: Spark's file index hides them from readers, the same convention
+    as ``_SUCCESS``.
     """
 
     def fill(tmp: str) -> None:
@@ -99,6 +105,53 @@ def atomic_overwrite(
                 f.write(content)
 
     swap_in(path, fill)
+
+
+_EPOCH = "_applied_epoch"  # the epoch sidecar committed by fold_into
+
+
+def applied_epoch(path: str) -> int | None:
+    """The epoch ``fold_into`` last committed with the table at ``path``;
+    None when there is no table or it was written without an epoch."""
+    try:
+        with open(os.path.join(path, _EPOCH)) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def fold_into(
+    spark: SparkSession,
+    path: str,
+    step: Callable[[DataFrame | None], DataFrame],
+    epoch: int | None = None,
+) -> bool:
+    """Fold one batch into the swap-committed table at ``path``: replace
+    it with ``step(current)``, where ``current`` is the stored table, or
+    None when there is none yet. A swap that crashed between its renames
+    is recovered first, so it is never folded as "no table".
+
+    ``epoch`` is for folds that are not idempotent (sums, counts) under an
+    at-least-once drain (``foreach_batch_scd1``): it commits in the same
+    rename as the rows, and an ``epoch`` at or below the committed one is
+    a replay — skipped without a Spark job, returning False. A table
+    written without an epoch (a batch-primed one) applies any epoch.
+    Idempotent folds (upserts, latest-wins, max) pass none; a fold
+    without an epoch drops the committed one.
+
+    The existence check, the sidecar and the swap use driver-local
+    os.path/open semantics — correct for a single driver on a local or
+    POSIX filesystem; a table on HDFS/S3 must route them through that
+    filesystem's atomic-rename primitives (e.g. the Hadoop FileSystem
+    API). Returns True when the fold was applied."""
+    recover_interrupted_swap(path)
+    done = applied_epoch(path)
+    if epoch is not None and done is not None and epoch <= done:
+        return False
+    current = spark.read.parquet(path) if os.path.exists(path) else None
+    extra = None if epoch is None else {_EPOCH: str(epoch)}
+    atomic_overwrite(step(current), path, extra_files=extra)
+    return True
 
 
 def idempotent_append(spark: SparkSession, df: DataFrame, path: str, keys: list[str]) -> None:

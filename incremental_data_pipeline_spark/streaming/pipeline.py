@@ -355,8 +355,11 @@ def foreach_batch_scd1(
     normal DataFrame handed to the same ``build_dim``/upsert code the batch
     pipeline uses (one implementation, two execution modes). The checkpoint
     makes delivery at-least-once; the idempotent upsert makes the composed
-    system effectively-once. A failing ``apply_batch`` raises
-    ``StreamingQueryException`` (see ``_drain``)."""
+    system effectively-once. An apply that maintains a swap-committed table
+    calls ``sinks.fold_into``: without an epoch for idempotent folds
+    (upserts, latest-wins, max), with the batch's epoch for folds that are
+    not (sums, counts), so a replayed batch is skipped. A failing
+    ``apply_batch`` raises ``StreamingQueryException`` (see ``_drain``)."""
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
@@ -386,6 +389,11 @@ def foreach_batch_exactly_once(
     re-runs the apply (at-least-once within the wrapper); callers needing
     strict exactly-once pair this with an apply that commits its own work
     and the marker transactionally, or accept the idempotent-sink route.
+
+    Use the ledger for side effects that are not one table swap (appends,
+    partition merges, external calls). A table replaced whole per batch
+    needs no ledger: ``sinks.fold_into`` with the batch's epoch commits
+    the epoch in the same rename as the rows, under ``foreach_batch_scd1``.
     """
     os.makedirs(ledger_dir, exist_ok=True)
 

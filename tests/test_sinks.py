@@ -39,6 +39,59 @@ def test_interrupted_swap_is_recoverable(spark, tmp_path):
     assert not sinks.recover_interrupted_swap(path)  # no-op when healthy
 
 
+def _append_step(spark, vals, seen):
+    """A fold step that appends ``vals`` and records what it was given."""
+
+    def step(current):
+        seen.append(None if current is None else sorted(r["x"] for r in current.collect()))
+        batch = _mkdf(spark, vals)
+        return batch if current is None else current.unionByName(batch)
+
+    return step
+
+
+@pytest.mark.parametrize("replayed", [0, 1])
+def test_fold_into_skips_replayed_epochs(spark, tmp_path, replayed):
+    """The first fold gets None; an epoch at or below the committed one is
+    a replay: no step, no Spark job, rows and epoch unchanged."""
+    path = str(tmp_path / "t")
+    seen = []
+    assert sinks.fold_into(spark, path, _append_step(spark, [1], seen), epoch=0)
+    assert sinks.fold_into(spark, path, _append_step(spark, [2], seen), epoch=1)
+    assert seen == [None, [1]]
+    sc = spark.sparkContext
+    sc.setJobGroup("fold_replay", "replayed fold")
+    try:
+        assert not sinks.fold_into(spark, path, _append_step(spark, [3], seen), replayed)
+        assert sc.statusTracker().getJobIdsForGroup("fold_replay") == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert seen == [None, [1]]
+    assert sorted(r["x"] for r in spark.read.parquet(path).collect()) == [1, 2]
+    assert sinks.applied_epoch(path) == 1
+
+
+@pytest.mark.parametrize("crashed", [False, True])
+def test_fold_into_extends_the_stored_table(spark, tmp_path, crashed):
+    """A table written without an epoch (a batch-primed one) applies epoch
+    0, and a swap that crashed between its renames is folded into as the
+    last version, not as "no table" — which rebuilt the dim from the batch
+    alone, ``[(1, 3)]``, and then deleted the stranded backup."""
+    from incremental_data_pipeline_spark.operators.scd import build_dim
+
+    path = str(tmp_path / "dim")
+    sinks.atomic_overwrite(spark.createDataFrame([(1, 1), (2, 2)], "k long, x long"), path)
+    if crashed:
+        os.rename(path, path + ".__old__")  # the state mid-swap after rename #1
+    batch = _mkdf(spark, [3])
+    assert sinks.fold_into(spark, path, lambda d: build_dim(batch, ["x"], [], "k", d), 0)
+    rows = spark.read.parquet(path).select("k", "x").collect()
+    assert sorted(map(tuple, rows)) == [(1, 1), (2, 2), (3, 3)]
+    assert sinks.applied_epoch(path) == 0
+    assert sorted(os.listdir(tmp_path)) == ["dim"]
+
+
 def test_versioned_overwrite_time_travel(spark, tmp_path):
     """Read-after-two-overwrites returns each retained version (the
     observable contract of Delta's versionAsOf)."""
@@ -721,3 +774,29 @@ def test_storage_protocols_defined_once():
     src = "".join(f.read_text() for f in [*files, pkg / "plans" / "medallion.py"])
     for needle in ("os.rename(tmp, ", '"partitionOverwriteMode"', ":08d}"):
         assert src.count(needle) == 1, needle
+
+
+def test_table_fold_defined_once():
+    """The fold step of swap-committed state tables lives in
+    ``sinks.fold_into``: its epoch sidecar is named once, only
+    ``sources/`` commits extra files with a swap, and no query or
+    streaming test hand-writes "exists? read : init, then
+    atomic_overwrite" — eight such copies once skipped crash recovery,
+    and one summed replayed batches twice."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "incremental_data_pipeline_spark"
+    sidecar, extra = "_applied" "_epoch", "extra_files" "="  # split: no copy here
+    assert sum(p.read_text().count(sidecar) for p in pkg.rglob("*.py")) == 1
+    assert not [p for p in (root / "tests").rglob("*.py") if sidecar in p.read_text()]
+    users = [p for p in [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py")]
+             if extra in p.read_text()]
+    assert users and all(p.parent.name == "sources" for p in users), users
+    for path in (pkg / "plans" / "queries.py", root / "tests" / "test_streaming.py"):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if isinstance(fn, ast.FunctionDef):
+                calls = {ast.unparse(c.func) for c in ast.walk(fn) if isinstance(c, ast.Call)}
+                overwrites = any(c.split(".")[-1] == "atomic_overwrite" for c in calls)
+                assert not ("os.path.exists" in calls and overwrites), (path.name, fn.name)

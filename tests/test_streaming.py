@@ -73,7 +73,7 @@ def test_multi_batch_scd1_keys_stable(spark):
 
     from incremental_data_pipeline_spark.operators.scd import build_dim
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_multibatch_")
@@ -87,8 +87,7 @@ def test_multi_batch_scd1_keys_stable(spark):
         dim_path = os.path.join(base, "dim_user")
 
         def apply_batch(batch, _epoch):
-            existing = spark.read.parquet(dim_path) if os.path.exists(dim_path) else None
-            atomic_overwrite(build_dim(batch, ["user_id"], [], "k", existing), dim_path)
+            fold_into(spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "k", d))
 
         # maxFilesPerTrigger=1 forces two micro-batches through foreachBatch.
         schema = events.select("user_id", "ts").schema
@@ -119,7 +118,7 @@ def test_foreach_batch_replay_is_noop(spark):
     byte-identical after a second drain."""
     from incremental_data_pipeline_spark.operators.scd import build_dim
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_replay_")
@@ -129,8 +128,7 @@ def test_foreach_batch_replay_is_noop(spark):
         ckpt = os.path.join(base, "ckpt")
 
         def apply_batch(batch, _epoch):
-            existing = spark.read.parquet(dim_path) if os.path.exists(dim_path) else None
-            atomic_overwrite(build_dim(batch, ["user_id"], [], "k", existing), dim_path)
+            fold_into(spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "k", d))
 
         def drain():
             stream = sp.read_stream(spark, SF_DIR, "events").select("user_id", "ts")
@@ -217,7 +215,7 @@ def test_scd1_dim_output_invariant_to_batch_split(spark):
 
     from incremental_data_pipeline_spark.operators.scd import build_dim
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
     from pyspark.sql import Window
 
@@ -233,9 +231,8 @@ def test_scd1_dim_output_invariant_to_batch_split(spark):
         dim_path = os.path.join(base, "dim_user")
 
         def apply_batch(batch, _epoch):
-            existing = spark.read.parquet(dim_path) if os.path.exists(dim_path) else None
-            atomic_overwrite(
-                build_dim(batch, ["user_id"], [], "dim_user_key", existing), dim_path
+            fold_into(
+                spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "dim_user_key", d)
             )
 
         schema = events.select("user_id", "ts").schema
@@ -349,7 +346,7 @@ def test_stream_incremental_gold_invariant_to_batch_split(spark):
     micro-batches — the merge invariant under real incremental delivery."""
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_gold_split_")
@@ -366,16 +363,10 @@ def test_stream_incremental_gold_invariant_to_batch_split(spark):
             "n_events": F.count(F.lit(1)).cast("bigint"),
         }
 
-        def apply_batch(batch, _epoch):
-            if os.path.exists(gold_path):
-                merged = cdc.merge_partial_aggs(
-                    spark.read.parquet(gold_path), batch, keys, sums
-                )
-            else:
-                merged = batch.groupBy(*keys).agg(
-                    *[c.alias(nm) for nm, c in sums.items()]
-                )
-            atomic_overwrite(merged, gold_path)
+        def apply_batch(batch, epoch):
+            fold_into(
+                spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
+            )
 
         stream = (
             spark.readStream.schema(events.schema)
@@ -439,7 +430,7 @@ def test_scd2_dim_current_invariant_to_batch_split(spark):
 
     from incremental_data_pipeline_spark.operators.scd import upsert_scd2_ordered
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_scd2_split_")
@@ -453,6 +444,10 @@ def test_scd2_dim_current_invariant_to_batch_split(spark):
             SF_DIR, src_dir, events, "ts", datetime.datetime(2024, 1, 15)
         )
         dim_path = os.path.join(base, "dim_hist")
+        empty = (
+            "user_id long, last_event_type string, "
+            "valid_from timestamp, valid_to timestamp, is_current boolean"
+        )
 
         def apply_batch(batch, _epoch):
             src = (
@@ -464,19 +459,13 @@ def test_scd2_dim_current_invariant_to_batch_split(spark):
                     F.col("m.event_type").alias("last_event_type"),
                 )
             )
-            if os.path.exists(dim_path):
-                target = spark.read.parquet(dim_path)
-            else:
-                target = spark.createDataFrame(
-                    [],
-                    "user_id long, last_event_type string, "
-                    "valid_from timestamp, valid_to timestamp, is_current boolean",
-                )
-            atomic_overwrite(
-                upsert_scd2_ordered(
-                    target, src, ["user_id"], ["last_event_type"], "eff_ts"
-                ),
+            fold_into(
+                spark,
                 dim_path,
+                lambda dim: upsert_scd2_ordered(
+                    spark.createDataFrame([], empty) if dim is None else dim,
+                    src, ["user_id"], ["last_event_type"], "eff_ts",
+                ),
             )
 
         schema = events.schema
@@ -530,7 +519,7 @@ def test_retract_gold_invariant_to_batch_split(spark):
 
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_retract_split_")
@@ -549,16 +538,13 @@ def test_retract_gold_invariant_to_batch_split(spark):
             "sum_cents": F.sum(sign * cents).cast("bigint"),
         }
 
-        def apply_batch(batch, _epoch):
-            if os.path.exists(gold_path):
-                merged = cdc.merge_partial_aggs(
-                    spark.read.parquet(gold_path), batch, ["event_type"], sums
-                )
-            else:
-                merged = batch.groupBy("event_type").agg(
-                    *[c.alias(nm) for nm, c in sums.items()]
-                )
-            atomic_overwrite(merged, gold_path)
+        def apply_batch(batch, epoch):
+            fold_into(
+                spark,
+                gold_path,
+                lambda g: cdc.merge_partial_aggs(g, batch, ["event_type"], sums),
+                epoch,
+            )
 
         schema = cols.schema
         stream = (
@@ -592,7 +578,7 @@ def test_tombstone_dim_invariant_to_batch_split(spark):
     from pyspark.sql import Window
 
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_tomb_split_")
@@ -629,9 +615,7 @@ def test_tombstone_dim_invariant_to_batch_split(spark):
                     F.round(F.col("value") * 100).cast("bigint").alias("cents"),
                 )
             )
-            if os.path.exists(store):
-                b = latest(spark.read.parquet(store).unionByName(b))
-            atomic_overwrite(b, store)
+            fold_into(spark, store, lambda d: b if d is None else latest(d.unionByName(b)))
 
         stream = (
             spark.readStream.schema(cols.schema)
@@ -1035,16 +1019,15 @@ def test_rocksdb_state_store_provider_equivalent(spark):
 
 def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
     """Crash-recovery pin for the exactly-once gold rollup: the query is
-    KILLED after epoch 2's gold swap commits (data + _applied_epoch
-    sidecar inside one atomic rename) but BEFORE Spark commits epoch 2's
-    offsets — the exact replay window the sidecar exists for. A restart
-    on the SAME checkpoint and SAME gold store re-delivers epoch 2; the
-    sidecar must skip it (a second merge would double-count) and the
-    drained result must hash-match an uninterrupted run of the same
-    source."""
+    KILLED after epoch 2's ``fold_into`` commits (data + epoch inside one
+    atomic rename) but BEFORE Spark commits epoch 2's offsets — the exact
+    replay window the epoch exists for. A restart on the SAME checkpoint
+    and SAME gold store re-delivers epoch 2; the fold must skip it (a
+    second merge would double-count) and the drained result must
+    hash-match an uninterrupted run of the same source."""
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import applied_epoch, fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_kill_restart_")
@@ -1068,25 +1051,15 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
 
         def make_apply(gold_path, kill_after_epoch):
             def apply_batch(batch, epoch):
-                if os.path.exists(gold_path):
-                    marker = os.path.join(gold_path, "_applied_epoch")
-                    if os.path.exists(marker):
-                        with open(marker) as f:
-                            if epoch <= int(f.read().strip()):
-                                return  # replayed epoch: already committed
-                    merged = cdc.merge_partial_aggs(
-                        spark.read.parquet(gold_path), batch, keys, sums
-                    )
-                else:
-                    merged = batch.groupBy(*keys).agg(
-                        *[c.alias(nm) for nm, c in sums.items()]
-                    )
-                atomic_overwrite(
-                    merged, gold_path, extra_files={"_applied_epoch": str(epoch)}
-                )
-                if kill_after_epoch is not None and epoch == kill_after_epoch:
-                    # gold (incl. the epoch sidecar) is committed; dying
-                    # HERE means Spark never commits this epoch's offsets
+                applied = fold_into(
+                    spark,
+                    gold_path,
+                    lambda g: cdc.merge_partial_aggs(g, batch, keys, sums),
+                    epoch,
+                )  # False for a replayed epoch: already committed
+                if applied and epoch == kill_after_epoch:
+                    # gold (incl. its epoch) is committed; dying HERE
+                    # means Spark never commits this epoch's offsets
                     raise DeliberateKill(f"kill after epoch {epoch} commit")
 
             return apply_batch
@@ -1111,15 +1084,13 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
         ckpt_a = os.path.join(base, "ckpt_killed")
         survived = run(gold_a, ckpt_a, kill_after_epoch=2)
         assert not survived, "the kill never fired"
-        # epoch 2's data committed, its offsets did not: the sidecar
+        # epoch 2's data committed, its offsets did not: the table
         # already records epoch 2
-        with open(os.path.join(gold_a, "_applied_epoch")) as f:
-            assert int(f.read().strip()) == 2
+        assert applied_epoch(gold_a) == 2
         # restart on the SAME checkpoint + store: epoch 2 is re-delivered
         # and must be skipped, epochs 3+ applied once
         assert run(gold_a, ckpt_a)
-        with open(os.path.join(gold_a, "_applied_epoch")) as f:
-            assert int(f.read().strip()) == 3  # all four chunks applied
+        assert applied_epoch(gold_a) == 3  # all four chunks applied
 
         gold_b = os.path.join(base, "gold_clean")
         assert run(gold_b, os.path.join(base, "ckpt_clean"))
@@ -1196,14 +1167,14 @@ def test_kill_and_restart_ledger_applies_each_epoch_once(spark):
 def test_hll_fold_survives_replay_with_no_epoch_guard(spark):
     """Crash-recovery pin for the HLL max-fold's ADVERTISED property: the
     fold is idempotent, so unlike the sum-fold golds above it carries NO
-    epoch sidecar — and a kill after epoch 2's register store commits but
+    epoch — and a kill after epoch 2's register store commits but
     before its offsets commit makes the restart REPLAY epoch 2 into the
     store a second time. The replayed merge must be a no-op (per-bucket
     max cannot move), and the final registers must equal the one-shot
     batch sketch bit-for-bit."""
     from incremental_data_pipeline_spark.operators import sketches as sk
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
+    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_hll_kill_")
@@ -1220,11 +1191,8 @@ def test_hll_fold_survives_replay_with_no_epoch_guard(spark):
 
         def apply_batch(batch, epoch, kill_after=None):
             br = sk.hll_registers(batch, ["user_id"], p=10)
-            if os.path.exists(store):
-                merged = sk.hll_merge(spark.read.parquet(store), br)
-            else:
-                merged = br
-            atomic_overwrite(merged, store)  # NO epoch marker, on purpose
+            # NO epoch, on purpose
+            fold_into(spark, store, lambda r: br if r is None else sk.hll_merge(r, br))
             applied_epochs.append(epoch)
             if kill_after is not None and epoch == kill_after:
                 raise DeliberateKill(f"kill after epoch {epoch} store commit")
