@@ -80,11 +80,7 @@ def _input_bytes(df: DataFrame, files: list[str]) -> int:
     return total
 
 
-def fan_out(
-    df: DataFrame,
-    min_parallelism: int | None = None,
-    bytes_per_task: int | None = None,
-) -> DataFrame:
+def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     """Ensure enough partitions before a compute-dense narrow map
     (per-row hashing, shingling, vector math, Arrow-batched decode).
 
@@ -96,7 +92,8 @@ def fan_out(
     (the 100 TB case: thousands of input splits), so the extra shuffle never
     appears where it would actually hurt.
 
-    ``bytes_per_task`` caps the fan-out by data volume: the target becomes
+    The target is the core count (``defaultParallelism``).
+    ``bytes_per_task`` caps it by data volume: the target becomes
     min(cores, ceil(input_bytes / bytes_per_task)), so tiny inputs get few
     tasks regardless of cluster width (per-task fixed cost otherwise
     dominates — the r10 ``multimodal_ahash`` inverse-scaling regression).
@@ -104,8 +101,14 @@ def fan_out(
     for Python-boundary maps, FAN_OUT_CHEAP_MAP_BPT for cheap JVM hash
     maps; omit it for maps whose per-byte compute justifies a task per
     core even on KB-scale input (shingle explosion, vector scoring).
+
+    Tasks are sized by INPUT bytes only, also for maps whose output is
+    larger than their input — ``attach_wav_audio`` (two PCM bytes per text
+    byte) and the ×depth explode in ``cms_counters``. The floor prices the
+    per-task fixed cost against the bytes a task reads, not the rows it
+    emits.
     """
-    target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # Probe parallelism via the scan's file list — driver-side metadata,
     # no RDD conversion (df.rdd forces a full physical planning pass per
     # call). File count under-estimates split count for large files, which

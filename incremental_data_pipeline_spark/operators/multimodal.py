@@ -9,6 +9,18 @@ dependency-free PGM (P5) format — header, dimensions, raster stats — and
 everything Spark-side is real and tested: schema, Arrow batch shape,
 partition-parallel execution, metadata extraction.
 
+One seam, one parser per format:
+
+- ``_map_payloads(df, (id, value), schema, fn)`` is the only Arrow seam.
+  It fans the input out, runs ``mapInPandas`` and builds each output batch
+  from the tuples ``fn(doc_id, value)`` yields in schema order. Every
+  operator below is just its per-payload ``fn``.
+- ``_pgm`` parses a PGM (P5) payload — magic, header and raster-size
+  checks — for ``decode_image``, ``resize_image`` and ``ahash_image``;
+  ``_wav_samples`` does the same for RIFF/WAVE audio.
+- ``_printable`` is the one text sanitizer behind the PGM and WAV
+  renderers.
+
 At 100 TB: binary payloads dominate partition size, so reads go through
 `spark.sql.files.maxPartitionBytes`-bounded splits and the decode stage is
 a narrow map (no shuffle); feature outputs (embeddings, frames) feed the
@@ -17,15 +29,60 @@ similarity/dedup operators downstream.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import struct
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.functions.util import FAN_OUT_ARROW_BPT, fan_out
 
 DECODED_SCHEMA = "doc_id long, n_bytes long, first_byte int, content_md5 string"
+
+
+def _map_payloads(df: DataFrame, cols: tuple, schema: str, fn) -> DataFrame:
+    """Run ``fn(doc_id, value)`` over the two columns ``cols`` (names or
+    Column expressions) of every row as one narrow Arrow-batched map.
+    ``fn`` yields zero or more output tuples in ``schema`` order; each
+    batch's tuples become one pandas frame with the schema's column names.
+    The input is fanned out first, sized by its input bytes
+    (``FAN_OUT_ARROW_BPT``). ``schema`` is a DDL string whose types hold
+    no commas."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches):
+        for pdf in batches:
+            rows = [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(*cols).mapInPandas(run, schema)
+
+
+def _printable(text_col: str) -> Column:
+    """Every char outside printable ASCII (0x20-0x7E) becomes one space.
+    That pins 1 char == 1 byte (so a rendered payload's size is the text
+    length even for multi-byte UTF-8 input) and removes embedded newlines
+    that would corrupt the PGM header split in ``_pgm`` — without it, one
+    bad document fails the whole mapInPandas job. Identity for ASCII
+    corpora like the fixtures."""
+    return F.regexp_replace(F.col(text_col), r"[^\x20-\x7E]", " ")
+
+
+def _pgm(payload: bytes, doc_id) -> tuple[int, np.ndarray]:
+    """Parse one PGM (P5) payload to ``(maxval, raster)``, the raster an
+    h×w uint8 array. Fails loud on a wrong magic, a short header or a
+    raster whose size is not w×h."""
+    parts = bytes(payload).split(b"\n", 3)
+    if len(parts) != 4 or parts[0] != b"P5":
+        raise ValueError(f"not a P5 PGM payload (doc {doc_id})")
+    _, dims, maxval, raster = parts
+    w, h = (int(x) for x in dims.split())
+    arr = np.frombuffer(raster, dtype=np.uint8)
+    if arr.size != w * h:
+        raise ValueError(f"raster size {arr.size} != {w}x{h}")
+    return int(maxval), arr.reshape(h, w)
 
 
 def attach_binary(df: DataFrame, text_col: str = "text", out: str = "content") -> DataFrame:
@@ -37,25 +94,16 @@ def attach_binary(df: DataFrame, text_col: str = "text", out: str = "content") -
 def decode_binary_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = "content") -> DataFrame:
     """Arrow-batched metadata extraction over a binary column.
 
-    Real decode (image resize, audio resample, video frame-sample) would
-    slot into `_decode_one`; here it extracts byte-level metadata and the
-    content hash — enough to prove the batch shape and schema plumbing.
+    A real decode (image resize, audio resample, video frame-sample) is
+    another per-payload function on the same seam; this one extracts
+    byte-level metadata and the content hash — enough to prove the batch
+    shape and schema plumbing.
     """
-    import hashlib
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[bin_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "first_byte": payloads.map(lambda b: b[0] if len(b) else -1).astype("int32"),
-                    "content_md5": payloads.map(lambda b: hashlib.md5(b).hexdigest()),
-                }
-            )
+    def meta(doc_id, b):
+        yield doc_id, len(b), b[0] if len(b) else -1, hashlib.md5(b).hexdigest()
 
-    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(id_col, bin_col).mapInPandas(extract, DECODED_SCHEMA)
+    return _map_payloads(df, (id_col, bin_col), DECODED_SCHEMA, meta)
 
 
 PGM_WIDTH = 16
@@ -70,14 +118,9 @@ def attach_pgm_image(df: DataFrame, text_col: str = "text", out: str = "content"
     construction is a narrow codegen'd map — and the payloads are honest
     images any netpbm tool can open, not opaque fakes.
 
-    The raster is built from a SANITIZED copy of the text: every char
-    outside printable ASCII (0x20-0x7E) becomes one space. That pins
-    1 char == 1 byte (so height×width == raster byte count even for
-    multi-byte UTF-8 input) and removes embedded newlines that would
-    corrupt the header split in ``decode_image`` — without it, one bad
-    document fails the whole mapInPandas job. Identity for ASCII corpora
-    like the fixtures."""
-    clean = F.regexp_replace(F.col(text_col), r"[^\x20-\x7E]", " ")
+    The raster is built from a ``_printable`` copy of the text, so
+    height×width == raster byte count for every document."""
+    clean = _printable(text_col)
     n = F.length(clean)
     h = ((n + F.lit(PGM_WIDTH - 1)) / F.lit(PGM_WIDTH)).cast("int")
     header = F.concat(
@@ -90,42 +133,19 @@ def attach_pgm_image(df: DataFrame, text_col: str = "text", out: str = "content"
 def decode_image(df: DataFrame, id_col: str = "doc_id", bin_col: str = "content") -> DataFrame:
     """REAL image decode — a pure-Python parser for the dependency-free
     PGM (P5) format: validate the magic, parse dimensions and maxval from
-    the header, and compute pixel statistics from the raster (numpy over
-    the Arrow batch). The same mapInPandas slot takes a PIL/opencv decode
-    for formats that need codec libraries; this one runs everywhere.
+    the header, and compute pixel statistics from the raster (``_pgm``).
+    The same seam takes a PIL/opencv decode for formats that need codec
+    libraries; this one runs everywhere.
 
     ``mean_pixel_milli`` is integer-exact (1000×sum // n_pixels) so the
     decode is oracle-verifiable bit-for-bit."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, mx, means = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                magic, dims, maxval_s, raster = b.split(b"\n", 3)
-                if magic != b"P5":
-                    raise ValueError(f"not a P5 PGM payload (doc {doc_id})")
-                w, h = (int(x) for x in dims.split())
-                arr = np.frombuffer(raster, dtype=np.uint8)
-                if arr.size != w * h:
-                    raise ValueError(f"raster size {arr.size} != {w}x{h}")
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                mx.append(int(maxval_s))
-                means.append(1000 * int(arr.sum()) // (w * h))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "maxval": pd.Series(mx, dtype="int32"),
-                    "mean_pixel_milli": pd.Series(means, dtype="int64"),
-                }
-            )
+    def decode(doc_id, payload):
+        maxval, px = _pgm(payload, doc_id)
+        h, w = px.shape
+        yield doc_id, w, h, maxval, 1000 * int(px.sum()) // (w * h)
 
-    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(id_col, bin_col).mapInPandas(run, IMAGE_SCHEMA)
+    return _map_payloads(df, (id_col, bin_col), IMAGE_SCHEMA, decode)
 
 
 RESIZED_SCHEMA = (
@@ -147,45 +167,20 @@ def resize_image(
     src_col = x*w // out_w) is the one resampling kernel that is exactly
     reproducible in SQL — ``mean_pixel_milli`` over the selected pixels is
     the oracle hook, the same determinism trick as ``decode_image``. A
-    PIL/opencv bilinear resize slots into the same mapInPandas seam when
-    codec libs exist. Narrow map, no shuffle; output payloads shrink by
-    ~4x, the usual reason a 100 TB image corpus resizes early.
+    PIL/opencv bilinear resize slots into the same seam when codec libs
+    exist. Narrow map, no shuffle; output payloads shrink by ~4x, the
+    usual reason a 100 TB image corpus resizes early.
     """
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, blobs, means = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                magic, dims, maxval_s, raster = b.split(b"\n", 3)
-                if magic != b"P5":
-                    raise ValueError(f"not a P5 PGM payload (doc {doc_id})")
-                w, h = (int(x) for x in dims.split())
-                arr = np.frombuffer(raster, dtype=np.uint8).reshape(h, w)
-                out_h = max(h // 2, 1)
-                rows = (np.arange(out_h) * h) // out_h
-                cols = (np.arange(out_w) * w) // out_w
-                small = arr[np.ix_(rows, cols)]
-                ids.append(doc_id)
-                ws.append(out_w)
-                hs.append(out_h)
-                blobs.append(
-                    f"P5\n{out_w} {out_h}\n{int(maxval_s)}\n".encode()
-                    + small.tobytes()
-                )
-                means.append(1000 * int(small.sum()) // (out_w * out_h))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "resized": blobs,
-                    "mean_pixel_milli": pd.Series(means, dtype="int64"),
-                }
-            )
+    def resize(doc_id, payload):
+        maxval, px = _pgm(payload, doc_id)
+        h, w = px.shape
+        out_h = max(h // 2, 1)
+        small = px[np.ix_(np.arange(out_h) * h // out_h, np.arange(out_w) * w // out_w)]
+        blob = f"P5\n{out_w} {out_h}\n{maxval}\n".encode() + small.tobytes()
+        yield doc_id, out_w, out_h, blob, 1000 * int(small.sum()) // (out_w * out_h)
 
-    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(id_col, bin_col).mapInPandas(run, RESIZED_SCHEMA)
+    return _map_payloads(df, (id_col, bin_col), RESIZED_SCHEMA, resize)
 
 
 FEATURE_DIM = 16
@@ -194,34 +189,23 @@ FRAMES_SCHEMA = "doc_id long, frame_idx int, frame_offset long, frame_bytes long
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id", bin_col: str = "content") -> DataFrame:
-    """Feature extraction over binary payloads: Arrow-batched mapInPandas
-    producing a fixed-dim array<double> per payload.
+    """Feature extraction over binary payloads: a fixed-dim array<double>
+    per payload.
 
     The featurizer is a deterministic stand-in (L1-normalized 16-bin byte
-    histogram) for a real image/audio encoder — swap `_featurize` for a
-    model call; the Spark contract (schema, batch shape, narrow no-shuffle
-    map) is the production one. Output feeds the similarity operators
-    (brute_force_topk / lsh_topk / ivf_topk) unchanged.
+    histogram; all zeros for an empty payload) for a real image/audio
+    encoder — swap ``featurize`` for a model call; the Spark contract
+    (schema, batch shape, narrow no-shuffle map) is the production one.
+    Output feeds the similarity operators (brute_force_topk / lsh_topk /
+    ivf_topk) unchanged.
     """
-    import numpy as np
 
-    def _featurize(payload: bytes) -> list[float]:
+    def featurize(doc_id, payload):
         arr = np.frombuffer(payload, dtype=np.uint8)
-        if arr.size == 0:
-            return [0.0] * FEATURE_DIM
         hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype("float64")
-        return (hist / hist.sum()).tolist()
+        yield doc_id, (hist / max(hist.sum(), 1.0)).tolist()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "feature": pdf[bin_col].map(_featurize),
-                }
-            )
-
-    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(id_col, bin_col).mapInPandas(run, FEATURES_SCHEMA)
+    return _map_payloads(df, (id_col, bin_col), FEATURES_SCHEMA, featurize)
 
 
 def frame_sample(
@@ -235,33 +219,16 @@ def frame_sample(
     A real codec would decode at each offset; byte-slicing is the
     deterministic stand-in (codec libraries absent in this container).
     """
-    import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, offs, lens, md5s = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                size = len(payload)
-                step = max(size // n_frames, 1)
-                for i in range(n_frames):
-                    off = min(i * step, size)
-                    chunk = bytes(payload[off : off + step])
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    offs.append(off)
-                    lens.append(len(chunk))
-                    md5s.append(hashlib.md5(chunk).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_offset": pd.Series(offs, dtype="int64"),
-                    "frame_bytes": pd.Series(lens, dtype="int64"),
-                    "frame_md5": md5s,
-                }
-            )
+    def frames(doc_id, payload):
+        size = len(payload)
+        step = max(size // n_frames, 1)
+        for i in range(n_frames):
+            off = min(i * step, size)
+            chunk = bytes(payload[off : off + step])
+            yield doc_id, i, off, len(chunk), hashlib.md5(chunk).hexdigest()
 
-    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(id_col, bin_col).mapInPandas(run, FRAMES_SCHEMA)
+    return _map_payloads(df, (id_col, bin_col), FRAMES_SCHEMA, frames)
 
 
 WAV_SAMPLE_RATE = 8000
@@ -278,50 +245,33 @@ def attach_wav_audio(
     RIFF/WAVE header + mono 16-bit PCM, one sample per sanitized text
     byte (sample = (byte − 79)·256, spanning ±12k of the int16 range) —
     honest payloads any audio tool can open, the audio twin of
-    ``attach_pgm_image``. Sanitization (JVM-side, same contract as the
-    PGM path) pins 1 char == 1 sample for the oracle.
+    ``attach_pgm_image``. The JVM-side ``_printable`` sanitizer, shared
+    with the PGM path, pins 1 char == 1 sample for the oracle.
 
-    Binary packing is byte work the JVM can't express, so the pack runs
-    in the sanctioned Arrow-batched ``mapInPandas`` seam; the stage is a
-    narrow map, no shuffle."""
-    import struct
+    Returns ``doc_id`` and the payload column ``out``. Binary packing is
+    byte work the JVM can't express, so the pack runs in the Arrow seam;
+    the stage is a narrow map, no shuffle."""
 
-    import numpy as np
+    def pack(doc_id, text):
+        s = (np.frombuffer(text.encode("ascii"), dtype=np.uint8).astype(np.int16) - 79) * 256
+        data = s.astype("<i2").tobytes()
+        hdr = struct.pack(
+            "<4sI4s4sIHHIIHH4sI",
+            b"RIFF", 36 + len(data), b"WAVE",
+            b"fmt ", 16, 1, 1,
+            WAV_SAMPLE_RATE, WAV_SAMPLE_RATE * 2, 2, 16,
+            b"data", len(data),
+        )
+        yield doc_id, hdr + data
 
-    clean = F.regexp_replace(F.col(text_col), r"[^\x20-\x7E]", " ")
-    src = fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).withColumn("__clean", clean).select(id_col, "__clean")
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, t in zip(pdf[id_col], pdf["__clean"]):
-                s = (
-                    np.frombuffer(t.encode("ascii"), dtype=np.uint8).astype(np.int16)
-                    - 79
-                ) * 256
-                data = s.astype("<i2").tobytes()
-                hdr = struct.pack(
-                    "<4sI4s4sIHHIIHH4sI",
-                    b"RIFF", 36 + len(data), b"WAVE",
-                    b"fmt ", 16, 1, 1,
-                    WAV_SAMPLE_RATE, WAV_SAMPLE_RATE * 2, 2, 16,
-                    b"data", len(data),
-                )
-                ids.append(doc_id)
-                payloads.append(hdr + data)
-            yield pd.DataFrame({"doc_id": ids, "content": payloads})
-
-    return src.mapInPandas(pack, "doc_id long, content binary")
+    cols = (id_col, _printable(text_col).alias("__clean"))
+    return _map_payloads(df, cols, f"doc_id long, {out} binary", pack)
 
 
-def _wav_samples(payload: bytes, doc_id) -> "object":
-    """Parse one RIFF/WAVE mono PCM16 payload to an int64 sample array,
-    validating magic, format chunk, and layout — fails loud on anything
-    that is not the advertised format."""
-    import struct
-
-    import numpy as np
-
+def _wav_samples(payload: bytes, doc_id) -> tuple[int, np.ndarray]:
+    """Parse one RIFF/WAVE mono PCM16 payload to its sample rate and an
+    int64 sample array, validating magic, format chunk, and layout — fails
+    loud on anything that is not the advertised format."""
     b = bytes(payload)
     if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError(f"not a RIFF/WAVE payload (doc_id={doc_id})")
@@ -356,32 +306,21 @@ def decode_wav_audio(
 
     Scale shape: narrow Arrow-batched map, no shuffle; payload bytes
     never leave the partition."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "doc_id", "n_samples", "sample_rate", "peak_abs",
-                "mean_square_milli", "zero_crossings",
-            )}
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                rate, s = _wav_samples(payload, doc_id)
-                s = s[::stride]
-                n = len(s)
-                sgn = np.sign(s)
-                cols["doc_id"].append(doc_id)
-                cols["n_samples"].append(n)
-                cols["sample_rate"].append(rate // stride)
-                cols["peak_abs"].append(int(np.max(np.abs(s))) if n else 0)
-                cols["mean_square_milli"].append(
-                    int(1000 * int((s * s).sum()) // n) if n else 0
-                )
-                cols["zero_crossings"].append(
-                    int(((sgn[:-1] * sgn[1:]) < 0).sum()) if n > 1 else 0
-                )
-            yield pd.DataFrame(cols)
+    def stats(doc_id, payload):
+        rate, s = _wav_samples(payload, doc_id)
+        s = s[::stride]
+        n = len(s)
+        if not n:
+            yield doc_id, 0, rate // stride, 0, 0, 0
+            return
+        sgn = np.sign(s)
+        yield (
+            doc_id, n, rate // stride, int(np.max(np.abs(s))),
+            1000 * int((s * s).sum()) // n, int(((sgn[:-1] * sgn[1:]) < 0).sum()),
+        )
 
-    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(id_col, bin_col).mapInPandas(run, AUDIO_SCHEMA)
+    return _map_payloads(df, (id_col, bin_col), AUDIO_SCHEMA, stats)
 
 
 AHASH_SCHEMA = "doc_id long, ahash string"
@@ -403,41 +342,17 @@ def ahash_image(df: DataFrame, id_col: str = "doc_id", bin_col: str = "content")
 
     Scale shape: one Arrow-batched pass per partition; payload bytes
     never cross the network — only the 64-char hash leaves."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                magic, dims, _maxval, raster = b.split(b"\n", 3)
-                if magic != b"P5":
-                    raise ValueError(f"not a P5 PGM payload (doc {doc_id})")
-                w, h = (int(x) for x in dims.split())
-                arr = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                if arr.size != w * h:
-                    raise ValueError(f"raster size {arr.size} != {w}x{h}")
-                total_milli = 1000 * int(arr.sum()) // (w * h)
-                ys = np.minimum(np.arange(h) * 8 // h, 7)
-                xs = np.minimum(np.arange(w) * 8 // w, 7)
-                cell = (ys[:, None] * 8 + xs[None, :]).ravel()
-                sums = np.bincount(cell, weights=arr, minlength=64).astype(np.int64)
-                cnts = np.bincount(cell, minlength=64)
-                bits = []
-                for c in range(64):
-                    if cnts[c] == 0:
-                        bits.append("0")
-                    else:
-                        bits.append(
-                            "1" if 1000 * sums[c] // cnts[c] > total_milli else "0"
-                        )
-                ids.append(doc_id)
-                hashes.append("".join(bits))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "ahash": pd.Series(hashes, dtype="object"),
-                }
-            )
+    def ahash(doc_id, payload):
+        _, px = _pgm(payload, doc_id)
+        h, w = px.shape
+        total_milli = 1000 * int(px.sum()) // (w * h)
+        ys = np.minimum(np.arange(h) * 8 // h, 7)
+        xs = np.minimum(np.arange(w) * 8 // w, 7)
+        cell = (ys[:, None] * 8 + xs[None, :]).ravel()
+        sums = np.bincount(cell, weights=px.ravel(), minlength=64).astype(np.int64)
+        cnts = np.bincount(cell, minlength=64)
+        bits = ("1" if c and 1000 * s // c > total_milli else "0" for s, c in zip(sums, cnts))
+        yield doc_id, "".join(bits)
 
-    return fan_out(df, bytes_per_task=FAN_OUT_ARROW_BPT).select(id_col, bin_col).mapInPandas(run, AHASH_SCHEMA)
+    return _map_payloads(df, (id_col, bin_col), AHASH_SCHEMA, ahash)

@@ -280,55 +280,15 @@ def upsert_scd2(
     untouched — the full audit trail the reference's SCD1 overwrites
     away.
 
-    Scale shape: one key join between the CURRENT slice of the target and
-    the source (both key-partitioned or broadcast), null-safe attribute
-    comparison, three unionByName legs — no row-at-a-time logic, same
-    join geometry as the SCD1 emulation. Historical (non-current) rows
-    never join at all.
+    The merge is ``upsert_scd2_ordered`` with ``effective`` as every
+    source row's effective date, so its late-arrival guard holds here too:
+    a key whose open version starts on or after ``effective`` is left
+    untouched rather than closed before it opened.
     """
-    eff = F.lit(effective)
-    cur = target.filter(F.col(current_col))
-    hist = target.filter(~F.col(current_col))
-    s = source.select(
-        *keys,
-        F.lit(True).alias("__s_present"),
-        *[F.col(a).alias(f"__s_{a}") for a in attrs],
-    )
-    j = cur.join(s, keys, "full_outer")
-
-    in_src = F.coalesce(F.col("__s_present"), F.lit(False))
-    changed = None
-    for a in attrs:
-        neq = ~F.col(a).eqNullSafe(F.col(f"__s_{a}"))
-        changed = neq if changed is None else (changed | neq)
-    is_new_key = F.col(from_col).isNull()
-
-    out_cols = [*keys, *attrs, from_col, to_col, current_col]
-    # current rows without a source match, or matched-and-unchanged: pass
-    unchanged = j.filter(~is_new_key & (~in_src | ~changed)).select(*out_cols)
-    # matched-and-changed: close out the old version
-    closed = (
-        j.filter(~is_new_key & in_src & changed)
-        .withColumn(to_col, eff)
-        .withColumn(current_col, F.lit(False))
-        .select(*out_cols)
-    )
-    # changed or brand-new keys: open the new current version
-    opened = (
-        j.filter(in_src & (is_new_key | changed))
-        .select(
-            *keys,
-            *[F.col(f"__s_{a}").alias(a) for a in attrs],
-            eff.alias(from_col),
-            F.lit(None).cast(target.schema[to_col].dataType).alias(to_col),
-            F.lit(True).alias(current_col),
-        )
-    )
-    return (
-        hist.select(*out_cols)
-        .unionByName(unchanged)
-        .unionByName(closed)
-        .unionByName(opened)
+    eff_col = "__scd2_effective"
+    return upsert_scd2_ordered(
+        target, source.withColumn(eff_col, F.lit(effective)), keys, attrs,
+        eff_col, from_col, to_col, current_col,
     )
 
 
@@ -342,9 +302,9 @@ def upsert_scd2_ordered(
     to_col: str = "valid_to",
     current_col: str = "is_current",
 ) -> DataFrame:
-    """Event-time-ordered SCD2 upsert: the streaming-safe variant of
-    ``upsert_scd2``. Each source row carries its OWN effective timestamp
-    (``eff_col``) instead of one batch-level date, and a LATE-ARRIVAL
+    """Event-time-ordered SCD2 upsert, the one SCD2 merge
+    (``upsert_scd2`` is this with one batch-level date). Each source row
+    carries its OWN effective timestamp (``eff_col``), and a LATE-ARRIVAL
     GUARD ignores any source row whose effective time is not strictly
     after the open version's ``valid_from`` — so micro-batches may arrive
     in any file order and replays of an already-applied batch are no-ops
@@ -357,9 +317,10 @@ def upsert_scd2_ordered(
     - attrs unchanged     -> pass through
     - attrs changed       -> close current at eff, open new at eff
 
-    Scale shape: identical join geometry to ``upsert_scd2`` — one
-    key join of the CURRENT slice against the (pre-reduced, one row per
-    key) source, null-safe attribute comparison, unionByName legs.
+    Scale shape: one key join of the CURRENT slice against the
+    (pre-reduced, one row per key) source, both key-partitioned or
+    broadcast, null-safe attribute comparison, unionByName legs — no
+    row-at-a-time logic, same join geometry as the SCD1 emulation.
     History never joins.
     """
     cur = target.filter(F.col(current_col))

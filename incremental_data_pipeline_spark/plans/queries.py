@@ -640,8 +640,11 @@ def medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the second build back-fills executor slots the first one's write
         # tail leaves idle (guide §2.6 — actions are only sequential because
         # the driver calls them sequentially). pool.map re-raises either
-        # build's exception, preserving the sequential failure contract.
+        # build's exception, preserving the sequential failure contract;
+        # the wrapped target runs under the caller's job group and tags.
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         dim_specs = [
             ("dim_user", ["user_id"], "dim_user_key"),
@@ -650,7 +653,9 @@ def medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         with ThreadPoolExecutor(max_workers=2) as pool:
             list(
                 pool.map(
-                    lambda s: pipe.build_gold_dim(s[0], silver, s[1], [], s[2]),
+                    inheritable_thread_target(spark)(
+                        lambda s: pipe.build_gold_dim(s[0], silver, s[1], [], s[2])
+                    ),
                     dim_specs,
                 )
             )
@@ -13731,13 +13736,18 @@ def bucketed_join_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass  # warehouse dir not materialized yet — nothing to sweep
     # Independent writes to distinct tables: submit both from a 2-thread
     # pool so the orders write back-fills the lineitem write's task tail
-    # (guide §2.6); pool.map re-raises either write's failure.
+    # (guide §2.6); pool.map re-raises either write's failure, and the
+    # wrapped target runs under the caller's job group and tags.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         list(
             pool.map(
-                lambda s: write_bucketed(s[0], s[1], ["l_orderkey"], num_buckets=16),
+                inheritable_thread_target(spark)(
+                    lambda s: write_bucketed(s[0], s[1], ["l_orderkey"], num_buckets=16)
+                ),
                 [(li, t_li), (o, t_o)],
             )
         )

@@ -352,7 +352,8 @@ def test_reconcile_checksums_null_injective(spark):
 def test_scd2_idempotent_and_versions_chain(spark):
     """Re-applying an identical batch is a no-op (attributes unchanged =>
     no new version); a second real change chains a third version with
-    correct validity windows."""
+    correct validity windows; a batch effective before the open version
+    started is ignored."""
     import datetime
 
     from incremental_data_pipeline_spark.operators import scd
@@ -386,6 +387,33 @@ def test_scd2_idempotent_and_versions_chain(spark):
     assert rows[(1, 175)]["valid_from"] == d2 and rows[(1, 175)]["is_current"]
     assert rows[(2, 200)]["is_current"] and rows[(2, 200)]["valid_to"] is None
     assert rows[(3, 300)]["valid_from"] == d1 and rows[(3, 300)]["is_current"]
+
+    # a late batch (effective d0, before k1's open version starts at d2)
+    # must not close that version before it opened or open one in the past
+    late = spark.createDataFrame([(1, 999)], "k long, v long")
+    dim_late = scd.upsert_scd2(dim2, late, ["k"], ["v"], d0)
+    assert sorted(map(tuple, dim_late.collect())) == sorted(map(tuple, dim2.collect()))
+
+
+@pytest.mark.parametrize("name", ["medallion_e2e", "bucketed_join_pricing"])
+def test_pool_jobs_keep_the_callers_job_group(spark, name):
+    """The two queries that submit writes from a thread pool run those
+    jobs under the caller's job group: every job started during the query
+    belongs to the group, none is left without one."""
+    from incremental_data_pipeline_spark.plans.queries import QUERIES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"pool_jobs_{name}"
+    sc.setJobGroup(group, name)
+    try:
+        QUERIES[name](spark, SF_DIR).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
 def test_close_deleted_replay_noop_and_history_kept(spark):

@@ -197,7 +197,11 @@ def test_kmeans_codebook_recall(spark):
 
 def test_pgm_roundtrip_decodes_real_image(spark):
     """attach_pgm_image emits a well-formed netpbm P5 payload and
-    decode_image parses it — verified against a hand-decoded example."""
+    decode_image parses it — verified against a hand-decoded example. A
+    truncated raster fails loud with the same message in every PGM
+    decoder."""
+    import pytest
+
     from incremental_data_pipeline_spark.operators import multimodal as mm
 
     df = spark.createDataFrame([(7, "abcdefghijklmnopqr")], ["doc_id", "text"])
@@ -212,6 +216,26 @@ def test_pgm_roundtrip_decodes_real_image(spark):
     expected_mean = 1000 * (sum(b"abcdefghijklmnopqr") + 32 * 14) // 32
     assert (r["width"], r["height"], r["maxval"]) == (16, 2, 255)
     assert r["mean_pixel_milli"] == expected_mean
+
+    truncated = spark.createDataFrame(
+        [(8, bytearray(b"P5\n4 4\n255\nabc"))], "doc_id long, content binary"
+    )
+    for decoder in (mm.decode_image, mm.resize_image, mm.ahash_image):
+        with pytest.raises(Exception, match="raster size 3 != 4x4"):
+            decoder(truncated).collect()
+
+
+def test_multimodal_arrow_seam_defined_once():
+    """Every multimodal operator goes through one Arrow seam and one PGM
+    parser: the module fans out, calls mapInPandas and checks the P5
+    magic in exactly one place each."""
+    import inspect
+
+    from incremental_data_pipeline_spark.operators import multimodal as mm
+
+    src = inspect.getsource(mm)
+    for needle in ("mapInPandas(", "fan_out(", 'b"P5"'):
+        assert src.count(needle) == 1, needle
 
 
 def test_multimodal_image_decode_oracle(spark, duck):
@@ -363,6 +387,9 @@ def test_wav_roundtrip_is_real_riff_audio(spark):
 
     df = spark.createDataFrame([(1, "OPQ ABC zz")], "doc_id long, text string")
     payload = bytes(mm.attach_wav_audio(df).first()["content"])
+    renamed = mm.attach_wav_audio(df, out="audio")
+    assert renamed.columns == ["doc_id", "audio"]
+    assert bytes(renamed.first()["audio"]) == payload
 
     with wave.open(io.BytesIO(payload)) as w:
         assert w.getnchannels() == 1
