@@ -1,11 +1,17 @@
-"""Plan-shaping utilities shared by operators."""
+"""Plan-shaping utilities shared by operators, and the one mechanism for
+each session-level concern: threads that submit Spark jobs
+(``run_concurrently``), temporary conf overrides (``scoped_conf``) and
+scratch directories (``scratch_dir``)."""
 
 from __future__ import annotations
 
 import math
 import os
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -57,15 +63,11 @@ def lit_array(values, sql_type: str) -> Column:
 # rule adaptive_state_partitions applies to streaming state stores): a
 # 1 MB payload table gets a handful of tasks on local[32] AND on a
 # 4000-core cluster, while a 100 TB table is untouched (its scan already
-# has more splits than any target). Env-tunable per deployment; the
-# defaults encode the measured local break-even (r10 bench: 32 Arrow
-# tasks over ~600 KB ran 3x slower than 8).
-FAN_OUT_ARROW_BPT = int(
-    os.environ.get("SPARK_GRAFT_FAN_OUT_ARROW_BPT", 128 * 1024)
-)
-FAN_OUT_CHEAP_MAP_BPT = int(
-    os.environ.get("SPARK_GRAFT_FAN_OUT_CHEAP_MAP_BPT", 256 * 1024)
-)
+# has more splits than any target). The values encode the measured
+# local break-even (r10 bench: 32 Arrow tasks over ~600 KB ran 3x slower
+# than 8).
+FAN_OUT_ARROW_BPT = 128 * 1024
+FAN_OUT_CHEAP_MAP_BPT = 256 * 1024
 
 
 def _input_bytes(df: DataFrame, files: list[str]) -> int:
@@ -153,3 +155,66 @@ def observation_result(obs, timeout_s: float = 5.0):
     t.start()
     t.join(timeout_s)
     return result[0] if result else None
+
+
+def run_concurrently(spark: SparkSession, fn, items: list) -> list:
+    """``[fn(item) for item in items]`` with one thread per item, for
+    independent Spark actions: a second job back-fills the executor slots
+    the first one's task tail leaves idle (actions are only sequential
+    because the driver calls them sequentially).
+
+    The ``pool.map`` contract: results come back in ``items`` order, and
+    the first failing item's exception is re-raised once every item has
+    finished. Each thread runs under ``inheritable_thread_target(spark)``,
+    so its jobs carry the caller's job group, description and tags.
+
+    Concurrent catalog DDL (``saveAsTable``) is safe on the in-memory
+    session catalog the engine uses, but not on an embedded-Derby Hive
+    metastore, which allows one connection at a time.
+    """
+    with ThreadPoolExecutor(max_workers=max(1, len(items))) as pool:
+        return list(pool.map(inheritable_thread_target(spark)(fn), items))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict[str, str]):
+    """Set the session conf ``overrides`` for the ``with`` block, then
+    restore each key on exit or error: a key that was set gets its old
+    value back, and one that was unset is unset again.
+
+    The override is session-global while the block runs: a query declared
+    or a job started on the same session from another thread inherits it.
+    """
+    saved = {key: spark.conf.get(key, None) for key in overrides}
+
+    def apply(values: dict) -> None:
+        for key, value in values.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+    try:
+        apply(overrides)
+        yield
+    finally:
+        apply(saved)
+
+
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """Per-invocation scratch dir under ONE per-process root with ONE
+    atexit cleanup hook — repeated query invocations in a long-lived
+    process (bench iterations, test sessions) previously stacked one
+    rmtree handler each."""
+    global _SCRATCH_ROOT
+    import atexit
+    import shutil
+    import tempfile
+
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="idps_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)

@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from incremental_data_pipeline_spark.functions import util
+
 TOTAL_MASS = 10**12
 
 
@@ -186,11 +188,12 @@ def triangle_count(
     jobs. Each triangle is counted at exactly one pivot, and pivot buckets
     partition the pivots, so the per-bucket counts are disjoint and their
     per-node sums exact — shuffle footprint / K, no approximation. Batch
-    partials land as node-sized parquet in ``scratch_dir`` (a temp dir by
-    default; point it at shared storage on a cluster) so each batch fully
-    completes — and its wedge shuffle files become collectable — before
-    the next starts. Pass ``n_batches=1`` to force the single-job plan or
-    an explicit K to override the estimate.
+    partials land as node-sized parquet in ``scratch_dir`` (by default a
+    dir under the process scratch root, removed at exit; point it at
+    shared storage on a cluster) so each batch fully completes — and its
+    wedge shuffle files become collectable — before the next starts. Pass
+    ``n_batches=1`` to force the single-job plan or an explicit K to
+    override the estimate.
 
     Returns (node, n_triangles) for every node of the graph, zeros
     included."""
@@ -257,11 +260,10 @@ def triangle_count(
 
     # --- pivot-batched path: K sequential jobs, shuffle footprint / K ---
     import gc
-    import tempfile
 
     spark = edges.sparkSession
     if scratch_dir is None:
-        scratch_dir = tempfile.mkdtemp(prefix="idps_tri_")
+        scratch_dir = util.scratch_dir("triangle_count_")
     nodes_path = os.path.join(scratch_dir, "nodes")
     all_nodes.write.mode("overwrite").parquet(nodes_path)
     for i in range(n_batches):

@@ -24,6 +24,11 @@ from urllib.parse import urlparse
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from incremental_data_pipeline_spark.functions.util import (
+    run_concurrently,
+    scoped_conf,
+    scratch_dir,
+)
 from incremental_data_pipeline_spark.operators import cdc, relational, scd
 from incremental_data_pipeline_spark.sources.readers import load_table
 
@@ -50,25 +55,6 @@ def dec_sum(col, alias: str, scale: int = 2):
     sums are associative/commutative, so the shuffle order can't change the
     result — which makes the value bit-identical to the DuckDB oracle."""
     return F.sum(F.col(col).cast(f"decimal(18,{scale})")).cast("double").alias(alias)
-
-_SCRATCH_ROOT: str | None = None
-
-
-def scratch_dir(prefix: str) -> str:
-    """Per-invocation scratch dir under ONE per-process root with ONE
-    atexit cleanup hook — repeated query invocations in a long-lived
-    process (bench iterations, test sessions) previously stacked one
-    rmtree handler each."""
-    global _SCRATCH_ROOT
-    import atexit
-    import shutil
-    import tempfile
-
-    if _SCRATCH_ROOT is None:
-        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="idps_scratch_")
-        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
-
 
 
 # --------------------------------------------------------------------------
@@ -636,29 +622,15 @@ def medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         silver = pipe.build_silver("events", lambda df: df)
         # The two dims are independent read-modify-write jobs over the same
-        # silver snapshot (disjoint gold paths); submit them concurrently so
-        # the second build back-fills executor slots the first one's write
-        # tail leaves idle (guide §2.6 — actions are only sequential because
-        # the driver calls them sequentially). pool.map re-raises either
-        # build's exception, preserving the sequential failure contract;
-        # the wrapped target runs under the caller's job group and tags.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        dim_specs = [
-            ("dim_user", ["user_id"], "dim_user_key"),
-            ("dim_event_type", ["event_type"], "dim_event_type_key"),
-        ]
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(
-                pool.map(
-                    inheritable_thread_target(spark)(
-                        lambda s: pipe.build_gold_dim(s[0], silver, s[1], [], s[2])
-                    ),
-                    dim_specs,
-                )
-            )
+        # silver snapshot (disjoint gold paths), so they build concurrently.
+        run_concurrently(
+            spark,
+            lambda s: pipe.build_gold_dim(s[0], silver, s[1], [], s[2]),
+            [
+                ("dim_user", ["user_id"], "dim_user_key"),
+                ("dim_event_type", ["event_type"], "dim_event_type_key"),
+            ],
+        )
 
     fact = pipe.build_gold_fact(
         "fact_events",
@@ -13734,26 +13706,13 @@ def bucketed_join_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.rmtree(full, ignore_errors=True)
     except OSError:
         pass  # warehouse dir not materialized yet — nothing to sweep
-    # Independent writes to distinct tables: submit both from a 2-thread
-    # pool so the orders write back-fills the lineitem write's task tail
-    # (guide §2.6); pool.map re-raises either write's failure, and the
-    # wrapped target runs under the caller's job group and tags.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                inheritable_thread_target(spark)(
-                    lambda s: write_bucketed(s[0], s[1], ["l_orderkey"], num_buckets=16)
-                ),
-                [(li, t_li), (o, t_o)],
-            )
-        )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # Independent writes to distinct tables, so they run concurrently.
+    run_concurrently(
+        spark,
+        lambda s: write_bucketed(s[0], s[1], ["l_orderkey"], num_buckets=16),
+        [(li, t_li), (o, t_o)],
+    )
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = spark.table(t_li).join(spark.table(t_o), "l_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         exchange_free = "Exchange" not in plan
@@ -13774,8 +13733,6 @@ def bucketed_join_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(bucketed).alias("bucketed_scan"),
             )
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 @query(

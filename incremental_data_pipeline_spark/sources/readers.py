@@ -111,14 +111,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key is not None and ("table", *key) in cache:
         return cache[("table", *key)]
     nanos_cols = _nanos_ts_columns(path)
-    if nanos_cols:
-        # Runtime-settable; required even on sessions not built by
-        # session.get_spark (e.g. the verify driver's bare SparkSession).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _normalize_ntz(spark.read.parquet(path), nanos_cols)
+    df = _normalize_ntz(_read_raw(spark, path, nanos_cols), nanos_cols)
     if key is not None:
         cache[("table", *key)] = df
     return df
+
+
+def _read_raw(spark: SparkSession, path: str, nanos_cols: list[str]) -> DataFrame:
+    """``spark.read.parquet(path)`` with the ``nanos_cols`` as raw int64.
+
+    Sets ``nanosAsLong`` on the session, which needs it even when not
+    built by ``session.get_spark`` (e.g. a bare ``SparkSession``). A
+    scoped override would not do: the scan reads the setting again
+    whenever the returned DataFrame runs."""
+    if nanos_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
 
 
 def _normalize_ntz(df: DataFrame, nanos_cols: list[str]) -> DataFrame:
@@ -175,8 +183,7 @@ def load_table_range(
         return calendar.timegm(dt.timetuple()) * 1_000_000 + dt.microsecond
 
     if ts_col in nanos_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_raw(spark, path, nanos_cols)
         # Coarse raw-nanos bounds (pushed): lo is a superset boundary
         # because ns -> µs truncation maps (lo_µs*1000, lo_µs*1000+999]
         # onto lo_µs; hi's bound is exact under truncation.

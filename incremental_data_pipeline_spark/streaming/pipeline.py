@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from incremental_data_pipeline_spark.functions.util import scoped_conf
 from incremental_data_pipeline_spark.sources.readers import (
     _nanos_ts_columns,
     _normalize_ntz,
@@ -49,12 +50,10 @@ from incremental_data_pipeline_spark.sources.readers import (
 # partitions spend ~2 s for the same answer. The store count must
 # therefore track STATE VOLUME, not a static session conf: we size it
 # from the streamed source's on-disk bytes (state for watermarked
-# joins/windows is a bounded fraction of input). Env-tunable for other
-# deployments; the rule — not a constant — is what ships to a cluster
-# (100 TB source → the 4096 cap, thousands of stores, same code path).
-STREAM_STATE_BYTES_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_BPP", 8 * 1024 * 1024)
-)
+# joins/windows is a bounded fraction of input). The rule — not a fixed
+# store count — is what ships to a cluster (100 TB source → the 4096
+# cap, thousands of stores, same code path).
+STREAM_STATE_BYTES_PER_PARTITION = 8 * 1024 * 1024
 _STREAM_STATE_MIN_PARTITIONS = 4  # keep cross-partition watermark/min paths exercised
 _STREAM_STATE_MAX_PARTITIONS = 4096
 
@@ -145,20 +144,14 @@ def _drain(
     ``awaitTermination()`` in the ``finally`` replaces it with the typed
     error, so keep that call.
     """
-    prev_parts: str | None = None
-    if state_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    parts = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    with scoped_conf(spark, parts if state_partitions is not None else {}):
         q = writer.start()
         try:
             q.processAllAvailable()
         finally:
             q.stop()
             q.awaitTermination()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return q
 
 

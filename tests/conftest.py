@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import duckdb
@@ -32,6 +33,19 @@ def spark():
     spark = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+@contextmanager
+def job_group(spark, name):
+    """Run the block's jobs under job group ``name``; on exit clear the
+    group so later jobs on this thread belong to none."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
 
 
 @pytest.fixture(scope="session")

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from incremental_data_pipeline_spark.plans.medallion import MedallionPipeline
 from incremental_data_pipeline_spark.sources.readers import load_table
 from incremental_data_pipeline_spark.sources.watermark import WatermarkStore
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_group
 
 
 def _ts(s: str):
@@ -402,18 +402,60 @@ def test_pool_jobs_keep_the_callers_job_group(spark, name):
     belongs to the group, none is left without one."""
     from incremental_data_pipeline_spark.plans.queries import QUERIES
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    tracker = spark.sparkContext.statusTracker()
     ungrouped = set(tracker.getJobIdsForGroup(None))
     group = f"pool_jobs_{name}"
-    sc.setJobGroup(group, name)
-    try:
+    with job_group(spark, group):
         QUERIES[name](spark, SF_DIR).collect()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
     assert tracker.getJobIdsForGroup(group)
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """On exit, also by an error, a key that was set gets its old value
+    back and a key that was unset is unset again."""
+    from incremental_data_pipeline_spark.functions.util import scoped_conf
+
+    was_set, was_unset = "spark.sql.shuffle.partitions", "spark.idps.test.scoped"
+    before = spark.conf.get(was_set)
+    overrides = {was_set: "7", was_unset: "on"}
+
+    def restored():
+        return spark.conf.get(was_set) == before and was_unset not in spark.conf.getAll
+
+    with scoped_conf(spark, overrides):
+        assert [spark.conf.get(k) for k in overrides] == ["7", "on"]
+    assert restored()
+    with pytest.raises(RuntimeError), scoped_conf(spark, overrides):
+        raise RuntimeError("block failed")
+    assert restored()
+
+
+def test_session_concerns_defined_once():
+    """Threads that submit Spark jobs, conf overrides and scratch dirs each
+    have one helper in ``functions/util.py``, and env knobs are read only
+    in ``session.py``: per-site copies drifted, as the thread pools whose
+    jobs lost the caller's job group and the temp dir nothing removed."""
+    import inspect
+    from pathlib import Path
+
+    from incremental_data_pipeline_spark.functions import util
+
+    pkg = Path(util.__file__).resolve().parents[1]
+    src = {p.relative_to(pkg).as_posix(): p.read_text() for p in pkg.rglob("*.py")}
+
+    def users(needle):
+        return {name: s.count(needle) for name, s in src.items() if needle in s}
+
+    for needle in ("ThreadPoolExecutor", "inheritable_thread_target", "tempfile.mkdtemp("):
+        assert set(users(needle)) == {"functions/util.py"}, needle
+    assert users("spark.conf.set(") == {
+        "functions/util.py": 1,
+        "sources/readers.py": 1,
+        "sources/catalog.py": 1,
+    }
+    assert "spark.conf.set(" in inspect.getsource(util.scoped_conf)
+    assert set(users("SPARK_GRAFT_")) == {"session.py"}
 
 
 def test_close_deleted_replay_noop_and_history_kept(spark):

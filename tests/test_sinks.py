@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.sources import sinks
+from tests.conftest import job_group
 
 
 def _mkdf(spark, vals):
@@ -59,14 +60,9 @@ def test_fold_into_skips_replayed_epochs(spark, tmp_path, replayed):
     assert sinks.fold_into(spark, path, _append_step(spark, [1], seen), epoch=0)
     assert sinks.fold_into(spark, path, _append_step(spark, [2], seen), epoch=1)
     assert seen == [None, [1]]
-    sc = spark.sparkContext
-    sc.setJobGroup("fold_replay", "replayed fold")
-    try:
+    with job_group(spark, "fold_replay"):
         assert not sinks.fold_into(spark, path, _append_step(spark, [3], seen), replayed)
-        assert sc.statusTracker().getJobIdsForGroup("fold_replay") == []
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup("fold_replay") == []
     assert seen == [None, [1]]
     assert sorted(r["x"] for r in spark.read.parquet(path).collect()) == [1, 2]
     assert sinks.applied_epoch(path) == 1

@@ -5,6 +5,9 @@ mirror in test_queries_oracle.py; these pin the operator CONTRACTS.)"""
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -454,6 +457,13 @@ def test_triangle_count_pivot_batched_equals_single(spark, tmp_path):
             ).collect()
         )
         assert batched == single, f"K={k} diverged"
+    # with no scratch_dir the partials land under the process scratch root
+    from incremental_data_pipeline_spark.functions import util
+
+    default = graph.triangle_count(edges, n_batches=3)
+    assert sorted((r["node"], r["n_triangles"]) for r in default.collect()) == single
+    files = [urlparse(f).path for f in default.inputFiles()]
+    assert files and all(f.startswith(util._SCRATCH_ROOT + os.sep) for f in files)
     # auto mode on a tiny input resolves to the single-job plan and matches
     auto = sorted(
         (r["node"], r["n_triangles"]) for r in graph.triangle_count(edges).collect()
