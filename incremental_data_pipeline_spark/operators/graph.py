@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.functions import util
+from incremental_data_pipeline_spark.sources.sinks import read_table
 
 TOTAL_MASS = 10**12
 
@@ -188,7 +189,8 @@ def triangle_count(
     jobs. Each triangle is counted at exactly one pivot, and pivot buckets
     partition the pivots, so the per-bucket counts are disjoint and their
     per-node sums exact — shuffle footprint / K, no approximation. Batch
-    partials land as node-sized parquet in ``scratch_dir`` (by default a
+    partials land as node-sized parquet in one directory of ``scratch_dir``
+    (the first batch overwrites it, the rest append; by default a
     dir under the process scratch root, removed at exit; point it at
     shared storage on a cluster) so each batch fully completes — and its
     wedge shuffle files become collectable — before the next starts. Pass
@@ -265,6 +267,7 @@ def triangle_count(
     if scratch_dir is None:
         scratch_dir = util.scratch_dir("triangle_count_")
     nodes_path = os.path.join(scratch_dir, "nodes")
+    partials_path = os.path.join(scratch_dir, "partials")
     all_nodes.write.mode("overwrite").parquet(nodes_path)
     for i in range(n_batches):
         bucket = oriented.filter(
@@ -275,9 +278,7 @@ def triangle_count(
         wedges = e1.join(e2, "p").filter(F.col("x") < F.col("y"))
         tri = wedges.join(closing, ["x", "y"])
         # the write is the action that bounds this batch's live shuffle
-        _wedge_per_node(tri).write.mode("overwrite").parquet(
-            os.path.join(scratch_dir, f"part_{i}")
-        )
+        _wedge_per_node(tri).write.mode("append" if i else "overwrite").parquet(partials_path)
         # nudge the ContextCleaner so batch i's wedge shuffle files are
         # reclaimed before batch i+1 allocates its own (local-mode disk
         # hygiene; harmless no-op concern on a multi-disk cluster)
@@ -287,14 +288,11 @@ def triangle_count(
         except Exception:
             pass
     oriented.unpersist()
-    partials = spark.read.parquet(
-        *[os.path.join(scratch_dir, f"part_{i}") for i in range(n_batches)]
-    )
-    per_node = partials.groupBy("node").agg(
+    per_node = read_table(spark, partials_path).groupBy("node").agg(
         F.sum("n_triangles").cast("long").alias("n_triangles")
     )
     return (
-        spark.read.parquet(nodes_path)
+        read_table(spark, nodes_path)
         .join(per_node, "node", "left")
         .select(
             "node",

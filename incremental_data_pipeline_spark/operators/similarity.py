@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -53,7 +52,7 @@ from incremental_data_pipeline_spark.functions.vector import (
     norm_q,
     quantize,
 )
-from incremental_data_pipeline_spark.sources.sinks import StoredSchemaError, merge_partitions
+from incremental_data_pipeline_spark.sources.sinks import StoredSchemaError, merge_partitions, read_table
 
 
 MAX_AUTO_PLANES = 24  # 2^24 buckets — occupancy ~60 rows even at 1e9 vectors
@@ -962,7 +961,8 @@ def ivf_index_upsert(
         quantize("embedding").alias("cv"),
         let(quantize("embedding"), lambda v: _cell_of(centroids, v)).alias("cell"),
     ).dropDuplicates([id_col])
-    if not os.path.exists(path):  # first batch bootstraps the index
+    idx = read_table(spark, path)
+    if idx is None:  # first batch bootstraps the index
         batch.hint("rebalance", "cell").write.partitionBy("cell").parquet(path)
         return
     # The assigned batch feeds several jobs in this call (cell collect,
@@ -971,23 +971,21 @@ def ivf_index_upsert(
     # instead of once per job (r10 — batch-sized state, freed on exit).
     batch.persist()
     try:
-        _ivf_upsert_merge(spark, batch, path, id_col, allow_moves)
+        _ivf_upsert_merge(spark, batch, idx, path, id_col, allow_moves)
     finally:
         batch.unpersist()
 
 
 def _ivf_upsert_merge(
-    spark, batch: DataFrame, path: str, id_col: str, allow_moves: bool
+    spark, batch: DataFrame, idx: DataFrame, path: str, id_col: str, allow_moves: bool
 ) -> None:
     batch_cells = {r["cell"] for r in batch.select("cell").distinct().collect()}
     touched = set(batch_cells)
     emptied: set = set()
     if allow_moves:
         # cells holding a stale copy of an updated id (id+partition cols
-        # only — parquet reads no vector bytes for this; the explicit
-        # schema skips a footer-inference job, and merge_partitions checks
-        # it against the stored one before anything is written)
-        idx_cols = spark.read.schema(batch.schema).parquet(path).select(id_col, "cell")
+        # only — parquet reads no vector bytes for this)
+        idx_cols = idx.select(id_col, "cell")
         stale_cells = {
             r["cell"]
             for r in idx_cols.join(batch.select(id_col), id_col, "semi")
@@ -1050,7 +1048,7 @@ def ivf_index_probe(
         ).alias("cell"),
     )
     probed = [r["cell"] for r in q.select("cell").distinct().collect()]
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probed))
+    idx = read_table(spark, path).filter(F.col("cell").isin(probed))
     c = idx.select(F.col(id_col).alias("neighbor_id"), "cv", "cell")
     return _cosine_topk(c, q, k, on="cell")
 

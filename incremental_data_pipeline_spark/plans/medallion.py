@@ -27,7 +27,7 @@ from incremental_data_pipeline_spark.sources.sinks import (
     atomic_overwrite,
     idempotent_append,
     idempotent_overwrite_day_partitions,
-    recover_interrupted_swap,
+    read_table,
 )
 from incremental_data_pipeline_spark.sources.watermark import WatermarkStore, run_incremental_batch
 
@@ -42,16 +42,12 @@ class MedallionPipeline:
     def path(self, layer: str, table: str) -> str:
         return os.path.join(self.base, layer, table)
 
-    def exists(self, layer: str, table: str) -> bool:
-        """Reference: spark.catalog.tableExists gate (gold_dim_branch.py:51).
-        A swap that crashed between its renames is repaired first, so the
-        table reads as its last version, never as missing."""
-        path = self.path(layer, table)
-        recover_interrupted_swap(path)
-        return os.path.exists(path)
-
-    def read(self, layer: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, table))
+    def read(self, layer: str, table: str) -> DataFrame | None:
+        """The table, or None when it does not exist — the reference's
+        spark.catalog.tableExists gate (gold_dim_branch.py:51). A swap that
+        crashed between its renames reads as its last version
+        (``sinks.read_table``)."""
+        return read_table(self.spark, self.path(layer, table))
 
     # -- bronze: incremental CDC ingest --
 
@@ -137,7 +133,7 @@ class MedallionPipeline:
         and range-exchange shuffles buy nothing. Callers keying something
         that is NOT dimension-sized should pass ``None`` (auto) or
         ``True``."""
-        existing = self.read("gold", table) if self.exists("gold", table) else None
+        existing = self.read("gold", table)
         dim = build_dim(source, natural_keys, attrs, surrogate_key, existing, scalable_keys)
         atomic_overwrite(dim, self.path("gold", table))
         return self.read("gold", table)

@@ -31,6 +31,7 @@ from incremental_data_pipeline_spark.functions.util import (
 )
 from incremental_data_pipeline_spark.operators import cdc, relational, scd
 from incremental_data_pipeline_spark.sources.readers import load_table
+from incremental_data_pipeline_spark.sources.sinks import read_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1689,7 +1690,7 @@ def stream_scd1_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _stream.read_stream(spark, sf_dir, "events").select("user_id", "ts")
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    dim = spark.read.parquet(dim_path)
+    dim = read_table(spark, dim_path)
     return dim.select(
         F.row_number().over(Window.orderBy("user_id")).alias("dim_user_key"),
         "user_id",
@@ -1729,7 +1730,7 @@ def bronze_partition_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     expired = expire_partitions(path, "d", keep_last_n=7)
     assert all(isinstance(x, str) for x in expired)
     return (
-        spark.read.parquet(path)
+        read_table(spark, path)
         # partition-dir values are strings; Spark type-infers DATE, the
         # oracle keeps VARCHAR — pin the public type.
         .groupBy(F.col("d").cast("string").alias("d"))
@@ -1836,7 +1837,7 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
     return (
-        spark.read.parquet(dim_path)
+        read_table(spark, dim_path)
         .filter(F.col("is_current"))
         .select("user_id", "last_event_type")
     )
@@ -3363,7 +3364,7 @@ def compact_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if stats["files_after"] >= stats["files_before"]:
         raise RuntimeError(f"compaction did not reduce file count: {stats}")
     return (
-        spark.read.parquet(path)
+        read_table(spark, path)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), dec_sum("value", "sum_value", 4))
     )
@@ -3462,7 +3463,7 @@ def compact_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "events").repartition(16).write.parquet(path)
     maintenance.compact_table(spark, path, zorder_cols=["user_id", "value"])
     return (
-        spark.read.parquet(path)
+        read_table(spark, path)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), dec_sum("value", "sum_value", 4))
     )
@@ -4643,7 +4644,7 @@ def hybrid_backfill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type", "value", "ts")
     )
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    return spark.read.parquet(gold_path).select(
+    return read_table(spark, gold_path).select(
         "user_id",
         "event_type",
         F.col("sum_cents").cast("bigint").alias("sum_cents"),
@@ -4725,7 +4726,7 @@ def stream_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "value", "ts"
     )
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    return spark.read.parquet(gold_path).select(
+    return read_table(spark, gold_path).select(
         "user_id",
         "event_type",
         F.col("sum_cents").cast("bigint").alias("sum_cents"),
@@ -7916,7 +7917,7 @@ def stream_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value"
     )
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    return spark.read.parquet(gold_path).select(
+    return read_table(spark, gold_path).select(
         "event_type",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("sum_cents").cast("bigint").alias("sum_cents"),
@@ -8538,7 +8539,7 @@ def dynamic_partition_pruning_join(spark: SparkSession, sf_dir: str) -> DataFram
     path = os.path.join(base, "events_by_type")
     if not os.path.exists(path):
         ev.write.partitionBy("event_type").mode("overwrite").parquet(path)
-    fact = spark.read.parquet(path)
+    fact = read_table(spark, path)
     dim = (
         fact.select("event_type")
         .distinct()
@@ -8918,7 +8919,7 @@ def stream_cdc_tombstone_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
     return (
-        spark.read.parquet(store)
+        read_table(spark, store)
         .filter(F.col("op") != "D")
         .select(
             "user_id",
@@ -11320,8 +11321,8 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("b.doc_id").alias("doc_id"))
             .distinct()
         )
-        if os.path.exists(store):
-            existing = spark.read.parquet(store)
+        existing = read_table(spark, store)
+        if existing is not None:
             vs_store = (
                 bands.join(existing, ["band", "band_sig"], "left_semi")
                 .select("doc_id")
@@ -11343,7 +11344,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(base, "ckpt"),
         os.path.join(base, "ledger"),
     )
-    return spark.read.parquet(out).select("doc_id")
+    return read_table(spark, out).select("doc_id")
 
 
 @query(
@@ -13038,7 +13039,7 @@ def ann_ivf_index_moves_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") - 50).alias("vec_id"), "embedding"
     )
     _sim.ivf_index_upsert(spark, moved, codebook, path, allow_moves=True)
-    return spark.read.parquet(path).select(
+    return read_table(spark, path).select(
         F.col("vec_id"), F.col("cell").cast("int").alias("cell")
     )
 
@@ -13372,7 +13373,7 @@ def stream_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         fold_into(spark, store, step, epoch)
 
-    raw_schema = spark.read.parquet(src_dir).schema
+    raw_schema = read_table(spark, src_dir).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
@@ -13380,7 +13381,7 @@ def stream_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
 
-    counters = spark.read.parquet(store)
+    counters = read_table(spark, store)
     est = _sk.dyadic_rank_estimate(
         spark,
         counters,
@@ -13570,7 +13571,7 @@ def stream_hll_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         br = _sk.hll_registers(batch, ["user_id"], p=10)
         fold_into(spark, store, lambda r: br if r is None else _sk.hll_merge(r, br))
 
-    raw_schema = spark.read.parquet(src_dir).schema
+    raw_schema = read_table(spark, src_dir).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
@@ -13578,7 +13579,7 @@ def stream_hll_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
 
-    return _sk.hll_estimate(spark.read.parquet(store), p=10)
+    return _sk.hll_estimate(read_table(spark, store), p=10)
 
 
 from incremental_data_pipeline_spark.operators import linkage as _linkage  # noqa: E402

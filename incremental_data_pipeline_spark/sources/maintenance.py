@@ -45,7 +45,7 @@ def file_stats(spark: SparkSession, path: str) -> DataFrame:
     decides whether compaction is worth a rewrite. Row counts come from
     footer metadata (zero data columns scanned); file path/size from the
     ``_metadata`` hidden column, so the probe runs distributed on any FS."""
-    df = spark.read.parquet(path)
+    df = sinks.read_table(spark, path)
     return (
         df.select(
             F.col("_metadata.file_path").alias("file"),
@@ -147,7 +147,7 @@ def compact_table(
     total_bytes = before["total_bytes"] or 0
     total_rows = before["total_rows"] or 1
     n = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = sinks.read_table(spark, path)
     if zorder_cols:
         if partition_cols:
             raise ValueError("zorder_cols supports unpartitioned tables")

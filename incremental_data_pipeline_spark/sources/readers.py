@@ -13,6 +13,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -76,8 +77,8 @@ def _scan_cache(spark: SparkSession) -> dict:
     cache is the same idea for the path-addressed fixtures. Only the
     resolved DataFrame HANDLE (logical plan + schema) is kept — zero
     rows are materialized, every action still scans the parquet — and
-    entries are keyed on (abspath, mtime_ns, size) so any rewrite of
-    the file misses. Stored as an attribute of the session object, so
+    entries are keyed on the file's stat (``_stat_key``) so any rewrite
+    of the file misses. Stored as an attribute of the session object, so
     the cache dies with the session and never crosses engines."""
     cache = getattr(spark, "_idps_scan_cache", None)
     if cache is None:
@@ -86,17 +87,34 @@ def _scan_cache(spark: SparkSession) -> dict:
     return cache
 
 
-def _stat_key(path: str) -> tuple[str, int, int] | None:
+def _stat_key(path: str) -> tuple | None:
     """Cache key for a single-file table, or None when not cacheable
     (directories mutate in place; missing paths must raise in the
-    reader, not here)."""
+    reader, not here). The inode and ctime catch a same-size file
+    renamed over the old one with its mtime restored."""
     try:
         st = os.stat(path)
     except OSError:
         return None
     if not os.path.isfile(path):
         return None
-    return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size, st.st_ino, st.st_ctime_ns)
+
+
+def _fixture_scan(spark: SparkSession, path: str) -> tuple[DataFrame, StructType, list[str]]:
+    """The one scan of the fixture file ``path``, cached per session on
+    its stat: the public DataFrame ``load_table`` returns, the
+    pre-conversion schema a file stream over ``path`` needs, and the
+    raw-nanos columns ``_normalize_ntz`` converts."""
+    cache, key = _scan_cache(spark), _stat_key(path)
+    if key is not None and key in cache:
+        return cache[key]
+    nanos_cols = _nanos_ts_columns(path)
+    raw = _read_raw(spark, path, nanos_cols)
+    scan = (_normalize_ntz(raw, nanos_cols), raw.schema, nanos_cols)
+    if key is not None:
+        cache[key] = scan
+    return scan
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -105,16 +123,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Nanosecond-precision timestamp columns are read as raw nanos and
     truncated to Spark's microsecond TimestampType (matching DuckDB's own
     ns→µs truncation), keeping the public schema engine-agnostic."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    cache = _scan_cache(spark)
-    key = _stat_key(path)
-    if key is not None and ("table", *key) in cache:
-        return cache[("table", *key)]
-    nanos_cols = _nanos_ts_columns(path)
-    df = _normalize_ntz(_read_raw(spark, path, nanos_cols), nanos_cols)
-    if key is not None:
-        cache[("table", *key)] = df
-    return df
+    return _fixture_scan(spark, os.path.join(sf_dir, f"{name}.parquet"))[0]
 
 
 def _read_raw(spark: SparkSession, path: str, nanos_cols: list[str]) -> DataFrame:

@@ -21,6 +21,12 @@ once per storage shape:
   every streaming state table (the change-query apply: old version plus
   change set gives the new version).
 
+``read_table`` is the read side of all four: the one read of a table the
+engine committed. It repairs an interrupted swap, returns None when there
+is no table, and reads with the schema Spark stored in the part files'
+footers, so no schema-inference job runs (the role Delta's log plays for
+the reference's gold tables).
+
 ``idempotent_append`` dedups on a key against rows already in the sink,
 so replaying a batch (at-least-once upstream) cannot duplicate the layer
 — the fix for the reference's append-mode silver.
@@ -49,10 +55,9 @@ _STAGE = ".stage-"
 def recover_interrupted_swap(path: str) -> bool:
     """Repair a swap that crashed between its two renames: if ``path`` is
     missing but the stable backup exists, restore the backup. Returns True
-    if a recovery happened. ``swap_in``, ``fold_into``,
-    ``WatermarkStore.read`` and ``MedallionPipeline.exists`` call it
-    before they look at ``path``, so a crashed swap is never read as "no
-    table"."""
+    if a recovery happened. ``swap_in``, ``read_table`` and
+    ``WatermarkStore.read`` call it before they look at ``path``, so a
+    crashed swap is never read as "no table"."""
     old = f"{path}{_OLD}"
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
@@ -144,11 +149,10 @@ def fold_into(
     POSIX filesystem; a table on HDFS/S3 must route them through that
     filesystem's atomic-rename primitives (e.g. the Hadoop FileSystem
     API). Returns True when the fold was applied."""
-    recover_interrupted_swap(path)
+    current = read_table(spark, path)  # repairs a crashed swap before the epoch read
     done = applied_epoch(path)
     if epoch is not None and done is not None and epoch <= done:
         return False
-    current = spark.read.parquet(path) if os.path.exists(path) else None
     extra = None if epoch is None else {_EPOCH: str(epoch)}
     atomic_overwrite(step(current), path, extra_files=extra)
     return True
@@ -162,11 +166,8 @@ def idempotent_append(spark: SparkSession, df: DataFrame, path: str, keys: list[
     overwrite, which skips the read entirely.
     """
     df = df.dropDuplicates(keys)  # collapse intra-batch duplicates too
-    if os.path.exists(path):
-        existing = spark.read.parquet(path).select(*keys)
-        fresh = df.join(existing, keys, "left_anti")
-    else:
-        fresh = df
+    existing = read_table(spark, path)
+    fresh = df if existing is None else df.join(existing.select(*keys), keys, "left_anti")
     fresh.write.mode("append").parquet(path)
 
 
@@ -226,39 +227,63 @@ class StoredSchemaError(ValueError):
     """A stored table's data columns differ from a batch merged into it."""
 
 
-def _check_stored_schema(path: str, schema: StructType, part_col: str) -> None:
-    """Raise ``StoredSchemaError`` unless the table at ``path`` stores
-    exactly ``schema``'s data columns (``part_col`` aside; nullability
-    ignored). The stored schema is Spark's own JSON in ONE part file's
-    parquet footer, read on the driver — no Spark job, as schema inference
-    would launch."""
+def _stored_schema(path: str) -> tuple[str | None, StructType | None]:
+    """The first part file under ``path`` and the schema Spark stored in
+    its footer (its own JSON; partition columns are not in it), read on
+    the driver — no Spark job, as schema inference would launch.
+    Directories Spark's file index hides are skipped. ``(None, None)``
+    when there is no part file; ``(part, None)`` when its footer carries
+    no Spark schema (a file Spark did not write)."""
     import pyarrow.parquet as pq
 
-    part = next(
-        (
-            os.path.join(root, f)
-            for root, _, files in os.walk(path)
-            for f in sorted(files)
-            if f.startswith("part-") and f.endswith(".parquet")
-        ),
-        None,
-    )
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if "=" in d or not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.startswith("part-") and f.endswith(".parquet"):
+                part = os.path.join(root, f)
+                raw = (pq.read_schema(part).metadata or {}).get(
+                    b"org.apache.spark.sql.parquet.row.metadata"
+                )
+                return part, StructType.fromJson(json.loads(raw)) if raw else None
+    return None, None
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The one read of a table the engine committed at ``path``, in any
+    of the four storage shapes: None when there is no table, after
+    repairing a swap that crashed between its renames. The read takes
+    Spark's schema from a part file's footer (``_stored_schema``), so it
+    starts no schema-inference job; partition columns are discovered from
+    directory names as in any parquet read. A table whose part file
+    carries no Spark schema (or that has none, as an empty partitioned
+    write) falls back to inference."""
+    recover_interrupted_swap(path)
+    if not os.path.exists(path):
+        return None
+    _, schema = _stored_schema(path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def _check_stored_schema(path: str, schema: StructType, part_col: str) -> bool:
+    """Raise ``StoredSchemaError`` unless the table at ``path`` stores
+    exactly ``schema``'s data columns (``part_col`` aside; nullability
+    ignored). Returns False when nothing is stored (no part file), so
+    there is nothing a read could corrupt."""
+    part, stored = _stored_schema(path)
     if part is None:
-        return  # no data files: nothing stored that a read could corrupt
-    meta = pq.read_schema(part).metadata or {}
-    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
-    if raw is None:
+        return False
+    if stored is None:
         raise StoredSchemaError(f"{part}: no Spark schema in parquet footer")
 
     def cols(st: StructType) -> dict:
         return {f.name: f.dataType.simpleString() for f in st if f.name != part_col}
 
-    stored, want = cols(StructType.fromJson(json.loads(raw))), cols(schema)
-    if stored != want:
+    if cols(stored) != cols(schema):
         raise StoredSchemaError(
-            f"table at {path} stores columns {stored}, the batch has {want}; "
+            f"table at {path} stores columns {cols(stored)}, the batch has {cols(schema)}; "
             f"rebuild the table or fix the batch"
         )
+    return True
 
 
 def merge_partitions(
@@ -275,14 +300,12 @@ def merge_partitions(
     overwrite exactly the partitions that receive rows. The batch wins
     deterministically (dropDuplicates on the union would keep an arbitrary
     payload), so replays converge. The stored schema must equal
-    the batch's (else ``StoredSchemaError``): a drifted read would null-fill
-    a column and write the nulls back. Reading with the batch schema skips
-    the inference job. One REBALANCE on ``part_col`` keeps ~one writer per
-    partition."""
+    the batch's (else ``StoredSchemaError``, before anything is written):
+    a union across a drifted column would widen its type silently. One
+    REBALANCE on ``part_col`` keeps ~one writer per partition."""
     merged = batch
-    if os.path.exists(path):
-        _check_stored_schema(path, batch.schema, part_col)
-        existing = spark.read.schema(batch.schema).parquet(path).filter(touched)
+    if _check_stored_schema(path, batch.schema, part_col):
+        existing = read_table(spark, path).filter(touched)
         merged = existing.join(batch.select(*keys), keys, "left_anti").unionByName(batch)
     overwrite_partitions(merged.hint("rebalance", part_col), path, [part_col])
 
@@ -472,10 +495,10 @@ def read_version(spark: SparkSession, path: str, version: int | None = None) -> 
     """Time-travel read: ``version=None`` reads the current pointer,
     otherwise the requested retained version (Delta's ``versionAsOf``)."""
     v = _current_version(path) if version is None else version
-    vdir = version_dir(path, v)
-    if v == 0 or not os.path.isdir(vdir):
+    df = read_table(spark, version_dir(path, v))
+    if df is None:
         raise FileNotFoundError(f"version {v} not retained at {path}")
-    return spark.read.parquet(vdir)
+    return df
 
 
 def write_bucketed(

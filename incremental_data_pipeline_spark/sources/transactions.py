@@ -170,7 +170,7 @@ def read_txn_table(
     cur, state = _read_state_at(root, txn)
     if table not in state:
         raise FileNotFoundError(f"{root}: table {table!r} not in txn {cur}")
-    return spark.read.parquet(sinks.version_dir(os.path.join(root, table), state[table]))
+    return sinks.read_table(spark, sinks.version_dir(os.path.join(root, table), state[table]))
 
 
 def _read_state_at(root: str, txn: int | None) -> tuple[int, dict[str, int]]:

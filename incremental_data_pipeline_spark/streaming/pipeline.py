@@ -33,13 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from incremental_data_pipeline_spark.functions.util import scoped_conf
-from incremental_data_pipeline_spark.sources.readers import (
-    _nanos_ts_columns,
-    _normalize_ntz,
-    _scan_cache,
-    _stat_key,
-    load_table,
-)
+from incremental_data_pipeline_spark.sources.readers import _fixture_scan, _normalize_ntz
 
 # Stateful-query partition sizing (r10 optimization): every shuffle
 # partition of a stateful streaming operator IS a state store, and each
@@ -90,30 +84,22 @@ def adaptive_state_partitions(sf_dir: str, *tables: str) -> int:
 def read_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source readStream over one fixture table.
 
-    Streaming sources need an explicit schema; we take it from a batch scan
-    of the same path (self-describing parquet). The columns then go through
-    the batch reader's own timestamp rule (``readers._normalize_ntz``), so
-    the stream shows exactly the schema ``load_table`` returns.
+    Streaming sources need an explicit schema; we take the pre-conversion
+    one from ``load_table``'s own cached batch scan of the same path
+    (``readers._fixture_scan``, which also sets the nanosAsLong conf when
+    needed). The columns then go through the batch reader's timestamp
+    rule (``readers._normalize_ntz``), so the stream shows exactly the
+    schema ``load_table`` returns.
     """
-    load_table(spark, sf_dir, name)  # sets the nanosAsLong conf when needed
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # Pre-conversion schema, cached with the same session-scoped
-    # metadata cache load_table uses (schema inference is ~100 ms of
-    # driver-side footer reading per call — see readers._scan_cache).
-    cache, key = _scan_cache(spark), _stat_key(path)
-    if key is not None and ("raw_schema", *key) in cache:
-        raw_schema = cache[("raw_schema", *key)]
-    else:
-        raw_schema = spark.read.parquet(path).schema  # pre-conversion schema
-        if key is not None:
-            cache[("raw_schema", *key)] = raw_schema
+    _, raw_schema, nanos_cols = _fixture_scan(spark, path)
     # FileStreamSource forces basePath = the source path unless the path is
     # a glob; a single-file fixture then fails ("basePath must be a
     # directory"). An exact-match {name} glob sidesteps the override and
     # leaves basePath at the parent directory.
     stream_path = path if os.path.isdir(path) else f"{os.path.dirname(path)}/{{{os.path.basename(path)}}}"
     stream = spark.readStream.schema(raw_schema).parquet(stream_path)
-    return _normalize_ntz(stream, _nanos_ts_columns(path))
+    return _normalize_ntz(stream, nanos_cols)
 
 
 def _drain(

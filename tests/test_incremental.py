@@ -204,6 +204,22 @@ def test_crash_between_swap_renames_reruns_like_uninterrupted(spark, tmp_path, t
     assert run(tmp_path / "crash", True) == run(tmp_path / "clean", False)
 
 
+def test_gold_read_after_crash_between_swap_renames(spark, tmp_path):
+    """A crash between the fact swap's two renames leaves only
+    ``fact.__old__``; a star read must still see the last committed rows
+    (it raised PATH_NOT_FOUND when the read skipped the repair)."""
+    pipe = MedallionPipeline(spark, str(tmp_path))
+    dim = spark.createDataFrame([(1, "a"), (2, "b")], "k long, attr string")
+    pipe.build_gold_dim("dim", dim, ["k"], ["attr"], "sk")
+    pipe.build_gold_fact("fact", dim.select("k", F.lit(5).alias("m")),
+                         {"sk": (pipe.read("gold", "dim"), {"k": "k"})}, ["m"])
+    fact = pipe.path("gold", "fact")
+    before = sorted(map(tuple, pipe.read("gold", "fact").collect()))
+    os.rename(fact, fact + ".__old__")
+    assert sorted(map(tuple, pipe.read("gold", "fact").collect())) == before
+    assert pipe.read("gold", "missing") is None
+
+
 @pytest.mark.parametrize("partition_daily", [False, True])
 def test_batch_killed_before_watermark_advance_reruns_clean(
     spark, tmp_path, monkeypatch, partition_daily

@@ -796,3 +796,67 @@ def test_table_fold_defined_once():
                 calls = {ast.unparse(c.func) for c in ast.walk(fn) if isinstance(c, ast.Call)}
                 overwrites = any(c.split(".")[-1] == "atomic_overwrite" for c in calls)
                 assert not ("os.path.exists" in calls and overwrites), (path.name, fn.name)
+
+
+def _engine_table(spark, tmp_path, shape):
+    """Build ``shape``, one of the layouts the engine commits, and return
+    the directory a read of it scans."""
+    import datetime
+
+    path = str(tmp_path / shape)
+    rows = spark.createDataFrame(
+        [(i, f"n{i % 3}", datetime.datetime(2024, 1, 1 + i % 4, 8)) for i in range(12)],
+        "id long, name string, ts timestamp",
+    )
+    if shape == "flat_epoch":  # swap-committed fold, with an epoch
+        sinks.fold_into(spark, path, lambda current: rows, epoch=0)
+        assert sinks.applied_epoch(path) == 0
+    elif shape == "day_partitioned":
+        sinks.idempotent_overwrite_day_partitions(spark, rows, path, ["id"], "ts")
+    elif shape == "ivf_cells":
+        from incremental_data_pipeline_spark.operators import similarity as sim
+        from incremental_data_pipeline_spark.sources.readers import load_table
+        from tests.conftest import SF_DIR
+
+        emb = load_table(spark, SF_DIR, "embeddings")
+        sim.ivf_index_build(emb, sim.centroid_codebook(emb, nlist=8), path)
+    elif shape == "version_dir":
+        return sinks.version_dir(path, sinks.versioned_overwrite(rows, path))
+    elif shape == "empty_flat":
+        sinks.atomic_overwrite(rows.limit(0), path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "shape", ["flat_epoch", "day_partitioned", "ivf_cells", "version_dir", "empty_flat"]
+)
+def test_read_table_matches_inferred_read_without_a_job(spark, tmp_path, shape):
+    """``read_table`` takes the schema Spark stored in the footer, so it
+    starts no Spark job, and it reads the same schema (partition columns
+    included) and rows as ``spark.read.parquet``'s inference."""
+    path = _engine_table(spark, tmp_path, shape)
+    group = f"read_table_{shape}"
+    with job_group(spark, group):
+        df = sinks.read_table(spark, path)
+        schema = df.schema
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []
+    inferred = spark.read.parquet(path)
+    assert schema == inferred.schema
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, inferred.collect()))
+    assert sinks.read_table(spark, str(tmp_path / "missing")) is None
+
+
+def test_table_reads_defined_once():
+    """Engine-written tables are read through ``sinks.read_table`` only,
+    and only ``sources/readers.py`` scans fixtures: a bare parquet read
+    runs a schema-inference job, and the sites that checked existence
+    themselves read a swap that crashed between its renames as missing."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "incremental_data_pipeline_spark"
+    src = {p.relative_to(pkg).as_posix(): p.read_text() for p in pkg.rglob("*.py")}
+    for needle in ("read.parquet(", "read.schema("):
+        users = {name for name, s in src.items() if needle in s}
+        assert users <= {"sources/readers.py", "sources/sinks.py"}, (needle, users)
+    users = {name for name, s in src.items() if "recover_interrupted_swap(" in s}
+    assert users == {"sources/sinks.py", "sources/watermark.py"}, users

@@ -257,3 +257,24 @@ def test_stream_and_range_reads_share_the_batch_schema(spark, tmp_path):
     window = load_table_range(spark, str(tmp_path), "two_ns", "ts", t0, times[1])
     assert window.schema == batch.schema
     assert window.count() == 1
+
+
+def test_scan_cache_misses_a_same_size_swap(spark, tmp_path):
+    """A fixture file renamed over by a same-size file whose mtime was
+    restored is a new table: the scan cache must not serve the old
+    DataFrame (with the old schema) for it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incremental_data_pipeline_spark.sources.readers import load_table
+
+    path, new = str(tmp_path / "t.parquet"), str(tmp_path / "new.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"b": [1, 2, 3]}), new)
+    st = os.stat(path)
+    assert os.path.getsize(new) == st.st_size
+    os.replace(new, path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.path.getsize(path) == st.st_size
+    assert load_table(spark, str(tmp_path), "t").columns == ["b"]
