@@ -10,9 +10,12 @@ as generic DataFrame operators:
 - the ADF watermark range extract (docs/incremental_load.PNG,
   watermark_table.sql:6-9) becomes a pushed-down range filter.
 
-At 100 TB: anti/semi joins against a dimension-sized target broadcast; the
-range filter lands in PushedFilters and prunes parquet row groups, so an
-incremental batch reads only the new data's row groups, not the table.
+At 100 TB: anti/semi joins against a dimension-sized target broadcast. The
+range filter lands in PushedFilters, but Spark 4.1 skips no row groups for
+a TIMESTAMP_NTZ predicate or an INT96 column (the timestamp type Spark
+writes), so a batch still scans the source; partition pruning (the
+day-partitioned bronze) is what bounds the read. Only UTC-adjusted INT64
+timestamps prune row groups (see ``run_incremental_batch``).
 """
 
 from __future__ import annotations
@@ -46,7 +49,8 @@ def _keys_of(df: DataFrame, keys: list[str]) -> DataFrame:
 def watermark_range(df: DataFrame, ts_col: str, last_load, current_load) -> DataFrame:
     """The incremental extract window ``(last_load, current_load]``
     (reference: ADF Lookup+Copy range filter, watermark_table.sql:6-9).
-    Both bounds are plain comparisons → parquet predicate pushdown."""
+    Both bounds are plain comparisons, pushed to the parquet scan (which
+    prunes row groups only for UTC-adjusted INT64 timestamps)."""
     c: Column = F.col(ts_col)
     return df.filter((c > F.lit(last_load)) & (c <= F.lit(current_load)))
 

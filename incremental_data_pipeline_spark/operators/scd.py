@@ -213,6 +213,7 @@ def build_dim(
     surrogate_key: str,
     existing: DataFrame | None = None,
     scalable_keys: bool | None = None,
+    max_key: int | None = None,
 ) -> DataFrame:
     """Generic SCD1 dimension builder (replaces the four copy-pasted
     gold_dim_*.py notebooks).
@@ -224,6 +225,10 @@ def build_dim(
     4. existing keys keep their surrogate, attributes refreshed from source
        (SCD1 update-all semantics, merge on NATURAL key — fixes §2.9 #5);
     5. union with untouched existing rows.
+
+    ``max_key`` is ``existing``'s largest surrogate key when the caller
+    knows it (the high-water mark a dim commits with its rows); without
+    it one aggregate job computes it.
     """
     src = source.select(*natural_keys, *attrs).dropDuplicates(natural_keys)
     if existing is None:
@@ -231,7 +236,8 @@ def build_dim(
             surrogate_key, *natural_keys, *attrs
         )
 
-    max_key = existing.agg(F.max(surrogate_key)).first()[0] or 0  # A2 scalar agg
+    if max_key is None:
+        max_key = existing.agg(F.max(surrogate_key)).first()[0] or 0  # A2 scalar agg
     inserts = assign_surrogate_keys(
         new_rows(src, existing, natural_keys), surrogate_key, natural_keys, max_key, scalable_keys
     )

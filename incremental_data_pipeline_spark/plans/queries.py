@@ -3311,8 +3311,10 @@ def corpus_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep = gopher_repetition_filter(deduped).filter(F.col("keep"))
             return deduped.join(keep.select("doc_id"), "doc_id", "left_semi")
 
-        silver = pipe.build_silver("documents", curate)
-        gold = silver.groupBy("lang").agg(
+        pipe.build_silver("documents", curate)
+        # The stored table, not build_silver's result: that is the batch's
+        # change set whenever silver can append one.
+        gold = pipe.read("silver", "documents").groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size(F.split(F.col("text"), " "))).cast("long").alias("total_tokens"),
         )

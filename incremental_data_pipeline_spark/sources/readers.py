@@ -38,12 +38,9 @@ def _nanos_ts_columns(path: str) -> list[str]:
     as TimestampType — flagging them here would apply an int64 ``div``
     to a real timestamp column and break analysis. So only INT64 columns
     whose arrow type is nanosecond qualify."""
-    f = path
-    if os.path.isdir(path):
-        files = glob.glob(os.path.join(path, "*.parquet"))
-        if not files:
-            return []
-        f = files[0]
+    f = _first_data_file(path) if os.path.isdir(path) else path
+    if f is None:
+        return []
     try:
         schema = pq.read_schema(f)
         meta = pq.read_metadata(f)
@@ -87,28 +84,54 @@ def _scan_cache(spark: SparkSession) -> dict:
     return cache
 
 
+def _first_data_file(path: str) -> str | None:
+    """The name-sorted first data file under the directory ``path``,
+    skipping the hidden names Spark's file index skips; None when there
+    is none."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
 def _stat_key(path: str) -> tuple | None:
-    """Cache key for a single-file table, or None when not cacheable
-    (directories mutate in place; missing paths must raise in the
-    reader, not here). The inode and ctime catch a same-size file
-    renamed over the old one with its mtime restored."""
+    """Cache key for a table: the stat of the file, or for a directory the
+    stat of its first data file (``_first_data_file``). None when not
+    cacheable (missing paths must raise in the reader, not here). The
+    inode and ctime catch a same-size file renamed over the old one with
+    its mtime restored."""
+    f = _first_data_file(path) if os.path.isdir(path) else path
+    if f is None or not os.path.isfile(f):
+        return None
     try:
-        st = os.stat(path)
+        st = os.stat(f)
     except OSError:
         return None
-    if not os.path.isfile(path):
-        return None
-    return (os.path.abspath(path), st.st_mtime_ns, st.st_size, st.st_ino, st.st_ctime_ns)
+    return (os.path.abspath(path), os.path.abspath(f), st.st_mtime_ns, st.st_size,
+            st.st_ino, st.st_ctime_ns)
 
 
 def _fixture_scan(spark: SparkSession, path: str) -> tuple[DataFrame, StructType, list[str]]:
-    """The one scan of the fixture file ``path``, cached per session on
+    """The one scan of the fixture table ``path``, cached per session on
     its stat: the public DataFrame ``load_table`` returns, the
     pre-conversion schema a file stream over ``path`` needs, and the
-    raw-nanos columns ``_normalize_ntz`` converts."""
+    raw-nanos columns ``_normalize_ntz`` converts.
+
+    A directory gains files in place, and a DataFrame keeps the file
+    listing it was built with, so for a directory only the schema is
+    cached: each call builds a fresh scan with it, which lists the files
+    again and starts no schema-inference job. Replacing the first data
+    file resolves the schema again."""
     cache, key = _scan_cache(spark), _stat_key(path)
-    if key is not None and key in cache:
-        return cache[key]
+    hit = cache.get(key) if key is not None else None
+    if hit is not None and os.path.isdir(path):
+        _, schema, nanos_cols = hit
+        raw = _read_raw(spark, path, nanos_cols, schema)
+        return _normalize_ntz(raw, nanos_cols), schema, nanos_cols
+    if hit is not None:
+        return hit
     nanos_cols = _nanos_ts_columns(path)
     raw = _read_raw(spark, path, nanos_cols)
     scan = (_normalize_ntz(raw, nanos_cols), raw.schema, nanos_cols)
@@ -126,8 +149,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _fixture_scan(spark, os.path.join(sf_dir, f"{name}.parquet"))[0]
 
 
-def _read_raw(spark: SparkSession, path: str, nanos_cols: list[str]) -> DataFrame:
-    """``spark.read.parquet(path)`` with the ``nanos_cols`` as raw int64.
+def _read_raw(
+    spark: SparkSession, path: str, nanos_cols: list[str], schema: StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with the ``nanos_cols`` as raw int64,
+    with ``schema`` when it is known (no inference job).
 
     Sets ``nanosAsLong`` on the session, which needs it even when not
     built by ``session.get_spark`` (e.g. a bare ``SparkSession``). A
@@ -135,7 +161,7 @@ def _read_raw(spark: SparkSession, path: str, nanos_cols: list[str]) -> DataFram
     whenever the returned DataFrame runs."""
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 def _normalize_ntz(df: DataFrame, nanos_cols: list[str]) -> DataFrame:

@@ -19,13 +19,18 @@ once per storage shape:
   version, compute the next from it and swap it in, optionally committing
   an epoch with it so a replayed batch is skipped — the apply step of
   every streaming state table (the change-query apply: old version plus
-  change set gives the new version).
+  change set gives the new version). ``commit_overwrite`` is its swap:
+  the epoch, plus marks observed on the rows as they are written (a dim's
+  surrogate-key high-water mark), commit in the same rename as the rows.
+- **Epoch append** (``append_into``): a flat table's change set lands as
+  new part files, committed by one atomic replace of the table's commit
+  record — the medallion's silver and fact appends.
 
-``read_table`` is the read side of all four: the one read of a table the
-engine committed. It repairs an interrupted swap, returns None when there
-is no table, and reads with the schema Spark stored in the part files'
-footers, so no schema-inference job runs (the role Delta's log plays for
-the reference's gold tables).
+``read_table`` is the read side of all of them: the one read of a table
+the engine committed. It repairs an interrupted swap or append, returns
+None when there is no table, and reads with the schema Spark stored in
+the part files' footers, so no schema-inference job runs (the role
+Delta's log plays for the reference's gold tables).
 
 ``idempotent_append`` dedups on a key against rows already in the sink,
 so replaying a batch (at-least-once upstream) cannot duplicate the layer
@@ -91,38 +96,90 @@ def swap_in(path: str, fill: Callable[[str], None]) -> None:
 
 
 def atomic_overwrite(
-    df: DataFrame, path: str, extra_files: dict[str, str] | None = None
+    df: DataFrame,
+    path: str,
+    extra_files: dict[str, str] | Callable[[], dict[str, str]] | None = None,
 ) -> None:
     """Write ``df`` as the new content of ``path`` via ``swap_in``.
 
     ``extra_files`` maps filename -> text content written into the temp
-    dir BEFORE the swap, so they commit atomically with the data.
-    ``fold_into`` is the one caller that passes them: it commits a batch's
-    epoch in the same rename as the rows it covers. Use underscore-prefixed
+    dir BEFORE the swap, so they commit atomically with the data; a
+    callable is called for that mapping after ``df`` is written, so it
+    can hold what an ``Observation`` on ``df`` saw. ``commit_overwrite``
+    is the one caller that passes them: it commits an epoch and its marks
+    in the same rename as the rows they cover. Use underscore-prefixed
     names: Spark's file index hides them from readers, the same convention
     as ``_SUCCESS``.
     """
 
     def fill(tmp: str) -> None:
         df.write.mode("overwrite").parquet(tmp)  # fully materialized before swap
-        for name, content in (extra_files or {}).items():
+        files = extra_files() if callable(extra_files) else extra_files
+        for name, content in (files or {}).items():
             with open(os.path.join(tmp, name), "w") as f:
                 f.write(content)
 
     swap_in(path, fill)
 
 
-_EPOCH = "_applied_epoch"  # the epoch sidecar committed by fold_into
+_EPOCH = "_applied_epoch"  # the commit record: JSON {"epoch": e, mark: value, ...}
+_APPEND = "_append-"  # an epoch append's staged part files, hidden from readers
+
+
+def commit_record(path: str) -> dict:
+    """What the last epoch commit stored with the table at ``path``:
+    ``{"epoch": e}`` plus the marks ``commit_overwrite`` observed; ``{}``
+    when there is none. A swap that crashed between its renames is
+    repaired and an append interrupted after its commit point finished
+    first, so the record always describes the rows a read sees."""
+    recover_interrupted_swap(path)
+    _finish_append(path)
+    return {k: v for k, v in _read_record(path).items() if k != "pending"}
+
+
+def _read_record(path: str) -> dict:
+    try:
+        with open(os.path.join(path, _EPOCH)) as f:
+            record = json.loads(f.read())
+    except (FileNotFoundError, NotADirectoryError):
+        return {}
+    return record if isinstance(record, dict) else {"epoch": record}  # a bare int: older tables
 
 
 def applied_epoch(path: str) -> int | None:
-    """The epoch ``fold_into`` last committed with the table at ``path``;
-    None when there is no table or it was written without an epoch."""
-    try:
-        with open(os.path.join(path, _EPOCH)) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return None
+    """The epoch last committed with the table at ``path``; None when
+    there is no table or it was written without an epoch."""
+    return commit_record(path).get("epoch")
+
+
+def commit_overwrite(
+    df: DataFrame, path: str, epoch: int | None, marks: dict[str, Column] | None = None
+) -> None:
+    """``atomic_overwrite`` ``df`` and commit ``epoch`` with it, in the
+    same rename. Each of ``marks`` (name -> aggregate Column) is observed
+    over ``df`` while it is written, so it costs no extra job, and is
+    read back from ``commit_record`` — a dim's key high-water mark, which
+    the next batch reads instead of aggregating the dim. No epoch and no
+    marks drops the committed record."""
+    from pyspark.sql import Observation
+
+    from incremental_data_pipeline_spark.functions.util import observation_result
+
+    obs = Observation() if marks else None
+    if obs is not None:
+        df = df.observe(obs, *[c.alias(name) for name, c in marks.items()])
+
+    def record() -> dict[str, str]:
+        if epoch is None and obs is None:
+            return {}
+        seen = {}
+        if obs is not None:  # an empty plan may never report: aggregate instead
+            seen = observation_result(obs) or df.agg(
+                *[c.alias(name) for name, c in marks.items()]
+            ).first().asDict()
+        return {_EPOCH: json.dumps({"epoch": epoch, **seen})}
+
+    atomic_overwrite(df, path, extra_files=record)
 
 
 def fold_into(
@@ -153,9 +210,56 @@ def fold_into(
     done = applied_epoch(path)
     if epoch is not None and done is not None and epoch <= done:
         return False
-    extra = None if epoch is None else {_EPOCH: str(epoch)}
-    atomic_overwrite(step(current), path, extra_files=extra)
+    commit_overwrite(step(current), path, epoch)
     return True
+
+
+def append_into(df: DataFrame, path: str, epoch: int) -> bool:
+    """Append ``df`` to the flat table at ``path`` as new part files and
+    commit ``epoch`` with them: the change-set apply for a table whose
+    change set is rows to add. Like ``fold_into``, an ``epoch`` at or
+    below the committed one is a replay, skipped without a Spark job
+    (returns False); the other marks of the record are kept.
+
+    The rows are written to a hidden ``_append-<id>`` directory inside the
+    table. The commit point is the atomic replace of the commit record
+    that names that directory; only then are its files renamed into the
+    table. A crash before the commit point leaves a stage that the next
+    look at the table deletes; a crash after it leaves one that
+    ``commit_record`` (and so ``read_table``) finishes moving. Part-file
+    names carry Spark's per-write job id, so appends never collide.
+    Single-writer contract, as ``swap_in``."""
+    record = commit_record(path)
+    done = record.get("epoch")
+    if done is not None and epoch <= done:
+        return False
+    stage = f"{_APPEND}{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").parquet(os.path.join(path, stage))
+    staged = os.path.join(path, f".{_EPOCH}.{stage}")
+    with open(staged, "w") as f:
+        f.write(json.dumps({**record, "epoch": epoch, "pending": stage}))
+    os.replace(staged, os.path.join(path, _EPOCH))  # the commit point
+    _finish_append(path)
+    return True
+
+
+def _finish_append(path: str) -> None:
+    """Roll a committed append forward and drop uncommitted ones: move
+    the part files of the stage the commit record names into the table,
+    and delete every other ``_append-`` stage (a writer that died before
+    its commit point)."""
+    try:
+        stages = [n for n in os.listdir(path) if n.startswith(_APPEND)]
+    except (FileNotFoundError, NotADirectoryError):
+        return
+    pending = _read_record(path).get("pending") if stages else None
+    for stage in stages:
+        sdir = os.path.join(path, stage)
+        if stage == pending:
+            for name in os.listdir(sdir):
+                if name.startswith("part-"):
+                    os.replace(os.path.join(sdir, name), os.path.join(path, name))
+        shutil.rmtree(sdir, ignore_errors=True)
 
 
 def idempotent_append(spark: SparkSession, df: DataFrame, path: str, keys: list[str]) -> None:
@@ -181,7 +285,7 @@ def idempotent_overwrite_day_partitions(
     lo=None,
     hi=None,
     granularity: str = "day",
-) -> None:
+) -> int | None:
     """Replay-safe DAY-PARTITIONED bronze sink — the 100 TB shape of
     ``idempotent_append``.
 
@@ -208,6 +312,8 @@ def idempotent_overwrite_day_partitions(
     volume (aim for 100 MB–1 GB per partition), 'month' when daily slices
     would be pathologically small (tiny fixtures, low-rate sources) —
     over-partitioning trades scan pruning for per-directory overhead.
+
+    Returns how many stored rows the batch replaced (``merge_partitions``).
     """
     trunc = {"day": F.to_date(F.col(ts_col)), "month": F.trunc(F.col(ts_col), "month")}[
         granularity
@@ -220,7 +326,7 @@ def idempotent_overwrite_day_partitions(
     if hi is not None:
         touched &= F.col(day_col) <= F.lit(hi)
     batch = df.withColumn(day_col, trunc).dropDuplicates(keys)
-    merge_partitions(spark, batch, path, keys, day_col, touched)
+    return merge_partitions(spark, batch, path, keys, day_col, touched)
 
 
 class StoredSchemaError(ValueError):
@@ -250,16 +356,18 @@ def _stored_schema(path: str) -> tuple[str | None, StructType | None]:
 
 def read_table(spark: SparkSession, path: str) -> DataFrame | None:
     """The one read of a table the engine committed at ``path``, in any
-    of the four storage shapes: None when there is no table, after
-    repairing a swap that crashed between its renames. The read takes
-    Spark's schema from a part file's footer (``_stored_schema``), so it
-    starts no schema-inference job; partition columns are discovered from
+    of the storage shapes: None when there is no table, after repairing
+    a swap that crashed between its renames and finishing an append that
+    crashed after its commit point. The read takes Spark's schema from a
+    part file's footer (``_stored_schema``), so it starts no
+    schema-inference job; partition columns are discovered from
     directory names as in any parquet read. A table whose part file
     carries no Spark schema (or that has none, as an empty partitioned
     write) falls back to inference."""
     recover_interrupted_swap(path)
     if not os.path.exists(path):
         return None
+    _finish_append(path)
     _, schema = _stored_schema(path)
     return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
@@ -293,7 +401,7 @@ def merge_partitions(
     keys: list[str],
     part_col: str,
     touched: Column,
-) -> None:
+) -> int | None:
     """Merge ``batch`` into the ``part_col``-partitioned table at ``path``:
     stored rows selected by ``touched`` (partition pruning), minus those
     whose ``keys`` the batch re-delivers, plus the batch, dynamically
@@ -302,12 +410,25 @@ def merge_partitions(
     payload), so replays converge. The stored schema must equal
     the batch's (else ``StoredSchemaError``, before anything is written):
     a union across a drifted column would widen its type silently. One
-    REBALANCE on ``part_col`` keeps ~one writer per partition."""
-    merged = batch
-    if _check_stored_schema(path, batch.schema, part_col):
-        existing = read_table(spark, path).filter(touched)
-        merged = existing.join(batch.select(*keys), keys, "left_anti").unionByName(batch)
-    overwrite_partitions(merged.hint("rebalance", part_col), path, [part_col])
+    REBALANCE on ``part_col`` keeps ~one writer per partition.
+
+    Returns how many stored rows the batch replaced, counted by two
+    observations on the write (no extra job): 0 means the merge only
+    added rows. None when the counts did not arrive."""
+    from pyspark.sql import Observation
+
+    from incremental_data_pipeline_spark.functions.util import observation_result
+
+    if not _check_stored_schema(path, batch.schema, part_col):
+        overwrite_partitions(batch.hint("rebalance", part_col), path, [part_col])
+        return 0
+    stored, kept = Observation(), Observation()
+    n = F.count(F.lit(1)).alias("n")
+    existing = read_table(spark, path).filter(touched).observe(stored, n)
+    survivors = existing.join(batch.select(*keys), keys, "left_anti").observe(kept, n)
+    overwrite_partitions(survivors.unionByName(batch).hint("rebalance", part_col), path, [part_col])
+    counts = [observation_result(o) for o in (stored, kept)]
+    return None if None in counts else counts[0]["n"] - counts[1]["n"]
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:

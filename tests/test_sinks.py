@@ -798,6 +798,55 @@ def test_table_fold_defined_once():
                 assert not ("os.path.exists" in calls and overwrites), (path.name, fn.name)
 
 
+@pytest.mark.parametrize("crash", ["before_commit", "after_commit"])
+def test_append_into_commits_at_the_record_replace(spark, tmp_path, monkeypatch, crash):
+    """An epoch append is all or nothing at the atomic replace of the
+    commit record. Killed before it, the next read sees the table as it
+    was and the staged files are gone; killed after it (before any staged
+    file moved), the next read finishes the append. A replayed epoch is
+    skipped without a Spark job either way."""
+    path = str(tmp_path / "t")
+    sinks.fold_into(spark, path, lambda current: _mkdf(spark, [1, 2]), epoch=0)
+    replace, calls = os.replace, []
+
+    def dying(src, dst):
+        calls.append(dst)
+        if len(calls) == (1 if crash == "before_commit" else 2):
+            monkeypatch.setattr(os, "replace", replace)
+            raise OSError("killed")
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", dying)
+    with pytest.raises(OSError, match="killed"):
+        sinks.append_into(_mkdf(spark, [3]), path, epoch=1)
+    want, epoch = ([1, 2], 0) if crash == "before_commit" else ([1, 2, 3], 1)
+    assert sorted(r["x"] for r in sinks.read_table(spark, path).collect()) == want
+    assert sinks.applied_epoch(path) == epoch
+    assert not [n for n in os.listdir(path) if not n.startswith(("part-", "_SUCCESS"))
+                and os.path.isdir(os.path.join(path, n))]
+    assert sinks.append_into(_mkdf(spark, [3]), path, epoch=1) == (crash == "before_commit")
+    with job_group(spark, "append_replay"):
+        assert not sinks.append_into(_mkdf(spark, [3]), path, epoch=1)
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup("append_replay") == []
+    assert sorted(r["x"] for r in sinks.read_table(spark, path).collect()) == [1, 2, 3]
+
+
+def test_commit_overwrite_records_observed_marks(spark, tmp_path):
+    """``commit_overwrite`` commits its epoch and the marks observed on
+    the written rows with them; an append keeps the marks; an overwrite
+    of no rows still records them; a fold without an epoch drops them."""
+    path = str(tmp_path / "t")
+    mark = {"max_x": F.coalesce(F.max("x"), F.lit(0))}
+    sinks.commit_overwrite(_mkdf(spark, [4, 9, 2]), path, 5, mark)
+    assert sinks.commit_record(path) == {"epoch": 5, "max_x": 9}
+    sinks.append_into(_mkdf(spark, [1]), path, 6)
+    assert sinks.commit_record(path) == {"epoch": 6, "max_x": 9}
+    sinks.commit_overwrite(_mkdf(spark, [1]).filter("x > 1"), path, 7, mark)
+    assert sinks.commit_record(path) == {"epoch": 7, "max_x": 0}
+    sinks.fold_into(spark, path, lambda current: current)
+    assert sinks.commit_record(path) == {}
+
+
 def _engine_table(spark, tmp_path, shape):
     """Build ``shape``, one of the layouts the engine commits, and return
     the directory a read of it scans."""

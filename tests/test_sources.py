@@ -205,18 +205,16 @@ def test_int96_timestamps_not_misread_as_nanos(spark, tmp_path):
     """Legacy INT96 parquet timestamps surface as timestamp[ns] in arrow
     schemas but Spark reads them natively — the nanos-column probe must
     NOT flag them (it would div an actual timestamp by 1000)."""
+    from incremental_data_pipeline_spark.functions.util import scoped_conf
     from incremental_data_pipeline_spark.sources.readers import (
         _nanos_ts_columns,
         load_table,
     )
 
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
-    try:
+    with scoped_conf(spark, {"spark.sql.parquet.outputTimestampType": "INT96"}):
         df = spark.sql("SELECT 1 AS id, TIMESTAMP '2024-01-01 00:00:00' AS ts")
         out = str(tmp_path / "t96.parquet")
         df.coalesce(1).write.parquet(out)
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     assert _nanos_ts_columns(out) == []
     got = load_table(spark, str(tmp_path), "t96")
     assert got.schema["ts"].dataType.typeName() == "timestamp"
@@ -278,3 +276,40 @@ def test_scan_cache_misses_a_same_size_swap(spark, tmp_path):
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert os.path.getsize(path) == st.st_size
     assert load_table(spark, str(tmp_path), "t").columns == ["b"]
+
+
+def test_directory_scan_resolves_its_schema_once(spark, tmp_path):
+    """A directory table's schema is resolved once per session and the
+    file listing stays fresh: a file added between two ``load_table``
+    calls is read by the second call, which starts no Spark job (it ran
+    one schema-inference job per call). Replacing the first data file is
+    a new table and resolves the schema again."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incremental_data_pipeline_spark.sources.readers import load_table
+    from tests.conftest import job_group
+
+    table = tmp_path / "ev.parquet"
+    table.mkdir()
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def part(name, ids, **extra):
+        cols = {"id": ids, "ts": [t0 + datetime.timedelta(hours=i) for i in ids], **extra}
+        pq.write_table(pa.table(cols), str(table / name))
+
+    part("part-00000.parquet", [1, 2])
+    first = load_table(spark, str(tmp_path), "ev")
+    assert first.count() == 2
+    part("part-00001.parquet", [3, 4, 5])
+    with job_group(spark, "dir_rescan"):
+        second = load_table(spark, str(tmp_path), "ev")
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup("dir_rescan") == []
+    assert second.schema == first.schema
+    assert sorted(r["id"] for r in second.collect()) == [1, 2, 3, 4, 5]
+    part("part-00000.parquet", [1, 2], tag=["a", "b"])
+    third = load_table(spark, str(tmp_path), "ev")
+    assert third.columns == ["id", "ts", "tag"]
+    assert third.filter("tag = 'b'").count() == 1
