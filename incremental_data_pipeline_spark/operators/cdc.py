@@ -7,6 +7,9 @@ as generic DataFrame operators:
   (gold_dim_branch.py:79-105) becomes explicit left_anti / left_semi joins —
   same semantics, no fan-out risk from duplicate sink keys, and Catalyst
   plans them as a single broadcast/shuffled hash join with no post-filter;
+- "what changed between two keyed versions" is one full-outer join,
+  ``changes``: ``snapshot_diff``, the SCD2 merge and ``build_dim``'s SCD1
+  upsert read its flags instead of each joining for themselves;
 - the ADF watermark range extract (docs/incremental_load.PNG,
   watermark_table.sql:6-9) becomes a pushed-down range filter.
 
@@ -28,22 +31,50 @@ def new_rows(source: DataFrame, target: DataFrame, keys: list[str]) -> DataFrame
     """Rows of ``source`` whose key is absent from ``target`` (the INSERT set).
 
     Reference: the ``filter(k.isNull())`` branch after the left join,
-    gold_dim_branch.py:105 — expressed directly as an anti join.
+    gold_dim_branch.py:105 — expressed directly as an anti join. The build
+    side is projected to the keys, so it is as small (and as broadcastable)
+    as possible.
     """
-    return source.join(_keys_of(target, keys), keys, "left_anti")
+    return source.join(target.select(*keys), keys, "left_anti")
 
 
 def existing_rows(source: DataFrame, target: DataFrame, keys: list[str]) -> DataFrame:
     """Rows of ``source`` whose key already exists in ``target`` (the UPDATE
     set). Reference: the ``filter(k.isNotNull())`` branch,
     gold_dim_branch.py:92 — expressed as a semi join."""
-    return source.join(_keys_of(target, keys), keys, "left_semi")
+    return source.join(target.select(*keys), keys, "left_semi")
 
 
-def _keys_of(df: DataFrame, keys: list[str]) -> DataFrame:
-    # Project to the join keys before the anti/semi join so the build side
-    # is as small (and as broadcastable) as possible.
-    return df.select(*keys)
+def changes(old: DataFrame, new: DataFrame, keys: list[str], cols: list[str]) -> DataFrame:
+    """The keyed change set between two versions of a table: one row per
+    key of either side, from one full-outer join on ``keys``.
+
+    Columns: ``old``'s as they are (NULL for a key only ``new`` has), each
+    non-key column ``c`` of ``new`` as ``__new_c``, and three flags:
+    ``__in_old``, ``__in_new`` and ``__changed`` — a NULL-safe compare of
+    ``cols`` (False for an empty ``cols``). A NULL key matches nothing, as
+    in any equi-join. Applying the change set to the old version gives the
+    new one ("What's the Difference?", SIGMOD 2023); the callers pick the
+    legs they need from the flags.
+
+    ``new_rows`` and ``existing_rows`` stay anti/semi joins: they need one
+    side's keys only, and broadcast them without shuffling either side.
+
+    Scale shape: both sides shuffle once on the key (zero times when
+    bucketed on it); the flags are narrow projections.
+    """
+    renamed = [F.col(c).alias(f"__new_{c}") for c in new.columns if c not in keys]
+    j = old.withColumn("__in_old", F.lit(True)).join(
+        new.select(*keys, *renamed, F.lit(True).alias("__in_new")), keys, "full_outer"
+    )
+    changed = F.lit(False)
+    for c in cols:
+        changed = changed | ~F.col(c).eqNullSafe(F.col(f"__new_{c}"))
+    return j.withColumns({
+        "__in_old": F.coalesce(F.col("__in_old"), F.lit(False)),
+        "__in_new": F.coalesce(F.col("__in_new"), F.lit(False)),
+        "__changed": changed,
+    })
 
 
 def watermark_range(df: DataFrame, ts_col: str, last_load, current_load) -> DataFrame:
@@ -211,39 +242,22 @@ def snapshot_diff(
     emulation): one row per changed key with ``op`` in
     ('insert', 'update', 'delete') and the post-image values (pre-image
     NULL-padded for deletes), so a downstream consumer can replay the diff.
+    An empty ``compare_cols`` diffs the key sets: inserts and deletes only.
 
-    Scale shape: one full-outer join on the key (both snapshots shuffle
-    once — or zero times when bucketed on the key) and a narrow column
-    comparison; unchanged keys drop out before anything else sees them.
+    Scale shape: ``changes`` over the keys and compared columns (both
+    snapshots shuffle once — or zero times when bucketed on the key) and a
+    narrow column comparison; unchanged keys drop out before anything else
+    sees them.
     """
-    o = old.select(
-        *keys,
-        F.lit(True).alias("__o_present"),
-        *[F.col(c).alias(f"__o_{c}") for c in compare_cols],
-    )
-    n = new.select(
-        *keys,
-        F.lit(True).alias("__n_present"),
-        *[F.col(c).alias(f"__n_{c}") for c in compare_cols],
-    )
-    j = o.join(n, keys, "full_outer")
-    in_old = F.coalesce(F.col("__o_present"), F.lit(False))
-    in_new = F.coalesce(F.col("__n_present"), F.lit(False))
-    changed = None
-    for c in compare_cols:
-        neq = ~F.col(f"__o_{c}").eqNullSafe(F.col(f"__n_{c}"))
-        changed = neq if changed is None else (changed | neq)
+    cols = [*keys, *compare_cols]
     op = (
-        F.when(~in_old & in_new, F.lit("insert"))
-        .when(in_old & ~in_new, F.lit("delete"))
-        .when(changed, F.lit("update"))
+        F.when(~F.col("__in_old"), F.lit("insert"))
+        .when(~F.col("__in_new"), F.lit("delete"))
+        .when(F.col("__changed"), F.lit("update"))
     )
     return (
-        j.withColumn("op", op)
+        changes(old.select(*cols), new.select(*cols), keys, compare_cols)
+        .withColumn("op", op)
         .filter(F.col("op").isNotNull())
-        .select(
-            *keys,
-            "op",
-            *[F.col(f"__n_{c}").alias(c) for c in compare_cols],
-        )
+        .select(*keys, "op", *[F.col(f"__new_{c}").alias(c) for c in compare_cols])
     )

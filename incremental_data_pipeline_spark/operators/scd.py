@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from incremental_data_pipeline_spark.operators.cdc import new_rows
+from incremental_data_pipeline_spark.operators.cdc import changes
 
 # Above this many rows, surrogate-key assignment auto-selects the
 # range-partitioned prefix-sum path instead of one global window task.
@@ -164,22 +164,11 @@ def assign_surrogate_keys(
     if scalable is None:
         probe = df.limit(SCALABLE_KEY_THRESHOLD + 1).count()
         scalable = probe > SCALABLE_KEY_THRESHOLD
-    if not scalable:
-        w = Window.orderBy(*order_by)
-        return df.withColumn(key_col, (F.lit(base) + F.row_number().over(w)).cast("long"))
-
-    # Scalable path: bucket rows by driver-frozen range boundaries (so
-    # bucket order IS global order), number within buckets, then add
-    # per-bucket offsets from a tiny broadcast count map. The bucket id
-    # is data-derived, so the two consumers (window + count aggregate)
-    # agree under AQE / re-evaluation — the spark_partition_id() variant
-    # of this operator silently dropped rows when AQE coalesced the two
-    # plan instances differently (first seen at the 100x mirror:
-    # 834,610 of 1,500,000 dim rows survived).
-    n_rows = df.count()
-    boundaries = _range_boundaries(df, order_by, n_rows)
-    if not boundaries:
-        if n_rows > SCALABLE_KEY_THRESHOLD:
+    boundaries = []
+    if scalable:
+        n_rows = df.count()
+        boundaries = _range_boundaries(df, order_by, n_rows)
+        if not boundaries and n_rows > SCALABLE_KEY_THRESHOLD:
             import logging
 
             logging.getLogger(__name__).warning(
@@ -191,8 +180,18 @@ def assign_surrogate_keys(
                 n_rows,
                 order_by,
             )
+    if not boundaries:
         w = Window.orderBy(*order_by)
         return df.withColumn(key_col, (F.lit(base) + F.row_number().over(w)).cast("long"))
+
+    # Scalable path: bucket rows by driver-frozen range boundaries (so
+    # bucket order IS global order), number within buckets, then add
+    # per-bucket offsets from a tiny broadcast count map. The bucket id
+    # is data-derived, so the two consumers (window + count aggregate)
+    # agree under AQE / re-evaluation — the spark_partition_id() variant
+    # of this operator silently dropped rows when AQE coalesced the two
+    # plan instances differently (first seen at the 100x mirror:
+    # 834,610 of 1,500,000 dim rows survived).
     bucketed = df.withColumn("__bkt", _bucket_expr(df, order_by, boundaries))
     wp = Window.partitionBy("__bkt").orderBy(*order_by)
     numbered = bucketed.withColumn("__rn", F.row_number().over(wp))
@@ -219,12 +218,14 @@ def build_dim(
     gold_dim_*.py notebooks).
 
     1. project natural key + attributes, dropDuplicates on the natural key
-       (fixes SURVEY §2.9 #2);
-    2. split new vs existing natural keys (CDC anti-join, J1);
-    3. new keys get ``max(existing surrogate) + row_number`` (dense, §2.9 #3);
-    4. existing keys keep their surrogate, attributes refreshed from source
-       (SCD1 update-all semantics, merge on NATURAL key — fixes §2.9 #5);
-    5. union with untouched existing rows.
+       (fixes SURVEY §2.9 #2), once;
+    2. ``changes(existing, source)`` on the natural key (the reference's
+       left join + isNull split, J1);
+    3. a key in the source takes its attributes and keeps its stored
+       surrogate (SCD1 update-all semantics, merge on NATURAL key — fixes
+       §2.9 #5); a stored key the source lacks passes through;
+    4. a key only the source has gets ``max(existing surrogate) +
+       row_number`` (dense, §2.9 #3).
 
     ``max_key`` is ``existing``'s largest surrogate key when the caller
     knows it (the high-water mark a dim commits with its rows); without
@@ -238,20 +239,19 @@ def build_dim(
 
     if max_key is None:
         max_key = existing.agg(F.max(surrogate_key)).first()[0] or 0  # A2 scalar agg
-    inserts = assign_surrogate_keys(
-        new_rows(src, existing, natural_keys), surrogate_key, natural_keys, max_key, scalable_keys
-    )
-    # SCD1 update: refreshed attrs for keys present in both; surrogate kept.
-    updates = existing.select(surrogate_key, *natural_keys).join(
-        src, natural_keys, "inner"
-    )
-    untouched = existing.join(src.select(*natural_keys), natural_keys, "left_anti")
     cols = [surrogate_key, *natural_keys, *attrs]
-    return (
-        untouched.select(*cols)
-        .unionByName(updates.select(*cols))
-        .unionByName(inserts.select(*cols))
+    j = changes(existing, src, natural_keys, [])
+    kept = j.filter(F.col("__in_old")).select(
+        surrogate_key,
+        *natural_keys,
+        *[F.when(F.col("__in_new"), F.col(f"__new_{a}")).otherwise(F.col(a)).alias(a)
+          for a in attrs],
     )
+    fresh = j.filter(~F.col("__in_old")).select(
+        *natural_keys, *[F.col(f"__new_{a}").alias(a) for a in attrs]
+    )
+    inserts = assign_surrogate_keys(fresh, surrogate_key, natural_keys, max_key, scalable_keys)
+    return kept.unionByName(inserts.select(*cols))
 
 
 def upsert_scd1(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
@@ -320,48 +320,38 @@ def upsert_scd2_ordered(
     Semantics per key: source row (attrs, eff) vs current version:
     - no current version  -> open (attrs, valid_from=eff)
     - eff <= valid_from   -> ignore (late or replayed)
-    - attrs unchanged     -> pass through
+    - attrs unchanged     -> pass through (always, for empty ``attrs``)
     - attrs changed       -> close current at eff, open new at eff
 
-    Scale shape: one key join of the CURRENT slice against the
+    Scale shape: one ``changes`` join of the CURRENT slice against the
     (pre-reduced, one row per key) source, both key-partitioned or
     broadcast, null-safe attribute comparison, unionByName legs — no
-    row-at-a-time logic, same join geometry as the SCD1 emulation.
-    History never joins.
+    row-at-a-time logic, same join as the SCD1 dim upsert. History never
+    joins.
     """
     cur = target.filter(F.col(current_col))
     hist = target.filter(~F.col(current_col))
-    s = source.select(
-        *keys,
-        F.lit(True).alias("__s_present"),
-        F.col(eff_col).alias("__s_eff"),
-        *[F.col(a).alias(f"__s_{a}") for a in attrs],
-    )
-    j = cur.join(s, keys, "full_outer")
+    j = changes(cur, source.select(*keys, eff_col, *attrs), keys, attrs)
 
-    in_src = F.coalesce(F.col("__s_present"), F.lit(False))
-    changed = None
-    for a in attrs:
-        neq = ~F.col(a).eqNullSafe(F.col(f"__s_{a}"))
-        changed = neq if changed is None else (changed | neq)
-    is_new_key = F.col(from_col).isNull()
-    late = F.col("__s_eff") <= F.col(from_col)
-    applies = in_src & ~is_new_key & changed & ~late
+    in_old, in_src, changed = F.col("__in_old"), F.col("__in_new"), F.col("__changed")
+    eff = F.col(f"__new_{eff_col}")
+    late = eff <= F.col(from_col)
+    applies = in_src & in_old & changed & ~late
 
     out_cols = [*keys, *attrs, from_col, to_col, current_col]
-    unchanged = j.filter(~is_new_key & ~applies).select(*out_cols)
+    unchanged = j.filter(in_old & ~applies).select(*out_cols)
     closed = (
         j.filter(applies)
-        .withColumn(to_col, F.col("__s_eff"))
+        .withColumn(to_col, eff)
         .withColumn(current_col, F.lit(False))
         .select(*out_cols)
     )
     opened = (
-        j.filter(in_src & (is_new_key | (changed & ~late)))
+        j.filter(in_src & (~in_old | (changed & ~late)))
         .select(
             *keys,
-            *[F.col(f"__s_{a}").alias(a) for a in attrs],
-            F.col("__s_eff").alias(from_col),
+            *[F.col(f"__new_{a}").alias(a) for a in attrs],
+            eff.alias(from_col),
             F.lit(None).cast(target.schema[to_col].dataType).alias(to_col),
             F.lit(True).alias(current_col),
         )

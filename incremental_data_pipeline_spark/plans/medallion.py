@@ -274,7 +274,6 @@ class MedallionPipeline:
         natural_keys: list[str],
         attrs: list[str],
         surrogate_key: str,
-        scalable_keys: bool | None = False,
     ) -> DataFrame:
         """Initial-vs-incremental bootstrap (I3) + SCD1 upsert, one code path
         for every dimension (replaces 4 copy-pasted notebooks and their
@@ -284,17 +283,19 @@ class MedallionPipeline:
         takes the key offset from the high-water mark committed with the
         dim; given any other source, it upserts all of it.
 
-        ``scalable_keys=False`` here (vs the generic operators' size-probe
-        auto-default): a gold DIMENSION is small by definition — dims stay
-        dimension-sized even at 100 TB fact scale — so per-batch probe jobs
-        and range-exchange shuffles buy nothing. Callers keying something
-        that is NOT dimension-sized should pass ``None`` (auto) or
-        ``True``."""
+        Surrogate keys take the single-window plan (``scalable_keys=False``,
+        not the generic operators' size-probe auto-default): a gold
+        DIMENSION is small by definition — dims stay dimension-sized even
+        at 100 TB fact scale — so per-batch probe jobs and range-exchange
+        shuffles buy nothing. Keying something that is NOT dimension-sized
+        is ``scd.build_dim``'s job, with its ``scalable_keys``."""
         path = self.path("gold", table)
         existing = self.read("gold", table)
         handout = self._handout(source)
         if handout is None:
-            dim = build_dim(source, natural_keys, attrs, surrogate_key, existing, scalable_keys)
+            dim = build_dim(
+                source, natural_keys, attrs, surrogate_key, existing, scalable_keys=False
+            )
             atomic_overwrite(dim, path)
             return self.read("gold", table)
         record = commit_record(path)
@@ -304,8 +305,8 @@ class MedallionPipeline:
         if at is None or at != handout.v_from:
             source = self._whole(handout)
         dim = build_dim(
-            source, natural_keys, attrs, surrogate_key, existing, scalable_keys,
-            record.get("max_key"),
+            source, natural_keys, attrs, surrogate_key, existing,
+            scalable_keys=False, max_key=record.get("max_key"),
         )
         commit_overwrite(
             dim, path, handout.v_to, {"max_key": F.coalesce(F.max(surrogate_key), F.lit(0))}

@@ -16,7 +16,7 @@ Design notes (scale):
 - Sizing uses the table's own on-disk bytes, so the target holds under
   compression-ratio drift; ``repartition(n)`` is one round-robin shuffle
   producing uniformly sized output files.
-- The rewrite is ``atomic_overwrite`` (write new version to temp, swap), so
+- The rewrite is ``rewrite_in_place`` (write new version to temp, swap), so
   readers never observe a half-compacted table and a crash mid-rewrite
   leaves the original intact.
 - Partitioned tables compact WITHIN each partition (one shuffle keyed by
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.sources import sinks
-from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite, overwrite_partitions
+from incremental_data_pipeline_spark.sources.sinks import overwrite_partitions, rewrite_in_place
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -140,7 +140,9 @@ def compact_table(
 
     Data-preserving by construction (a pure rewrite — no dedup, no
     reorder semantics) and atomic via temp-write + swap (unpartitioned) /
-    dynamic partition overwrite (partitioned). Returns
+    dynamic partition overwrite (partitioned). The table's commit record
+    (epoch and marks) survives either way, so a medallion table compacted
+    between batches still takes the next batch's append. Returns
     {'files_before', 'files_after', 'bytes', 'rows'}.
     """
     before = table_stats(spark, path)
@@ -161,9 +163,9 @@ def compact_table(
             [bounds[f"__hi_{c}"] for c in zorder_cols],
         )
         clustered = df.withColumn("__z", z).repartitionByRange(n, "__z")
-        atomic_overwrite(clustered.sortWithinPartitions("__z").drop("__z"), path)
+        rewrite_in_place(clustered.sortWithinPartitions("__z").drop("__z"), path)
     elif not partition_cols:
-        atomic_overwrite(df.repartition(n), path)
+        rewrite_in_place(df.repartition(n), path)
     else:
         bytes_per_row = total_bytes / total_rows
         sizes = (

@@ -21,7 +21,9 @@ once per storage shape:
   every streaming state table (the change-query apply: old version plus
   change set gives the new version). ``commit_overwrite`` is its swap:
   the epoch, plus marks observed on the rows as they are written (a dim's
-  surrogate-key high-water mark), commit in the same rename as the rows.
+  surrogate-key high-water mark), commit in the same rename as the rows;
+  ``rewrite_in_place`` carries them over a swap of the same rows (a
+  compaction).
 - **Epoch append** (``append_into``): a flat table's change set lands as
   new part files, committed by one atomic replace of the table's commit
   record — the medallion's silver and fact appends.
@@ -180,6 +182,15 @@ def commit_overwrite(
         return {_EPOCH: json.dumps({"epoch": epoch, **seen})}
 
     atomic_overwrite(df, path, extra_files=record)
+
+
+def rewrite_in_place(df: DataFrame, path: str) -> None:
+    """``atomic_overwrite`` the table at ``path`` with ``df``, the same
+    rows laid out anew (a compaction), and keep its commit record in the
+    same rename: the epoch and marks still describe the rows, so the next
+    epoch applies on top instead of rebuilding the table."""
+    record = commit_record(path)
+    atomic_overwrite(df, path, {_EPOCH: json.dumps(record)} if record else None)
 
 
 def fold_into(

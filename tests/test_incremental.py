@@ -309,6 +309,26 @@ def test_snapshot_diff_classifies_and_handles_nulls(spark):
     assert rows[1]["op"] == "delete" and rows[1]["s"] is None
     assert rows[3]["op"] == "update" and rows[3]["v"] == 31.0
     assert rows[5]["op"] == "insert" and rows[5]["s"] == "e"
+    # a key-only diff: the inserts and deletes, no update to compare
+    keys_only = cdc.snapshot_diff(old, new, ["k"], []).collect()
+    assert sorted((r["k"], r["op"]) for r in keys_only) == [(1, "delete"), (5, "insert")]
+    assert keys_only[0].asDict().keys() == {"k", "op"}
+
+
+def test_change_join_defined_once():
+    """``cdc.changes`` is the one keyed change join: ``snapshot_diff``,
+    the SCD2 merge and ``build_dim``'s SCD1 upsert read its flags, and
+    ``scd.py`` joins no full outer and splits no anti-join of its own."""
+    import inspect
+
+    from incremental_data_pipeline_spark.operators import cdc, scd
+
+    src = inspect.getsource(scd)
+    assert '"full_outer"' not in src
+    assert "new_rows" not in src
+    assert '"full_outer"' not in inspect.getsource(cdc.snapshot_diff)
+    for fn in (cdc.snapshot_diff, scd.upsert_scd2_ordered, scd.build_dim):
+        assert "changes(" in inspect.getsource(fn), fn.__name__
 
 
 def test_reconcile_checksums_localizes_divergence(spark):
@@ -409,6 +429,13 @@ def test_scd2_idempotent_and_versions_chain(spark):
     late = spark.createDataFrame([(1, 999)], "k long, v long")
     dim_late = scd.upsert_scd2(dim2, late, ["k"], ["v"], d0)
     assert sorted(map(tuple, dim_late.collect())) == sorted(map(tuple, dim2.collect()))
+
+    # no tracked attributes: a re-delivered key keeps its open version,
+    # a new key opens one
+    keys_only = spark.createDataFrame([(1, d0, None, True)],
+                                      "k long, valid_from date, valid_to date, is_current boolean")
+    seen = scd.upsert_scd2(keys_only, spark.createDataFrame([(1,), (2,)], "k long"), ["k"], [], d1)
+    assert sorted(map(tuple, seen.collect())) == [(1, d0, None, True), (2, d1, None, True)]
 
 
 @pytest.mark.parametrize("name", ["medallion_e2e", "bucketed_join_pricing"])

@@ -313,3 +313,34 @@ def test_batch_that_replaces_a_bronze_row_rebuilds_downstream(spark, tmp_path):
         rows = pipe.read(layer, table).filter(F.col("event_id") == last["event_id"]).collect()
         assert [r["value"] for r in rows] == [-1.0], table
         assert pipe.read(layer, table).count() == history.num_rows, table
+
+
+def test_compacted_tables_take_the_next_batch_as_an_append(spark, tmp_path):
+    """``compact_table`` keeps the commit record of the table it rewrites
+    (epoch and key high-water mark), so silver, a dim and the fact
+    compacted between batches take the next batch incrementally: the
+    compacted part files of silver and the fact stay untouched."""
+    from incremental_data_pipeline_spark.sources import maintenance
+
+    history, batch = _history_and_batches(1)
+    root = str(tmp_path / "src")
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
+    _deliver(root, 0, history)
+    _run_batch(spark, pipe, root)
+    appended = [pipe.path("silver", "events"), pipe.path("gold", "fact")]
+    tables = [*appended, pipe.path("gold", "dim_user")]
+    records = [sinks.commit_record(p) for p in tables]
+    assert all(r.get("epoch") is not None for r in records), records
+
+    for path in tables:
+        maintenance.compact_table(spark, path)
+    assert [sinks.commit_record(p) for p in tables] == records
+    compacted = [_part_files(p) for p in appended]
+
+    _deliver(root, 1, batch)
+    _run_batch(spark, pipe, root)
+    for path, old in zip(appended, compacted):
+        now = _part_files(path)
+        assert {name: now.get(name) for name in old} == old, path
+        assert len(now) > len(old), path
+    assert _gold(pipe) == _expected([history, batch])

@@ -4,7 +4,7 @@ are capped small and deadlines disabled."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SMALL = {
@@ -267,6 +267,115 @@ def test_merge_partial_aggs_invariant_any_cut(spark, rows, cut):
         s, n = want.get(k, (0, 0))
         want[k] = (s + v, n + 1)
     assert got == want
+
+
+nullable_key = st.one_of(st.none(), st.integers(min_value=0, max_value=6))
+nullable_attr = st.one_of(st.none(), st.sampled_from(["x", "y"]))
+
+
+def _sorted_rows(rows):
+    return sorted(map(tuple, rows), key=repr)
+
+
+@given(
+    stored=st.lists(st.tuples(nullable_key, nullable_attr), max_size=8),
+    sks=st.randoms(use_true_random=False),
+    change=st.dictionaries(nullable_key, nullable_attr, max_size=8),
+    copies=st.integers(min_value=1, max_value=3),
+    scalable=st.booleans(),
+    headroom=st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+)
+@settings(**SMALL)
+def test_build_dim_matches_python_reference(
+    spark, monkeypatch, stored, sks, change, copies, scalable, headroom
+):
+    """build_dim's SCD1 upsert == a dict model: a stored key in the change
+    set takes the new attribute and keeps its surrogate, a stored key
+    outside it passes through, and every other key of the change set —
+    a NULL key matches nothing — gets ``max_key`` + its rank in natural
+    key order (NULLS FIRST). Duplicate change rows carry equal attrs;
+    ``max_key`` is None (aggregated) or the committed high-water mark."""
+    from incremental_data_pipeline_spark.operators import scd
+
+    monkeypatch.setattr(scd, "SCALABLE_KEY_ROWS_PER_BUCKET", 2)  # several buckets
+    stored = list({k: (k, a) for k, a in stored if k is not None}.values()) + [
+        (k, a) for k, a in stored if k is None
+    ]
+    keys = list(range(1, len(stored) + 1))
+    sks.shuffle(keys)
+    dim = [(sk, k, a) for sk, (k, a) in zip(keys, stored)]
+    source = [(k, a) for k, a in change.items()] * copies
+    top = max(keys, default=0)
+    max_key = None if headroom is None else top + headroom
+
+    existing = spark.createDataFrame(dim, "sk long, k int, a string") if dim else None
+    src = spark.createDataFrame(source, "k int, a string")
+    got = scd.build_dim(src, ["k"], ["a"], "sk", existing, scalable, max_key)
+
+    by_key = {k: (sk, a) for sk, k, a in dim if k is not None}
+    want = [(sk, k, change[k] if k in change else a) for k, (sk, a) in by_key.items()]
+    want += [row for row in dim if row[1] is None]
+    fresh = sorted((k for k in change if k is None or k not in by_key),
+                   key=lambda k: (k is not None, k or 0))
+    base = 0 if existing is None else (max_key if max_key is not None else top)
+    want += [(base + i, k, change[k]) for i, k in enumerate(fresh, 1)]
+    assert _sorted_rows(got.collect()) == _sorted_rows(want)
+
+
+scd2_key = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
+scd2_version = st.tuples(nullable_attr, st.integers(min_value=0, max_value=6))
+
+
+@given(
+    current=st.dictionaries(scd2_key, scd2_version, max_size=4),
+    history=st.lists(
+        st.tuples(scd2_key, nullable_attr, st.integers(min_value=0, max_value=3)), max_size=4
+    ),
+    batch=st.dictionaries(scd2_key, scd2_version, max_size=4),
+    tracked=st.booleans(),
+)
+@example(current={1: (None, 0)}, history=[], batch={1: (None, 1), 2: ("x", 1)}, tracked=False)
+@settings(**SMALL)
+def test_scd2_ordered_matches_python_reference(spark, current, history, batch, tracked):
+    """upsert_scd2_ordered == a per-key model: a source row at or before
+    the open version's start is late or replayed and ignored, an equal
+    attribute (any, for no tracked attributes) passes the version
+    through, a changed one closes it and opens the new one at the
+    source's time, and a key with no open version (a NULL key matches
+    nothing) opens one. History passes through, and re-applying the
+    batch's keyed rows changes nothing."""
+    from incremental_data_pipeline_spark.operators.scd import upsert_scd2_ordered
+
+    attrs = ["a"] if tracked else []
+    cut = (lambda row: row) if tracked else (lambda row: row[:1] + row[2:])
+    target = [(k, a, f, None, True) for k, (a, f) in current.items()]
+    target += [(k, a, f, f + 1, False) for k, a, f in history]
+    schema = "k int, a string, valid_from int, valid_to int, is_current boolean"
+    tdf = spark.createDataFrame(target or [(None,) * 5], schema).filter(
+        "is_current IS NOT NULL"
+    ).select("k", *attrs, "valid_from", "valid_to", "is_current")
+    sdf = spark.createDataFrame(
+        [(k, a, e) for k, (a, e) in batch.items()] or [(None, None, None)], "k int, a string, eff int"
+    ).filter("eff IS NOT NULL")
+    got = upsert_scd2_ordered(tdf, sdf, ["k"], attrs, "eff")
+
+    want = [row for row in target if not row[4]]
+    for k, (a, f) in current.items():
+        if k is None or k not in batch:
+            want.append((k, a, f, None, True))
+            continue
+        new_a, eff = batch[k]
+        if eff <= f or not tracked or new_a == a:
+            want.append((k, a, f, None, True))
+        else:
+            want += [(k, a, f, eff, False), (k, new_a, eff, None, True)]
+    want += [(k, a, e, None, True) for k, (a, e) in batch.items()
+             if k is None or k not in current]
+    rows = _sorted_rows(got.collect())
+    assert rows == _sorted_rows(map(cut, want))
+    keyed = sdf.filter("k IS NOT NULL")  # a NULL key is new every time
+    replayed = upsert_scd2_ordered(got, keyed, ["k"], attrs, "eff")
+    assert _sorted_rows(replayed.collect()) == rows
 
 
 def test_surrogate_keys_auto_selects_by_size(spark, monkeypatch):
