@@ -318,6 +318,7 @@ def upsert_scd2_ordered(
     contract as the SCD1 bridge).
 
     Semantics per key: source row (attrs, eff) vs current version:
+    - eff is NULL         -> ignore (no event time to order it by)
     - no current version  -> open (attrs, valid_from=eff)
     - eff <= valid_from   -> ignore (late or replayed)
     - attrs unchanged     -> pass through (always, for empty ``attrs``)
@@ -331,7 +332,8 @@ def upsert_scd2_ordered(
     """
     cur = target.filter(F.col(current_col))
     hist = target.filter(~F.col(current_col))
-    j = changes(cur, source.select(*keys, eff_col, *attrs), keys, attrs)
+    dated = source.filter(F.col(eff_col).isNotNull())  # an undated row is no event
+    j = changes(cur, dated.select(*keys, eff_col, *attrs), keys, attrs)
 
     in_old, in_src, changed = F.col("__in_old"), F.col("__in_new"), F.col("__changed")
     eff = F.col(f"__new_{eff_col}")

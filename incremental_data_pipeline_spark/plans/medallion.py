@@ -27,27 +27,39 @@ integer, ``_epoch``) in the same commit as its rows:
 
 Applying a change set (v_from, v_to] to a table at v_from gives the table
 at v_to — the change-query semantics of "What's the Difference?
-Incremental Processing with Change Queries in Snowflake" (SIGMOD 2023). A
-table already at v_to skips the batch, so a replay, or an empty window,
-starts no Spark job past bronze. A layer is rebuilt in full from the
-stored upstream instead, and commits v_to, when:
+Incremental Processing with Change Queries in Snowflake" (SIGMOD 2023).
+One decision, ``MedallionPipeline._decide``, reads a table's commit
+record and picks its path for the batch:
 
-1. the table is in any other state: missing, written without an epoch (a
-   batch-primed or compacted table), or left behind by a crash between
-   layers — so a re-run always converges;
-2. the change set would be wrong: the silver transform is not row-wise
-   (``_row_wise``: its analyzed plan is more than Project and Filter
-   nodes over the bronze scan, e.g. a dedup), or the batch replaced
-   stored bronze rows (a re-delivered key), which an append cannot
-   express.
+- ``skip``: the table is at v_to already, so a replay, or an empty
+  window, starts no Spark job past bronze;
+- ``apply``: the table is at v_from and the change set is exact;
+- ``rebuild``: otherwise. The layer is rebuilt in full from the stored
+  upstream and commits v_to, so a re-run always converges. The reason
+  is the first of these that holds:
 
-A dim or the fact given a source other than what this pipeline's last
-``build_silver`` returned builds from that source as before and commits
-no epoch.
+  - ``"no batch"``: no ``ingest_bronze`` batch to follow (or its
+    watermark is not an int, timestamp or date); commits no epoch;
+  - ``"not from build_silver"``: a dim or the fact was given a source
+    other than what this pipeline's last ``build_silver`` returned; it
+    builds from that source and commits no epoch;
+  - ``"no epoch"``: the table is missing or was written without an epoch
+    (a batch-primed table);
+  - ``"bronze rows replaced"``: the batch replaced stored bronze rows (a
+    re-delivered key), which an append cannot express;
+  - ``"transform not row-wise"``: the silver transform's analyzed plan is
+    more than Project and Filter nodes over the bronze scan
+    (``_row_wise``), e.g. a dedup;
+  - ``"epoch mismatch"``: the table is at another epoch, e.g. left behind
+    by a crash between layers.
 
-``build_silver`` returns the change set when it appended one and the
-whole table when it rebuilt, so a caller wiring silver → dims → fact as
-before gets the incremental path unchanged.
+``build_silver`` returns the change set when it is exact, and otherwise
+the whole table with the reason silver was not one (any of the above),
+which a dim or the fact that has an epoch records as its own; a
+caller wiring silver → dims → fact as before gets the incremental path
+unchanged. ``last_batch`` maps each table (``"layer/table"``) to its
+last ``(decision, reason)``, reason None unless it rebuilt: a
+driver-side dict, read without a Spark job.
 """
 
 from __future__ import annotations
@@ -113,35 +125,34 @@ def _row_wise(out: DataFrame, base: DataFrame) -> bool:
 
 
 @dataclass
-class _Window:
-    """What one ``ingest_bronze`` batch delivered: its bronze ``rows``, the
-    epochs it moved bronze from and to, and whether it only added rows
-    (a re-delivered key replaces a stored row)."""
-
-    rows: DataFrame
-    v_from: int
-    v_to: int
-    appended: bool
-
-
-@dataclass
-class _Handout:
-    """What ``build_silver`` returned: the change set (v_from, v_to] of
-    silver ``table``, or, with ``v_from`` None, the whole table at
-    ``v_to``."""
+class _ChangeSet:
+    """One batch's rows of a table: its change set (v_from, v_to], or, with
+    ``v_from`` None, the whole table at ``v_to`` (None without a batch).
+    ``why`` is the reason it is not an exact change set (module
+    docstring), None when it is one."""
 
     df: DataFrame
-    table: str
     v_from: int | None
-    v_to: int
+    v_to: int | None
+    why: str | None = None
+
+
+def _commit(df: DataFrame, path: str, epoch: int | None, marks: dict | None = None) -> None:
+    """Overwrite the table at ``path`` with ``df`` and commit ``epoch`` and
+    ``marks`` with it; with no epoch, commit no record."""
+    if epoch is None:
+        atomic_overwrite(df, path)
+    else:
+        commit_overwrite(df, path, epoch, marks)
 
 
 class MedallionPipeline:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
-        self._windows: dict[str, _Window] = {}  # bronze table -> its last batch
-        self._handouts: dict[str, _Handout] = {}  # silver table -> last build_silver
+        self._bronze: dict[str, _ChangeSet] = {}  # bronze table -> its last batch
+        self._silver: dict[str, _ChangeSet] = {}  # silver table -> last build_silver
+        self.last_batch: dict[str, tuple[str, str | None]] = {}
 
     # -- table registry (replaces the reference's cars_catalog.{silver,gold}) --
 
@@ -154,6 +165,35 @@ class MedallionPipeline:
         crashed between its renames reads as its last version
         (``sinks.read_table``)."""
         return read_table(self.spark, self.path(layer, table))
+
+    def _decide(self, layer: str, table: str, cs: _ChangeSet) -> tuple[str, str | None, dict]:
+        """The one skip/apply/rebuild decision (module docstring) for the
+        table given ``cs``: the decision, its reason (None unless it is
+        rebuild) and the table's commit record. Kept in ``last_batch``."""
+        record = commit_record(self.path(layer, table))
+        at = record.get("epoch")
+        if at is not None and at == cs.v_to:
+            decision, why = "skip", None
+        elif at is not None and at == cs.v_from and cs.why is None:
+            decision, why = "apply", None
+        elif cs.v_to is None:
+            decision, why = "rebuild", cs.why
+        else:
+            decision, why = "rebuild", "no epoch" if at is None else cs.why or "epoch mismatch"
+        self.last_batch[f"{layer}/{table}"] = (decision, why)
+        return decision, why, record
+
+    def _handed(self, df: DataFrame) -> tuple[str | None, _ChangeSet]:
+        """The silver table and change set of the ``build_silver`` result
+        ``df``; any other ``df`` is a whole table with no batch."""
+        for table, cs in self._silver.items():
+            if cs.df is df:
+                return table, cs
+        return None, _ChangeSet(df, None, None, "not from build_silver")
+
+    def _whole(self, silver: str | None, cs: _ChangeSet) -> DataFrame:
+        """The whole table ``cs`` came from: itself, or the stored silver."""
+        return cs.df if cs.v_from is None else self.read("silver", silver)
 
     # -- bronze: incremental CDC ingest --
 
@@ -185,7 +225,7 @@ class MedallionPipeline:
             self.spark, self.path("state", f"{table}_watermark"), initial_watermark
         )
         sink_path = self.path("bronze", table)
-        self._windows.pop(table, None)
+        self._bronze.pop(table, None)
         last = store.read()
         lo = None
         replaced = []  # stored rows the batch replaced, as the sink counted them
@@ -223,7 +263,8 @@ class MedallionPipeline:
             window = (ts > F.lit(last)) & (ts <= F.lit(new))
             if lo is not None:  # prune to the day partitions the batch touched
                 window &= (F.col(_DAY) >= F.lit(lo)) & (F.col(_DAY) <= F.lit(new.date()))
-            self._windows[table] = _Window(rows.filter(window), *epochs, replaced == [0])
+            why = None if replaced == [0] else "bronze rows replaced"
+            self._bronze[table] = _ChangeSet(rows.filter(window), *epochs, why)
         return n
 
     # -- silver: declarative transform --
@@ -237,33 +278,23 @@ class MedallionPipeline:
         table (see the module docstring for when)."""
         src = source_table or table
         path = self.path("silver", table)
-        window = self._windows.get(src)
-        if window is None:  # no batch to follow: rebuild, commit no epoch
-            atomic_overwrite(transform(self.read("bronze", src)), path)
-            self._handouts.pop(table, None)
-            return self.read("silver", table)
-        delta = transform(window.rows)
-        exact = window.appended and _row_wise(delta, window.rows)
-        at = commit_record(path).get("epoch")
-        if at != window.v_to:
-            if at == window.v_from and exact:
-                append_into(delta, path, window.v_to)
-            else:
-                commit_overwrite(transform(self.read("bronze", src)), path, window.v_to)
-                exact = False
-        self._handouts[table] = (
-            _Handout(delta, table, window.v_from, window.v_to) if exact
-            else _Handout(self.read("silver", table), table, None, window.v_to)
+        bronze = self._bronze.get(src) or _ChangeSet(
+            self.read("bronze", src), None, None, "no batch"
         )
-        return self._handouts[table].df
-
-    def _handout(self, df: DataFrame) -> _Handout | None:
-        """The ``build_silver`` result ``df`` is, if it is one."""
-        return next((h for h in self._handouts.values() if h.df is df), None)
-
-    def _whole(self, handout: _Handout) -> DataFrame:
-        """The stored silver table ``handout`` came from."""
-        return handout.df if handout.v_from is None else self.read("silver", handout.table)
+        delta = transform(bronze.df)
+        why = bronze.why or (None if _row_wise(delta, bronze.df) else "transform not row-wise")
+        cs = _ChangeSet(delta, bronze.v_from, bronze.v_to, why)
+        decision, why, _ = self._decide("silver", table, cs)
+        if decision == "apply":
+            append_into(delta, path, cs.v_to)
+        elif decision == "rebuild":
+            whole = delta if cs.v_from is None else transform(self.read("bronze", src))
+            _commit(whole, path, cs.v_to)
+        why = why or cs.why
+        if why is not None:
+            cs = _ChangeSet(self.read("silver", table), None, cs.v_to, why)
+        self._silver[table] = cs
+        return cs.df
 
     # -- gold: SCD1 dims + fact --
 
@@ -289,28 +320,16 @@ class MedallionPipeline:
         at 100 TB fact scale — so per-batch probe jobs and range-exchange
         shuffles buy nothing. Keying something that is NOT dimension-sized
         is ``scd.build_dim``'s job, with its ``scalable_keys``."""
-        path = self.path("gold", table)
-        existing = self.read("gold", table)
-        handout = self._handout(source)
-        if handout is None:
+        silver, cs = self._handed(source)
+        decision, _, record = self._decide("gold", table, cs)
+        if decision != "skip":
             dim = build_dim(
-                source, natural_keys, attrs, surrogate_key, existing, scalable_keys=False
+                cs.df if decision == "apply" else self._whole(silver, cs),
+                natural_keys, attrs, surrogate_key, self.read("gold", table),
+                scalable_keys=False, max_key=record.get("max_key"),
             )
-            atomic_overwrite(dim, path)
-            return self.read("gold", table)
-        record = commit_record(path)
-        at = record.get("epoch")
-        if at == handout.v_to:
-            return existing
-        if at is None or at != handout.v_from:
-            source = self._whole(handout)
-        dim = build_dim(
-            source, natural_keys, attrs, surrogate_key, existing,
-            scalable_keys=False, max_key=record.get("max_key"),
-        )
-        commit_overwrite(
-            dim, path, handout.v_to, {"max_key": F.coalesce(F.max(surrogate_key), F.lit(0))}
-        )
+            marks = {"max_key": F.coalesce(F.max(surrogate_key), F.lit(0))}
+            _commit(dim, self.path("gold", table), cs.v_to, marks)
         return self.read("gold", table)
 
     def build_gold_fact(
@@ -324,15 +343,10 @@ class MedallionPipeline:
         the change set's facts; given any other base it rewrites the
         table from it."""
         path = self.path("gold", table)
-        handout = self._handout(base)
-        if handout is None:
-            atomic_overwrite(build_fact(base, dims, measures), path)
-            return self.read("gold", table)
-        at = commit_record(path).get("epoch")
-        if at != handout.v_to:
-            if at is not None and at == handout.v_from:
-                append_into(build_fact(handout.df, dims, measures), path, handout.v_to)
-            else:
-                fact = build_fact(self._whole(handout), dims, measures)
-                commit_overwrite(fact, path, handout.v_to)
+        silver, cs = self._handed(base)
+        decision, _, _ = self._decide("gold", table, cs)
+        if decision == "apply":
+            append_into(build_fact(cs.df, dims, measures), path, cs.v_to)
+        elif decision == "rebuild":
+            _commit(build_fact(self._whole(silver, cs), dims, measures), path, cs.v_to)
         return self.read("gold", table)

@@ -15,7 +15,7 @@ once per storage shape:
 - **Version directory** (``version_dir``, ``versioned_overwrite``,
   ``drop_version``): immutable ``vN`` dirs, a ``.commit`` marker and a
   ``_CURRENT`` pointer — time travel and ``sources.transactions``.
-- **Table fold** (``fold_into``, ``applied_epoch``): read the current
+- **Table fold** (``fold_into``, ``commit_record``): read the current
   version, compute the next from it and swap it in, optionally committing
   an epoch with it so a replayed batch is skipped — the apply step of
   every streaming state table (the change-query apply: old version plus
@@ -148,12 +148,6 @@ def _read_record(path: str) -> dict:
     return record if isinstance(record, dict) else {"epoch": record}  # a bare int: older tables
 
 
-def applied_epoch(path: str) -> int | None:
-    """The epoch last committed with the table at ``path``; None when
-    there is no table or it was written without an epoch."""
-    return commit_record(path).get("epoch")
-
-
 def commit_overwrite(
     df: DataFrame, path: str, epoch: int | None, marks: dict[str, Column] | None = None
 ) -> None:
@@ -218,7 +212,7 @@ def fold_into(
     filesystem's atomic-rename primitives (e.g. the Hadoop FileSystem
     API). Returns True when the fold was applied."""
     current = read_table(spark, path)  # repairs a crashed swap before the epoch read
-    done = applied_epoch(path)
+    done = commit_record(path).get("epoch")
     if epoch is not None and done is not None and epoch <= done:
         return False
     commit_overwrite(step(current), path, epoch)

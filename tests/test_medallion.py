@@ -2,7 +2,8 @@
 bronze through silver, the SCD1 dims and the fact. These tests pin that
 the incremental result equals a full rebuild for any batch cut, that a
 crash between layers re-runs to the uninterrupted gold, and that a batch
-touches no stored silver or fact file."""
+touches no stored silver or fact file. Each reads the decision every
+layer took, and the reason it rebuilt, from ``pipe.last_batch``."""
 
 from __future__ import annotations
 
@@ -26,9 +27,12 @@ INITIAL = datetime.datetime(2023, 1, 1)
 HISTORY_ROWS = 400
 
 # Spark jobs one 40-row incremental batch may start, bronze included
-# (local[4], AQE on). The whole-layer rebuild it replaced started 30 for
-# the same batch.
-BATCH_JOBS = 25
+# (local[4], AQE on): bronze 5, silver 1, each dim 6, the fact 3. The
+# whole-layer rebuild it replaced started 30 for the same batch.
+BATCH_JOBS = 21
+
+# pipe.last_batch's keys: every table a batch decides on, past bronze.
+LAYERS = ["silver/events", "gold/dim_user", "gold/dim_event_type", "gold/fact"]
 
 
 def _events() -> pa.Table:
@@ -168,16 +172,23 @@ def _cut(kinds: list[str], sizes: list[int]) -> list[pa.Table]:
 def test_change_set_batches_equal_one_full_rebuild(spark, tmp_path_factory, kinds, sizes):
     """Silver, both dims and the fact after the batches equal one full
     rebuild over all delivered rows, for any cut into 1–4 batches: empty
-    ones, ones with only known dim keys and ones with a new event type."""
+    ones, ones with only known dim keys and ones with a new event type.
+    The first batch builds every layer ("no epoch"); each later one
+    applies its rows, or skips an empty window."""
     root = str(tmp_path_factory.mktemp("src"))
     pipe = MedallionPipeline(spark, str(tmp_path_factory.mktemp("lake")))
     batches = _cut(kinds, sizes)
     delivered = 0
     for b, rows in enumerate(batches):
         _deliver(root, b, rows)
+        if delivered:
+            want = ("apply", None) if rows.num_rows else ("skip", None)
+        else:
+            want = ("rebuild", "no epoch")
         delivered += rows.num_rows
         if delivered:  # before the first row there is no source to read
             _run_batch(spark, pipe, root)
+            assert pipe.last_batch == dict.fromkeys(LAYERS, want), b
     if delivered:
         assert _gold(pipe) == _expected(batches)
 
@@ -193,8 +204,9 @@ def test_killed_between_layers_reruns_to_the_uninterrupted_gold(
 ):
     """Kill points after silver's commit and before the dims
     (``build_dim``), and after the dims and before the fact
-    (``build_fact``). Re-running the batch gives the uninterrupted gold,
-    and the next batch still applies on top of it."""
+    (``build_fact``). Re-running the batch rebuilds the layers left
+    behind ("epoch mismatch") and skips the rest, gives the
+    uninterrupted gold, and the next batch applies on top of it."""
     batches = _history_and_batches(2)
     real = getattr(medallion_mod, kill)
 
@@ -212,11 +224,18 @@ def test_killed_between_layers_reruns_to_the_uninterrupted_gold(
                 monkeypatch.setattr(medallion_mod, kill, killed)
                 with pytest.raises(RuntimeError, match="killed"):
                     _run_batch(spark, pipe, root)
-                behind = "dim_user" if kill == "build_dim" else "fact"
-                assert sinks.applied_epoch(pipe.path("silver", "events")) != (
-                    sinks.applied_epoch(pipe.path("gold", behind))
-                )
+                behind = LAYERS[1:] if kill == "build_dim" else LAYERS[3:]
+                epochs = {t: sinks.commit_record(pipe.path(*t.split("/"))).get("epoch")
+                          for t in LAYERS}
+                assert [t for t in LAYERS if epochs[t] != epochs["silver/events"]] == behind
             _run_batch(spark, pipe, root)
+            if crash and b == 1:
+                assert pipe.last_batch == {
+                    t: ("rebuild", "epoch mismatch") if t in behind else ("skip", None)
+                    for t in LAYERS
+                }
+            if b == 2:
+                assert pipe.last_batch == dict.fromkeys(LAYERS, ("apply", None))
             snapshots.append(_gold(pipe))
         return snapshots
 
@@ -237,7 +256,8 @@ def test_incremental_batch_touches_no_stored_file(spark, tmp_path):
     part file silver and the fact had before it is untouched (same inode
     and mtime), silver and the fact gained the batch's rows, and the
     batch started at most BATCH_JOBS Spark jobs. An empty window then
-    starts no job past bronze."""
+    skips every layer and starts no job past bronze; reading
+    ``last_batch`` starts none either."""
     history, batch = _history_and_batches(1)
     root = str(tmp_path / "src")
     pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
@@ -257,11 +277,13 @@ def test_incremental_batch_touches_no_stored_file(spark, tmp_path):
         assert len(now) > len(old), path
     assert _gold(pipe) == _expected([history, batch])
     assert len(jobs) <= BATCH_JOBS, len(jobs)
+    assert pipe.last_batch == dict.fromkeys(LAYERS, ("apply", None))
 
     pipe.ingest_bronze(load_table(spark, root, "events"), "events", "ts", ["event_id"], INITIAL,
                        partition_daily=True)
     with job_group(spark, "empty_window"):
         _run_gold(pipe)
+        assert pipe.last_batch == dict.fromkeys(LAYERS, ("skip", None))
         assert spark.sparkContext.statusTracker().getJobIdsForGroup("empty_window") == []
 
 
@@ -297,8 +319,8 @@ def _silver_like(df):
 def test_batch_that_replaces_a_bronze_row_rebuilds_downstream(spark, tmp_path):
     """A re-delivered key with a newer timestamp on the same day replaces
     its stored bronze row. An append cannot remove the old version from
-    silver and the fact, so the batch rebuilds them: each event stays
-    once, with the new payload."""
+    silver and the fact, so the batch rebuilds them, and the dims, with
+    that reason: each event stays once, with the new payload."""
     history = _history_and_batches(0)[0]
     last = history.slice(history.num_rows - 1, 1).to_pylist()[0]
     assert (last["ts"] + datetime.timedelta(seconds=1)).date() == last["ts"].date()
@@ -309,6 +331,7 @@ def test_batch_that_replaces_a_bronze_row_rebuilds_downstream(spark, tmp_path):
     _run_batch(spark, pipe, root)
     _deliver(root, 1, pa.Table.from_pylist([update], schema=history.schema))
     _run_batch(spark, pipe, root)
+    assert pipe.last_batch == dict.fromkeys(LAYERS, ("rebuild", "bronze rows replaced"))
     for layer, table in [("silver", "events"), ("gold", "fact")]:
         rows = pipe.read(layer, table).filter(F.col("event_id") == last["event_id"]).collect()
         assert [r["value"] for r in rows] == [-1.0], table
@@ -339,8 +362,68 @@ def test_compacted_tables_take_the_next_batch_as_an_append(spark, tmp_path):
 
     _deliver(root, 1, batch)
     _run_batch(spark, pipe, root)
+    assert pipe.last_batch == dict.fromkeys(LAYERS, ("apply", None))
     for path, old in zip(appended, compacted):
         now = _part_files(path)
         assert {name: now.get(name) for name in old} == old, path
         assert len(now) > len(old), path
     assert _gold(pipe) == _expected([history, batch])
+
+
+def test_sources_that_are_no_change_set_rebuild_with_their_reason(spark, tmp_path):
+    """The rebuilds the batch itself cannot avoid, each with its reason: a
+    silver transform that is not row-wise (a dedup) rebuilds silver, and
+    a dim given a DataFrame derived from ``build_silver``'s result (not
+    the change set the pipeline handed out) builds from that source and
+    commits no epoch; silver with no bronze batch to follow rebuilds too,
+    without an epoch."""
+    history, batch = _history_and_batches(1)
+    root = str(tmp_path / "src")
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
+
+    def first_events(df):
+        return df.dropDuplicates(["user_id"])
+
+    _deliver(root, 0, history)
+    _run_batch(spark, pipe, root)
+    pipe.build_silver("first_events", first_events, "events")
+    _deliver(root, 1, batch)
+    _run_batch(spark, pipe, root)
+    pipe.build_silver("first_events", first_events, "events")
+    assert pipe.last_batch["silver/first_events"] == ("rebuild", "transform not row-wise")
+    users = {r["user_id"] for t in (history, batch) for r in t.to_pylist()}
+    assert pipe.read("silver", "first_events").count() == len(users)
+
+    silver = pipe.build_silver("events", _silver)
+    assert pipe.last_batch["silver/events"] == ("skip", None)
+    dim = pipe.build_gold_dim(
+        "dim_big_spender", silver.filter(F.col("value") > 50), ["user_id"], ["tier"], "key"
+    )
+    assert pipe.last_batch["gold/dim_big_spender"] == ("rebuild", "not from build_silver")
+    assert sinks.commit_record(pipe.path("gold", "dim_big_spender")) == {}
+    spenders = {r["user_id"] for r in batch.to_pylist() if r["value"] > 50}
+    assert sorted(r["user_id"] for r in dim.collect()) == sorted(spenders)
+
+    restarted = MedallionPipeline(spark, pipe.base)
+    restarted.build_silver("events", _silver)
+    assert restarted.last_batch == {"silver/events": ("rebuild", "no batch")}
+    assert sinks.commit_record(pipe.path("silver", "events")) == {}
+
+
+def test_medallion_decision_defined_once():
+    """The skip/apply/rebuild decision lives in ``MedallionPipeline._decide``:
+    it is the one reader of a table's commit record in
+    ``plans/medallion.py``, one change-set type carries a batch from layer
+    to layer, and silver, the dims and the fact each switch on its
+    result. Three hand-written copies of it once chose their paths
+    apart, and none said why it rebuilt."""
+    import inspect
+
+    src = inspect.getsource(medallion_mod)
+    assert src.count("commit_record(") == 1
+    assert src.count('.get("epoch")') == 1
+    assert "commit_record(" in inspect.getsource(MedallionPipeline._decide)
+    assert "_Window" not in src and "_Handout" not in src
+    for fn in (MedallionPipeline.build_silver, MedallionPipeline.build_gold_dim,
+               MedallionPipeline.build_gold_fact):
+        assert "self._decide(" in inspect.getsource(fn), fn.__name__

@@ -323,7 +323,8 @@ def test_build_dim_matches_python_reference(
 
 
 scd2_key = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
-scd2_version = st.tuples(nullable_attr, st.integers(min_value=0, max_value=6))
+scd2_time = st.integers(min_value=0, max_value=6)
+scd2_version = st.tuples(nullable_attr, scd2_time)
 
 
 @given(
@@ -331,19 +332,22 @@ scd2_version = st.tuples(nullable_attr, st.integers(min_value=0, max_value=6))
     history=st.lists(
         st.tuples(scd2_key, nullable_attr, st.integers(min_value=0, max_value=3)), max_size=4
     ),
-    batch=st.dictionaries(scd2_key, scd2_version, max_size=4),
+    batch=st.dictionaries(
+        scd2_key, st.tuples(nullable_attr, st.one_of(st.none(), scd2_time)), max_size=4
+    ),
     tracked=st.booleans(),
 )
 @example(current={1: (None, 0)}, history=[], batch={1: (None, 1), 2: ("x", 1)}, tracked=False)
+@example(current={1: ("a", 1), 2: ("b", 1)}, history=[], batch={1: ("z", None)}, tracked=True)
 @settings(**SMALL)
 def test_scd2_ordered_matches_python_reference(spark, current, history, batch, tracked):
-    """upsert_scd2_ordered == a per-key model: a source row at or before
-    the open version's start is late or replayed and ignored, an equal
-    attribute (any, for no tracked attributes) passes the version
-    through, a changed one closes it and opens the new one at the
-    source's time, and a key with no open version (a NULL key matches
-    nothing) opens one. History passes through, and re-applying the
-    batch's keyed rows changes nothing."""
+    """upsert_scd2_ordered == a per-key model: a source row with no
+    effective time is ignored, one at or before the open version's start
+    is late or replayed and ignored, an equal attribute (any, for no
+    tracked attributes) passes the version through, a changed one closes
+    it and opens the new one at the source's time, and a key with no
+    open version (a NULL key matches nothing) opens one. History passes
+    through, and re-applying the batch's keyed rows changes nothing."""
     from incremental_data_pipeline_spark.operators.scd import upsert_scd2_ordered
 
     attrs = ["a"] if tracked else []
@@ -355,10 +359,12 @@ def test_scd2_ordered_matches_python_reference(spark, current, history, batch, t
         "is_current IS NOT NULL"
     ).select("k", *attrs, "valid_from", "valid_to", "is_current")
     sdf = spark.createDataFrame(
-        [(k, a, e) for k, (a, e) in batch.items()] or [(None, None, None)], "k int, a string, eff int"
-    ).filter("eff IS NOT NULL")
+        [(k, a, e, True) for k, (a, e) in batch.items()] or [(None,) * 4],
+        "k int, a string, eff int, real boolean",
+    ).filter("real IS NOT NULL").drop("real")
     got = upsert_scd2_ordered(tdf, sdf, ["k"], attrs, "eff")
 
+    batch = {k: v for k, v in batch.items() if v[1] is not None}  # undated: no event
     want = [row for row in target if not row[4]]
     for k, (a, f) in current.items():
         if k is None or k not in batch:

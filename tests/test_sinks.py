@@ -65,7 +65,7 @@ def test_fold_into_skips_replayed_epochs(spark, tmp_path, replayed):
         assert spark.sparkContext.statusTracker().getJobIdsForGroup("fold_replay") == []
     assert seen == [None, [1]]
     assert sorted(r["x"] for r in spark.read.parquet(path).collect()) == [1, 2]
-    assert sinks.applied_epoch(path) == 1
+    assert sinks.commit_record(path).get("epoch") == 1
 
 
 @pytest.mark.parametrize("crashed", [False, True])
@@ -84,7 +84,7 @@ def test_fold_into_extends_the_stored_table(spark, tmp_path, crashed):
     assert sinks.fold_into(spark, path, lambda d: build_dim(batch, ["x"], [], "k", d), 0)
     rows = spark.read.parquet(path).select("k", "x").collect()
     assert sorted(map(tuple, rows)) == [(1, 1), (2, 2), (3, 3)]
-    assert sinks.applied_epoch(path) == 0
+    assert sinks.commit_record(path).get("epoch") == 0
     assert sorted(os.listdir(tmp_path)) == ["dim"]
 
 
@@ -821,7 +821,7 @@ def test_append_into_commits_at_the_record_replace(spark, tmp_path, monkeypatch,
         sinks.append_into(_mkdf(spark, [3]), path, epoch=1)
     want, epoch = ([1, 2], 0) if crash == "before_commit" else ([1, 2, 3], 1)
     assert sorted(r["x"] for r in sinks.read_table(spark, path).collect()) == want
-    assert sinks.applied_epoch(path) == epoch
+    assert sinks.commit_record(path).get("epoch") == epoch
     assert not [n for n in os.listdir(path) if not n.startswith(("part-", "_SUCCESS"))
                 and os.path.isdir(os.path.join(path, n))]
     assert sinks.append_into(_mkdf(spark, [3]), path, epoch=1) == (crash == "before_commit")
@@ -859,7 +859,7 @@ def _engine_table(spark, tmp_path, shape):
     )
     if shape == "flat_epoch":  # swap-committed fold, with an epoch
         sinks.fold_into(spark, path, lambda current: rows, epoch=0)
-        assert sinks.applied_epoch(path) == 0
+        assert sinks.commit_record(path).get("epoch") == 0
     elif shape == "day_partitioned":
         sinks.idempotent_overwrite_day_partitions(spark, rows, path, ["id"], "ts")
     elif shape == "ivf_cells":

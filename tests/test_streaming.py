@@ -1027,7 +1027,7 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
     hash-match an uninterrupted run of the same source."""
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import applied_epoch, fold_into
+    from incremental_data_pipeline_spark.sources.sinks import commit_record, fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_kill_restart_")
@@ -1086,11 +1086,11 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
         assert not survived, "the kill never fired"
         # epoch 2's data committed, its offsets did not: the table
         # already records epoch 2
-        assert applied_epoch(gold_a) == 2
+        assert commit_record(gold_a).get("epoch") == 2
         # restart on the SAME checkpoint + store: epoch 2 is re-delivered
         # and must be skipped, epochs 3+ applied once
         assert run(gold_a, ckpt_a)
-        assert applied_epoch(gold_a) == 3  # all four chunks applied
+        assert commit_record(gold_a).get("epoch") == 3  # all four chunks applied
 
         gold_b = os.path.join(base, "gold_clean")
         assert run(gold_b, os.path.join(base, "ckpt_clean"))
