@@ -77,7 +77,6 @@ from incremental_data_pipeline_spark.operators.scd import build_dim, build_fact
 from incremental_data_pipeline_spark.sources.sinks import (
     append_into,
     atomic_overwrite,
-    commit_overwrite,
     commit_record,
     idempotent_append,
     idempotent_overwrite_day_partitions,
@@ -136,14 +135,11 @@ class _ChangeSet:
     v_to: int | None
     why: str | None = None
 
-
-def _commit(df: DataFrame, path: str, epoch: int | None, marks: dict | None = None) -> None:
-    """Overwrite the table at ``path`` with ``df`` and commit ``epoch`` and
-    ``marks`` with it; with no epoch, commit no record."""
-    if epoch is None:
-        atomic_overwrite(df, path)
-    else:
-        commit_overwrite(df, path, epoch, marks)
+    @property
+    def record(self) -> dict | None:
+        """The commit record of a table rebuilt at ``v_to``: none without
+        a batch."""
+        return None if self.v_to is None else {"epoch": self.v_to}
 
 
 class MedallionPipeline:
@@ -289,7 +285,7 @@ class MedallionPipeline:
             append_into(delta, path, cs.v_to)
         elif decision == "rebuild":
             whole = delta if cs.v_from is None else transform(self.read("bronze", src))
-            _commit(whole, path, cs.v_to)
+            atomic_overwrite(whole, path, cs.record)
         why = why or cs.why
         if why is not None:
             cs = _ChangeSet(self.read("silver", table), None, cs.v_to, why)
@@ -329,7 +325,7 @@ class MedallionPipeline:
                 scalable_keys=False, max_key=record.get("max_key"),
             )
             marks = {"max_key": F.coalesce(F.max(surrogate_key), F.lit(0))}
-            _commit(dim, self.path("gold", table), cs.v_to, marks)
+            atomic_overwrite(dim, self.path("gold", table), cs.record, marks)
         return self.read("gold", table)
 
     def build_gold_fact(
@@ -348,5 +344,5 @@ class MedallionPipeline:
         if decision == "apply":
             append_into(build_fact(cs.df, dims, measures), path, cs.v_to)
         elif decision == "rebuild":
-            _commit(build_fact(self._whole(silver, cs), dims, measures), path, cs.v_to)
+            atomic_overwrite(build_fact(self._whole(silver, cs), dims, measures), path, cs.record)
         return self.read("gold", table)

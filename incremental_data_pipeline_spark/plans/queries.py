@@ -31,7 +31,7 @@ from incremental_data_pipeline_spark.functions.util import (
 )
 from incremental_data_pipeline_spark.operators import cdc, relational, scd
 from incremental_data_pipeline_spark.sources.readers import load_table
-from incremental_data_pipeline_spark.sources.sinks import read_table
+from incremental_data_pipeline_spark.sources.sinks import append_into, read_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1678,19 +1678,14 @@ def stream_scd1_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from incremental_data_pipeline_spark.operators.scd import build_dim
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_scd1_")
-    dim_path = os.path.join(base, "dim_user")
-
-    def apply_batch(batch: DataFrame, _epoch: int) -> None:
-        fold_into(
-            spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "dim_user_key", d)
-        )
-
-    stream = _stream.read_stream(spark, sf_dir, "events").select("user_id", "ts")
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    dim = read_table(spark, dim_path)
+    dim = _stream.fold_stream(
+        _stream.read_stream(spark, sf_dir, "events").select("user_id", "ts"),
+        os.path.join(base, "dim_user"),
+        lambda batch, d: build_dim(batch, ["user_id"], [], "dim_user_key", d),
+        os.path.join(base, "ckpt"),
+    )
     return dim.select(
         F.row_number().over(Window.orderBy("user_id")).alias("dim_user_key"),
         "user_id",
@@ -1801,16 +1796,14 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimately depends on micro-batch boundaries."""
 
     from incremental_data_pipeline_spark.operators.scd import upsert_scd2_ordered
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_scd2_")
-    dim_path = os.path.join(base, "dim_user_hist")
     empty = (
         "user_id long, last_event_type string, "
         "valid_from timestamp, valid_to timestamp, is_current boolean"
     )
 
-    def apply_batch(batch: DataFrame, _epoch: int) -> None:
+    def step(batch: DataFrame, dim: DataFrame | None) -> DataFrame:
         src = (
             batch.groupBy("user_id")
             .agg(F.max(F.struct(F.col("ts"), F.col("event_type"))).alias("m"))
@@ -1820,27 +1813,21 @@ def stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("m.event_type").alias("last_event_type"),
             )
         )
-        fold_into(
-            spark,
-            dim_path,
-            lambda dim: upsert_scd2_ordered(
-                spark.createDataFrame([], empty) if dim is None else dim,
-                src,
-                ["user_id"],
-                ["last_event_type"],
-                "eff_ts",
-            ),
+        return upsert_scd2_ordered(
+            spark.createDataFrame([], empty) if dim is None else dim,
+            src,
+            ["user_id"],
+            ["last_event_type"],
+            "eff_ts",
         )
 
     stream = _stream.read_stream(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    return (
-        read_table(spark, dim_path)
-        .filter(F.col("is_current"))
-        .select("user_id", "last_event_type")
+    dim = _stream.fold_stream(
+        stream, os.path.join(base, "dim_user_hist"), step, os.path.join(base, "ckpt")
     )
+    return dim.filter(F.col("is_current")).select("user_id", "last_event_type")
 
 
 @query(
@@ -4612,7 +4599,7 @@ def hybrid_backfill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     no epoch, so epoch 0 applies."""
     import datetime
 
-    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite, fold_into
+    from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite
 
     w = datetime.datetime(2024, 1, 20)
     keys = ["user_id", "event_type"]
@@ -4635,18 +4622,18 @@ def hybrid_backfill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic_overwrite(backfill, gold_path)
 
     # the stream owns everything after the watermark
-    def apply_batch(batch: DataFrame, epoch: int) -> None:
-        fold_into(
-            spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
-        )
-
     stream = (
         _stream.read_stream(spark, sf_dir, "events")
         .filter(F.col("ts") > F.lit(w))
         .select("user_id", "event_type", "value", "ts")
     )
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    return read_table(spark, gold_path).select(
+    gold = _stream.fold_stream(
+        stream,
+        gold_path,
+        lambda batch, g: cdc.merge_partial_aggs(g, batch, keys, sums),
+        os.path.join(base, "ckpt"),
+    )
+    return gold.select(
         "user_id",
         "event_type",
         F.col("sum_cents").cast("bigint").alias("sum_cents"),
@@ -4707,10 +4694,7 @@ def stream_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     making the composed system exactly-once with no window between data
     commit and epoch commit."""
 
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
-
     base = scratch_dir("stream_gold_")
-    gold_path = os.path.join(base, "gold_user_type")
     keys = ["user_id", "event_type"]
     sums = {
         "sum_cents": F.sum(F.round(F.col("value") * 100).cast("bigint")).cast(
@@ -4719,16 +4703,15 @@ def stream_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events": F.count(F.lit(1)).cast("bigint"),
     }
 
-    def apply_batch(batch: DataFrame, epoch: int) -> None:
-        fold_into(
-            spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
-        )
-
-    stream = _stream.read_stream(spark, sf_dir, "events").select(
-        "user_id", "event_type", "value", "ts"
+    gold = _stream.fold_stream(
+        _stream.read_stream(spark, sf_dir, "events").select(
+            "user_id", "event_type", "value", "ts"
+        ),
+        os.path.join(base, "gold_user_type"),
+        lambda batch, g: cdc.merge_partial_aggs(g, batch, keys, sums),
+        os.path.join(base, "ckpt"),
     )
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    return read_table(spark, gold_path).select(
+    return gold.select(
         "user_id",
         "event_type",
         F.col("sum_cents").cast("bigint").alias("sum_cents"),
@@ -7898,10 +7881,7 @@ def stream_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-batch signed partials collapse map-side; the gold
     table shuffles only its |keys| rows per epoch."""
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
-
     base = scratch_dir("stream_retract_")
-    gold_path = os.path.join(base, "gold_retract")
     keys = ["event_type"]
     sign = F.when(F.col("event_id") % 11 == 0, F.lit(-1)).otherwise(F.lit(1))
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -7910,16 +7890,13 @@ def stream_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_cents": F.sum(sign * cents).cast("bigint"),
     }
 
-    def apply_batch(batch: DataFrame, epoch: int) -> None:
-        fold_into(
-            spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
-        )
-
-    stream = _stream.read_stream(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
+    gold = _stream.fold_stream(
+        _stream.read_stream(spark, sf_dir, "events").select("event_id", "event_type", "value"),
+        os.path.join(base, "gold_retract"),
+        lambda batch, g: cdc.merge_partial_aggs(g, batch, keys, sums),
+        os.path.join(base, "ckpt"),
     )
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-    return read_table(spark, gold_path).select(
+    return gold.select(
         "event_type",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("sum_cents").cast("bigint").alias("sum_cents"),
@@ -8885,7 +8862,6 @@ def stream_cdc_tombstone_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per batch, one key-window over the batch plus a
     latest-wins merge against the store's |keys| rows."""
     base = scratch_dir("stream_tomb_")
-    store = os.path.join(base, "dim_store")
     op = (
         F.when(F.col("event_type") == "error", "D")
         .when(F.col("event_type") == "signup", "I")
@@ -8902,9 +8878,7 @@ def stream_cdc_tombstone_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn")
         )
 
-    def apply_batch(batch: DataFrame, _epoch: int) -> None:
-        from incremental_data_pipeline_spark.sources.sinks import fold_into
-
+    def step(batch: DataFrame, d: DataFrame | None) -> DataFrame:
         b = latest(
             batch.select(
                 "user_id",
@@ -8914,15 +8888,16 @@ def stream_cdc_tombstone_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("value") * 100).cast("bigint").alias("cents"),
             )
         )
-        fold_into(spark, store, lambda d: b if d is None else latest(d.unionByName(b)))
+        return b if d is None else latest(d.unionByName(b))
 
     stream = _stream.read_stream(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
+    store = _stream.fold_stream(
+        stream, os.path.join(base, "dim_store"), step, os.path.join(base, "ckpt")
+    )
     return (
-        read_table(spark, store)
-        .filter(F.col("op") != "D")
+        store.filter(F.col("op") != "D")
         .select(
             "user_id",
             F.col("op").alias("last_op"),
@@ -11296,9 +11271,11 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     not) then join the store. First-arrival-wins; with id-ordered arrival
     (the file-stream contract, as in `stream_cusum_alarms`) the accepted
     set equals the declarative rule the oracle states: a document
-    survives iff NO lower-id document shares an LSH bucket. Side effects
-    run through the exactly-once epoch ledger, so a replayed batch
-    cannot double-append.
+    survives iff NO lower-id document shares an LSH bucket. The accepted
+    ids and then the signatures land as epoch appends
+    (``sinks.append_into``), each committing the micro-batch's epoch with
+    its rows, so a replayed batch cannot double-append either table, even
+    one that died between the two.
 
     Scale shape: per batch, one signature pass over the BATCH plus a
     bucket equi-join against the store — cost scales with the increment,
@@ -11308,7 +11285,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = os.path.join(base, "sig_store")
     out = os.path.join(base, "accepted")
 
-    def apply_batch(batch: DataFrame, _epoch: int) -> None:
+    def apply_batch(batch: DataFrame, epoch: int) -> None:
         bands = _dedup.band_signatures(batch, "doc_id", "text", 12, 3, 3)
         bands = bands.localCheckpoint(eager=True)
         a = bands.alias("a")
@@ -11334,18 +11311,15 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             dropped = in_batch
         survivors = batch.select("doc_id").join(dropped, "doc_id", "left_anti")
-        survivors.write.mode("append").parquet(out)
-        bands.select("band", "band_sig").write.mode("append").parquet(store)
+        # the ids first: a batch that died between the two appends is
+        # replayed against the store without its own signatures
+        append_into(survivors, out, epoch)
+        append_into(bands.select("band", "band_sig"), store, epoch)
 
     stream = _stream.read_stream(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    _stream.foreach_batch_exactly_once(
-        stream,
-        apply_batch,
-        os.path.join(base, "ckpt"),
-        os.path.join(base, "ledger"),
-    )
+    _stream.foreach_batch(stream, apply_batch, os.path.join(base, "ckpt"))
     return read_table(spark, out).select("doc_id")
 
 
@@ -13340,11 +13314,9 @@ def stream_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanned — the always-on analytics-store pattern for streaming
     percentile dashboards."""
     from incremental_data_pipeline_spark.operators import sketches as _sk
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_ranksk_")
     src_dir = os.path.join(base, "events_split")
-    store = os.path.join(base, "counters")
 
     ev = load_table(spark, sf_dir, "events")
     # 4-way hash split so the file stream genuinely produces multiple
@@ -13360,20 +13332,17 @@ def stream_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v")
         )
 
-    def apply_batch(batch: DataFrame, epoch: int) -> None:
-        def step(counters: DataFrame | None) -> DataFrame:
-            bc = _sk.dyadic_cms_counters(
-                clamped(batch), "v", _RANK_LEVELS, _RANK_WIDTH, _RANK_DEPTH
-            )
-            if counters is None:
-                return bc
-            return (
-                counters.unionByName(bc)
-                .groupBy("d", "cell")
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-
-        fold_into(spark, store, step, epoch)
+    def step(batch: DataFrame, counters: DataFrame | None) -> DataFrame:
+        bc = _sk.dyadic_cms_counters(
+            clamped(batch), "v", _RANK_LEVELS, _RANK_WIDTH, _RANK_DEPTH
+        )
+        if counters is None:
+            return bc
+        return (
+            counters.unionByName(bc)
+            .groupBy("d", "cell")
+            .agg(F.sum("n").cast("long").alias("n"))
+        )
 
     raw_schema = read_table(spark, src_dir).schema
     stream = (
@@ -13381,9 +13350,9 @@ def stream_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-
-    counters = read_table(spark, store)
+    counters = _stream.fold_stream(
+        stream, os.path.join(base, "counters"), step, os.path.join(base, "ckpt")
+    )
     est = _sk.dyadic_rank_estimate(
         spark,
         counters,
@@ -13550,28 +13519,27 @@ def stream_hll_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX. Unlike the dyadic sketch's sum-fold (`stream_rank_sketch`,
     which needs an epoch marker because summing double-counts replays),
     max-fold is IDEMPOTENT — an at-least-once file source can replay a
-    batch and the registers cannot move — so the fold needs no replay
-    guard at all, the operational advantage HLL has over additive
-    sketches under relaxed delivery semantics. The oracle is the
-    one-shot batch sketch: merged-across-batches must land
+    batch and the registers cannot move, the operational advantage HLL
+    has over additive sketches under relaxed delivery semantics. The
+    fold still commits each batch's epoch (``fold_stream``), so a
+    replayed batch is skipped without recomputing its registers. The
+    oracle is the one-shot batch sketch: merged-across-batches must land
     bit-identically on built-in-one-pass, estimate included.
 
     Scale shape: per micro-batch one ≤1024-bucket map-side-combined
     groupBy over the batch only plus a ≤1024-row register merge; history
     is never rescanned."""
     from incremental_data_pipeline_spark.operators import sketches as _sk
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
 
     base = scratch_dir("stream_hll_")
     src_dir = os.path.join(base, "events_split")
-    store = os.path.join(base, "registers")
 
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(4, "user_id").write.mode("overwrite").parquet(src_dir)
 
-    def apply_batch(batch: DataFrame, _epoch: int) -> None:
+    def step(batch: DataFrame, r: DataFrame | None) -> DataFrame:
         br = _sk.hll_registers(batch, ["user_id"], p=10)
-        fold_into(spark, store, lambda r: br if r is None else _sk.hll_merge(r, br))
+        return br if r is None else _sk.hll_merge(r, br)
 
     raw_schema = read_table(spark, src_dir).schema
     stream = (
@@ -13579,9 +13547,10 @@ def stream_hll_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    _stream.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-
-    return _sk.hll_estimate(read_table(spark, store), p=10)
+    registers = _stream.fold_stream(
+        stream, os.path.join(base, "registers"), step, os.path.join(base, "ckpt")
+    )
+    return _sk.hll_estimate(registers, p=10)
 
 
 from incremental_data_pipeline_spark.operators import linkage as _linkage  # noqa: E402

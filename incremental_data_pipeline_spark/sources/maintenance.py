@@ -16,9 +16,10 @@ Design notes (scale):
 - Sizing uses the table's own on-disk bytes, so the target holds under
   compression-ratio drift; ``repartition(n)`` is one round-robin shuffle
   producing uniformly sized output files.
-- The rewrite is ``rewrite_in_place`` (write new version to temp, swap), so
-  readers never observe a half-compacted table and a crash mid-rewrite
-  leaves the original intact.
+- The rewrite is ``sinks.atomic_overwrite`` (write new version to temp,
+  swap) with the table's commit record carried over verbatim, so readers
+  never observe a half-compacted table and a crash mid-rewrite leaves the
+  original intact.
 - Partitioned tables compact WITHIN each partition (one shuffle keyed by
   partition value + a file-count salt), preserving the partition layout
   that downstream pruning depends on.
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.sources import sinks
-from incremental_data_pipeline_spark.sources.sinks import overwrite_partitions, rewrite_in_place
+from incremental_data_pipeline_spark.sources.sinks import atomic_overwrite, overwrite_partitions
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -150,6 +151,7 @@ def compact_table(
     total_rows = before["total_rows"] or 1
     n = max(1, math.ceil(total_bytes / target_file_bytes))
     df = sinks.read_table(spark, path)
+    record = sinks.commit_record(path)  # the same rows: it still describes them
     if zorder_cols:
         if partition_cols:
             raise ValueError("zorder_cols supports unpartitioned tables")
@@ -163,9 +165,9 @@ def compact_table(
             [bounds[f"__hi_{c}"] for c in zorder_cols],
         )
         clustered = df.withColumn("__z", z).repartitionByRange(n, "__z")
-        rewrite_in_place(clustered.sortWithinPartitions("__z").drop("__z"), path)
+        atomic_overwrite(clustered.sortWithinPartitions("__z").drop("__z"), path, record)
     elif not partition_cols:
-        rewrite_in_place(df.repartition(n), path)
+        atomic_overwrite(df.repartition(n), path, record)
     else:
         bytes_per_row = total_bytes / total_rows
         sizes = (

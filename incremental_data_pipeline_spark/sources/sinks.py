@@ -16,14 +16,14 @@ once per storage shape:
   ``drop_version``): immutable ``vN`` dirs, a ``.commit`` marker and a
   ``_CURRENT`` pointer — time travel and ``sources.transactions``.
 - **Table fold** (``fold_into``, ``commit_record``): read the current
-  version, compute the next from it and swap it in, optionally committing
-  an epoch with it so a replayed batch is skipped — the apply step of
-  every streaming state table (the change-query apply: old version plus
-  change set gives the new version). ``commit_overwrite`` is its swap:
-  the epoch, plus marks observed on the rows as they are written (a dim's
-  surrogate-key high-water mark), commit in the same rename as the rows;
-  ``rewrite_in_place`` carries them over a swap of the same rows (a
-  compaction).
+  version, compute the next from it and swap it in, committing the
+  batch's epoch with it so a replayed batch is skipped — the apply step
+  of every streaming state table (the change-query apply: old version
+  plus change set gives the new version). The swap is
+  ``atomic_overwrite``, the only writer of a swap's commit record: the
+  epoch, plus marks observed on the rows as they are written (a dim's
+  surrogate-key high-water mark), commit in the same rename as the rows,
+  and a compaction carries a table's record over verbatim.
 - **Epoch append** (``append_into``): a flat table's change set lands as
   new part files, committed by one atomic replace of the table's commit
   record — the medallion's silver and fact appends.
@@ -57,6 +57,8 @@ from pyspark.sql.types import StructType
 _TMP = ".__tmp__"
 _OLD = ".__old__"  # stable name => interrupted swaps are detectable
 _STAGE = ".stage-"
+_EPOCH = "_applied_epoch"  # the commit record: JSON {"epoch": e, mark: value, ...}
+_APPEND = "_append-"  # an epoch append's staged part files, hidden from readers
 
 
 def recover_interrupted_swap(path: str) -> bool:
@@ -100,37 +102,43 @@ def swap_in(path: str, fill: Callable[[str], None]) -> None:
 def atomic_overwrite(
     df: DataFrame,
     path: str,
-    extra_files: dict[str, str] | Callable[[], dict[str, str]] | None = None,
+    record: dict | None = None,
+    marks: dict[str, Column] | None = None,
 ) -> None:
-    """Write ``df`` as the new content of ``path`` via ``swap_in``.
-
-    ``extra_files`` maps filename -> text content written into the temp
-    dir BEFORE the swap, so they commit atomically with the data; a
-    callable is called for that mapping after ``df`` is written, so it
-    can hold what an ``Observation`` on ``df`` saw. ``commit_overwrite``
-    is the one caller that passes them: it commits an epoch and its marks
-    in the same rename as the rows they cover. Use underscore-prefixed
-    names: Spark's file index hides them from readers, the same convention
-    as ``_SUCCESS``.
+    """Write ``df`` as the new content of ``path`` via ``swap_in`` and
+    commit ``record`` with it, in the same rename: ``{"epoch": e}``, or a
+    record ``commit_record`` returned (a compaction, whose rows it still
+    describes). Each of ``marks`` (name -> aggregate Column) is observed
+    over ``df`` while it is written, so it costs no extra job, and is
+    committed in the record — a dim's key high-water mark, which the next
+    batch reads instead of aggregating the dim. With no record the table
+    carries none and ``marks`` go unobserved. This and ``append_into``
+    are the only writers of a commit record.
     """
+    from pyspark.sql import Observation
+
+    from incremental_data_pipeline_spark.functions.util import observation_result
+
+    cols = [c.alias(name) for name, c in (marks or {}).items()] if record else []
+    obs = Observation() if cols else None
+    if obs is not None:
+        df = df.observe(obs, *cols)
 
     def fill(tmp: str) -> None:
         df.write.mode("overwrite").parquet(tmp)  # fully materialized before swap
-        files = extra_files() if callable(extra_files) else extra_files
-        for name, content in (files or {}).items():
-            with open(os.path.join(tmp, name), "w") as f:
-                f.write(content)
+        if record:
+            seen = {}
+            if obs is not None:  # an empty plan may never report: aggregate instead
+                seen = observation_result(obs) or df.agg(*cols).first().asDict()
+            with open(os.path.join(tmp, _EPOCH), "w") as f:
+                f.write(json.dumps({**record, **seen}))
 
     swap_in(path, fill)
 
 
-_EPOCH = "_applied_epoch"  # the commit record: JSON {"epoch": e, mark: value, ...}
-_APPEND = "_append-"  # an epoch append's staged part files, hidden from readers
-
-
 def commit_record(path: str) -> dict:
     """What the last epoch commit stored with the table at ``path``:
-    ``{"epoch": e}`` plus the marks ``commit_overwrite`` observed; ``{}``
+    ``{"epoch": e}`` plus the marks ``atomic_overwrite`` observed; ``{}``
     when there is none. A swap that crashed between its renames is
     repaired and an append interrupted after its commit point finished
     first, so the record always describes the rows a read sees."""
@@ -148,74 +156,37 @@ def _read_record(path: str) -> dict:
     return record if isinstance(record, dict) else {"epoch": record}  # a bare int: older tables
 
 
-def commit_overwrite(
-    df: DataFrame, path: str, epoch: int | None, marks: dict[str, Column] | None = None
-) -> None:
-    """``atomic_overwrite`` ``df`` and commit ``epoch`` with it, in the
-    same rename. Each of ``marks`` (name -> aggregate Column) is observed
-    over ``df`` while it is written, so it costs no extra job, and is
-    read back from ``commit_record`` — a dim's key high-water mark, which
-    the next batch reads instead of aggregating the dim. No epoch and no
-    marks drops the committed record."""
-    from pyspark.sql import Observation
-
-    from incremental_data_pipeline_spark.functions.util import observation_result
-
-    obs = Observation() if marks else None
-    if obs is not None:
-        df = df.observe(obs, *[c.alias(name) for name, c in marks.items()])
-
-    def record() -> dict[str, str]:
-        if epoch is None and obs is None:
-            return {}
-        seen = {}
-        if obs is not None:  # an empty plan may never report: aggregate instead
-            seen = observation_result(obs) or df.agg(
-                *[c.alias(name) for name, c in marks.items()]
-            ).first().asDict()
-        return {_EPOCH: json.dumps({"epoch": epoch, **seen})}
-
-    atomic_overwrite(df, path, extra_files=record)
-
-
-def rewrite_in_place(df: DataFrame, path: str) -> None:
-    """``atomic_overwrite`` the table at ``path`` with ``df``, the same
-    rows laid out anew (a compaction), and keep its commit record in the
-    same rename: the epoch and marks still describe the rows, so the next
-    epoch applies on top instead of rebuilding the table."""
-    record = commit_record(path)
-    atomic_overwrite(df, path, {_EPOCH: json.dumps(record)} if record else None)
+def _replayed(record: dict, epoch: int) -> bool:
+    """The one replay rule: ``epoch`` is at or below the one ``record``
+    commits. A table with no epoch (a batch-primed one) applies any."""
+    return record.get("epoch") is not None and epoch <= record["epoch"]
 
 
 def fold_into(
     spark: SparkSession,
     path: str,
     step: Callable[[DataFrame | None], DataFrame],
-    epoch: int | None = None,
+    epoch: int,
 ) -> bool:
     """Fold one batch into the swap-committed table at ``path``: replace
     it with ``step(current)``, where ``current`` is the stored table, or
-    None when there is none yet. A swap that crashed between its renames
-    is recovered first, so it is never folded as "no table".
+    None when there is none yet, and commit ``epoch`` in the same rename.
+    A swap that crashed between its renames is recovered first, so it is
+    never folded as "no table".
 
-    ``epoch`` is for folds that are not idempotent (sums, counts) under an
-    at-least-once drain (``foreach_batch_scd1``): it commits in the same
-    rename as the rows, and an ``epoch`` at or below the committed one is
-    a replay — skipped without a Spark job, returning False. A table
-    written without an epoch (a batch-primed one) applies any epoch.
-    Idempotent folds (upserts, latest-wins, max) pass none; a fold
-    without an epoch drops the committed one.
+    An ``epoch`` at or below the committed one is a replay (the
+    at-least-once drain re-delivered a batch, ``streaming.fold_stream``):
+    it is skipped before the table is read, without a Spark job, and
+    returns False. So a fold need not be idempotent (sums, counts).
 
     The existence check, the sidecar and the swap use driver-local
     os.path/open semantics — correct for a single driver on a local or
     POSIX filesystem; a table on HDFS/S3 must route them through that
     filesystem's atomic-rename primitives (e.g. the Hadoop FileSystem
     API). Returns True when the fold was applied."""
-    current = read_table(spark, path)  # repairs a crashed swap before the epoch read
-    done = commit_record(path).get("epoch")
-    if epoch is not None and done is not None and epoch <= done:
+    if _replayed(commit_record(path), epoch):
         return False
-    commit_overwrite(step(current), path, epoch)
+    atomic_overwrite(step(read_table(spark, path)), path, {"epoch": epoch})
     return True
 
 
@@ -235,8 +206,7 @@ def append_into(df: DataFrame, path: str, epoch: int) -> bool:
     names carry Spark's per-write job id, so appends never collide.
     Single-writer contract, as ``swap_in``."""
     record = commit_record(path)
-    done = record.get("epoch")
-    if done is not None and epoch <= done:
+    if _replayed(record, epoch):
         return False
     stage = f"{_APPEND}{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(os.path.join(path, stage))

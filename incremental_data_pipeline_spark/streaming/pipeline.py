@@ -16,10 +16,14 @@ Design notes (100 TB posture):
   ``applyInPandasWithState`` (Arrow-batched), the sanctioned slow path.
 - The memory sink used by the test/oracle harness collects to the driver and
   is test-only; production callers hand ``start_*`` a parquet/Kafka sink or
-  use ``foreach_batch_scd1`` which reuses the batch SCD1 upsert unchanged.
+  drain through ``foreach_batch``, which hands each micro-batch to the
+  batch code unchanged (the SCD1 upsert, a partial-aggregate merge).
+- ``fold_stream`` is the one fold of a stream into a swap-committed state
+  table: every micro-batch commits its epoch with the table's rows
+  (``sinks.fold_into``), so a re-delivered batch is skipped.
 - ``_drain`` is the one query lifecycle (shuffle-partition override, start,
-  drain, stop, await). The memory sink (``run_to_memory*``) and both
-  foreachBatch drains call it; nothing else starts a query.
+  drain, stop, await). The memory sink (``run_to_memory*``) and
+  ``foreach_batch`` call it; nothing else starts a query.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from incremental_data_pipeline_spark.functions.util import scoped_conf
+from incremental_data_pipeline_spark.sources import sinks
 from incremental_data_pipeline_spark.sources.readers import _fixture_scan, _normalize_ntz
 
 # Stateful-query partition sizing (r10 optimization): every shuffle
@@ -322,29 +327,53 @@ def stream_static_contamination(
     return grams.join(F.broadcast(bench), "shingle").select(id_col, "shingle")
 
 
-def foreach_batch_scd1(
+def foreach_batch(
     stream: DataFrame,
     apply_batch: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
 ) -> None:
-    """The generic at-least-once foreachBatch drain, which
-    ``foreach_batch_exactly_once`` wraps with its ledger.
+    """The generic at-least-once foreachBatch drain, which ``fold_stream``
+    and ``foreach_batch_exactly_once`` wrap.
 
-    Drives the batch SCD1/upsert path from a stream: each micro-batch is a
-    normal DataFrame handed to the same ``build_dim``/upsert code the batch
-    pipeline uses (one implementation, two execution modes). The checkpoint
-    makes delivery at-least-once; the idempotent upsert makes the composed
-    system effectively-once. An apply that maintains a swap-committed table
-    calls ``sinks.fold_into``: without an epoch for idempotent folds
-    (upserts, latest-wins, max), with the batch's epoch for folds that are
-    not (sums, counts), so a replayed batch is skipped. A failing
-    ``apply_batch`` raises ``StreamingQueryException`` (see ``_drain``)."""
+    Each micro-batch is a normal DataFrame handed to ``apply_batch`` with
+    its epoch (the micro-batch id), so the batch code runs unchanged (one
+    implementation, two execution modes). The checkpoint makes delivery
+    at-least-once: a batch whose apply ran but whose offsets were not
+    committed is re-delivered with the same epoch, so an apply commits
+    that epoch with its work (``sinks.fold_into``, ``sinks.append_into``)
+    and skips an epoch it already committed. A failing ``apply_batch``
+    raises ``StreamingQueryException`` (see ``_drain``)."""
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
     _drain(stream.sparkSession, writer)
+
+
+def fold_stream(
+    stream: DataFrame,
+    path: str,
+    step: Callable[[DataFrame, DataFrame | None], DataFrame],
+    checkpoint_dir: str,
+) -> DataFrame | None:
+    """Drain ``stream`` and fold each micro-batch into the swap-committed
+    table at ``path``: the table becomes ``step(batch, current)`` and
+    commits the batch's epoch in the same rename (``sinks.fold_into``),
+    so a re-delivered batch is skipped whether or not ``step`` is
+    idempotent. Returns the table (``sinks.read_table``).
+
+    The table belongs to its checkpoint: its epochs are that checkpoint's
+    micro-batch ids, so a table already at epoch e drained with a fresh
+    checkpoint would skip the new batches 0..e. Give each table and its
+    checkpoint one fresh directory."""
+    spark = stream.sparkSession
+
+    def apply_batch(batch: DataFrame, epoch: int) -> None:
+        sinks.fold_into(spark, path, lambda current: step(batch, current), epoch)
+
+    foreach_batch(stream, apply_batch, checkpoint_dir)
+    return sinks.read_table(spark, path)
 
 
 def foreach_batch_exactly_once(
@@ -357,8 +386,9 @@ def foreach_batch_exactly_once(
 
     The checkpoint makes delivery at-least-once: after a crash between
     sink success and offset commit, the SAME batch id is re-delivered.
-    Idempotent sinks absorb that (foreach_batch_scd1); for sinks that
-    cannot (notifications, external appends), this wrapper keeps a
+    A table commits the epoch with its rows and absorbs that
+    (``fold_stream``, ``sinks.append_into``); for sinks that cannot
+    (notifications, external calls), this wrapper keeps a
     batch-id ledger — one marker file per applied epoch, created AFTER the
     apply succeeds — and skips any epoch already recorded. Marker creation
     is a single filesystem create (atomic on POSIX and object stores with
@@ -369,10 +399,10 @@ def foreach_batch_exactly_once(
     strict exactly-once pair this with an apply that commits its own work
     and the marker transactionally, or accept the idempotent-sink route.
 
-    Use the ledger for side effects that are not one table swap (appends,
-    partition merges, external calls). A table replaced whole per batch
-    needs no ledger: ``sinks.fold_into`` with the batch's epoch commits
-    the epoch in the same rename as the rows, under ``foreach_batch_scd1``.
+    Use the ledger for side effects that commit no epoch (partition
+    merges, external calls). A table replaced whole per batch
+    (``fold_stream``) or appended to (``sinks.append_into``) needs none:
+    it commits the epoch with its rows.
     """
     os.makedirs(ledger_dir, exist_ok=True)
 
@@ -384,7 +414,7 @@ def foreach_batch_exactly_once(
         with open(marker, "x") as f:
             f.write("applied\n")
 
-    foreach_batch_scd1(stream, wrapper, checkpoint_dir)
+    foreach_batch(stream, wrapper, checkpoint_dir)
 
 
 def running_user_stats(stream: DataFrame, ts_col: str = "ts") -> DataFrame:

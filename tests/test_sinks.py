@@ -4,10 +4,14 @@ and the salted-join mode restriction."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import tempfile
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from incremental_data_pipeline_spark.sources import sinks
@@ -649,6 +653,71 @@ def test_txn_log_compaction_preserves_reads(spark, tmp_path):
     assert t6 == 6 and tx.read_txn_table(spark, root, "fact").count() == 1
 
 
+@contextlib.contextmanager
+def _killed_at(k: int):
+    """Make the ``k``-th ``os.rename``, ``os.replace`` or ``os.link`` in
+    the block raise — the commit steps of every storage protocol, killed
+    the way ``test_append_into_commits_at_the_record_replace`` kills its
+    replace. Yields the steps seen; ``k=0`` kills none and just counts."""
+    seen = []
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("rename", "replace", "link"):
+
+            def step(*args, _name=name, _real=getattr(os, name), **kwargs):
+                seen.append(_name)
+                if len(seen) == k:
+                    raise OSError(f"killed at {_name} #{k}")
+                return _real(*args, **kwargs)
+
+            mp.setattr(os, name, step)
+        yield seen
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(shape=st.sampled_from(["versioned", "txn"]), k=st.integers(1, 6))
+@example(shape="versioned", k=1)  # the vN rename: the commit point
+@example(shape="txn", k=5)  # the manifest link: the commit point
+def test_killed_versioned_and_txn_writes_rerun_like_uninterrupted(spark, tmp_path, shape, k):
+    """Kill a ``versioned_overwrite`` or a two-table
+    ``multi_table_transaction`` at its k-th rename/replace/link. A reader
+    then sees the previous state or the new one, never a mix, and
+    re-running the write gives what an uninterrupted run gives
+    (``read_version``, ``read_txn_table``)."""
+    from incremental_data_pipeline_spark.sources import transactions as tx
+
+    def write(path, xs):
+        if shape == "versioned":
+            sinks.versioned_overwrite(_mk2(spark, xs), path, keep=2)
+        else:
+            tables = {"fact": _mk2(spark, xs), "dim": _mk2(spark, [x + 100 for x in xs])}
+            tx.multi_table_transaction(path, tables)
+
+    def read(path):
+        if shape == "versioned":
+            return _rows(sinks.read_version(spark, path))
+        return {t: _rows(tx.read_txn_table(spark, path, t)) for t in ("dim", "fact")}
+
+    base = tempfile.mkdtemp(dir=tmp_path)
+    killed, clean = os.path.join(base, "killed"), os.path.join(base, "clean")
+    for path in (killed, clean):
+        write(path, [1, 2])
+    before = read(killed)
+    with _killed_at(0) as steps:
+        write(clean, [3, 4, 5])
+    after = read(clean)
+    with _killed_at(k), contextlib.suppress(OSError):
+        write(killed, [3, 4, 5])
+        assert k > len(steps), f"step {k} of {steps} was not reached"
+    assert read(killed) in (before, after)
+    write(killed, [3, 4, 5])  # the re-run
+    assert read(killed) == after
+
+
 def _txn_worker(root: str, wid: int, target: int, results):
     """Pure-filesystem rendition of multi_table_transaction's commit path
     (stage dir + commit_staged_version + manifest link) so N real processes
@@ -773,27 +842,41 @@ def test_storage_protocols_defined_once():
 
 
 def test_table_fold_defined_once():
-    """The fold step of swap-committed state tables lives in
-    ``sinks.fold_into``: its epoch sidecar is named once, only
-    ``sources/`` commits extra files with a swap, and no query or
-    streaming test hand-writes "exists? read : init, then
-    atomic_overwrite" — eight such copies once skipped crash recovery,
+    """The commit record of a table has two writers, ``atomic_overwrite``
+    (a swap) and ``append_into`` (an append); its sidecar is named once,
+    and the retired writers and drain are gone. Queries and streaming
+    tests fold a stream through ``streaming.fold_stream``, which commits
+    every micro-batch's epoch — five hand-written folds once committed
+    none — and none hand-writes "exists? read : init, then
+    atomic_overwrite": eight such copies once skipped crash recovery,
     and one summed replayed batches twice."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
     pkg = root / "incremental_data_pipeline_spark"
-    sidecar, extra = "_applied" "_epoch", "extra_files" "="  # split: no copy here
+    sidecar = "_applied" "_epoch"  # split: no copy here
     assert sum(p.read_text().count(sidecar) for p in pkg.rglob("*.py")) == 1
     assert not [p for p in (root / "tests").rglob("*.py") if sidecar in p.read_text()]
-    users = [p for p in [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py")]
-             if extra in p.read_text()]
-    assert users and all(p.parent.name == "sources" for p in users), users
+    gone = ["commit" "_overwrite", "rewrite" "_in_place", "extra" "_files", "foreach_batch" "_scd1"]
+    for p in [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py")]:
+        assert not [g for g in gone if g in p.read_text()], p
+    sinks_src = ast.parse((pkg / "sources" / "sinks.py").read_text())
+    writers = set()
+    for fn in sinks_src.body:
+        if isinstance(fn, ast.FunctionDef):
+            names = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+            opens = [c for c in ast.walk(fn) if isinstance(c, ast.Call)
+                     and ast.unparse(c.func) == "open" and "'w'" in ast.unparse(c)]
+            if "_EPOCH" in names and opens:
+                writers.add(fn.name)
+    assert writers == {"atomic_overwrite", "append_into"}, writers
+    assert not [p for p in pkg.rglob("*.py") if p.name != "sinks.py" and "_EPOCH" in p.read_text()]
     for path in (pkg / "plans" / "queries.py", root / "tests" / "test_streaming.py"):
         for fn in ast.walk(ast.parse(path.read_text())):
             if isinstance(fn, ast.FunctionDef):
                 calls = {ast.unparse(c.func) for c in ast.walk(fn) if isinstance(c, ast.Call)}
+                assert not [c for c in calls if c.split(".")[-1] == "fold_into"], fn.name
                 overwrites = any(c.split(".")[-1] == "atomic_overwrite" for c in calls)
                 assert not ("os.path.exists" in calls and overwrites), (path.name, fn.name)
 
@@ -831,19 +914,32 @@ def test_append_into_commits_at_the_record_replace(spark, tmp_path, monkeypatch,
     assert sorted(r["x"] for r in sinks.read_table(spark, path).collect()) == [1, 2, 3]
 
 
-def test_commit_overwrite_records_observed_marks(spark, tmp_path):
-    """``commit_overwrite`` commits its epoch and the marks observed on
-    the written rows with them; an append keeps the marks; an overwrite
-    of no rows still records them; a fold without an epoch drops them."""
+def test_atomic_overwrite_commits_its_record_and_observed_marks(spark, tmp_path):
+    """``atomic_overwrite`` commits the record it is given and the marks
+    observed on the written rows with it; an append keeps the marks; an
+    overwrite of no rows still records them; a compaction carries the
+    record over verbatim; a fold commits its epoch alone; no record
+    commits none and observes no marks."""
+    from incremental_data_pipeline_spark.sources import maintenance
+
     path = str(tmp_path / "t")
     mark = {"max_x": F.coalesce(F.max("x"), F.lit(0))}
-    sinks.commit_overwrite(_mkdf(spark, [4, 9, 2]), path, 5, mark)
+    sinks.atomic_overwrite(_mkdf(spark, [4, 9, 2]), path, {"epoch": 5}, mark)
     assert sinks.commit_record(path) == {"epoch": 5, "max_x": 9}
     sinks.append_into(_mkdf(spark, [1]), path, 6)
     assert sinks.commit_record(path) == {"epoch": 6, "max_x": 9}
-    sinks.commit_overwrite(_mkdf(spark, [1]).filter("x > 1"), path, 7, mark)
+    maintenance.compact_table(spark, path)
+    assert sinks.commit_record(path) == {"epoch": 6, "max_x": 9}
+    maintenance.compact_table(spark, path, zorder_cols=["x"])
+    assert sinks.commit_record(path) == {"epoch": 6, "max_x": 9}
+    assert sorted(r["x"] for r in sinks.read_table(spark, path).collect()) == [1, 2, 4, 9]
+    sinks.atomic_overwrite(_mkdf(spark, [1]).filter("x > 1"), path, {"epoch": 7}, mark)
     assert sinks.commit_record(path) == {"epoch": 7, "max_x": 0}
-    sinks.fold_into(spark, path, lambda current: current)
+    sinks.fold_into(spark, path, lambda current: current, epoch=8)
+    assert sinks.commit_record(path) == {"epoch": 8}
+    sinks.atomic_overwrite(_mkdf(spark, [3]), path, None, mark)
+    assert sinks.commit_record(path) == {}
+    maintenance.compact_table(spark, path)
     assert sinks.commit_record(path) == {}
 
 

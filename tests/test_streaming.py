@@ -73,7 +73,6 @@ def test_multi_batch_scd1_keys_stable(spark):
 
     from incremental_data_pipeline_spark.operators.scd import build_dim
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_multibatch_")
@@ -84,11 +83,6 @@ def test_multi_batch_scd1_keys_stable(spark):
         os.makedirs(src_dir)
         _copy_split(SF_DIR, src_dir, events.select("user_id", "ts"), "ts", cut)
 
-        dim_path = os.path.join(base, "dim_user")
-
-        def apply_batch(batch, _epoch):
-            fold_into(spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "k", d))
-
         # maxFilesPerTrigger=1 forces two micro-batches through foreachBatch.
         schema = events.select("user_id", "ts").schema
         stream = (
@@ -96,9 +90,12 @@ def test_multi_batch_scd1_keys_stable(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        sp.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-
-        dim = spark.read.parquet(dim_path)
+        dim = sp.fold_stream(
+            stream,
+            os.path.join(base, "dim_user"),
+            lambda batch, d: build_dim(batch, ["user_id"], [], "k", d),
+            os.path.join(base, "ckpt"),
+        )
         n_users = events.select("user_id").distinct().count()
         assert dim.count() == n_users
         assert dim.select("k").distinct().count() == n_users
@@ -117,25 +114,19 @@ def test_foreach_batch_replay_is_noop(spark):
     committed offsets make delivery effectively-once, so the dim is
     byte-identical after a second drain."""
     from incremental_data_pipeline_spark.operators.scd import build_dim
-    from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_replay_")
     try:
-        events = load_table(spark, SF_DIR, "events")
         dim_path = os.path.join(base, "dim_user")
         ckpt = os.path.join(base, "ckpt")
 
-        def apply_batch(batch, _epoch):
-            fold_into(spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "k", d))
-
         def drain():
             stream = sp.read_stream(spark, SF_DIR, "events").select("user_id", "ts")
-            sp.foreach_batch_scd1(stream, apply_batch, ckpt)
-            return sorted(
-                (r["user_id"], r["k"]) for r in spark.read.parquet(dim_path).collect()
+            dim = sp.fold_stream(
+                stream, dim_path, lambda batch, d: build_dim(batch, ["user_id"], [], "k", d), ckpt
             )
+            return sorted((r["user_id"], r["k"]) for r in dim.collect())
 
         first = drain()
         second = drain()
@@ -215,7 +206,6 @@ def test_scd1_dim_output_invariant_to_batch_split(spark):
 
     from incremental_data_pipeline_spark.operators.scd import build_dim
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
     from pyspark.sql import Window
 
@@ -228,23 +218,21 @@ def test_scd1_dim_output_invariant_to_batch_split(spark):
             SF_DIR, src_dir, events.select("user_id", "ts"), "ts",
             datetime.datetime(2024, 1, 15),
         )
-        dim_path = os.path.join(base, "dim_user")
-
-        def apply_batch(batch, _epoch):
-            fold_into(
-                spark, dim_path, lambda d: build_dim(batch, ["user_id"], [], "dim_user_key", d)
-            )
-
         schema = events.select("user_id", "ts").schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        sp.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
+        dim = sp.fold_stream(
+            stream,
+            os.path.join(base, "dim_user"),
+            lambda batch, d: build_dim(batch, ["user_id"], [], "dim_user_key", d),
+            os.path.join(base, "ckpt"),
+        )
 
         reranked = (
-            spark.read.parquet(dim_path)
+            dim
             .select(
                 F.row_number().over(Window.orderBy("user_id")).alias("dim_user_key"),
                 "user_id",
@@ -346,7 +334,6 @@ def test_stream_incremental_gold_invariant_to_batch_split(spark):
     micro-batches — the merge invariant under real incremental delivery."""
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_gold_split_")
@@ -356,26 +343,25 @@ def test_stream_incremental_gold_invariant_to_batch_split(spark):
         )
         src = _chunked_source(spark, base, events, "ts", 3)
 
-        gold_path = os.path.join(base, "gold")
         keys = ["user_id", "event_type"]
         sums = {
             "sum_cents": F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint"),
             "n_events": F.count(F.lit(1)).cast("bigint"),
         }
 
-        def apply_batch(batch, epoch):
-            fold_into(
-                spark, gold_path, lambda g: cdc.merge_partial_aggs(g, batch, keys, sums), epoch
-            )
-
         stream = (
             spark.readStream.schema(events.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        sp.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
+        gold = sp.fold_stream(
+            stream,
+            os.path.join(base, "gold"),
+            lambda batch, g: cdc.merge_partial_aggs(g, batch, keys, sums),
+            os.path.join(base, "ckpt"),
+        )
 
-        got = sorted(map(tuple, spark.read.parquet(gold_path).collect()))
+        got = sorted(map(tuple, gold.collect()))
         expected = sorted(
             map(
                 tuple,
@@ -430,7 +416,6 @@ def test_scd2_dim_current_invariant_to_batch_split(spark):
 
     from incremental_data_pipeline_spark.operators.scd import upsert_scd2_ordered
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_scd2_split_")
@@ -443,13 +428,12 @@ def test_scd2_dim_current_invariant_to_batch_split(spark):
         _copy_split(
             SF_DIR, src_dir, events, "ts", datetime.datetime(2024, 1, 15)
         )
-        dim_path = os.path.join(base, "dim_hist")
         empty = (
             "user_id long, last_event_type string, "
             "valid_from timestamp, valid_to timestamp, is_current boolean"
         )
 
-        def apply_batch(batch, _epoch):
+        def step(batch, dim):
             src = (
                 batch.groupBy("user_id")
                 .agg(F.max(F.struct(F.col("ts"), F.col("event_type"))).alias("m"))
@@ -459,13 +443,9 @@ def test_scd2_dim_current_invariant_to_batch_split(spark):
                     F.col("m.event_type").alias("last_event_type"),
                 )
             )
-            fold_into(
-                spark,
-                dim_path,
-                lambda dim: upsert_scd2_ordered(
-                    spark.createDataFrame([], empty) if dim is None else dim,
-                    src, ["user_id"], ["last_event_type"], "eff_ts",
-                ),
+            return upsert_scd2_ordered(
+                spark.createDataFrame([], empty) if dim is None else dim,
+                src, ["user_id"], ["last_event_type"], "eff_ts",
             )
 
         schema = events.schema
@@ -474,9 +454,9 @@ def test_scd2_dim_current_invariant_to_batch_split(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        sp.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
-
-        dim = spark.read.parquet(dim_path)
+        dim = sp.fold_stream(
+            stream, os.path.join(base, "dim_hist"), step, os.path.join(base, "ckpt")
+        )
         got = sorted(
             map(tuple, dim.filter("is_current").select(
                 "user_id", "last_event_type").collect())
@@ -519,7 +499,6 @@ def test_retract_gold_invariant_to_batch_split(spark):
 
     from incremental_data_pipeline_spark.operators import cdc
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_retract_split_")
@@ -530,7 +509,6 @@ def test_retract_gold_invariant_to_batch_split(spark):
         os.makedirs(src_dir)
         _copy_split(SF_DIR, src_dir, cols, "ts", datetime.datetime(2024, 1, 15))
 
-        gold_path = os.path.join(base, "gold")
         sign = F.when(F.col("event_id") % 11 == 0, F.lit(-1)).otherwise(F.lit(1))
         cents = F.round(F.col("value") * 100).cast("bigint")
         sums = {
@@ -538,25 +516,22 @@ def test_retract_gold_invariant_to_batch_split(spark):
             "sum_cents": F.sum(sign * cents).cast("bigint"),
         }
 
-        def apply_batch(batch, epoch):
-            fold_into(
-                spark,
-                gold_path,
-                lambda g: cdc.merge_partial_aggs(g, batch, ["event_type"], sums),
-                epoch,
-            )
-
         schema = cols.schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        sp.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
+        gold = sp.fold_stream(
+            stream,
+            os.path.join(base, "gold"),
+            lambda batch, g: cdc.merge_partial_aggs(g, batch, ["event_type"], sums),
+            os.path.join(base, "ckpt"),
+        )
 
         got = {
             r["event_type"]: (r["n_events"], r["sum_cents"])
-            for r in spark.read.parquet(gold_path).collect()
+            for r in gold.collect()
         }
         want = {
             r["event_type"]: (r["n_events"], r["sum_cents"])
@@ -578,7 +553,6 @@ def test_tombstone_dim_invariant_to_batch_split(spark):
     from pyspark.sql import Window
 
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_tomb_split_")
@@ -590,7 +564,6 @@ def test_tombstone_dim_invariant_to_batch_split(spark):
         mid = int(cols.agg(F.expr("percentile(event_id, 0.5)")).first()[0])
         _copy_split(SF_DIR, src_dir, cols, "event_id", mid)
 
-        store = os.path.join(base, "dim_store")
         wlat = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
@@ -607,7 +580,7 @@ def test_tombstone_dim_invariant_to_batch_split(spark):
                 .drop("rn")
             )
 
-        def apply_batch(batch, _epoch):
+        def step(batch, d):
             b = latest(
                 batch.select(
                     "user_id", "ts", "event_id",
@@ -615,21 +588,20 @@ def test_tombstone_dim_invariant_to_batch_split(spark):
                     F.round(F.col("value") * 100).cast("bigint").alias("cents"),
                 )
             )
-            fold_into(spark, store, lambda d: b if d is None else latest(d.unionByName(b)))
+            return b if d is None else latest(d.unionByName(b))
 
         stream = (
             spark.readStream.schema(cols.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        sp.foreach_batch_scd1(stream, apply_batch, os.path.join(base, "ckpt"))
+        store = sp.fold_stream(
+            stream, os.path.join(base, "dim_store"), step, os.path.join(base, "ckpt")
+        )
 
         got = {
             tuple(r)
-            for r in spark.read.parquet(store)
-            .filter(F.col("op") != "D")
-            .select("user_id", "op", "cents")
-            .collect()
+            for r in store.filter(F.col("op") != "D").select("user_id", "op", "cents").collect()
         }
         want = {
             tuple(r)
@@ -779,6 +751,42 @@ def test_stream_ingest_dedup_invariant_to_ordered_batch_split(spark):
         assert any(d < cut for d in got) and any(d >= cut for d in got)
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_ingest_dedup_replay_after_a_kill_between_appends(
+    spark, duck, monkeypatch, tmp_path
+):
+    """Killed between its two appends (the accepted ids, then the
+    signature store), ``stream_ingest_dedup`` re-delivers the micro-batch
+    against the store without its signatures and recomputes the same
+    accepted ids. They are already committed with the batch's epoch, so
+    the re-run on the same checkpoint accepts every document once, as
+    the oracle states — plain appends under a ledger marked after both
+    appended every accepted id twice."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from incremental_data_pipeline_spark.plans import queries
+
+    fixed = str(tmp_path / "stream_ingest_dedup")
+    os.makedirs(fixed)
+    monkeypatch.setattr(queries, "scratch_dir", lambda prefix: fixed)
+    parquet, writes = DataFrameWriter.parquet, []
+
+    def dying(self, path, *args, **kwargs):
+        writes.append(path)
+        if len(writes) == 2:
+            raise OSError("killed before the store append")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dying)
+    with pytest.raises(StreamingQueryException):
+        queries.QUERIES["stream_ingest_dedup"](spark, SF_DIR)
+    assert ["accepted" in writes[0], "sig_store" in writes[1]] == [True, True], writes
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    got = [r["doc_id"] for r in queries.QUERIES["stream_ingest_dedup"](spark, SF_DIR).collect()]
+    want = [r[0] for r in duck.execute(queries.ORACLE["stream_ingest_dedup"]).fetchall()]
+    assert len(got) == len(set(got)), len(got) - len(set(got))
+    assert sorted(got) == sorted(want)
 
 
 def test_stream_cusum_correct_with_tiny_arrow_chunks(spark):
@@ -1017,17 +1025,45 @@ def test_rocksdb_state_store_provider_equivalent(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
-    """Crash-recovery pin for the exactly-once gold rollup: the query is
-    KILLED after epoch 2's ``fold_into`` commits (data + epoch inside one
-    atomic rename) but BEFORE Spark commits epoch 2's offsets — the exact
-    replay window the epoch exists for. A restart on the SAME checkpoint
-    and SAME gold store re-delivers epoch 2; the fold must skip it (a
-    second merge would double-count) and the drained result must
-    hash-match an uninterrupted run of the same source."""
+def _sum_fold(events):
+    """The gold rollup's step and its from-scratch result: a sum, which
+    double-counts a batch folded twice."""
     from incremental_data_pipeline_spark.operators import cdc
+
+    keys = ["user_id", "event_type"]
+    sums = {
+        "sum_cents": F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint"),
+        "n_events": F.count(F.lit(1)).cast("bigint"),
+    }
+    full = events.groupBy(*keys).agg(*[c.alias(nm) for nm, c in sums.items()])
+    return (lambda batch, g: cdc.merge_partial_aggs(g, batch, keys, sums)), full
+
+
+def _max_fold(events):
+    """The HLL registers' step and its one-shot result: a per-bucket max,
+    which a batch folded twice cannot move."""
+    from incremental_data_pipeline_spark.operators import sketches as sk
+
+    def step(batch, registers):
+        br = sk.hll_registers(batch, ["user_id"], p=10)
+        return br if registers is None else sk.hll_merge(registers, br)
+
+    return step, sk.hll_registers(events, ["user_id"], p=10)
+
+
+@pytest.mark.parametrize("fold", ["sum", "max"])
+def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark, monkeypatch, fold):
+    """Crash-recovery pin for ``fold_stream``: the query is KILLED after
+    epoch 2's swap commits (data + epoch inside one atomic rename) but
+    BEFORE Spark commits epoch 2's offsets — the exact replay window the
+    epoch exists for. A restart on the SAME checkpoint and table
+    re-delivers epoch 2 and ``fold_stream`` skips it, whether the fold is
+    a sum (a second merge would double-count) or an idempotent max (the
+    HLL registers, which once committed no epoch at all): the record
+    reads epoch 2 before the restart and 3 after, and the drained table
+    hash-matches an uninterrupted run and the one-shot batch result."""
+    from incremental_data_pipeline_spark.sources import sinks
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import commit_record, fold_into
     from incremental_data_pipeline_spark.streaming import pipeline as sp
 
     base = tempfile.mkdtemp(prefix="stream_kill_restart_")
@@ -1040,76 +1076,58 @@ def test_kill_and_restart_from_checkpoint_matches_uninterrupted(spark):
             "user_id", "event_type", "value", "ts"
         )
         src = _chunked_source(spark, base, events, "ts", 4)
+        step, full = {"sum": _sum_fold, "max": _max_fold}[fold](events)
+        swap, committed = sinks.atomic_overwrite, []
 
-        keys = ["user_id", "event_type"]
-        sums = {
-            "sum_cents": F.sum(
-                F.round(F.col("value") * 100).cast("bigint")
-            ).cast("bigint"),
-            "n_events": F.count(F.lit(1)).cast("bigint"),
-        }
-
-        def make_apply(gold_path, kill_after_epoch):
-            def apply_batch(batch, epoch):
-                applied = fold_into(
-                    spark,
-                    gold_path,
-                    lambda g: cdc.merge_partial_aggs(g, batch, keys, sums),
-                    epoch,
-                )  # False for a replayed epoch: already committed
-                if applied and epoch == kill_after_epoch:
-                    # gold (incl. its epoch) is committed; dying HERE
+        def dying_after(kill_epoch):
+            def overwrite(df, path, record=None, marks=None):
+                swap(df, path, record, marks)
+                committed.append(record["epoch"])
+                if record["epoch"] == kill_epoch:
+                    # the table (incl. its epoch) is committed; dying HERE
                     # means Spark never commits this epoch's offsets
-                    raise DeliberateKill(f"kill after epoch {epoch} commit")
+                    raise DeliberateKill(f"kill after epoch {kill_epoch} commit")
 
-            return apply_batch
+            return overwrite
 
-        def run(gold_path, ckpt, kill_after_epoch=None):
+        def run(path, ckpt, kill_epoch=None):
+            monkeypatch.setattr(sinks, "atomic_overwrite", dying_after(kill_epoch))
             stream = (
                 spark.readStream.schema(events.schema)
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src)
             )
             try:
-                sp.foreach_batch_scd1(
-                    stream, make_apply(gold_path, kill_after_epoch), ckpt
-                )
+                sp.fold_stream(stream, path, step, ckpt)
             except StreamingQueryException:
                 # the exception's message truncates the Python traceback —
                 # the post-kill state asserts below prove WHERE it died
                 return False
             return True
 
-        gold_a = os.path.join(base, "gold_killed")
-        ckpt_a = os.path.join(base, "ckpt_killed")
-        survived = run(gold_a, ckpt_a, kill_after_epoch=2)
-        assert not survived, "the kill never fired"
+        gold_a, ckpt_a = os.path.join(base, "gold_killed"), os.path.join(base, "ckpt_killed")
+        assert not run(gold_a, ckpt_a, kill_epoch=2), "the kill never fired"
         # epoch 2's data committed, its offsets did not: the table
-        # already records epoch 2
-        assert commit_record(gold_a).get("epoch") == 2
-        # restart on the SAME checkpoint + store: epoch 2 is re-delivered
-        # and must be skipped, epochs 3+ applied once
+        # already records epoch 2, and the restart re-delivers it
+        assert sinks.commit_record(gold_a).get("epoch") == 2
+        assert not os.path.exists(os.path.join(ckpt_a, "commits", "2"))
         assert run(gold_a, ckpt_a)
-        assert commit_record(gold_a).get("epoch") == 3  # all four chunks applied
+        assert os.path.exists(os.path.join(ckpt_a, "commits", "2"))
+        assert sinks.commit_record(gold_a).get("epoch") == 3  # all four chunks applied
+        assert committed == [0, 1, 2, 3]  # the re-delivered epoch 2 was skipped
 
         gold_b = os.path.join(base, "gold_clean")
         assert run(gold_b, os.path.join(base, "ckpt_clean"))
 
-        got = sorted(map(tuple, spark.read.parquet(gold_a).collect()))
-        want = sorted(map(tuple, spark.read.parquet(gold_b).collect()))
-        assert got == want and len(got) > 0
-        # and both equal the from-scratch batch aggregate
-        full = sorted(
-            map(
-                tuple,
-                events.groupBy(*keys)
-                .agg(*[c.alias(nm) for nm, c in sums.items()])
-                .collect(),
-            )
-        )
-        assert got == full
+        got = _sorted_rows(sinks.read_table(spark, gold_a))
+        assert got == _sorted_rows(sinks.read_table(spark, gold_b)) and len(got) > 0
+        assert got == _sorted_rows(full)
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
 
 
 def test_kill_and_restart_ledger_applies_each_epoch_once(spark):
@@ -1160,71 +1178,6 @@ def test_kill_and_restart_ledger_applies_each_epoch_once(spark):
         # epochs 2 and 3 applied exactly once; 0 and 1 never re-ran
         assert sorted(e for e, _ in applied) == [0, 1, 2, 3]
         assert sum(n for _, n in applied) == events.count()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_hll_fold_survives_replay_with_no_epoch_guard(spark):
-    """Crash-recovery pin for the HLL max-fold's ADVERTISED property: the
-    fold is idempotent, so unlike the sum-fold golds above it carries NO
-    epoch — and a kill after epoch 2's register store commits but
-    before its offsets commit makes the restart REPLAY epoch 2 into the
-    store a second time. The replayed merge must be a no-op (per-bucket
-    max cannot move), and the final registers must equal the one-shot
-    batch sketch bit-for-bit."""
-    from incremental_data_pipeline_spark.operators import sketches as sk
-    from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.sources.sinks import fold_into
-    from incremental_data_pipeline_spark.streaming import pipeline as sp
-
-    base = tempfile.mkdtemp(prefix="stream_hll_kill_")
-
-    class DeliberateKill(Exception):
-        pass
-
-    try:
-        events = load_table(spark, SF_DIR, "events").select("user_id", "ts")
-        src = _chunked_source(spark, base, events, "ts", 4)
-
-        store = os.path.join(base, "registers")
-        applied_epochs = []
-
-        def apply_batch(batch, epoch, kill_after=None):
-            br = sk.hll_registers(batch, ["user_id"], p=10)
-            # NO epoch, on purpose
-            fold_into(spark, store, lambda r: br if r is None else sk.hll_merge(r, br))
-            applied_epochs.append(epoch)
-            if kill_after is not None and epoch == kill_after:
-                raise DeliberateKill(f"kill after epoch {epoch} store commit")
-
-        def run(kill_after=None):
-            stream = (
-                spark.readStream.schema(events.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-            )
-            try:
-                sp.foreach_batch_scd1(
-                    stream,
-                    lambda b, e: apply_batch(b, e, kill_after),
-                    os.path.join(base, "ckpt"),
-                )
-            except StreamingQueryException:
-                return False
-            return True
-
-        assert not run(kill_after=2), "the kill never fired"
-        assert run()  # restart: epoch 2 REPLAYS into the committed store
-        assert applied_epochs.count(2) == 2, applied_epochs  # real replay
-        got = sorted(
-            (r["bucket"], r["register"])
-            for r in spark.read.parquet(store).collect()
-        )
-        want = sorted(
-            (r["bucket"], r["register"])
-            for r in sk.hll_registers(events, ["user_id"], p=10).collect()
-        )
-        assert got == want and len(got) > 0
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
