@@ -16,9 +16,10 @@ as generic DataFrame operators:
 At 100 TB: anti/semi joins against a dimension-sized target broadcast. The
 range filter lands in PushedFilters, but Spark 4.1 skips no row groups for
 a TIMESTAMP_NTZ predicate or an INT96 column (the timestamp type Spark
-writes), so a batch still scans the source; partition pruning (the
-day-partitioned bronze) is what bounds the read. Only UTC-adjusted INT64
-timestamps prune row groups (see ``run_incremental_batch``).
+writes); only UTC-adjusted INT64 timestamps prune row groups. So the
+filter alone does not bound a batch's read: ``run_incremental_batch``
+skips each source file whose footer puts it at or below the watermark,
+and partition pruning (the day-partitioned bronze) bounds the sink's.
 """
 
 from __future__ import annotations

@@ -588,9 +588,12 @@ def versioned_overwrite(
 
 
 def read_version(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
-    """Time-travel read: ``version=None`` reads the current pointer,
-    otherwise the requested retained version (Delta's ``versionAsOf``)."""
-    v = _current_version(path) if version is None else version
+    """Time-travel read: ``version=None`` reads the current version,
+    otherwise the requested retained version (Delta's ``versionAsOf``).
+    The current version is what ``reconcile_versions`` returns, so a
+    version renamed into place (the commit point) reads as current even
+    when its writer died before the ``_CURRENT`` flip."""
+    v = reconcile_versions(path) if version is None else version
     df = read_table(spark, version_dir(path, v))
     if df is None:
         raise FileNotFoundError(f"version {v} not retained at {path}")

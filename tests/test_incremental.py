@@ -58,6 +58,69 @@ def test_watermark_batches_converge_to_full_set(spark, tmp_path):
     assert pipe2.read("bronze", "events").count() == events.count()
 
 
+def _scan_metrics(df) -> dict[str, int]:
+    """The SQL metrics of the one file scan in ``df``'s executed plan,
+    after an action ran it."""
+    plan = df._jdf.queryExecution().executedPlan()
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())
+             if leaves.apply(i).nodeName().startswith("Scan parquet")]
+    assert len(scans) == 1, plan.toString()
+    metrics = scans[0].metrics()
+    return {name: metrics.apply(name).value() for name in ("numFiles", "numOutputRows")}
+
+
+def test_incremental_batch_skips_source_files_at_or_below_the_watermark(spark, tmp_path):
+    """``run_incremental_batch`` drops every source file whose parquet
+    footer puts each ``ts`` at or below the watermark, when Spark lists
+    the files: the batch scans only the newer file and delivers what the
+    full scan delivers. A file written without statistics, a derived
+    column and a watermark of another type skip nothing; an integer
+    column skips by its own footer maxima. The source's path has a
+    space, which ``inputFiles`` and ``_metadata.file_path`` both
+    percent-encode."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incremental_data_pipeline_spark.sources.watermark import (
+        _settled_files,
+        run_incremental_batch,
+    )
+
+    src = tmp_path / "src dir" / "events.parquet"
+    src.mkdir(parents=True)
+    day = datetime.datetime(2024, 3, 1)
+    for i, stats in enumerate((True, True, True, False)):
+        ts = [day + datetime.timedelta(days=i, hours=h) for h in range(5)]
+        table = pa.table({"id": range(5 * i, 5 * i + 5), "ts": pa.array(ts, pa.timestamp("us"))})
+        pq.write_table(table, src / f"part-{i}.parquet", write_statistics=stats)
+    source = load_table(spark, str(src.parent), "events")
+    uri = (src.as_uri() + "/part-{}.parquet").replace("file:///", "file:/")
+    assert "%20" in uri
+    watermark = day + datetime.timedelta(days=1, hours=4)  # the max of part-1
+
+    assert sorted(_settled_files(source, "ts", watermark)) == [uri.format(0), uri.format(1)]
+    assert _settled_files(source, "id", 4) == [uri.format(0)]
+    shifted = source.withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 SECOND"))
+    assert _settled_files(shifted, "ts", watermark) == []
+    assert _settled_files(source, "ts", 10**18) == []
+    assert _settled_files(source, "id", watermark) == []
+
+    store = WatermarkStore(spark, str(tmp_path / "wm"), watermark)
+    seen, delivered = [], []
+
+    def sink(batch):
+        seen.append(batch)
+        delivered.extend(batch.collect())
+
+    assert run_incremental_batch(source, "ts", store, sink) == 10
+    assert sorted(r["id"] for r in delivered) == list(range(10, 20))
+    assert _scan_metrics(seen[0]) == {"numFiles": 2, "numOutputRows": 10}
+    assert store.read() == day + datetime.timedelta(days=3, hours=4)
+
+
 def test_scd1_dim_upsert_refreshes_attrs_and_keeps_keys(spark, tmp_path):
     """SCD1: run twice converges; changed attributes update in place;
     surrogate keys of existing members never change; new members extend

@@ -1,6 +1,7 @@
 """The change-set medallion: each watermark batch's change set flows from
 bronze through silver, the SCD1 dims and the fact. These tests pin that
-the incremental result equals a full rebuild for any batch cut, that a
+the incremental result equals a full rebuild for any batch cut, on the
+driver-held path of a small batch and on the distributed one, that a
 crash between layers re-runs to the uninterrupted gold, and that a batch
 touches no stored silver or fact file. Each reads the decision every
 layer took, and the reason it rebuilt, from ``pipe.last_batch``."""
@@ -27,9 +28,11 @@ INITIAL = datetime.datetime(2023, 1, 1)
 HISTORY_ROWS = 400
 
 # Spark jobs one 40-row incremental batch may start, bronze included
-# (local[4], AQE on): bronze 5, silver 1, each dim 6, the fact 3. The
-# whole-layer rebuild it replaced started 30 for the same batch.
-BATCH_JOBS = 21
+# (local[4], AQE on), on the driver-held path: bronze 5, silver 2 (the
+# collect and the append), each dim 2 (the probe and the write), the
+# fact 1. The distributed path starts 21 for the same batch (silver 1,
+# each dim 6, the fact 3), the whole-layer rebuild before it 30.
+BATCH_JOBS = 12
 
 # pipe.last_batch's keys: every table a batch decides on, past bronze.
 LAYERS = ["silver/events", "gold/dim_user", "gold/dim_event_type", "gold/fact"]
@@ -68,7 +71,7 @@ def _run_batch(spark, pipe: MedallionPipeline, root: str) -> None:
     _run_gold(pipe)
 
 
-def _run_gold(pipe: MedallionPipeline) -> None:
+def _run_gold(pipe: MedallionPipeline):
     silver = pipe.build_silver("events", _silver)
     dim_user = pipe.build_gold_dim("dim_user", silver, ["user_id"], ["tier"], "dim_user_key")
     dim_type = pipe.build_gold_dim(
@@ -82,62 +85,84 @@ def _run_gold(pipe: MedallionPipeline) -> None:
         },
         ["event_id", "ts", "value"],
     )
+    return silver
+
+
+TABLES = [("silver", "events"), ("gold", "dim_user"), ("gold", "dim_event_type"),
+          ("gold", "fact")]
 
 
 def _gold(pipe: MedallionPipeline) -> dict[str, list[tuple]]:
     """Every silver and gold table as sorted rows, timestamps as epoch µs."""
     out = {}
-    for layer, table in [("silver", "events"), ("gold", "dim_user"),
-                         ("gold", "dim_event_type"), ("gold", "fact")]:
+    for layer, table in TABLES:
         df = pipe.read(layer, table)
         if "ts" in df.columns:
             df = df.withColumn("ts", F.unix_micros("ts"))
-        out[table] = sorted(tuple(r) for r in df.collect())
+        out[table] = sorted((tuple(r) for r in df.collect()), key=repr)
     return out
 
 
 def _expected(batches: list[pa.Table]) -> dict[str, list[tuple]]:
     """The full rebuild over every delivered row, with surrogate keys in
-    first-seen batch, then natural key order (the benchmark's oracle)."""
+    first-seen batch, then natural key order, NULLS FIRST (the benchmark's
+    oracle). A NULL natural key matches nothing, so each batch that
+    delivers one adds one dim row for it, and its facts get no key."""
     rows = [(b, r) for b, t in enumerate(batches) for r in t.to_pylist()]
-    first = {"user_id": {}, "event_type": {}}
-    for b, r in rows:
-        for col, seen in first.items():
-            seen.setdefault(r[col], b)
-    keys = {
-        col: {v: i + 1 for i, v in enumerate(sorted(seen, key=lambda v: (seen[v], v)))}
-        for col, seen in first.items()
-    }
+    keys = {}
+    for col in ("user_id", "event_type"):
+        seen = {}  # natural key (a NULL one with its batch) -> first batch
+        for b, r in rows:
+            seen.setdefault(r[col] if r[col] is not None else (None, b), b)
+        order = sorted(seen, key=lambda v: (seen[v], not isinstance(v, tuple), v))
+        keys[col] = {v: i + 1 for i, v in enumerate(order)}
     epoch = datetime.datetime(1970, 1, 1)
 
     def us(ts):
         return (ts - epoch) // datetime.timedelta(microseconds=1)
 
     def tier(u):
-        return f"t{u % 7}"
+        return None if u is None else f"t{u % 7}"
+
+    def natural(v):
+        return None if isinstance(v, tuple) else v
+
+    def category(e):
+        return None if e is None else e[:3]
+
+    def fk(col, r):
+        return keys[col].get(r[col])
 
     return {
-        "events": sorted(
+        "events": sorted((
             (r["event_id"], us(r["ts"]), r["user_id"], r["event_type"], r["value"],
-             tier(r["user_id"]), r["event_type"][:3])
+             tier(r["user_id"]), category(r["event_type"]))
             for _, r in rows
-        ),
-        "dim_user": sorted((k, u, tier(u)) for u, k in keys["user_id"].items()),
-        "dim_event_type": sorted((k, e, e[:3]) for e, k in keys["event_type"].items()),
-        "fact": sorted(
-            (r["event_id"], us(r["ts"]), r["value"], keys["user_id"][r["user_id"]],
-             keys["event_type"][r["event_type"]])
+        ), key=repr),
+        "dim_user": sorted(((k, natural(u), tier(natural(u)))
+                            for u, k in keys["user_id"].items()), key=repr),
+        "dim_event_type": sorted(((k, natural(e), category(natural(e)))
+                                  for e, k in keys["event_type"].items()), key=repr),
+        "fact": sorted((
+            (r["event_id"], us(r["ts"]), r["value"], fk("user_id", r), fk("event_type", r))
             for _, r in rows
-        ),
+        ), key=repr),
     }
+
+
+def _null_every(col: pa.ChunkedArray, k: int, offset: int) -> pa.Array:
+    """``col`` with every ``k``-th value from ``offset`` on set to NULL."""
+    values = col.to_pylist()
+    return pa.array([None if i % k == offset else v for i, v in enumerate(values)], col.type)
 
 
 def _cut(kinds: list[str], sizes: list[int]) -> list[pa.Table]:
     """Batches of the fixture events in timestamp order, one per kind:
     ``rows`` takes the next rows, ``empty`` none, ``existing`` only next
-    rows whose user and event type earlier batches delivered, and
+    rows whose user and event type earlier batches delivered,
     ``new_type`` the next rows with half of them under an event type no
-    batch had."""
+    batch had, and ``null_keys`` the next rows with every third user and
+    every fifth event type NULL."""
     events = _events()
     pos, seen_users, seen_types, out = 0, set(), set(), []
     for b, (kind, size) in enumerate(zip(kinds, sizes)):
@@ -155,6 +180,10 @@ def _cut(kinds: list[str], sizes: list[int]) -> list[pa.Table]:
             take = take.set_column(
                 take.schema.get_field_index("event_type"), "event_type", pa.array(types)
             )
+        elif kind == "null_keys":
+            for col, k, offset in (("user_id", 3, 0), ("event_type", 5, 1)):
+                i = take.schema.get_field_index(col)
+                take = take.set_column(i, col, _null_every(take.column(col), k, offset))
         seen_users |= set(take.column("user_id").to_pylist())
         seen_types |= set(take.column("event_type").to_pylist())
         out.append(take)
@@ -162,35 +191,96 @@ def _cut(kinds: list[str], sizes: list[int]) -> list[pa.Table]:
 
 
 @given(
-    kinds=st.lists(st.sampled_from(["rows", "empty", "existing", "new_type"]),
+    kinds=st.lists(st.sampled_from(["rows", "empty", "existing", "new_type", "null_keys"]),
                    min_size=1, max_size=4),
     sizes=st.lists(st.integers(1, 250), min_size=4, max_size=4),
 )
 @example(kinds=["rows", "empty", "existing", "new_type"], sizes=[300, 40, 120, 60])
+@example(kinds=["null_keys", "rows", "null_keys", "existing"], sizes=[200, 60, 40, 50])
 @settings(max_examples=3, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_change_set_batches_equal_one_full_rebuild(spark, tmp_path_factory, kinds, sizes):
+def test_change_set_batches_equal_one_full_rebuild(
+    spark, tmp_path_factory, monkeypatch, kinds, sizes
+):
     """Silver, both dims and the fact after the batches equal one full
     rebuild over all delivered rows, for any cut into 1–4 batches: empty
-    ones, ones with only known dim keys and ones with a new event type.
-    The first batch builds every layer ("no epoch"); each later one
-    applies its rows, or skips an empty window."""
-    root = str(tmp_path_factory.mktemp("src"))
-    pipe = MedallionPipeline(spark, str(tmp_path_factory.mktemp("lake")))
+    ones, ones with only known dim keys, ones with a new event type and
+    ones with NULL natural keys (each batch's NULL key is a new dim row,
+    which later upserts keep); every batch repeats dim keys. The first
+    batch builds every layer ("no epoch"); each later one applies its
+    rows, or skips an empty window. Run with CHANGE_SET_BUDGET at 0
+    (every layer distributed) and at its default (every apply held on
+    the driver), and each dim commits ``max_key`` = its largest key."""
     batches = _cut(kinds, sizes)
-    delivered = 0
-    for b, rows in enumerate(batches):
-        _deliver(root, b, rows)
+    for budget in (0, medallion_mod.CHANGE_SET_BUDGET):
+        monkeypatch.setattr(medallion_mod, "CHANGE_SET_BUDGET", budget)
+        root = str(tmp_path_factory.mktemp("src"))
+        pipe = MedallionPipeline(spark, str(tmp_path_factory.mktemp("lake")))
+        delivered = 0
+        for b, rows in enumerate(batches):
+            _deliver(root, b, rows)
+            if delivered:
+                want = ("apply", None) if rows.num_rows else ("skip", None)
+            else:
+                want = ("rebuild", "no epoch")
+            delivered += rows.num_rows
+            if delivered:  # before the first row there is no source to read
+                _run_batch(spark, pipe, root)
+                assert pipe.last_batch == dict.fromkeys(LAYERS, want), (budget, b)
+                held = pipe._silver["events"].held is not None
+                assert held == (want == ("apply", None) and budget > 0), (budget, b)
         if delivered:
-            want = ("apply", None) if rows.num_rows else ("skip", None)
-        else:
-            want = ("rebuild", "no epoch")
-        delivered += rows.num_rows
-        if delivered:  # before the first row there is no source to read
-            _run_batch(spark, pipe, root)
-            assert pipe.last_batch == dict.fromkeys(LAYERS, want), b
-    if delivered:
-        assert _gold(pipe) == _expected(batches)
+            gold = _gold(pipe)
+            assert gold == _expected(batches), budget
+            for table in ("dim_user", "dim_event_type"):
+                record = sinks.commit_record(pipe.path("gold", table))
+                assert record["max_key"] == max(r[0] for r in gold[table]), (budget, table)
+
+
+def test_held_and_distributed_batches_store_one_schema(spark, tmp_path, monkeypatch):
+    """A batch held on the driver writes silver, both dims and the fact
+    with the footer schema the distributed path writes. A dim keyed on a
+    type whose Python order is not Spark's (a double) takes ``build_dim``
+    on either path; the others do not on the held one. A silver table
+    with a column Arrow cannot carry (a year-month interval) appends
+    without being held."""
+    history, batch = _history_and_batches(1)
+    built = []
+    real = medallion_mod.build_dim
+
+    def spy(source, natural_keys, *args, **kwargs):
+        built.append(natural_keys)
+        return real(source, natural_keys, *args, **kwargs)
+
+    monkeypatch.setattr(medallion_mod, "build_dim", spy)
+
+    def run_batch(pipe, root):
+        pipe.ingest_bronze(load_table(spark, root, "events"), "events", "ts", ["event_id"],
+                           INITIAL, partition_daily=True)
+        silver = _run_gold(pipe)
+        pipe.build_gold_dim("dim_value", silver, ["value"], [], "dim_value_key")
+        pipe.build_silver("events_aged", lambda df: _silver(df).withColumn(
+            "age", F.expr("INTERVAL '1' YEAR")), "events")
+
+    schemas, default = {}, medallion_mod.CHANGE_SET_BUDGET
+    for budget in (0, default):
+        monkeypatch.setattr(medallion_mod, "CHANGE_SET_BUDGET", budget)
+        root = str(tmp_path / f"src{budget}")
+        pipe = MedallionPipeline(spark, str(tmp_path / f"lake{budget}"))
+        for b, rows in enumerate((history, batch)):
+            _deliver(root, b, rows)
+            del built[:]
+            run_batch(pipe, root)
+        assert set(pipe.last_batch.values()) == {("apply", None)}
+        assert (pipe._silver["events"].held is not None) == bool(budget)
+        assert pipe._silver["events_aged"].held is None
+        keys = [["value"]] if budget else [["user_id"], ["event_type"], ["value"]]
+        assert built == keys, budget
+        schemas[budget] = {
+            table: sinks._stored_schema(pipe.path(layer, table))[1].simpleString()
+            for layer, table in TABLES
+        }
+    assert schemas[0] == schemas[default]
 
 
 def _history_and_batches(n_batches: int) -> list[pa.Table]:
@@ -202,16 +292,22 @@ def _history_and_batches(n_batches: int) -> list[pa.Table]:
 def test_killed_between_layers_reruns_to_the_uninterrupted_gold(
     spark, tmp_path, monkeypatch, kill
 ):
-    """Kill points after silver's commit and before the dims
-    (``build_dim``), and after the dims and before the fact
-    (``build_fact``). Re-running the batch rebuilds the layers left
-    behind ("epoch mismatch") and skips the rest, gives the
+    """Kill points after silver's commit and before the dims'
+    (``build_dim``: the first dim's swap raises), and after the dims'
+    commits and before the fact's (``build_fact``: its append raises),
+    with CHANGE_SET_BUDGET at 0 (every layer distributed) and at its
+    default (held on the driver). Re-running the batch rebuilds the
+    layers left behind ("epoch mismatch") and skips the rest, gives the
     uninterrupted gold, and the next batch applies on top of it."""
     batches = _history_and_batches(2)
-    real = getattr(medallion_mod, kill)
+    writer, table = {"build_dim": ("atomic_overwrite", "dim_user"),
+                     "build_fact": ("append_into", "fact")}[kill]
+    real = getattr(medallion_mod, writer)
 
-    def killed(*args, **kwargs):
-        monkeypatch.setattr(medallion_mod, kill, real)  # raise once
+    def killed(df, path, *args, **kwargs):
+        if os.path.basename(path) != table:
+            return real(df, path, *args, **kwargs)
+        monkeypatch.setattr(medallion_mod, writer, real)  # raise once
         raise RuntimeError(f"killed in {kill}")
 
     def run(base, crash):
@@ -221,7 +317,7 @@ def test_killed_between_layers_reruns_to_the_uninterrupted_gold(
         for b, rows in enumerate(batches):
             _deliver(root, b, rows)
             if crash and b == 1:
-                monkeypatch.setattr(medallion_mod, kill, killed)
+                monkeypatch.setattr(medallion_mod, writer, killed)
                 with pytest.raises(RuntimeError, match="killed"):
                     _run_batch(spark, pipe, root)
                 behind = LAYERS[1:] if kill == "build_dim" else LAYERS[3:]
@@ -239,7 +335,10 @@ def test_killed_between_layers_reruns_to_the_uninterrupted_gold(
             snapshots.append(_gold(pipe))
         return snapshots
 
-    assert run(tmp_path / "killed", True) == run(tmp_path / "clean", False)
+    for budget in (0, medallion_mod.CHANGE_SET_BUDGET):
+        monkeypatch.setattr(medallion_mod, "CHANGE_SET_BUDGET", budget)
+        base = tmp_path / str(budget)
+        assert run(base / "killed", True) == run(base / "clean", False), budget
 
 
 def _part_files(path: str) -> dict[str, tuple[int, int]]:
@@ -427,3 +526,34 @@ def test_medallion_decision_defined_once():
     for fn in (MedallionPipeline.build_silver, MedallionPipeline.build_gold_dim,
                MedallionPipeline.build_gold_fact):
         assert "self._decide(" in inspect.getsource(fn), fn.__name__
+
+
+def test_held_change_set_defined_once():
+    """The driver-held path has one budget, one collect and one way back
+    into a plan: ``CHANGE_SET_BUDGET`` is assigned once in the package,
+    ``plans/medallion.py`` collects a change set with one ``toArrow(``
+    (``toPandas`` would turn a nullable bigint key into a float) and
+    builds local relations with one ``createDataFrame(``, both in
+    ``_Held``; and the source-file skip of ``run_incremental_batch`` is
+    the package's one filter on a ``_metadata`` column."""
+    import inspect
+    import pathlib
+
+    package = pathlib.Path(medallion_mod.__file__).parents[1]
+    sources = {p: p.read_text() for p in package.rglob("*.py")}
+
+    def count(needle: str) -> int:
+        return sum(text.count(needle) for text in sources.values())
+
+    assert count("CHANGE_SET_BUDGET =") == 1
+    src = inspect.getsource(medallion_mod)
+    held = inspect.getsource(medallion_mod._Held)
+    for needle in ("toArrow(", "createDataFrame("):
+        assert src.count(needle) == held.count(needle) == 1, needle
+    assert "toPandas(" not in src and ".collect()" not in src.replace(held, "")
+    filters = [line for text in sources.values() for line in text.splitlines()
+               if "_metadata." in line
+               and any(f in line for f in ("filter(", "where(", "isin(", "lit_in("))]
+    assert [f.strip() for f in filters] == [
+        'source = source.filter(~lit_in("_metadata.file_path", settled))'
+    ]

@@ -4,6 +4,8 @@ are capped small and deadlines disabled."""
 
 from __future__ import annotations
 
+import random
+
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -320,6 +322,57 @@ def test_build_dim_matches_python_reference(
     base = 0 if existing is None else (max_key if max_key is not None else top)
     want += [(base + i, k, change[k]) for i, k in enumerate(fresh, 1)]
     assert _sorted_rows(got.collect()) == _sorted_rows(want)
+
+
+# String natural keys whose Python order must be Spark's binary order, and
+# whose SQL rendering must survive quotes and backslashes.
+HELD_STRING_KEYS = ["", "a", "B", "a'b", "a\\b", "\u00e9", "z", "ab", "Ab", "\u00fc", "10", "9"]
+
+
+@given(
+    stored=st.lists(st.tuples(nullable_key, nullable_attr), max_size=8),
+    sks=st.randoms(use_true_random=False),
+    change=st.dictionaries(nullable_key, nullable_attr, max_size=8),
+    copies=st.integers(min_value=1, max_value=3),
+    headroom=st.integers(min_value=0, max_value=3),
+    strings=st.booleans(),
+)
+@example(stored=[(None, "x"), (1, "y"), (2, None)], sks=random.Random(0),
+         change={1: "x", None: "y", 3: None}, copies=2, headroom=1, strings=True)
+@settings(**SMALL)
+def test_held_scd1_upsert_matches_build_dim(
+    spark, stored, sks, change, copies, headroom, strings
+):
+    """The medallion's driver-side SCD1 upsert of a held change set
+    (``_Held.upsert``) gives ``build_dim``'s rows on the same inputs:
+    NULL natural keys in the change set and in the stored dim,
+    duplicate change rows, integer and string keys, and a committed
+    ``max_key`` at or above the stored keys. Its key map holds each
+    non-NULL change-set key's surrogate key in that dim."""
+    from incremental_data_pipeline_spark.operators.scd import build_dim
+    from incremental_data_pipeline_spark.plans.medallion import _ChangeSet, _Held
+
+    def key(k):
+        return HELD_STRING_KEYS[k] if strings and k is not None else k
+
+    stored = list({k: (k, a) for k, a in stored if k is not None}.values()) + [
+        (k, a) for k, a in stored if k is None
+    ]
+    keys = list(range(1, len(stored) + 1))
+    sks.shuffle(keys)
+    dim = [(sk, key(k), a) for sk, (k, a) in zip(keys, stored)]
+    ktype = "string" if strings else "int"
+    existing = spark.createDataFrame(dim, f"sk long, k {ktype}, a string")
+    src = spark.createDataFrame([(key(k), a) for k, a in change.items()] * copies,
+                                f"k {ktype}, a string")
+    max_key = max(keys, default=0) + headroom
+
+    held = _Held.hold(_ChangeSet(src, 0, 1))
+    got, key_map = _Held.upsert(held, existing, "k", ["a"], "sk", max_key)
+    want = build_dim(src, ["k"], ["a"], "sk", existing, scalable_keys=False, max_key=max_key)
+    want = _sorted_rows(want.collect())
+    assert _sorted_rows(got.collect()) == want
+    assert key_map == {k: sk for sk, k, _ in want if k in {key(c) for c in change} - {None}}
 
 
 scd2_key = st.one_of(st.none(), st.integers(min_value=0, max_value=3))

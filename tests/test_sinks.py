@@ -681,12 +681,16 @@ def _rows(df):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(shape=st.sampled_from(["versioned", "txn"]), k=st.integers(1, 6))
 @example(shape="versioned", k=1)  # the vN rename: the commit point
+@example(shape="versioned", k=2)  # the _CURRENT flip, after the commit point
 @example(shape="txn", k=5)  # the manifest link: the commit point
 def test_killed_versioned_and_txn_writes_rerun_like_uninterrupted(spark, tmp_path, shape, k):
     """Kill a ``versioned_overwrite`` or a two-table
     ``multi_table_transaction`` at its k-th rename/replace/link. A reader
-    then sees the previous state or the new one, never a mix, and
-    re-running the write gives what an uninterrupted run gives
+    then sees the previous state if the kill came at or before the
+    write's commit point (the ``vN`` rename, step 1; the manifest link,
+    step 5), and the new one after it — never a mix, and never a
+    committed version hidden behind a pointer its writer did not flip.
+    Re-running the write gives what an uninterrupted run gives
     (``read_version``, ``read_txn_table``)."""
     from incremental_data_pipeline_spark.sources import transactions as tx
 
@@ -713,9 +717,24 @@ def test_killed_versioned_and_txn_writes_rerun_like_uninterrupted(spark, tmp_pat
     with _killed_at(k), contextlib.suppress(OSError):
         write(killed, [3, 4, 5])
         assert k > len(steps), f"step {k} of {steps} was not reached"
-    assert read(killed) in (before, after)
+    commit = {"versioned": 1, "txn": 5}[shape]
+    assert read(killed) == (after if k > commit else before)
     write(killed, [3, 4, 5])  # the re-run
     assert read(killed) == after
+
+
+def test_first_versioned_write_killed_after_its_commit_point_is_read(spark, tmp_path):
+    """A table's first ``versioned_overwrite`` killed between the rename
+    to ``v1`` (its commit point) and the ``_CURRENT`` flip has committed:
+    ``read_version`` reads ``v1``. Reading the pointer alone looked for
+    ``v0`` and raised FileNotFoundError."""
+    path = str(tmp_path / "first")
+    with _killed_at(2) as steps, contextlib.suppress(OSError):
+        sinks.versioned_overwrite(_mk2(spark, [1, 2]), path)
+    assert steps == ["rename", "replace"]
+    assert _rows(sinks.read_version(spark, path)) == [(1, 10.0), (2, 20.0)]
+    assert sinks.versioned_overwrite(_mk2(spark, [3]), path) == 2
+    assert _rows(sinks.read_version(spark, path)) == [(3, 30.0)]
 
 
 def _txn_worker(root: str, wid: int, target: int, results):
