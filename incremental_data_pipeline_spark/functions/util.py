@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import os
+import urllib.parse
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
@@ -98,15 +99,26 @@ FAN_OUT_ARROW_BPT = 128 * 1024
 FAN_OUT_CHEAP_MAP_BPT = 256 * 1024
 
 
+def local_path(uri: str) -> str | None:
+    """The local path a ``file:`` URI names, percent-decoded, in either of
+    Spark's spellings (``file:/a%20b`` from ``_metadata.file_path``,
+    ``file:///a%20b`` from ``inputFiles``); None for another scheme."""
+    if not uri.startswith("file:"):
+        return None
+    return urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+
+
 def _input_bytes(df: DataFrame, files: list[str]) -> int:
     """On-disk bytes behind a scan, from the driver-side file list."""
     total = 0
     for uri in files:
-        path = uri[5:] if uri.startswith("file:") else uri
+        path = local_path(uri)
+        if path is None:
+            return -1  # non-local URI — caller falls back to core count
         try:
             total += os.path.getsize(path)
         except OSError:
-            return -1  # non-local URI — caller falls back to core count
+            return -1
     return total
 
 

@@ -929,13 +929,14 @@ def ivf_index_upsert(
     allow_moves: bool = False,
 ) -> None:
     """Incrementally add vectors to a persisted IVF index WITHOUT a
-    rebuild: assign the batch to cells, then dynamically overwrite exactly
-    the touched cell partitions with (existing ∪ batch), deduped on id
-    with the batch winning — ``sinks.merge_partitions``, the same merge the
-    day-partitioned bronze sink runs, keyed by cell instead of day. A
-    stored schema that drifted from the batch's raises
-    ``IvfIndexSchemaError`` before anything is written. Untouched cells are
-    never read or written.
+    rebuild: assign the batch to cells, then replace exactly the touched
+    cell partitions with (existing ∪ batch), deduped on id with the batch
+    winning — ``sinks.merge_partitions``, the same merge the
+    day-partitioned bronze sink runs, keyed by cell instead of day, and
+    committed through the index's commit record. The first batch into a
+    missing index writes it. A stored schema that drifted from the
+    batch's raises ``IvfIndexSchemaError`` before anything is written.
+    Untouched cells are never read or written.
 
     Dedup scope: with the default ``allow_moves=False`` the id-dedup is
     APPEND/REPLAY-safe only — re-delivery of an identical row is absorbed,
@@ -944,79 +945,44 @@ def ivf_index_upsert(
     ``allow_moves=True`` when updates are possible: the batch ids are
     semi-joined against the full index's (id, cell) columns — a
     column-pruned scan, no vector bytes move — and any cell holding a
-    stale copy joins the touched set so the old row is dropped too.
+    stale copy joins the touched set, so the old row is dropped too. A
+    cell whose only occupants all moved out receives no row: the merge's
+    commit supersedes its files and removes its directory.
 
     The codebook must be the one the index was built with (centroid drift
     requires a rebuild — same contract as any IVF implementation).
 
-    Small-files note: no separate compaction step is needed — the dynamic
-    overwrite rewrites each touched cell WHOLESALE through one cell-keyed
-    REBALANCE, so a cell is always ~one advisory-sized file set
-    regardless of how many upsert bursts touched it (verified: repeated
-    upserts leave one file per cell at fixture scale). This is
-    deliberate: an append-based upsert would need the compaction cadence
-    `sources/maintenance.compact_table` gives plain tables."""
+    Small-files note: no separate compaction step is needed — the merge
+    rewrites each touched cell WHOLESALE through one cell-keyed
+    REBALANCE and its commit removes the cell's previous files, so a cell
+    is always ~one advisory-sized file set regardless of how many upsert
+    bursts touched it (verified: repeated upserts leave one file per cell
+    at fixture scale). This is deliberate: an append-based upsert would
+    need the compaction cadence `sources/maintenance.compact_table` gives
+    plain tables."""
     batch = fan_out(new_rows).select(
         F.col(id_col),
         quantize("embedding").alias("cv"),
         let(quantize("embedding"), lambda v: _cell_of(centroids, v)).alias("cell"),
     ).dropDuplicates([id_col])
-    idx = read_table(spark, path)
-    if idx is None:  # first batch bootstraps the index
-        batch.hint("rebalance", "cell").write.partitionBy("cell").parquet(path)
-        return
-    # The assigned batch feeds several jobs in this call (cell collect,
-    # the allow_moves probes, the merge write); persist it for the call's
-    # lifetime so the quantize+argmax assignment runs once per batch
-    # instead of once per job (r10 — batch-sized state, freed on exit).
+    # The assigned batch feeds two jobs in this call (the touched-cell
+    # collect and the merge write); persist it for the call's lifetime so
+    # the quantize+argmax assignment runs once per batch instead of once
+    # per job (r10 — batch-sized state, freed on exit).
     batch.persist()
     try:
-        _ivf_upsert_merge(spark, batch, idx, path, id_col, allow_moves)
+        cells = batch.select("cell")
+        idx = read_table(spark, path)
+        if allow_moves and idx is not None:
+            # cells holding a stale copy of an updated id (id+partition
+            # cols only — parquet reads no vector bytes for this)
+            stale = idx.select(id_col, "cell").join(batch.select(id_col), id_col, "semi")
+            cells = cells.unionByName(stale.select("cell"))
+        # a missing index takes the batch whole: no cell to collect
+        touched = [] if idx is None else sorted({r["cell"] for r in cells.distinct().collect()})
+        merge_partitions(spark, batch, path, [id_col], "cell", F.col("cell").isin(touched))
     finally:
         batch.unpersist()
-
-
-def _ivf_upsert_merge(
-    spark, batch: DataFrame, idx: DataFrame, path: str, id_col: str, allow_moves: bool
-) -> None:
-    batch_cells = {r["cell"] for r in batch.select("cell").distinct().collect()}
-    touched = set(batch_cells)
-    emptied: set = set()
-    if allow_moves:
-        # cells holding a stale copy of an updated id (id+partition cols
-        # only — parquet reads no vector bytes for this)
-        idx_cols = idx.select(id_col, "cell")
-        stale_cells = {
-            r["cell"]
-            for r in idx_cols.join(batch.select(id_col), id_col, "semi")
-            .select("cell")
-            .distinct()
-            .collect()
-        }
-        touched |= stale_cells
-        # A cell whose ONLY occupants moved out receives no rows in the
-        # merge, and dynamic partitionOverwriteMode rewrites only
-        # partitions that RECEIVE rows — without an explicit drop the
-        # stale copies would survive in the never-rewritten directory.
-        # Emptied = stale cells with no surviving occupant and no batch
-        # arrival; both probes are id+cell column-pruned, nlist-bounded.
-        surviving_cells = {
-            r["cell"]
-            for r in idx_cols.join(batch.select(id_col), id_col, "anti")
-            .select("cell")
-            .distinct()
-            .collect()
-        }
-        emptied = stale_cells - surviving_cells - batch_cells
-    merge_partitions(
-        spark, batch, path, [id_col], "cell", F.col("cell").isin(sorted(touched))
-    )
-    if emptied:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        for c in sorted(emptied):
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/cell={c}")
-            p.getFileSystem(hconf).delete(p, True)
 
 
 def ivf_index_probe(

@@ -65,9 +65,9 @@ Held change sets. At a batch's size the fixed cost of a Spark job is
 the cost, and under AQE every exchange is a job: a 100-row batch ran
 21 (bronze 5, silver 1, each dim 6, the fact 3). So when silver
 applies a batch of at most ``CHANGE_SET_BUDGET`` rows (the count
-``run_incremental_batch`` observed on bronze's write; unknown with
-``count_rows=False``), the layers after bronze run on its rows held on
-the driver (``_Held``), and a batch takes 12 jobs:
+``run_incremental_batch`` observed on bronze's write), the layers after
+bronze run on its rows held on the driver (``_Held``), and a batch
+takes 12 jobs:
 
 - silver collects its change set once (``toArrow``) and appends it as
   a local relation, a plan literal of one part file: 2 jobs;
@@ -371,13 +371,17 @@ class MedallionPipeline:
         (fixes the reference's append-only silver, SURVEY §2.9 #7).
 
         ``partition_daily=True`` is the at-scale layout: bronze is
-        partitioned by day and each batch dynamically overwrites only the
-        day partitions its watermark window touches — the replay guard's
-        sink re-read is partition-pruned to those days instead of scanning
-        the whole layer.
+        partitioned by day and each batch replaces only the day
+        partitions its watermark window touches
+        (``sinks.merge_partitions``) — the replay guard's sink re-read is
+        partition-pruned to those days instead of scanning the whole
+        layer.
 
-        The batch's window is kept for ``build_silver``, whose change set
-        is the bronze rows in it."""
+        The batch's window and size are kept for ``build_silver``, whose
+        change set is the bronze rows in it. Returns the rows the batch
+        delivered, as ``run_incremental_batch`` counted them.
+        ``count_rows`` has no effect: the count is always taken, on the
+        sink's own write."""
         store = WatermarkStore(
             self.spark, self.path("state", f"{table}_watermark"), initial_watermark
         )
@@ -412,7 +416,7 @@ class MedallionPipeline:
                 idempotent_append(self.spark, batch, sink_path, keys)
                 replaced.append(0)  # a re-delivered key is dropped, not replaced
 
-        n = run_incremental_batch(source, ts_col, store, sink, current_load, count_rows)
+        n = run_incremental_batch(source, ts_col, store, sink, current_load)
         new, rows = store.read(), self.read("bronze", table)
         epochs = _epoch(last), _epoch(new)
         if None not in (*epochs, rows):
@@ -421,8 +425,7 @@ class MedallionPipeline:
             if lo is not None:  # prune to the day partitions the batch touched
                 window &= (F.col(_DAY) >= F.lit(lo)) & (F.col(_DAY) <= F.lit(new.date()))
             why = None if replaced == [0] else "bronze rows replaced"
-            size = n if n >= 0 else None  # unknown with count_rows=False
-            self._bronze[table] = _ChangeSet(rows.filter(window), *epochs, why, size)
+            self._bronze[table] = _ChangeSet(rows.filter(window), *epochs, why, n)
         return n
 
     # -- silver: declarative transform --

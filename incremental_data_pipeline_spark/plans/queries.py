@@ -612,14 +612,14 @@ def medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seed = datetime.datetime(2023, 1, 1)
     cut = datetime.datetime.fromisoformat(_E2E_CUT)
-    # Bronze is time-partitioned with dynamic partition overwrite: the
-    # replay guard re-reads only the partitions the window touches, not
+    # Bronze is time-partitioned and each batch replaces only the
+    # partitions its window touches: the replay guard re-reads those, not
     # the whole layer. Month granularity fits the fixture's volume; 'day'
     # is the production setting (see idempotent_overwrite_day_partitions).
     for current in (cut, None):  # batch 1: (seed, cut]; batch 2: (cut, max(ts)]
         pipe.ingest_bronze(
             events, "events", "ts", ["event_id"], seed, current,
-            count_rows=False, partition_daily=True, partition_granularity="month",
+            partition_daily=True, partition_granularity="month",
         )
         silver = pipe.build_silver("events", lambda df: df)
         # The two dims are independent read-modify-write jobs over the same
@@ -1704,7 +1704,7 @@ def stream_scd1_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bronze_partition_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-window raw-layer retention: events land day-partitioned
-    (dynamic partition overwrite), then maintenance.expire_partitions
+    (``sinks.overwrite_partitions``), then maintenance.expire_partitions
     keeps the last 7 day-directories — the 'retain N days of bronze'
     policy, partition deletes only, no rewrite of survivors. The oracle
     reconstructs the expected surviving window, so an off-by-one in the
@@ -3290,7 +3290,7 @@ def corpus_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for current in (250, None):  # batch 1: (-1, 250]; batch 2: (250, max]
         pipe.ingest_bronze(
-            docs, "documents", "doc_id", ["doc_id"], -1, current, count_rows=False
+            docs, "documents", "doc_id", ["doc_id"], -1, current
         )
 
         def curate(bronze: DataFrame) -> DataFrame:
@@ -12793,7 +12793,7 @@ def ann_ivf_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF as a PERSISTED index (build once / upsert incrementally / probe
     many — the ANN serving shape): 80% of the corpus is built into a
     cell-partitioned parquet index, the remaining 20% is upserted WITHOUT
-    a rebuild (dynamic overwrite of only the touched cell partitions), and
+    a rebuild (a merge that replaces only the touched cell partitions), and
     the probe reads ONLY the probed cells via partition pruning. The final
     index holds the whole corpus, so the oracle is the standard IVF twin
     on a fresh query window — proving build+upsert+probe end-to-end equals
@@ -12911,7 +12911,7 @@ def stream_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     index without rebuilds.
 
     Scale shape: per batch, assignment is a narrow map over the BATCH and
-    the dynamic overwrite touches only that batch's cells — cost scales
+    the merge touches only that batch's cells — cost scales
     with the increment, never the index."""
     base = scratch_dir("stream_ivf_idx_")
     src = os.path.join(base, "src")
@@ -13004,9 +13004,8 @@ def ann_ivf_index_moves_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the UPDATED corpus from scratch. A stale copy surviving in a moved
     id's old cell is an extra row (rows mismatch); a missed eviction of an
     emptied cell or a wrong destination flips the value hash — this pins
-    the `allow_moves` contract end-to-end, including the
-    dynamic-overwrite-skips-empty-partitions edge
-    (`operators/similarity.py ivf_index_upsert`)."""
+    the `allow_moves` contract end-to-end, including a cell the update
+    empties (`operators/similarity.py ivf_index_upsert`)."""
     emb = load_table(spark, sf_dir, "embeddings")
     codebook = _cached_codebook(emb, sf_dir, 8, "prefix")
     path = os.path.join(scratch_dir("ivf_moves_"), "index")

@@ -22,7 +22,9 @@ Design notes (scale):
   original intact.
 - Partitioned tables compact WITHIN each partition (one shuffle keyed by
   partition value + a file-count salt), preserving the partition layout
-  that downstream pruning depends on.
+  that downstream pruning depends on. Their rewrite is
+  ``sinks.overwrite_partitions``: one staged commit through the table's
+  commit record, which it keeps, superseding every file it rewrote.
 """
 
 from __future__ import annotations
@@ -126,9 +128,9 @@ def compact_table(
     partition directory is bin-packed independently — a tiny per-partition
     row-count dim (broadcast back onto the data) sizes a salt
     ``pmod(hash, files_for_this_partition)``, the table shuffles once on
-    (partition values, salt), and dynamic partition overwrite rewrites the
-    directories in place, preserving the layout downstream pruning
-    depends on. Per-partition bytes are estimated as rows × the table's
+    (partition values, salt), and ``sinks.overwrite_partitions`` replaces
+    every directory's files in one staged commit, preserving the layout
+    downstream pruning depends on. Per-partition bytes are estimated as rows × the table's
     global bytes/row — exact enough for packing, and it avoids a second
     footer pass.
 
@@ -141,7 +143,7 @@ def compact_table(
 
     Data-preserving by construction (a pure rewrite — no dedup, no
     reorder semantics) and atomic via temp-write + swap (unpartitioned) /
-    dynamic partition overwrite (partitioned). The table's commit record
+    the replace of the commit record (partitioned). The table's commit record
     (epoch and marks) survives either way, so a medallion table compacted
     between batches still takes the next batch's append. Returns
     {'files_before', 'files_after', 'bytes', 'rows'}.

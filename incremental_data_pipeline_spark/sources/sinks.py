@@ -10,8 +10,6 @@ once per storage shape:
   place with rollback — ``atomic_overwrite`` and ``WatermarkStore.advance``.
   Writing first also breaks the Spark self-overwrite trap (SURVEY §7
   "what's hard" (a)).
-- **Keyed partition merge** (``merge_partitions``): batch-wins merge into
-  the touched partitions — day-partitioned bronze and the IVF index.
 - **Version directory** (``version_dir``, ``versioned_overwrite``,
   ``drop_version``): immutable ``vN`` dirs, a ``.commit`` marker and a
   ``_CURRENT`` pointer — time travel and ``sources.transactions``.
@@ -20,16 +18,31 @@ once per storage shape:
   batch's epoch with it so a replayed batch is skipped — the apply step
   of every streaming state table (the change-query apply: old version
   plus change set gives the new version). The swap is
-  ``atomic_overwrite``, the only writer of a swap's commit record: the
-  epoch, plus marks observed on the rows as they are written (a dim's
-  surrogate-key high-water mark), commit in the same rename as the rows,
-  and a compaction carries a table's record over verbatim.
-- **Epoch append** (``append_into``): a flat table's change set lands as
-  new part files, committed by one atomic replace of the table's commit
-  record — the medallion's silver and fact appends.
+  ``atomic_overwrite``, whose commit record (the epoch, plus marks
+  observed on the rows as they are written: a dim's surrogate-key
+  high-water mark) commits in the same rename as the rows; a compaction
+  carries a table's record over verbatim.
+- **Staged commit** (``append_into``, ``merge_partitions``,
+  ``overwrite_partitions``): new part files are written to a hidden
+  stage directory inside the table, and one atomic replace of the
+  table's commit record names the stage and the stored files it
+  supersedes — the change-query model of "What's the Difference?"
+  (Snowflake change queries, SIGMOD 2023), a commit as files added and
+  files removed. An epoch append (the medallion's silver and fact)
+  removes none; a keyed partition merge (day-partitioned bronze, the IVF
+  index) removes exactly the files its pruned read scanned, so a
+  partition the merge empties is dropped with its stale rows; a
+  partition overwrite (a partitioned compaction) removes every file of
+  each partition it writes.
+
+Every commit here renames, replaces and deletes with the driver's ``os``
+calls, so it assumes a single writer on a local POSIX filesystem; a table
+on HDFS/S3 would route them through that filesystem's atomic primitives.
+The IVF upsert's Hadoop FileSystem delete of emptied cells, which the
+staged commit replaced, was the one exception.
 
 ``read_table`` is the read side of all of them: the one read of a table
-the engine committed. It repairs an interrupted swap or append, returns
+the engine committed. It repairs an interrupted swap or staged commit, returns
 None when there is no table, and reads with the schema Spark stored in
 the part files' footers, so no schema-inference job runs (the role
 Delta's log plays for the reference's gold tables).
@@ -58,7 +71,7 @@ _TMP = ".__tmp__"
 _OLD = ".__old__"  # stable name => interrupted swaps are detectable
 _STAGE = ".stage-"
 _EPOCH = "_applied_epoch"  # the commit record: JSON {"epoch": e, mark: value, ...}
-_APPEND = "_append-"  # an epoch append's staged part files, hidden from readers
+_APPEND = "_append-"  # a staged commit's part files, hidden from readers
 
 
 def recover_interrupted_swap(path: str) -> bool:
@@ -140,11 +153,13 @@ def commit_record(path: str) -> dict:
     """What the last epoch commit stored with the table at ``path``:
     ``{"epoch": e}`` plus the marks ``atomic_overwrite`` observed; ``{}``
     when there is none. A swap that crashed between its renames is
-    repaired and an append interrupted after its commit point finished
-    first, so the record always describes the rows a read sees."""
+    repaired and a staged commit interrupted after its commit point
+    finished first, so the record always describes the rows a read sees.
+    The staged commit's bookkeeping (its stage and removed files) is
+    stripped, so no later commit or compaction carries it forward."""
     recover_interrupted_swap(path)
     _finish_append(path)
-    return {k: v for k, v in _read_record(path).items() if k != "pending"}
+    return {k: v for k, v in _read_record(path).items() if k not in ("pending", "removes")}
 
 
 def _read_record(path: str) -> dict:
@@ -197,43 +212,72 @@ def append_into(df: DataFrame, path: str, epoch: int) -> bool:
     below the committed one is a replay, skipped without a Spark job
     (returns False); the other marks of the record are kept.
 
-    The rows are written to a hidden ``_append-<id>`` directory inside the
-    table. The commit point is the atomic replace of the commit record
-    that names that directory; only then are its files renamed into the
-    table. A crash before the commit point leaves a stage that the next
-    look at the table deletes; a crash after it leaves one that
-    ``commit_record`` (and so ``read_table``) finishes moving. Part-file
-    names carry Spark's per-write job id, so appends never collide.
-    Single-writer contract, as ``swap_in``."""
+    It is the staged commit (``_stage``, ``_commit``) with an epoch and
+    no removed file. Part-file names carry Spark's per-write job id, so
+    appends never collide. Single-writer contract, as ``swap_in``."""
     record = commit_record(path)
     if _replayed(record, epoch):
         return False
-    stage = f"{_APPEND}{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(os.path.join(path, stage))
-    staged = os.path.join(path, f".{_EPOCH}.{stage}")
-    with open(staged, "w") as f:
-        f.write(json.dumps({**record, "epoch": epoch, "pending": stage}))
-    os.replace(staged, os.path.join(path, _EPOCH))  # the commit point
-    _finish_append(path)
+    _commit(path, _stage(df, path), {**record, "epoch": epoch}, [])
     return True
 
 
+def _stage(df: DataFrame, path: str, partition_cols: list[str] = ()) -> str:
+    """Write ``df``, partitioned by ``partition_cols``, to a fresh stage
+    directory inside ``path``, hidden from Spark and pyarrow readers by
+    its ``_`` prefix; returns its name. Read the table's record first:
+    that finishes an earlier commit and deletes stale stages."""
+    stage = f"{_APPEND}{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(os.path.join(path, stage))
+    return stage
+
+
+def _commit(path: str, stage: str, record: dict, removes: list[str]) -> None:
+    """Commit ``stage``: atomically replace the table's commit record with
+    ``record`` plus the stage's name and ``removes``, the stored files
+    (relative to ``path``) its rows supersede, then roll it forward. The
+    new record is written inside the stage, so a writer that dies before
+    the replace leaves nothing outside it. A crash before the commit
+    point leaves a stage that the next look at the table deletes; a
+    crash after it leaves one that ``commit_record`` (and so
+    ``read_table``) finishes."""
+    staged = os.path.join(path, stage, _EPOCH)
+    with open(staged, "w") as f:
+        f.write(json.dumps({**record, "pending": stage, "removes": removes}))
+    os.replace(staged, os.path.join(path, _EPOCH))  # the commit point
+    _finish_append(path)
+
+
 def _finish_append(path: str) -> None:
-    """Roll a committed append forward and drop uncommitted ones: move
-    the part files of the stage the commit record names into the table,
-    and delete every other ``_append-`` stage (a writer that died before
-    its commit point)."""
+    """Roll the staged commit the record names forward and delete every
+    other stage (a writer that died before its commit point). Rolling
+    forward deletes the superseded files with their checksums, moves the
+    stage's part files and their checksums to the same relative paths in
+    the table, removes the partition directories left empty, and then the
+    stage. Each step is idempotent, so a crash at any point re-runs to the
+    same table."""
     try:
         stages = [n for n in os.listdir(path) if n.startswith(_APPEND)]
     except (FileNotFoundError, NotADirectoryError):
         return
-    pending = _read_record(path).get("pending") if stages else None
+    record = _read_record(path) if stages else {}
     for stage in stages:
         sdir = os.path.join(path, stage)
-        if stage == pending:
-            for name in os.listdir(sdir):
-                if name.startswith("part-"):
-                    os.replace(os.path.join(sdir, name), os.path.join(path, name))
+        if stage == record.get("pending"):
+            removes = record.get("removes", [])
+            for rel in removes:
+                head, name = os.path.split(rel)
+                for gone in (rel, os.path.join(head, f".{name}.crc")):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(path, gone))
+            for root, _, names in os.walk(sdir):
+                dst = os.path.normpath(os.path.join(path, os.path.relpath(root, sdir)))
+                for name in (n for n in names if n.startswith(("part-", ".part-"))):
+                    os.makedirs(dst, exist_ok=True)
+                    os.replace(os.path.join(root, name), os.path.join(dst, name))
+            for rel in removes:  # stops at ``path``, which holds the record
+                with contextlib.suppress(OSError):
+                    os.removedirs(os.path.join(path, os.path.dirname(rel)))
         shutil.rmtree(sdir, ignore_errors=True)
 
 
@@ -241,8 +285,9 @@ def idempotent_append(spark: SparkSession, df: DataFrame, path: str, keys: list[
     """Append only rows whose key is not already present (replay-safe).
 
     At scale this anti-join prunes with pushdown on the sink scan; for
-    time-keyed layers prefer partitioned tables + dynamic partition
-    overwrite, which skips the read entirely.
+    time-keyed layers prefer the day-partitioned merge
+    (``idempotent_overwrite_day_partitions``), whose read is pruned to the
+    days a batch touches.
     """
     df = df.dropDuplicates(keys)  # collapse intra-batch duplicates too
     existing = read_table(spark, path)
@@ -268,12 +313,12 @@ def idempotent_overwrite_day_partitions(
     batch; here the re-read is pruned to the day partitions the batch's
     watermark window touches (``lo``/``hi`` are the window's date bounds —
     known driver-side, zero extra jobs), the batch is unioned in, deduped
-    by key, and exactly those day partitions are dynamically overwritten.
+    by key, and exactly those day partitions are replaced.
     Correct for windows that split a day (the partial day's existing rows
     ride along in the pruned read) and for replays (rewriting the same
     partitions from the same union is idempotent). The merge itself —
     batch wins on a key conflict, stored schema checked, one REBALANCE on
-    the day column — is ``merge_partitions``.
+    the day column, a day it empties dropped — is ``merge_partitions``.
 
     Guarantee is WEAKER than ``idempotent_append``'s whole-sink anti-join:
     dedup only sees the [lo, hi]-pruned partitions, so a key re-delivered
@@ -378,43 +423,65 @@ def merge_partitions(
     touched: Column,
 ) -> int | None:
     """Merge ``batch`` into the ``part_col``-partitioned table at ``path``:
-    stored rows selected by ``touched`` (partition pruning), minus those
-    whose ``keys`` the batch re-delivers, plus the batch, dynamically
-    overwrite exactly the partitions that receive rows. The batch wins
-    deterministically (dropDuplicates on the union would keep an arbitrary
-    payload), so replays converge. The stored schema must equal
-    the batch's (else ``StoredSchemaError``, before anything is written):
-    a union across a drifted column would widen its type silently. One
-    REBALANCE on ``part_col`` keeps ~one writer per partition.
+    stored rows selected by ``touched`` (a predicate on ``part_col`` only:
+    partition pruning), minus those whose ``keys`` the batch re-delivers,
+    plus the batch, replace exactly the stored files that read scanned.
+    The batch wins deterministically (dropDuplicates on the union would
+    keep an arbitrary payload), so replays converge. The stored schema
+    must equal the batch's (else ``StoredSchemaError``, before anything is
+    written): a union across a drifted column would widen its type
+    silently. One REBALANCE on ``part_col`` keeps ~one writer per
+    partition. A table with nothing stored takes the batch as its first
+    partition overwrite.
+
+    The merged partitions commit as a staged commit (module docstring)
+    whose removed files are the scanned ones, collected by an observation
+    on the write (a collect of ``_metadata.file_path`` if it does not
+    arrive): a partition whose only rows the batch moved elsewhere
+    receives no row, and its files and directory go.
 
     Returns how many stored rows the batch replaced, counted by two
     observations on the write (no extra job): 0 means the merge only
     added rows. None when the counts did not arrive."""
     from pyspark.sql import Observation
 
-    from incremental_data_pipeline_spark.functions.util import observation_result
+    from incremental_data_pipeline_spark.functions.util import local_path, observation_result
 
+    record = commit_record(path)  # finish an interrupted commit before inspecting the table
     if not _check_stored_schema(path, batch.schema, part_col):
         overwrite_partitions(batch.hint("rebalance", part_col), path, [part_col])
         return 0
     stored, kept = Observation(), Observation()
     n = F.count(F.lit(1)).alias("n")
-    existing = read_table(spark, path).filter(touched).observe(stored, n)
-    survivors = existing.join(batch.select(*keys), keys, "left_anti").observe(kept, n)
-    overwrite_partitions(survivors.unionByName(batch).hint("rebalance", part_col), path, [part_col])
-    counts = [observation_result(o) for o in (stored, kept)]
+    files = F.collect_set("_metadata.file_path").alias("files")
+    existing = read_table(spark, path).filter(touched)
+    survivors = existing.observe(stored, n, files).join(batch.select(*keys), keys, "left_anti")
+    merged = survivors.observe(kept, n).unionByName(batch).hint("rebalance", part_col)
+    stage = _stage(merged, path, [part_col])
+    scanned = observation_result(stored) or existing.agg(n, files).first().asDict()
+    _commit(path, stage, record, [os.path.relpath(local_path(f), path) for f in scanned["files"]])
+    counts = [scanned, observation_result(kept)]
     return None if None in counts else counts[0]["n"] - counts[1]["n"]
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Idempotent partition-level overwrite (dynamic mode): re-running a
-    batch rewrites exactly the partitions it touches, nothing else."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
+    """Idempotent partition-level overwrite: ``df`` replaces every stored
+    file of each partition it has rows for, and no other. A staged commit
+    (module docstring) that keeps the table's record, so re-running a
+    batch rewrites exactly the partitions it touches."""
+    record = commit_record(path)
+    stage = _stage(df, path, partition_cols)
+    written = {
+        os.path.relpath(root, os.path.join(path, stage))
+        for root, _, names in os.walk(os.path.join(path, stage))
+        if any(n.startswith("part-") for n in names)
+    }
+    removes = [
+        os.path.join(part, name)
+        for part in sorted(written) if os.path.isdir(os.path.join(path, part))
+        for name in sorted(os.listdir(os.path.join(path, part))) if name.startswith("part-")
+    ]
+    _commit(path, stage, record, removes)
 
 
 _VERSION_PTR = "_CURRENT"

@@ -18,7 +18,6 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import urllib.parse
 from collections.abc import Callable
 from typing import Any
 
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from incremental_data_pipeline_spark.functions.util import lit_in, observation_result
+from incremental_data_pipeline_spark.functions.util import lit_in, local_path, observation_result
 from incremental_data_pipeline_spark.operators.cdc import watermark_range
 from incremental_data_pipeline_spark.sources.readers import _scan_cache
 from incremental_data_pipeline_spark.sources.sinks import recover_interrupted_swap, swap_in
@@ -84,7 +83,6 @@ def run_incremental_batch(
     store: WatermarkStore,
     sink: Callable[[DataFrame], None],
     current_load: Any | None = None,
-    count_rows: bool = True,
 ) -> int:
     """One incremental load: extract ``(last_load, current_load]``, deliver
     to the sink, then advance the watermark. Returns rows delivered.
@@ -114,12 +112,13 @@ def run_incremental_batch(
     the window as raw int64 bounds and re-applies the exact filter
     post-conversion.
 
-    Sink contract when ``count_rows=True``: the row count is observed on
-    the batch the sink receives, so the cheap path assumes the sink runs
-    at least one Spark action over ``batch`` itself (every sink in
+    Sink contract: the row count (returned always) is observed on the
+    batch the sink receives, so the cheap path assumes the sink runs at
+    least one Spark action over ``batch`` itself (every sink in
     ``sources.sinks`` does). A sink that skips its write or acts on a
     re-derived DataFrame leaves the observation empty — that case falls
-    back to one extra ``batch.count()`` instead of blocking forever.
+    back to one extra aggregate over ``batch`` instead of blocking
+    forever.
     """
     from pyspark.sql import Observation
 
@@ -157,7 +156,7 @@ def run_incremental_batch(
         store.advance(new_wm)
     else:
         store.advance(current_load)
-    return n if count_rows else -1
+    return n
 
 
 def _scan_column(source: DataFrame, ts_col: str) -> tuple[str, str] | None:
@@ -256,7 +255,7 @@ def _settled_files(source: DataFrame, ts_col: str, last: Any) -> list[str]:
     for uri in source.inputFiles():
         if not uri.startswith("file:///"):
             continue
-        path = urllib.parse.unquote(uri[len("file://"):])
+        path = local_path(uri)
         try:
             st = os.stat(path)
         except OSError:

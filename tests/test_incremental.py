@@ -121,6 +121,30 @@ def test_incremental_batch_skips_source_files_at_or_below_the_watermark(spark, t
     assert store.read() == day + datetime.timedelta(days=3, hours=4)
 
 
+def test_file_uris_under_a_path_with_a_space_map_to_the_local_file(spark, tmp_path):
+    """``inputFiles`` (``file:///``) and ``_metadata.file_path``
+    (``file:/``) spell a local file two ways, both percent-encoded;
+    ``local_path`` maps both to the file, and any other scheme to None.
+    So ``fan_out`` sizes a scan under a path with a space by its bytes:
+    one small file at a large ``bytes_per_task`` takes no repartition.
+    Cutting the scheme off without decoding missed the file, and the
+    core count applied instead."""
+    from incremental_data_pipeline_spark.functions.util import _input_bytes, fan_out, local_path
+    from incremental_data_pipeline_spark.sources.sinks import read_table
+
+    path = str(tmp_path / "a table")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = read_table(spark, path)
+    files = df.inputFiles()
+    meta = [r[0] for r in df.select("_metadata.file_path").distinct().collect()]
+    assert len(files) == 1 and "%20" in files[0] and "%20" in meta[0]
+    assert local_path(files[0]) == local_path(meta[0])
+    assert local_path(files[0]).startswith(path + os.sep)
+    assert local_path("hdfs://nn/a%20table/part-0.parquet") is None
+    assert _input_bytes(df, files) == os.path.getsize(local_path(files[0]))
+    assert fan_out(df, bytes_per_task=1 << 30) is df
+
+
 def test_scd1_dim_upsert_refreshes_attrs_and_keeps_keys(spark, tmp_path):
     """SCD1: run twice converges; changed attributes update in place;
     surrogate keys of existing members never change; new members extend

@@ -437,6 +437,35 @@ def test_batch_that_replaces_a_bronze_row_rebuilds_downstream(spark, tmp_path):
         assert pipe.read(layer, table).count() == history.num_rows, table
 
 
+def test_batch_that_moves_a_key_to_the_next_day_keeps_it_once(spark, tmp_path):
+    """A re-delivered key whose new timestamp falls on the next day, when
+    it was the only event of its day: the batch replaces a stored bronze
+    row, so every layer rebuilds with that reason, and bronze, silver and
+    the fact hold one row per key, the key's with the new payload. The
+    bronze merge reads the day the key left and drops it; under Spark's
+    dynamic partition overwrite that day kept its stale row, and silver,
+    rebuilt from bronze, held the key twice."""
+    history = _history_and_batches(0)[0]
+    last = history.slice(history.num_rows - 1, 1).to_pylist()[0]
+    day = datetime.timedelta(days=1)
+    lone = {**last, "event_id": max(history.column("event_id").to_pylist()) + 1,
+            "ts": datetime.datetime.combine(last["ts"].date() + day, datetime.time(12))}
+    moved = {**lone, "ts": lone["ts"] + day, "value": -1.0}
+    root = str(tmp_path / "src")
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
+    _deliver(root, 0, pa.concat_tables([history, pa.Table.from_pylist([lone], history.schema)]))
+    _run_batch(spark, pipe, root)
+    assert pipe.last_batch == dict.fromkeys(LAYERS, ("rebuild", "no epoch"))
+    _deliver(root, 1, pa.Table.from_pylist([moved], schema=history.schema))
+    _run_batch(spark, pipe, root)
+    assert pipe.last_batch == dict.fromkeys(LAYERS, ("rebuild", "bronze rows replaced"))
+    for layer, table in [("bronze", "events"), ("silver", "events"), ("gold", "fact")]:
+        df = pipe.read(layer, table)
+        assert df.count() == df.select("event_id").distinct().count() == history.num_rows + 1
+        rows = df.filter(F.col("event_id") == lone["event_id"]).collect()
+        assert [r["value"] for r in rows] == [-1.0], table
+
+
 def test_compacted_tables_take_the_next_batch_as_an_append(spark, tmp_path):
     """``compact_table`` keeps the commit record of the table it rewrites
     (epoch and key high-water mark), so silver, a dim and the fact

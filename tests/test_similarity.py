@@ -536,11 +536,10 @@ def test_ivf_index_upsert_allow_moves_evicts_stale_cell_copy(spark, tmp_path):
 
 
 def test_ivf_index_upsert_allow_moves_drops_emptied_cell(spark, tmp_path):
-    """A cell whose ONLY occupant moves out gets no rows in the merge, and
-    dynamic partitionOverwriteMode rewrites only partitions that receive
-    rows — the upsert must drop the emptied cell directory explicitly or
-    the stale copy survives (ADVICE r6: the multi-survivor fixture missed
-    this)."""
+    """A cell whose ONLY occupant moves out gets no rows in the merge; the
+    merge's commit must still supersede the cell's files and drop its
+    directory, or the stale copy survives (ADVICE r6: the multi-survivor
+    fixture missed this)."""
     import os
 
     from incremental_data_pipeline_spark.operators import similarity as sim

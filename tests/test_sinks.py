@@ -655,13 +655,14 @@ def test_txn_log_compaction_preserves_reads(spark, tmp_path):
 
 @contextlib.contextmanager
 def _killed_at(k: int):
-    """Make the ``k``-th ``os.rename``, ``os.replace`` or ``os.link`` in
-    the block raise — the commit steps of every storage protocol, killed
-    the way ``test_append_into_commits_at_the_record_replace`` kills its
-    replace. Yields the steps seen; ``k=0`` kills none and just counts."""
+    """Make the ``k``-th ``os.rename``, ``os.replace``, ``os.link`` or
+    ``os.remove`` in the block raise — the commit steps of every storage
+    protocol, a staged commit's file deletions among them, killed the way
+    ``test_append_into_commits_at_the_record_replace`` kills its replace.
+    Yields the steps seen; ``k=0`` kills none and just counts."""
     seen = []
     with pytest.MonkeyPatch.context() as mp:
-        for name in ("rename", "replace", "link"):
+        for name in ("rename", "replace", "link", "remove"):
 
             def step(*args, _name=name, _real=getattr(os, name), **kwargs):
                 seen.append(_name)
@@ -735,6 +736,158 @@ def test_first_versioned_write_killed_after_its_commit_point_is_read(spark, tmp_
     assert _rows(sinks.read_version(spark, path)) == [(1, 10.0), (2, 20.0)]
     assert sinks.versioned_overwrite(_mk2(spark, [3]), path) == 2
     assert _rows(sinks.read_version(spark, path)) == [(3, 30.0)]
+
+
+@pytest.fixture(scope="session")
+def lone_cell(spark):
+    """An IVF codebook over the fixture embeddings, the ids to drop so
+    that one cell holds a single vector, that vector's id, and a donor id
+    stored in another cell."""
+    from incremental_data_pipeline_spark.operators import similarity as sim
+    from incremental_data_pipeline_spark.sources.readers import load_table
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    codebook = sim.centroid_codebook(emb, nlist=8)
+    probe = tempfile.mkdtemp()
+    sim.ivf_index_build(emb, codebook, probe)
+    by_cell: dict[int, list[int]] = {}
+    for r in spark.read.parquet(probe).select("vec_id", "cell").collect():
+        by_cell.setdefault(r["cell"], []).append(r["vec_id"])
+    shutil.rmtree(probe)
+    lone = min(by_cell, key=lambda c: (len(by_cell[c]), c))
+    donor = min(by_cell[next(c for c in sorted(by_cell) if c != lone)])
+    return codebook, sorted(by_cell[lone])[1:], min(by_cell[lone]), donor
+
+
+def _moving_merge(spark, shape, lone_cell=None):
+    """A table and a merge into it that empties one partition: callables
+    ``first(path)`` and ``merge(path)``. ``bronze_day`` moves the only key
+    of 2024-01-05 to the next day (the merge returns the rows it
+    replaced); ``bronze_month`` is the same rows partitioned by month, so
+    the table has one partition and the merge supersedes every stored
+    file; ``ivf_cell`` moves the only vector of ``lone_cell``'s cell to
+    another cell with ``allow_moves``."""
+    import datetime
+
+    if shape in ("bronze_day", "bronze_month"):
+        day = datetime.datetime(2024, 1, 5, 8)
+        rows = [(1, day, "old"), (2, day - datetime.timedelta(days=1), "kept")]
+        batch = [(1, day + datetime.timedelta(days=1), "new")]
+
+        def day_merge(path, data, **window):
+            df = spark.createDataFrame(data, "id long, ts timestamp, v string")
+            return sinks.idempotent_overwrite_day_partitions(
+                spark, df, path, ["id"], "ts", granularity=shape[len("bronze_"):], **window
+            )
+
+        window = {"lo": day.date(), "hi": day.date() + datetime.timedelta(days=1)}
+        return (lambda path: day_merge(path, rows)), (lambda path: day_merge(path, batch, **window))
+
+    from incremental_data_pipeline_spark.operators import similarity as sim
+    from incremental_data_pipeline_spark.sources.readers import load_table
+    from tests.conftest import SF_DIR
+
+    codebook, drop, lone_id, donor_id = lone_cell
+    emb = load_table(spark, SF_DIR, "embeddings")
+    corpus = emb.filter(~F.col("vec_id").isin(drop))
+    moved = emb.filter(F.col("vec_id") == donor_id).select(
+        F.lit(lone_id).cast("long").alias("vec_id"), "embedding"
+    )
+    return (
+        lambda path: sim.ivf_index_build(corpus, codebook, path),
+        lambda path: sim.ivf_index_upsert(spark, moved, codebook, path, allow_moves=True),
+    )
+
+
+def _merged_table(spark, path):
+    """A partitioned table's rows (partition column included, as a
+    string) and its partition directories."""
+    df = sinks.read_table(spark, path)
+    part = next(c for c in ("__day", "cell") if c in df.columns)
+    rows = df.select(*[F.col(c).cast("string") if c == part else c for c in df.columns])
+    return _rows(rows), sorted(d for d in os.listdir(path) if "=" in d)
+
+
+def test_day_merge_that_empties_a_day_drops_it(spark, tmp_path):
+    """Key 1 is the only row of 2024-01-05 and is re-delivered on
+    2024-01-06 with a window over both days: the merge replaces one
+    stored row, the key is stored once, and the emptied day's directory
+    is gone. Spark's dynamic partition overwrite rewrote only the days
+    that received rows, so the emptied day kept the stale row. The table
+    path holds a space, which ``_metadata.file_path`` percent-encodes."""
+    path = str(tmp_path / "bronze events")
+    first, merge = _moving_merge(spark, "bronze_day")
+    first(path)
+    assert merge(path) == 1
+    rows, days = _merged_table(spark, path)
+    assert [(i, v, d) for i, _, v, d in rows] == [(1, "new", "2024-01-06"), (2, "kept", "2024-01-04")]
+    assert days == ["__day=2024-01-04", "__day=2024-01-06"]
+    for d in days:  # every part file keeps its checksum, and no checksum is orphaned
+        names = os.listdir(os.path.join(path, d))
+        parts = [n for n in names if n.startswith("part-")]
+        assert parts and sorted(f".{n}.crc" for n in parts) == sorted(n for n in names if n.endswith(".crc"))
+    assert not [n for n in os.listdir(path) if n.startswith(sinks._APPEND)]
+    assert sinks.commit_record(path) == {}
+
+
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(shape=st.sampled_from(["bronze_day", "ivf_cell"]), k=st.integers(1, 8))
+@example(shape="bronze_day", k=1)  # the record replace: the commit point
+@example(shape="bronze_day", k=2)  # the superseded file's delete
+@example(shape="bronze_day", k=4)  # the staged file's move
+@example(shape="ivf_cell", k=1)
+@example(shape="ivf_cell", k=6)  # the move, after both cells' deletes
+def test_killed_partition_merges_rerun_like_uninterrupted(spark, tmp_path, lone_cell, shape, k):
+    """Kill a partition merge that empties a partition (a bronze day, an
+    IVF cell) at its k-th rename, replace or file delete. Killed at the
+    replace of the commit record (step 1), the next read sees the old
+    table and no stage is left; killed after it, the read finishes the
+    roll-forward and sees the new table, the emptied partition gone.
+    Re-running the merge gives what an uninterrupted run gives."""
+    first, merge = _moving_merge(spark, shape, lone_cell)
+    base = tempfile.mkdtemp(dir=tmp_path)
+    killed, clean = os.path.join(base, "killed"), os.path.join(base, "clean")
+    for path in (killed, clean):
+        first(path)
+    before = _merged_table(spark, killed)
+    with _killed_at(0) as steps:
+        merge(clean)
+    after = _merged_table(spark, clean)
+    assert steps[:2] == ["replace", "remove"] and before != after, steps
+    with _killed_at(k), contextlib.suppress(OSError):
+        merge(killed)
+        assert k > len(steps), f"step {k} of {steps} was not reached"
+    assert _merged_table(spark, killed) == (after if k > 1 else before)
+    assert not [n for n in os.listdir(killed) if n.startswith(sinks._APPEND)]
+    merge(killed)  # the re-run
+    assert _merged_table(spark, killed) == after
+
+
+@pytest.mark.parametrize("k", range(1, 6))
+def test_killed_merge_of_every_stored_file_reruns_without_a_read(spark, tmp_path, k):
+    """A month-partitioned bronze with one month, so the merge supersedes
+    every stored file. Kill the merge at its k-th rename, replace or file
+    delete and re-run it with no read between: the re-run finishes the
+    killed commit before it inspects the table, so it merges into the
+    stored rows. Inspected first, a table killed between its deletes and
+    its moves looked empty, and the first-write branch then replaced the
+    month the roll-forward had just moved in, losing key 2."""
+    first, merge = _moving_merge(spark, "bronze_month")
+    base = tempfile.mkdtemp(dir=tmp_path)
+    killed, clean = os.path.join(base, "killed"), os.path.join(base, "clean")
+    for path in (killed, clean):
+        first(path)
+    with _killed_at(0) as steps:
+        merge(clean)
+    after = _merged_table(spark, clean)
+    assert [(i, v) for i, _, v, _ in after[0]] == [(1, "new"), (2, "kept")], after
+    with _killed_at(k), contextlib.suppress(OSError):
+        merge(killed)
+        assert k > len(steps), f"step {k} of {steps} was not reached"
+    assert merge(killed) == 1  # the re-run, straight after the kill
+    assert _merged_table(spark, killed) == after
 
 
 def _txn_worker(root: str, wid: int, target: int, results):
@@ -847,22 +1000,30 @@ def test_day_partition_merge_rejects_schema_drift(spark, tmp_path):
 
 
 def test_storage_protocols_defined_once():
-    """The directory swap, the dynamic partition overwrite and the version
-    directory name each live in one place (``sources/sinks.py``); a second
-    copy is a fork that can drift, as the watermark swap (no crash
-    recovery) and the bronze merge (no schema check) once did."""
+    """The directory swap, the staged commit's commit point (the replace
+    of the record) and stage name, and the version directory name each
+    live in one place (``sources/sinks.py``); a second copy is a fork that
+    can drift, as the watermark swap (no crash recovery) and the bronze
+    merge (no schema check) once did. Spark's dynamic partition
+    overwrite, which kept a partition the merge emptied, and the IVF
+    upsert's own probe and Hadoop delete of emptied cells are gone from
+    the package: every partition merge commits through the record."""
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "incremental_data_pipeline_spark"
     files = [*pkg.glob("sources/*.py"), *pkg.glob("operators/*.py"), *pkg.glob("streaming/*.py")]
     src = "".join(f.read_text() for f in [*files, pkg / "plans" / "medallion.py"])
-    for needle in ("os.rename(tmp, ", '"partitionOverwriteMode"', ":08d}"):
+    for needle in ("os.rename(tmp, ", "os.replace(staged, ", '"_append-"', ":08d}"):
         assert src.count(needle) == 1, needle
+    everything = "".join(p.read_text() for p in pkg.rglob("*.py"))
+    for needle in ("partitionOverwriteMode", "getFileSystem(", "surviving_cells"):
+        assert everything.count(needle) == 0, needle
 
 
 def test_table_fold_defined_once():
     """The commit record of a table has two writers, ``atomic_overwrite``
-    (a swap) and ``append_into`` (an append); its sidecar is named once,
+    (a swap) and ``_commit`` (the staged commit of an append, a partition
+    merge or a partition overwrite); its sidecar is named once,
     and the retired writers and drain are gone. Queries and streaming
     tests fold a stream through ``streaming.fold_stream``, which commits
     every micro-batch's epoch — five hand-written folds once committed
@@ -889,7 +1050,7 @@ def test_table_fold_defined_once():
                      and ast.unparse(c.func) == "open" and "'w'" in ast.unparse(c)]
             if "_EPOCH" in names and opens:
                 writers.add(fn.name)
-    assert writers == {"atomic_overwrite", "append_into"}, writers
+    assert writers == {"atomic_overwrite", "_commit"}, writers
     assert not [p for p in pkg.rglob("*.py") if p.name != "sinks.py" and "_EPOCH" in p.read_text()]
     for path in (pkg / "plans" / "queries.py", root / "tests" / "test_streaming.py"):
         for fn in ast.walk(ast.parse(path.read_text())):

@@ -65,7 +65,7 @@ def test_layer_catalog_roundtrip_and_exists_gate(spark, tmp_path):
 
 
 def test_partitioned_write_prunes_on_read(spark, tmp_path):
-    """Dynamic-partition-overwrite layout + predicate on the partition
+    """Partition-overwrite layout + predicate on the partition
     column => the scan lists only matching directories (PartitionFilters in
     the plan, not a post-scan filter). The partition-pruning path that makes
     time-partitioned 100 TB tables readable per-batch."""

@@ -673,19 +673,22 @@ def test_stream_cusum_invariant_to_ordered_batch_split(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stream_ingest_dedup_invariant_to_ordered_batch_split(spark):
+def test_stream_ingest_dedup_invariant_to_ordered_batch_split(spark, monkeypatch):
     """The accept/reject gate admits the same document set whether the
     (id-ordered) corpus arrives as one micro-batch or two — the persisted
-    signature store carries cross-batch collisions."""
+    signature store carries cross-batch collisions. The shipping query
+    runs both ways: the second run's stream source reads the corpus split
+    in two files, one file per trigger, and two micro-batches apply."""
     import glob
 
-    from incremental_data_pipeline_spark.operators import dedup as D
+    from incremental_data_pipeline_spark.plans import queries
     from incremental_data_pipeline_spark.sources.readers import load_table
-    from incremental_data_pipeline_spark.streaming import pipeline as sp
 
+    stream_ingest_dedup = queries.QUERIES["stream_ingest_dedup"]
+    single = sorted(r["doc_id"] for r in stream_ingest_dedup(spark, SF_DIR).collect())
     base = tempfile.mkdtemp(prefix="stream_ingest_split_")
     try:
-        docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+        docs = load_table(spark, SF_DIR, "documents")
         cut = 250
         src_dir = os.path.join(base, "src")
         os.makedirs(src_dir)
@@ -699,58 +702,29 @@ def test_stream_ingest_dedup_invariant_to_ordered_batch_split(spark):
             os.rename(part, os.path.join(src_dir, f"{tag}.parquet"))
             shutil.rmtree(tmp)
 
-        store = os.path.join(base, "sig_store")
-        out = os.path.join(base, "accepted")
+        def split_stream(spark, sf_dir, name):
+            assert name == "documents"
+            reader = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1")
+            return reader.parquet(src_dir)
 
-        def apply_batch(batch, _epoch):
-            bands = D.band_signatures(batch, "doc_id", "text", 12, 3, 3)
-            bands = bands.localCheckpoint(eager=True)
-            a, b = bands.alias("a"), bands.alias("b")
-            in_batch = (
-                a.join(
-                    b,
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.band_sig") == F.col("b.band_sig"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .select(F.col("b.doc_id").alias("doc_id"))
-                .distinct()
-            )
-            if os.path.exists(store):
-                existing = spark.read.parquet(store)
-                vs_store = (
-                    bands.join(existing, ["band", "band_sig"], "left_semi")
-                    .select("doc_id")
-                    .distinct()
-                )
-                dropped = in_batch.unionByName(vs_store).distinct()
-            else:
-                dropped = in_batch
-            batch.select("doc_id").join(dropped, "doc_id", "left_anti").write.mode(
-                "append"
-            ).parquet(out)
-            bands.select("band", "band_sig").write.mode("append").parquet(store)
+        epochs, foreach_batch = [], queries._stream.foreach_batch
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        sp.foreach_batch_exactly_once(
-            stream, apply_batch, os.path.join(base, "ckpt"), os.path.join(base, "ledger")
-        )
-        got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+        def counted(stream, apply_batch, checkpoint_dir):
+            def apply(batch, epoch):
+                epochs.append(epoch)
+                apply_batch(batch, epoch)
 
-        from incremental_data_pipeline_spark.plans.queries import QUERIES
+            foreach_batch(stream, apply, checkpoint_dir)
 
-        single = sorted(
-            r["doc_id"] for r in QUERIES["stream_ingest_dedup"](spark, SF_DIR).collect()
-        )
-        assert got == single
-        # both batches contributed
-        assert any(d < cut for d in got) and any(d >= cut for d in got)
+        monkeypatch.setattr(queries._stream, "read_stream", split_stream)
+        monkeypatch.setattr(queries._stream, "foreach_batch", counted)
+        got = sorted(r["doc_id"] for r in stream_ingest_dedup(spark, SF_DIR).collect())
     finally:
         shutil.rmtree(base, ignore_errors=True)
+    assert epochs == [0, 1]
+    assert got == single
+    # both batches contributed
+    assert any(d < cut for d in got) and any(d >= cut for d in got)
 
 
 def test_stream_ingest_dedup_replay_after_a_kill_between_appends(
