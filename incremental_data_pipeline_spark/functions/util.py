@@ -14,6 +14,7 @@ from contextlib import contextmanager
 from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def lit_array(values, sql_type: str) -> Column:
@@ -81,6 +82,14 @@ def lit_in(name: str, values) -> Column:
         return F.lit(False)
     col = ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
     return F.expr(f"{col} IN ({','.join(map(render, values))})")
+
+
+def local_relation(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """Driver-held rows (a ``pyarrow.Table``) back in a plan: a local
+    relation (a plan literal) of one partition, so a write of it is one
+    part file. The rows come from ``toArrow``, never ``toPandas``, which
+    turns a nullable bigint into a float."""
+    return spark.createDataFrame(rows, schema).coalesce(1)
 
 
 # Per-task input floors for data-sized fan_out (r11): a fan-out task that

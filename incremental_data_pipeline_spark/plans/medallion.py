@@ -122,7 +122,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from incremental_data_pipeline_spark.functions.util import lit_in
+from incremental_data_pipeline_spark.functions.util import lit_in, local_relation
 from incremental_data_pipeline_spark.operators.scd import build_dim, build_fact
 from incremental_data_pipeline_spark.sources.sinks import (
     append_into,
@@ -218,8 +218,8 @@ class _KeyMap:
 
 class _Held:
     """The driver-held path of a small change set: the one collect of
-    its rows and the one way rows go back into a plan, a local relation
-    (a plan literal) of one partition, written as one part file."""
+    its rows, which go back into a plan as ``util.local_relation``s (plan
+    literals of one partition, written as one part file)."""
 
     @staticmethod
     def hold(cs: _ChangeSet) -> _ChangeSet:
@@ -230,12 +230,8 @@ class _Held:
         except TypeError:  # e.g. a year-month interval: stays distributed
             return cs
         rows = cs.df.toArrow()
-        local = _Held.local(cs.df.sparkSession, rows, cs.df.schema)
+        local = local_relation(cs.df.sparkSession, rows, cs.df.schema)
         return dataclasses.replace(cs, df=local, held=rows)
-
-    @staticmethod
-    def local(spark: SparkSession, rows: pa.Table, schema: StructType) -> DataFrame:
-        return spark.createDataFrame(rows, schema).coalesce(1)
 
     @staticmethod
     def upsert(
@@ -274,7 +270,7 @@ class _Held:
                              *[cs.df.schema[c] for c in cols[1:]]])
         outside = F.col(natural_key).isNull() | ~lit_in(natural_key, probe)
         dim = existing.filter(outside).select(*cols).unionByName(
-            _Held.local(existing.sparkSession, upserted, schema)
+            local_relation(existing.sparkSession, upserted, schema)
         )  # as many part files as the dim had: the held rows join one of them
         dim = dim.coalesce(max(1, len(existing.inputFiles())))
         return dim, {k: v for k, v in keys.items() if k is not None}
@@ -299,7 +295,7 @@ class _Held:
             fks = [km.keys.get(k) for k in cs.held.column(km.natural_key).to_pylist()]
             rows = rows.append_column(sk, pa.array(fks, to_arrow_type(field.dataType)))
             fields.append(StructField(sk, field.dataType))
-        return _Held.local(cs.df.sparkSession, rows, StructType(fields))
+        return local_relation(cs.df.sparkSession, rows, StructType(fields))
 
 
 class MedallionPipeline:

@@ -892,9 +892,13 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's operators: language filter (stored lang) → quality-score
     floor → Gopher repetition filter → exact dedup (md5 canonical) →
     MinHash-LSH near-dup clustering (connected components, min-id
-    canonical) → per-source corpus stats. One declarative Catalyst plan up
-    to the CC fixpoint; every stage is shuffle-bounded (hash/bucket joins,
-    no quadratic step), which is the whole point at 100 TB."""
+    canonical) → per-source corpus stats. Two eager cuts split the plan:
+    the survivor checkpoint and ``connected_components``, whose edge
+    checkpoint and budget probe run when it is called; under
+    ``CC_EDGE_BUDGET`` edges the clusters come back as a local relation
+    labelled on the driver, above it from the distributed fixpoint.
+    Every distributed stage is shuffle-bounded (hash/bucket joins, no
+    quadratic step), which is the whole point at 100 TB."""
     docs = load_table(spark, sf_dir, "documents")
     # Quality is a NARROW per-row score (with_token_stats withColumns), so
     # it rides the same pass as the lang filter instead of a separate

@@ -48,6 +48,23 @@ def job_group(spark, name):
             sc.setLocalProperty(key, None)
 
 
+CC_PATHS = ("held", "loop")
+
+
+@contextmanager
+def cc_path(path):
+    """Run ``connected_components`` on one of its two paths in the block:
+    "held" keeps ``CC_EDGE_BUDGET``, "loop" sets it to -1, so every edge
+    list takes the distributed loop (at 0 the empty one would be held)."""
+    from unittest import mock
+
+    from incremental_data_pipeline_spark.operators import dedup
+
+    budget = dedup.CC_EDGE_BUDGET if path == "held" else -1
+    with mock.patch.object(dedup, "CC_EDGE_BUDGET", budget):
+        yield
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

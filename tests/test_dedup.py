@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from incremental_data_pipeline_spark.operators import dedup
 from incremental_data_pipeline_spark.sources.readers import load_table
-from tests.conftest import SF_DIR, assert_query_matches_oracle
+from tests.conftest import CC_PATHS, SF_DIR, assert_query_matches_oracle, cc_path, job_group
 
 
 def test_lsh_recall_of_high_jaccard_pairs(spark):
@@ -122,20 +122,56 @@ def test_ngram_jaccard_df_cap_bounds_hot_shingles(spark):
 
 def test_connected_components_chain_and_clusters(spark):
     """Worst-case chain graph (defeats plain propagation in < n rounds —
-    pointer jumping must kick in), plus a triangle and an isolated pair."""
+    pointer jumping must kick in), plus a triangle and an isolated pair,
+    on both paths: held on the driver and the distributed loop."""
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),  # chain 1-7
              (10, 11), (11, 12), (10, 12),                    # triangle
              (20, 21)]                                        # pair
     e = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    got = {r["node"]: r["cluster_id"] for r in dedup.connected_components(e).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 7: 1,
-                   10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
     corpus = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 5, 6, 7, 10, 11, 12, 20, 21, 99]], ["doc_id"])
-    labeled = {r["doc_id"]: r["cluster_id"]
-               for r in dedup.duplicate_clusters(corpus, e).collect()}
-    assert labeled[99] == 99  # isolated doc labels itself
-    assert labeled[7] == 1 and labeled[12] == 10
+    for path in CC_PATHS:
+        with cc_path(path):
+            got = {r["node"]: r["cluster_id"] for r in dedup.connected_components(e).collect()}
+            assert (dedup.connected_components.last_rounds == 0) == (path == "held"), path
+            labeled = {r["doc_id"]: r["cluster_id"]
+                       for r in dedup.duplicate_clusters(corpus, e).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 7: 1,
+                       10: 10, 11: 10, 12: 10, 20: 20, 21: 20}, path
+        assert labeled[99] == 99  # isolated doc labels itself
+        assert labeled[7] == 1 and labeled[12] == 10
+
+
+def test_connected_components_held_path_job_count(spark):
+    """Under the budget, connected_components starts at most two Spark
+    jobs, the edge checkpoint and the probe collect, whatever the graph's
+    diameter: its labels come back as a local relation, and the rounds
+    of the loop (a dozen jobs and more) never run."""
+    import random
+
+    rng = random.Random(3)
+    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
+    e = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    with job_group(spark, "cc_held"):
+        cc = dedup.connected_components(e)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("cc_held")
+    assert len(jobs) <= 2, len(jobs)
+    assert dedup.connected_components.last_rounds == 0
+    assert cc.count() == len({n for edge in edges for n in edge})
+
+
+def test_connected_components_held_path_reads_every_arrow_batch(spark):
+    """The probe's collect arrives in Arrow batches of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; an edge list
+    longer than one batch is labelled whole on the held path. Two
+    interleaved chains (evens, odds) so a dropped batch splits a chain."""
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    n = 2 * batch + 5
+    e = spark.range(n).selectExpr("id as doc_a", "id + 2 as doc_b")
+    cc = dedup.connected_components(e)
+    assert dedup.connected_components.last_rounds == 0
+    sizes = {r["cluster_id"]: r["n"] for r in cc.groupBy("cluster_id").count()
+             .withColumnRenamed("count", "n").collect()}
+    assert sizes == {0: (n + 3) // 2, 1: (n + 2) // 2}
 
 
 def test_dedup_clusters_oracle(spark, duck):

@@ -558,15 +558,20 @@ def test_medallion_decision_defined_once():
 
 
 def test_held_change_set_defined_once():
-    """The driver-held path has one budget, one collect and one way back
-    into a plan: ``CHANGE_SET_BUDGET`` is assigned once in the package,
+    """The driver-held paths have one budget each, one collect each and
+    one way back into a plan: ``CHANGE_SET_BUDGET`` and
+    ``CC_EDGE_BUDGET`` are each assigned once in the package;
     ``plans/medallion.py`` collects a change set with one ``toArrow(``
     (``toPandas`` would turn a nullable bigint key into a float) and
-    builds local relations with one ``createDataFrame(``, both in
-    ``_Held``; and the source-file skip of ``run_incremental_batch`` is
-    the package's one filter on a ``_metadata`` column."""
+    ``operators/dedup.py`` its edges with one, each in its held path;
+    both build local relations only through ``util.local_relation`` (the
+    package's one definition), the medallion's all in ``_Held``; and the
+    source-file skip of ``run_incremental_batch`` is the package's one
+    filter on a ``_metadata`` column."""
     import inspect
     import pathlib
+
+    from incremental_data_pipeline_spark.operators import dedup
 
     package = pathlib.Path(medallion_mod.__file__).parents[1]
     sources = {p: p.read_text() for p in package.rglob("*.py")}
@@ -574,12 +579,19 @@ def test_held_change_set_defined_once():
     def count(needle: str) -> int:
         return sum(text.count(needle) for text in sources.values())
 
-    assert count("CHANGE_SET_BUDGET =") == 1
+    assert count("CHANGE_SET_BUDGET =") == count("CC_EDGE_BUDGET =") == 1
+    assert count("def local_relation(") == 1
     src = inspect.getsource(medallion_mod)
     held = inspect.getsource(medallion_mod._Held)
-    for needle in ("toArrow(", "createDataFrame("):
-        assert src.count(needle) == held.count(needle) == 1, needle
-    assert "toPandas(" not in src and ".collect()" not in src.replace(held, "")
+    cc = inspect.getsource(dedup)
+    cc_held = inspect.getsource(dedup._held_components)
+    assert src.count("toArrow(") == held.count("toArrow(") == 1
+    assert cc.count("toArrow(") == cc_held.count("toArrow(") == 1
+    assert src.count("local_relation(") == held.count("local_relation(") > 0
+    assert cc.count("local_relation(") == cc_held.count("local_relation(") == 1
+    for text in (src, cc):
+        assert "createDataFrame(" not in text and "toPandas(" not in text
+    assert ".collect()" not in src.replace(held, "")
     filters = [line for text in sources.values() for line in text.splitlines()
                if "_metadata." in line
                and any(f in line for f in ("filter(", "where(", "isin(", "lit_in("))]

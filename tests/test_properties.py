@@ -96,19 +96,8 @@ def test_exact_dedup_partitions_corpus(spark, texts):
     assert len(set(ids)) == len(ids)
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)),
-        min_size=1,
-        max_size=40,
-    )
-)
-@settings(max_examples=8, deadline=None)
-def test_connected_components_matches_union_find(spark, edges):
-    """Distributed min-label CC == classic driver-side union-find, for any
-    random edge list (self-loops and duplicates included)."""
-    from incremental_data_pipeline_spark.operators.dedup import connected_components
-
+def _union_find_labels(edges):
+    """{node: its component's minimum} by classic driver-side union-find."""
     parent = {}
 
     def find(x):
@@ -118,25 +107,134 @@ def test_connected_components_matches_union_find(spark, edges):
             x = parent[x]
         return x
 
-    def union(a, b):
+    for a, b in edges:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
+    return {node: min(n for n in parent if find(n) == find(node)) for node in list(parent)}
 
-    for a, b in edges:
-        union(a, b)
-    # canonical min-id per component
-    expected = {}
-    for node in list(parent):
-        root = find(node)
-        comp_min = min(n for n in parent if find(n) == root)
-        expected[node] = comp_min
 
-    df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    got = {
-        r["node"]: r["cluster_id"] for r in connected_components(df).collect()
-    }
-    assert got == expected
+def _components(spark, edges, schema="doc_a long, doc_b long", **kwargs):
+    """connected_components of ``edges`` as {node: cluster_id}, and the
+    rounds its loop ran (0 on the held path)."""
+    from incremental_data_pipeline_spark.operators import dedup
+
+    df = spark.createDataFrame(edges, schema)
+    got = {r["node"]: r["cluster_id"] for r in dedup.connected_components(df, **kwargs).collect()}
+    return got, dedup.connected_components.last_rounds
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 30), st.integers(0, 30)),
+        min_size=0,
+        max_size=40,
+    )
+)
+@example([])
+@example([(4, 4), (1, 2), (2, 1), (1, 2), (7, 7), (7, 8), (8, 7)])
+@settings(max_examples=8, deadline=None)
+def test_connected_components_matches_union_find(spark, edges):
+    """Min-label CC == classic driver-side union-find, for any random edge
+    list (empty, self-loops and duplicates included), on both paths: the
+    driver-held labelling (last_rounds 0) and the distributed loop."""
+    from tests.conftest import CC_PATHS, cc_path
+
+    expected = _union_find_labels(edges)
+    for path in CC_PATHS:
+        with cc_path(path):
+            got, rounds = _components(spark, edges)
+        assert got == expected, path
+        assert (rounds == 0) == (path == "held"), (path, rounds)
+
+
+@given(
+    length=st.integers(16, 40),
+    start=st.integers(0, 1000),
+    reverse=st.booleans(),
+    seed=st.integers(0, 2**16),
+)
+@settings(max_examples=4, deadline=None)
+def test_connected_components_held_path_closes_long_chains(spark, length, start, reverse, seed):
+    """A chain longer than ``max_iterations=2`` rounds of the loop can
+    close: the held path labels it right (its union-find runs to its
+    fixpoint), and the loop raises as it always has."""
+    import pytest
+
+    from tests.conftest import cc_path
+
+    edges = [(start + i, start + i + 1) for i in range(length)]
+    if reverse:
+        edges = [(b, a) for a, b in edges]
+    random.Random(seed).shuffle(edges)
+    with cc_path("held"):
+        got, rounds = _components(spark, edges, max_iterations=2)
+    assert got == dict.fromkeys(range(start, start + length + 1), start)
+    assert rounds == 0
+    with cc_path("loop"), pytest.raises(RuntimeError, match="did not converge"):
+        _components(spark, edges, max_iterations=2)
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 12), st.integers(0, 12)),
+        min_size=1,
+        max_size=15,
+    ),
+    st.integers(0, 14),
+)
+@settings(max_examples=4, deadline=None)
+def test_connected_components_null_or_string_ids_take_the_loop(spark, edges, at):
+    """An edge list with a NULL endpoint and one with string ids both take
+    the distributed loop (last_rounds > 0) under the default budget and
+    give what the loop gives; string ids are labelled with their
+    lexicographic component minimum."""
+    from tests.conftest import cc_path
+
+    with_null = list(edges)
+    with_null.insert(min(at, len(edges)), (edges[0][0], None))
+    strings = [(f"d{a:02d}", f"d{b:02d}") for a, b in edges]
+    for rows, schema in ((with_null, "doc_a long, doc_b long"),
+                         (strings, "doc_a string, doc_b string")):
+        got, rounds = _components(spark, rows, schema)
+        assert rounds > 0, schema
+        with cc_path("loop"):
+            assert _components(spark, rows, schema)[0] == got, schema
+    assert got == _union_find_labels(strings)
+
+
+@given(
+    base=st.lists(st.tuples(st.integers(0, 20), st.integers(0, 20)), max_size=15),
+    delta=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)), max_size=10),
+    isolated=st.lists(st.integers(0, 30), max_size=5),
+    fresh=st.lists(st.integers(21, 35), max_size=5),
+)
+@settings(max_examples=6, deadline=None)
+def test_incremental_components_matches_from_scratch(spark, base, delta, isolated, fresh):
+    """Folding delta edges and new documents into stored labels with
+    ``incremental_components`` equals ``duplicate_clusters`` over
+    base ∪ delta from scratch, on both CC paths (the quotient fixpoint
+    runs held under the default budget)."""
+    from incremental_data_pipeline_spark.operators import dedup
+    from tests.conftest import CC_PATHS, cc_path
+
+    def nodes(ids):
+        return spark.createDataFrame([(i,) for i in sorted(set(ids))], "doc_id long")
+
+    def pairs(rows):
+        return spark.createDataFrame(rows, "doc_a long, doc_b long")
+
+    def labels(df):
+        return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+    corpus = {n for e in base for n in e} | set(isolated)
+    universe = corpus | set(fresh) | {n for e in delta for n in e}
+    for path in CC_PATHS:
+        with cc_path(path):
+            stored = dedup.duplicate_clusters(nodes(corpus), pairs(base)).localCheckpoint()
+            got = labels(dedup.incremental_components(stored, pairs(delta), nodes(fresh)))
+            expected = labels(dedup.duplicate_clusters(nodes(universe), pairs(base + delta)))
+        assert got == expected, path
 
 
 @given(
